@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -307,19 +307,70 @@ object IvfIndex {
     * layout (or querying it) must match the centroid dimensionality —
     * a mismatch would silently score garbage distances (the fused
     * distance loop runs over the shorter length), the same
-    * trusted-parameter corruption class as a wrong bucket modulus. One
-    * tiny min/max-size aggregate over the delta/query frame (never the
+    * trusted-parameter corruption class as a wrong bucket modulus. A
+    * null embedding has no dimension and fails the guard too. One tiny
+    * min/max-size aggregate over the delta/query frame (never the
     * corpus). */
   private[operators] def requireDim(emb: DataFrame,
       cents: Array[(Long, Array[Long])], what: String): Unit = {
+    val r = emb.agg(min(dimOf(col("embedding"))).as("lo"),
+      max(dimOf(col("embedding"))).as("hi")).collect()(0)
+    if (!r.isNullAt(0)) checkDim(r.getInt(0), r.getInt(1), cents, what)
+  }
+
+  /** A vector's dimension; -1 for a null vector (never a centroid dim). */
+  private def dimOf(c: Column): Column = coalesce(size(c), lit(-1))
+
+  private def checkDim(lo: Int, hi: Int,
+      cents: Array[(Long, Array[Long])], what: String): Unit = {
     val dim = cents.head._2.length
-    val r = emb.agg(min(size(col("embedding"))).as("lo"),
-      max(size(col("embedding"))).as("hi")).collect()(0)
-    if (!r.isNullAt(0) && (r.getInt(0) != dim || r.getInt(1) != dim))
+    if (lo != dim || hi != dim)
       throw new IllegalArgumentException(
-        s"$what: embedding dim ${r.getInt(0)}..${r.getInt(1)} does not " +
-          s"match the stored index's centroid dim $dim — wrong-dim " +
-          "vectors would silently score garbage distances")
+        s"$what: embedding dim $lo..$hi does not match the stored " +
+          s"index's centroid dim $dim — wrong-dim vectors would silently " +
+          "score garbage distances")
+  }
+
+  /** Named errors for a search's bounds: no probe or no neighbour is
+    * never a meaningful request. */
+  private[operators] def requireSearchBounds(nProbe: Int, topK: Int,
+      what: String): Unit = {
+    if (nProbe < 1)
+      throw new IllegalArgumentException(
+        s"$what: nProbe must be >= 1, got $nProbe")
+    if (topK < 1)
+      throw new IllegalArgumentException(
+        s"$what: topK must be >= 1, got $topK")
+  }
+
+  /** The probe set of `queries` (vec_id, embedding) against stored
+    * centroids: each query's `nProbe` nearest cells as (q_id, q_emb,
+    * cent_id) rows, ranked by [[cellRanksWith]] and collected ONCE. A
+    * probe set is queries × nProbe rows — what a broadcast join side
+    * pulls onto the driver anyway — and the one collect yields all three
+    * facts a stored search needs before it scans:
+    *  - the [[requireDim]] check (same named error);
+    *  - the probed cells, sorted (empty for an empty query frame);
+    *  - the join side, as a LOCAL relation of the collected rows, so the
+    *    ranking never runs a second time.
+    * One Spark job, where a dim aggregate, a distinct collect and the
+    * broadcast build each evaluated the ranking. */
+  private[operators] def collectProbes(spark: SparkSession,
+      queries: DataFrame, cents: Array[(Long, Array[Long])], nProbe: Int,
+      what: String): (DataFrame, Array[Long]) = {
+    val ranked = cellRanksWith(queries.select("vec_id", "embedding"), cents)
+      .filter(col("rk") <= nProbe)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+        col("cent_id"))
+    val rows = ranked.withColumn("dim", dimOf(col("q_emb"))).collect()
+    if (rows.nonEmpty) {
+      val dims = rows.map(_.getInt(3))
+      checkDim(dims.min, dims.max, cents, what)
+    }
+    val local = spark.createDataFrame(
+      java.util.Arrays.asList(rows.map(r => Row(r.get(0), r.get(1),
+        r.get(2))): _*), ranked.schema)
+    (local, rows.map(_.getLong(2)).distinct.sorted)
   }
 
   private[operators] def readCentroids(spark: SparkSession,
@@ -744,7 +795,7 @@ object IvfIndex {
           .cast("array<double>").as("q_q8"),
         col("cent_id"))
     // full probe: the probed set is the whole geometry by construction —
-    // skip the distinct+collect job (the VersionedIvf.search shortcut)
+    // skip the distinct+collect job
     val probeCells =
       if (nProbe >= cents.length) cents.map(_._1)
       else probes.select("cent_id").distinct()
@@ -777,7 +828,7 @@ object IvfIndex {
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("cent_id"))
     // full probe: the probed set is the whole geometry by construction —
-    // skip the distinct+collect job (the VersionedIvf.search shortcut)
+    // skip the distinct+collect job
     val probeCells =
       if (nProbe >= cents.length) cents.map(_._1)
       else probes.select("cent_id").distinct()

@@ -119,6 +119,17 @@ object SnapshotStore {
     if (vs.isEmpty) None else Some(vs.max)
   }
 
+  /** `version` itself, or the newest published version when it is < 0
+    * (one `_versions` listing). A read that touches the store more than
+    * once resolves here ONCE and passes the number on, so a publish
+    * between its reads cannot pair one version's metadata with the
+    * next version's rows. */
+  private[graft] def resolveVersion(spark: SparkSession, root: String,
+      version: Long): Long =
+    if (version >= 0) version
+    else currentVersion(spark, root).getOrElse(
+      throw new IllegalArgumentException(s"no published version at $root"))
+
   /** (mtime, len)-validated manifest text cache. A published manifest is
     * create-exclusive and never modified, and every verb re-reads it
     * several times (meta lines, entry list, buckets, checks, columns) —
@@ -266,9 +277,7 @@ object SnapshotStore {
     * version's meta exactly). */
   private[graft] def storedMetaLines(spark: SparkSession,
       root: String, prefix: String, version: Long = -1L): Seq[String] = {
-    val v = if (version >= 0) version
-      else currentVersion(spark, root).getOrElse(
-        throw new IllegalArgumentException(s"no published version at $root"))
+    val v = resolveVersion(spark, root, version)
     manifestMeta(spark, root, v).filter(_.startsWith(prefix))
   }
 
@@ -2049,9 +2058,7 @@ object SnapshotStore {
     * so no directory listing of the whole table ever runs. */
   def read(spark: SparkSession, root: String, version: Long = -1L)
       : DataFrame = {
-    val v = if (version >= 0) version
-      else currentVersion(spark, root).getOrElse(
-        throw new IllegalArgumentException(s"no published version at $root"))
+    val v = resolveVersion(spark, root, version)
     val entries = readManifest(spark, root, v)
     if (entries.isEmpty) {
       // a published EMPTY snapshot is a valid state (an upsert can
@@ -2078,38 +2085,49 @@ object SnapshotStore {
     * scanning ONLY the files of the buckets those ids hash to (the
     * manifest's `#buckets` modulus), so a B-bucket store reads ~|ids|/B
     * of its files instead of all of them. `docIds` is a SMALL id set (it
-    * becomes an IN-list predicate); bulk reads go through [[read]]. */
+    * becomes an IN-list predicate); bulk reads go through [[read]].
+    *
+    * The ids are driver-held, so the facts derived from them are computed
+    * on the driver: the target buckets ([[targetBuckets]]) and, on a
+    * store whose `#stat`/`#bloom` lines are inline in the manifest, the
+    * doc_id verdicts ([[docIdCandidates]]) launch no Spark job — the
+    * returned frame's own action is the only one (1 job per call on an
+    * inline-metadata store). A sidecar store's verdicts evaluate on the
+    * executors against the ids as a one-row local relation, which adds
+    * the id broadcast and the verdict collect (3 jobs per call). */
   def readDocs(spark: SparkSession, root: String, docIds: Seq[Long],
       version: Long = -1L): DataFrame = {
-    val v = if (version >= 0) version
-      else currentVersion(spark, root).getOrElse(
-        throw new IllegalArgumentException(s"no published version at $root"))
+    val v = resolveVersion(spark, root, version)
     val buckets = storedBuckets(spark, root, v).getOrElse(
       throw new IllegalArgumentException(
         s"store at $root predates bucket-count manifests — one " +
           "commit()/upsert() records it"))
-    import spark.implicits._
-    // hash the ids through the SAME withBucket expression the writes use
-    // (a driver-side reimplementation could drift from Spark's xxhash64)
-    val target = withBucket(docIds.toDF("doc_id"), buckets)
-      .select("bucket").distinct().collect().map(_.getLong(0)).toSet
     // only the TARGET buckets' entries resolve to the driver (entryfile
     // stores filter on the executors)
-    val entries = entriesInBuckets(spark, root, v, target)
+    val entries =
+      entriesInBuckets(spark, root, v, targetBuckets(spark, docIds, buckets))
     // within the target buckets, doc_id stats/blooms (when declared)
     // drop the files that provably hold none of the ids — a point
     // lookup then opens ~1 file, not every file of its bucket
     val (candidates, _) =
-      if (entries.isEmpty) (entries, Seq.empty[(Long, String)])
-      else docIdCandidates(spark, root,
-        manifestMeta(spark, root, v), entries, docIds.toDF("doc_id"),
-        // the id set is a driver Seq — its distinct size is free, so the
-        // cardinality-guard job inside never needs to run
-        knownIdCount = docIds.distinct.size.toLong)
+      docIdCandidates(spark, root, manifestMeta(spark, root, v), entries,
+        Left(docIds))
     val base =
       if (candidates.nonEmpty) assemble(spark, root, v, candidates)
       else read(spark, root, v).limit(0) // schema-only empty edge
     base.filter(col("doc_id").isin(docIds: _*))
+  }
+
+  /** The buckets `ids` hash to in a `buckets`-way store, through the SAME
+    * [[withBucket]] expression the writes use (a driver-side
+    * reimplementation could drift from Spark's xxhash64). The ids ride a
+    * LOCAL relation: ConvertToLocalRelation folds the projection, so the
+    * collect runs no Spark job; duplicates fold on the driver. */
+  private[graft] def targetBuckets(spark: SparkSession, ids: Seq[Long],
+      buckets: Int): Set[Long] = {
+    import spark.implicits._
+    withBucket(ids.toDF("doc_id"), buckets).select("bucket")
+      .collect().map(_.getLong(0)).toSet
   }
 
   /** Build the snapshot frame for a (sub)set of one version's manifest
@@ -2308,7 +2326,7 @@ object SnapshotStore {
       if (!hasDocIdMeta || touchedEntries.isEmpty)
         (touchedEntries, Seq.empty[(Long, String)])
       else docIdCandidates(spark, root, meta0, touchedEntries,
-        upserted.select(col("doc_id")), knownIdCount = nUpserted)
+        Right(upserted.select(col("doc_id"))), knownIdCount = nUpserted)
     val v = cur + 1
     val merged = {
       // carried survivors read through assemble — the same dir-grouped,
@@ -2965,18 +2983,25 @@ object SnapshotStore {
     * doc_id stats/bloom declaration; without one everything is a
     * candidate.
     *
-    * `ids` is a FRAME (one `doc_id` column, non-empty): the id set is
-    * sorted/probe-expanded by Spark aggregates into a single row that
-    * broadcast-joins against the metadata rows, so candidate selection
-    * never pulls the ids to user driver code — the round-9 ≤10k driver
-    * cap (and the silent whole-bucket fallback past it) is gone. Both
-    * sidecar rows AND inline `#stat`/`#bloom` lines (threshold-bounded,
-    * parallelized into the same frames) evaluate ON EXECUTORS with the
-    * id array materialized once per partition; only the REJECTED
-    * relpaths collect. */
+    * Where the verdicts run:
+    *  - ids the driver already holds (`Left` — readDocs' argument) on a
+    *    store whose `#stat`/`#bloom` lines are all INLINE: on the
+    *    driver, over the lines the manifest text already holds, with
+    *    bloom probe positions from the SAME [[bloomPositions]]
+    *    expressions over a local relation — no Spark job;
+    *  - a sidecar store, or an id FRAME (`Right` — upsert's fresh ids,
+    *    with their distinct count in `knownIdCount` when known): the id
+    *    set is sorted/probe-expanded by Spark aggregates into a single
+    *    row that broadcast-joins against the sidecar rows AND the inline
+    *    lines (threshold-bounded, parallelized into the same frames), so
+    *    a frame's ids never reach user driver code; the verdicts
+    *    evaluate ON EXECUTORS with the id array materialized once per
+    *    partition, and only the REJECTED relpaths collect. Driver-held
+    *    ids skip the aggregates: their sorted array and probe positions
+    *    ride one-row local relations. */
   private def docIdCandidates(spark: SparkSession, root: String,
-      meta: Seq[String], entries: Seq[(Long, String)], ids: DataFrame,
-      knownIdCount: Long = -1L)
+      meta: Seq[String], entries: Seq[(Long, String)],
+      ids: Either[Seq[Long], DataFrame], knownIdCount: Long = -1L)
       : (Seq[(Long, String)], Seq[(Long, String)]) = {
     if (entries.isEmpty) return (entries, Nil)
     val statDeclared = statColsLineOf(meta).map(parseStatCols)
@@ -2986,7 +3011,9 @@ object SnapshotStore {
     if (!statDeclared && bloomDecl.isEmpty) return (entries, Nil)
     import spark.implicits._
     val sideRel = metaFileRelOf(meta)
-    val idsL = ids.select(col("doc_id").cast("long").as("id")).distinct()
+    val held = ids.left.toOption.map(_.distinct.sorted.toArray)
+    lazy val idsL = ids.fold(_.toDF("doc_id"), identity)
+      .select(col("doc_id").cast("long").as("id")).distinct()
     // Cardinality guard: the pruning machinery below funnels the WHOLE
     // distinct id set through one collect_list row (and one probe-array
     // row for bloom) that is broadcast and materialized per partition.
@@ -2997,35 +3024,56 @@ object SnapshotStore {
     // at cap+1) restores the graceful whole-bucket fallback: every
     // entry stays a candidate, nothing is carried by key pruning.
     // Callers that already hold the DISTINCT id count (upsert's touched-
-    // bucket rollup, readDocs' driver list) pass it and skip the job.
-    if (knownIdCount >= 0) {
-      if (knownIdCount > docIdPruneCap) return (entries, Nil)
+    // bucket rollup, a driver-held id list) skip the job.
+    val idCount = held.map(_.length.toLong).getOrElse(knownIdCount)
+    if (idCount >= 0) {
+      if (idCount > docIdPruneCap) return (entries, Nil)
     } else if (idsL.limit(docIdPruneCap + 1).count() > docIdPruneCap)
       return (entries, Nil)
     val dec = java.util.Base64.getDecoder
+    lazy val inlineStats =
+      meta.filter(_.startsWith("#stat\t")).flatMap { l =>
+        val a = l.split("\t", 7)
+        if (a.length == 7 && a(2) == "doc_id")
+          Some((a(1), a(3).toLong, a(4).toLong,
+            Some(a(5)).filter(_.nonEmpty), Some(a(6)).filter(_.nonEmpty)))
+        else None
+      }
+    lazy val inlineBlooms =
+      meta.filter(_.startsWith("#bloom\t")).flatMap { l =>
+        val a = l.split("\t", 4)
+        if (a.length == 4 && a(2) == "doc_id")
+          Some((a(1), dec.decode(a(3))))
+        else None
+      }
+    // probe positions of driver-held ids via the SAME Spark hash
+    // expressions as the write side (which hashed cast(doc_id as long)
+    // cast to string), over a local relation whose projection folds —
+    // this collect runs no job
+    val heldProbes = for ((_, bits) <- bloomDecl; sorted <- held)
+      yield sorted.toSeq.toDF("id")
+        .select(array(bloomPositions($"id", bits): _*))
+        .collect().map(_.getSeq[Int](0).toArray)
     // stat and bloom verdicts evaluate as TWO branches of ONE unioned
     // frame — a single job/collect where this used to launch one of
     // each (two broadcast builds, two stage rounds, per upsert)
-    val statRej: Option[DataFrame] =
+    lazy val statRej: Option[DataFrame] =
       if (!statDeclared) None
       else {
-        // inline lines parse to the sidecar row shape and ride the same
-        // executor-side evaluation as sidecar rows
-        val inlineRows = meta.filter(_.startsWith("#stat\t")).flatMap { l =>
-          val a = l.split("\t", 7)
-          if (a.length == 7 && a(2) == "doc_id")
-            Some((a(1), a(3).toLong, a(4).toLong,
-              Some(a(5)).filter(_.nonEmpty), Some(a(6)).filter(_.nonEmpty)))
-          else None
-        }
-        val inlineDf = inlineRows
+        // inline lines ride the same executor-side evaluation as
+        // sidecar rows
+        val inlineDf = inlineStats
           .toDF("rel", "rows", "nulls", "mn", "mx")
         val sideDf = sideRel.map(rel => sidecarDf(spark, root, rel)
           .filter(col("kind") === "stat" && col("col") === "doc_id")
           .select("rel", "rows", "nulls", "mn", "mx"))
         val statRows = sideDf.map(_.unionByName(inlineDf))
           .getOrElse(inlineDf)
-        val idArr = idsL.agg(sort_array(collect_list($"id")).as("ids"))
+        // driver-held ids ride as a one-row local relation; a frame's
+        // ids are sorted by an aggregate
+        val idArr = held.fold(
+          idsL.agg(sort_array(collect_list($"id")).as("ids")))(
+          sorted => Seq(sorted.toSeq).toDF("ids"))
         Some(statRows.crossJoin(broadcast(idArr))
           .as[(String, Long, Long, Option[String], Option[String],
             Seq[Long])]
@@ -3038,24 +3086,17 @@ object SnapshotStore {
             }
           }.toDF("rel"))
       }
-    val bloomRej: Option[DataFrame] = bloomDecl.map { case (_, bits) =>
-      val inlineRows = meta.filter(_.startsWith("#bloom\t")).flatMap { l =>
-        val a = l.split("\t", 4)
-        if (a.length == 4 && a(2) == "doc_id")
-          Some((a(1), dec.decode(a(3))))
-        else None
-      }
-      val inlineDf = inlineRows.toDF("rel", "bloom")
+    lazy val bloomRej: Option[DataFrame] = bloomDecl.map { case (_, bits) =>
+      val inlineDf = inlineBlooms.toDF("rel", "bloom")
       val sideDf = sideRel.map(rel => sidecarDf(spark, root, rel)
         .filter(col("kind") === "bloom" && col("col") === "doc_id")
         .select("rel", "bloom"))
       val bloomRows = sideDf.map(_.unionByName(inlineDf))
         .getOrElse(inlineDf)
-      // probe positions via the SAME Spark hash expressions as the
-      // write side (which hashed cast(doc_id as long) cast to string)
-      val probesRow = idsL
+      val probesRow = heldProbes.fold(idsL
         .select(array(bloomPositions($"id", bits): _*).as("ps"))
-        .agg(collect_list($"ps").as("pss"))
+        .agg(collect_list($"ps").as("pss")))(
+        pr => Seq(pr.map(_.toSeq).toSeq).toDF("pss"))
       bloomRows.crossJoin(broadcast(probesRow))
         .as[(String, Array[Byte], Seq[Seq[Int]])]
         .mapPartitions { it =>
@@ -3066,9 +3107,21 @@ object SnapshotStore {
           }
         }.toDF("rel")
     }
-    val rejected = (statRej.toSeq ++ bloomRej.toSeq)
-      .reduce(_.unionByName(_))
-      .collect().map(_.getString(0)).toSet
+    val rejected = (held, sideRel) match {
+      // driver-held ids, every verdict line inline: evaluate right here
+      case (Some(sorted), None) =>
+        val statRejected = if (!statDeclared) Nil
+          else inlineStats.collect { case (p, rows, nulls, mn, mx)
+            if !statsAdmitIds(sorted, rows, nulls, mn, mx) => p }
+        val bloomRejected = heldProbes.toSeq.flatMap(pr =>
+          inlineBlooms.collect {
+            case (p, bytes) if !bloomAdmitsIds(bytes, pr) => p })
+        (statRejected ++ bloomRejected).toSet
+      case _ =>
+        (statRej.toSeq ++ bloomRej.toSeq)
+          .reduce(_.unionByName(_))
+          .collect().map(_.getString(0)).toSet
+    }
     entries.partition(e => !rejected.contains(e._2))
   }
 
@@ -3081,9 +3134,7 @@ object SnapshotStore {
       value: Any, version: Long = -1L): DataFrame = {
     require(value != null,
       "readPoint needs a non-null value (Bloom filters answer equality)")
-    val v = if (version >= 0) version
-      else currentVersion(spark, root).getOrElse(
-        throw new IllegalArgumentException(s"no published version at $root"))
+    val v = resolveVersion(spark, root, version)
     // legacy manifests without #col declarations fall back to the
     // physical schema (read() works there, so readPoint must too)
     val declared = declaredCols(spark, root, v).getOrElse(
@@ -3099,9 +3150,7 @@ object SnapshotStore {
   /** (files kept, files total) a [[readPoint]] would scan. */
   def bloomReport(spark: SparkSession, root: String, colName: String,
       value: Any, version: Long = -1L): (Int, Int) = {
-    val v = if (version >= 0) version
-      else currentVersion(spark, root).getOrElse(
-        throw new IllegalArgumentException(s"no published version at $root"))
+    val v = resolveVersion(spark, root, version)
     val declared = declaredCols(spark, root, v).getOrElse(
       schemaCols(read(spark, root, v).schema)).toMap
     // a column with no declared type has no bloom either → report the
@@ -3152,9 +3201,7 @@ object SnapshotStore {
     // silently returning nothing for that probe
     require(values.forall(_ != null),
       s"readWhereIn($colName): null probe values are not supported")
-    val v = if (version >= 0) version
-      else currentVersion(spark, root).getOrElse(
-        throw new IllegalArgumentException(s"no published version at $root"))
+    val v = resolveVersion(spark, root, version)
     val declared = declaredCols(spark, root, v).getOrElse(
       schemaCols(read(spark, root, v).schema)).toMap
     val t = probeType(declared, colName, root, "readWhereIn")
@@ -3230,9 +3277,7 @@ object SnapshotStore {
     require(bounds.values.exists { case (lo, hi) =>
       lo != null || hi != null },
       "readWhere needs at least one bound (use read() for a full scan)")
-    val v = if (version >= 0) version
-      else currentVersion(spark, root).getOrElse(
-        throw new IllegalArgumentException(s"no published version at $root"))
+    val v = resolveVersion(spark, root, version)
     // legacy manifests without #col declarations fall back to the
     // physical schema, same as deleteWhere/declareStats — read() works
     // there, so readWhere must too
@@ -3371,9 +3416,7 @@ object SnapshotStore {
   /** Conjunctive form of [[skippingReport]], matching [[readWhereAll]]. */
   def skippingReportAll(spark: SparkSession, root: String,
       bounds: Map[String, (Any, Any)], version: Long = -1L): (Int, Int) = {
-    val v = if (version >= 0) version
-      else currentVersion(spark, root).getOrElse(
-        throw new IllegalArgumentException(s"no published version at $root"))
+    val v = resolveVersion(spark, root, version)
     val meta = manifestMeta(spark, root, v)
     // same type normalization as readWhereAll, so the report predicts
     // exactly the scan readWhere would run; a column absent from the

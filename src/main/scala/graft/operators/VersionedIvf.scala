@@ -291,35 +291,42 @@ object VersionedIvf {
     total
   }
 
+  /** The rows of the probed `cells` at version `v`. No query rows means
+    * no probed cell: the schema-only snapshot keeps the search result's
+    * normal schema. */
+  private[operators] def readCells(spark: SparkSession, root: String,
+      cells: Array[Long], v: Long): DataFrame =
+    if (cells.isEmpty) SnapshotStore.read(spark, root, v).limit(0)
+    else SnapshotStore.readWhereIn(spark, root, "cent_id",
+      cells.toIndexedSeq, v)
+
   /** Probe search over the versioned layout, optionally AT a historical
     * version — geometry and rows both come from that version's
-    * manifest. Narrow probes (the steady state) read each probed cell
-    * through [[SnapshotStore.readWhereIn]]'s stats skipping — ONE
-    * metadata pass admits exactly the probed cells' files, however many
-    * cells the probe set spans (the per-cell readWhere union paid the
-    * manifest/sidecar read once per cell; a full probe degrades
-    * gracefully to the whole snapshot plus a residual filter). */
+    * manifest, and a head search (`version` < 0) resolves the head ONCE,
+    * so a rebalance publishing mid-search cannot pair old centroids with
+    * new rows. The probe set is ranked and collected once
+    * ([[IvfIndex.collectProbes]]): the dim check, the probed cells and
+    * the broadcast join side all come from that one collect. The probed
+    * cells are then read through [[SnapshotStore.readWhereIn]]'s stats
+    * skipping — ONE metadata pass admits exactly the probed cells'
+    * files, evaluated on the driver for an inline-metadata store and on
+    * the executors for a sidecar store (a full probe degrades gracefully
+    * to the whole snapshot plus a residual filter).
+    *
+    * Jobs per call, with the result's collect, on an inline-metadata
+    * store: 4 (probe collect, broadcast build, the ranking's shuffle
+    * map stage and result stage), narrow or full probe. An empty query
+    * frame returns an empty result with the normal schema; `nProbe` or
+    * `topK` below 1 is a named IllegalArgumentException. */
   def search(spark: SparkSession, root: String, queries: DataFrame,
       nProbe: Int, topK: Int, version: Long = -1L): DataFrame = {
-    val cents = storedCentroids(spark, root, version)
-    IvfIndex.requireDim(queries, cents, "VersionedIvf.search")
-    val probes = IvfIndex.cellRanksWith(queries, cents)
-      .filter(col("rk") <= nProbe)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("cent_id"))
-    // full probe (nProbe covers every cell — the verification shape):
-    // the probed-cell set is the whole geometry BY CONSTRUCTION, so the
-    // distinct+collect job that derives it from the rank table is pure
-    // overhead; narrow probes still pull the bounded queries × nProbe set
-    val probeCells =
-      if (nProbe >= cents.length) cents.map(_._1).sorted
-      else probes.select("cent_id").distinct()
-        .collect().map(_.getLong(0)).sorted
-    val assigned = SnapshotStore.readWhereIn(spark, root, "cent_id",
-      probeCells.toIndexedSeq, version)
+    IvfIndex.requireSearchBounds(nProbe, topK, "VersionedIvf.search")
+    val v = SnapshotStore.resolveVersion(spark, root, version)
+    val (probes, cells) = IvfIndex.collectProbes(spark, queries,
+      storedCentroids(spark, root, v), nProbe, "VersionedIvf.search")
     IvfIndex.rankCandidates(
-      assigned.select(col("doc_id").as("vec_id"), col("embedding"),
-          col("cent_id"))
+      readCells(spark, root, cells, v)
+        .select(col("doc_id").as("vec_id"), col("embedding"), col("cent_id"))
         .join(broadcast(probes), Seq("cent_id")), topK)
   }
 }

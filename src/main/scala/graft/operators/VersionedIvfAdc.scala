@@ -482,31 +482,35 @@ object VersionedIvfAdc {
     vs.map(row).reduce(_ unionByName _).orderBy("version")
   }
 
-  /** The IVFADC cascade against a published version (head by default):
-    * coarse probe → candidate cells admitted by ONE
-    * [[SnapshotStore.readWhereIn]] metadata pass → PQ asymmetric
-    * distance from the broadcast query LUT over the stored codes. The corpus
-    * embeddings are never touched — the manifest IS the index. Query
-    * ids share the corpus namespace and self-exclude, the
-    * [[PqIndex.searchIvfIndexed]] contract. */
+  /** The IVFADC cascade against a published version (head by default,
+    * resolved ONCE — geometry, both quantizers and the cells all come
+    * from the same version, so a rebalance publishing mid-search cannot
+    * pair old centroids with new rows): coarse probe, collected once
+    * ([[IvfIndex.collectProbes]] — dim check, probed cells and join side
+    * from one job) → candidate cells admitted by ONE
+    * [[SnapshotStore.readWhereIn]] metadata pass (driver-side for an
+    * inline-metadata store, on the executors for a sidecar store) → PQ
+    * asymmetric distance from the broadcast query LUT over the stored
+    * codes. The corpus embeddings are never touched — the manifest IS
+    * the index. Query ids share the corpus namespace and self-exclude,
+    * the [[PqIndex.searchIvfIndexed]] contract.
+    *
+    * Jobs per call, with the result's collect, on an inline-metadata
+    * store: 8 — the probe collect, 3 for the query LUT (codebook
+    * broadcast, its aggregation stage, its broadcast build), the probe
+    * broadcast, and the cascade's aggregation, ranking and result
+    * stages. An empty query frame returns an empty result with the
+    * normal schema; `nProbe` or `topK` below 1 is a named
+    * IllegalArgumentException. */
   def search(spark: SparkSession, root: String, queries: DataFrame,
       nProbe: Int, topK: Int, version: Long = -1L): DataFrame = {
-    val (dim, m, _) = storedGeometry(spark, root, version)
-    val coarse = storedCoarse(spark, root, version)
-    val book = storedBook(spark, root, version)
-    IvfIndex.requireDim(queries, coarse, "VersionedIvfAdc.search")
-    val probes = IvfIndex.cellRanksWith(queries, coarse)
-      .filter(col("rk") <= nProbe)
-      .select(col("vec_id").as("q_id"), col("cent_id"))
-    // bounded driver pull: queries × nProbe cell ids. Full probe (the
-    // verification shape) skips the distinct+collect job outright — the
-    // probed set is the whole coarse geometry by construction.
-    val probeCells =
-      if (nProbe >= coarse.length) coarse.map(_._1).sorted
-      else probes.select("cent_id").distinct()
-        .collect().map(_.getLong(0)).sorted
-    val cells = SnapshotStore.readWhereIn(spark, root, "cent_id",
-      probeCells.toIndexedSeq, version)
+    IvfIndex.requireSearchBounds(nProbe, topK, "VersionedIvfAdc.search")
+    val v = SnapshotStore.resolveVersion(spark, root, version)
+    val (dim, m, _) = storedGeometry(spark, root, v)
+    val book = storedBook(spark, root, v)
+    val (probes, probeCells) = IvfIndex.collectProbes(spark, queries,
+      storedCoarse(spark, root, v), nProbe, "VersionedIvfAdc.search")
+    val cells = VersionedIvf.readCells(spark, root, probeCells, v)
     // query LUT: subspace distances of the query vectors to the STORED
     // codebook — tiny (queries × m × k), broadcast
     val lut = queryLut(spark, queries, book, dim, m)
@@ -515,7 +519,7 @@ object VersionedIvfAdc {
     val w = Window.partitionBy("q_id")
       .orderBy(col("approx_dist"), col("vec_id"))
     cells.select(col("doc_id").as("vec_id"), col("cent_id"), col("codes"))
-      .join(broadcast(probes), Seq("cent_id"))
+      .join(broadcast(probes.select("q_id", "cent_id")), Seq("cent_id"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         posexplode(col("codes")).as(Seq("j", "code")))
