@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField,
+  StructType}
 
 /** Frontier BFS over a directed edge list as bounded Pregel supersteps —
   * the q75 hop-distance loop promoted to an operator with an optional
@@ -12,15 +13,17 @@ import org.apache.spark.sql.functions._
   * nulls: `least`/`min` then compose without null-propagation special
   * cases, and a SQL oracle replays the arithmetic exactly.
   *
-  * Scale shape per superstep: one equi-join of the edge list against the
-  * current frontier (dist < Inf) on src + one min-rollup on dst + one
-  * left join back onto the (one row per node) distance table — two
-  * exchanges over edge-scale data, no driver collect; the distance table
-  * localCheckpoints per round so iterative lineage never replays prior
-  * rounds. The early-exit probe costs one additional bounded count over
-  * the node-scale table per round and stops after the first superstep
-  * that improves no node — ≤ diameter+1 rounds total, capped by
-  * `maxRounds` as the runaway bound.
+  * Scale shape: [[WeightedSssp]]'s semi-naive relaxation on the
+  * [[Superstep]] kernel with every edge weight 1 — only nodes whose hop
+  * count improved in the previous round send (in round 1, the sources),
+  * one message shuffle to dst per round, combined by min, zipped onto
+  * the one-row-per-node distance table. With `earlyExit`: one job of two
+  * stages per round (four in round 1), the count of improved nodes
+  * reduced in the job that materializes the round, stopping after the
+  * first round that improves no node — ≤ diameter+1 rounds, capped by
+  * `maxRounds` as the runaway bound. Without it, rounds chain lazily and
+  * materialize once per [[Superstep.Fence]] rounds. A null endpoint is a
+  * named error from [[run]].
   */
 object BfsHops {
 
@@ -28,46 +31,28 @@ object BfsHops {
     * that `dist + 1` can never overflow an int. */
   val Inf = 1000000
 
+  private val NullMsg = "BfsHops: edges must not have a null src or dst"
+
   /** Run at most `maxRounds` supersteps from `dist0` (one row per node:
     * `(v, dist)`, 0 at sources, [[Inf]] elsewhere) over directed edges
     * `(src, dst)`. With `earlyExit`, stops after the first round that
     * improves no node — the fixpoint, reached by round diameter+1.
-    * Returns (final distance table, rounds actually run). */
+    * Returns (final distance table, rounds actually run); `dist` keeps
+    * a long `dist0.dist`'s type and is an int otherwise. */
   def run(edges: DataFrame, dist0: DataFrame, maxRounds: Int,
       earlyExit: Boolean = false): (DataFrame, Int) = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    // Per-round checkpoints exist for ITERATIVE-LINEAGE replay — which
-    // only happens when something acts per round (the earlyExit probe).
-    // A bounded fixed-round run with one terminal action evaluates each
-    // round exactly once either way, so the lazy chain skips maxRounds
-    // materializations (the PageRank.ranks discipline); past a small
-    // bound the checkpoints return as a plan-depth fence.
-    val lazyChain = !earlyExit && maxRounds <= 8
-    var dist = if (lazyChain) dist0 else dist0.localCheckpoint(eager = true)
-    var rounds = 0
-    var done = false
-    while (rounds < maxRounds && !done) {
-      val frontier = dist.filter(col("dist") < Inf)
-        .select(col("v").as("fv"), col("dist").as("fd"))
-      val nd = edges.join(frontier, col("src") === col("fv"))
-        .groupBy("dst").agg((min("fd") + 1).as("nd"))
-      val step = dist.join(nd, dist("v") === nd("dst"), "left")
-        .select(col("v"),
-          least(col("dist"), coalesce(col("nd"), lit(Inf)))
-            .as("dist"))
-      val next =
-        if (lazyChain) step else step.localCheckpoint(eager = true)
-      if (earlyExit) {
-        // distances only ever DECREASE, so "no row improved" is exactly
-        // the fixpoint; one bounded count over the node table
-        val improved = next
-          .join(dist.select(col("v"), col("dist").as("d_prev")), "v")
-          .filter(col("dist") < col("d_prev")).count()
-        done = improved == 0L
-      }
-      dist = next
-      rounds += 1
+    val hops = edges.select("src", "dst").rdd.map { r =>
+      if (r.isNullAt(0) || r.isNullAt(1))
+        throw new IllegalArgumentException(NullMsg)
+      (r.get(0), (r.get(1), 1L))
     }
-    (dist, rounds)
+    val (dist, rounds) =
+      WeightedSssp.relax(hops, dist0, Inf.toLong, maxRounds, earlyExit)
+    val long = dist0.schema("dist").dataType == LongType
+    val schema = StructType(Seq(dist0.schema("v"), StructField("dist",
+      if (long) LongType else IntegerType, nullable = false)))
+    (Superstep.toFrame(dist0, dist, schema)((v, d) =>
+      Row(v, if (long) (d: Any) else d.toInt)), rounds)
   }
 }

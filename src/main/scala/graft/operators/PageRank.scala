@@ -1,7 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Damped PageRank by power iteration, in EXACT integer arithmetic — the
   * iterative graph-analytics family beyond [[DupClusters]]' label
@@ -10,62 +10,67 @@ import org.apache.spark.sql.functions._
   * Why integer: float PageRank sums per-neighbor contributions in
   * whatever order partial aggregation delivers them — bit-drift across
   * partitionings, AQE re-plans, and engines. Here ranks are 1e6-scaled
-  * BIGINTs, a node's per-neighbor contribution is `r div deg` (integer
+  * longs, a node's per-neighbor contribution is `r div deg` (integer
   * division) and damping is `(85 · Σ) div 100`, so every iteration is a
-  * sum of integers: order-independent, partial-agg combinable, and
-  * bit-identical in DuckDB's unrolled-CTE replay.
+  * sum of integers: order-independent, combinable, and bit-identical in
+  * DuckDB's unrolled-CTE replay. Overflow raises (`Math.*Exact`), as the
+  * ANSI SQL form does.
   *
-  * Scale shape per iteration: one shuffle join of the rank table to the
-  * edge list on src + one partial-agg shuffle on dst — the canonical
-  * Pregel superstep as two exchanges, no driver collect, state = one row
-  * per node. Edges and degrees localCheckpoint once so iterations don't
-  * replay the upstream edge generation. Nodes with no in-edges fall out
-  * of the rank table after one iteration (rank floor 0.15 applies to
-  * linked nodes); callers over undirected graphs are unaffected since
-  * symmetric edges give every node an in-link.
+  * Scale shape: a [[Superstep]] program. The edge list is grouped by src
+  * once, in round 1's job (out-degree is the length of its row);
+  * a round sends `r div deg` along every out-edge of every ranked node
+  * and shuffles only those messages, combined by sum on dst; state is
+  * one row per ranked node. [[ranksConverged]] runs one job of two
+  * stages per round (three in round 1), its max-|Δr| verdict reduced in
+  * the job that materializes the round; [[ranks]] chains its rounds
+  * lazily and materializes once per [[Superstep.Fence]] rounds. Nodes
+  * with no in-edges fall out of the rank table after one iteration (rank
+  * floor 0.15 applies to linked nodes); callers over undirected graphs
+  * are unaffected since symmetric edges give every node an in-link.
   */
 object PageRank {
 
-  /** Degree-folded, src-partitioned edge list + initial uniform ranks —
-    * the shared per-run setup of both entry points below.
-    *
-    * hash-partition the edge list by src ONCE and checkpoint:
-    * localCheckpoint preserves the partitioning, so every iteration's
-    * rank⋈edges join reuses it and only the (one row per node) rank
-    * table shuffles — the edge list, the corpus-scale side, never moves
-    * again; the degree aggregation rides the same partitioning for free.
-    * Out-degree is folded into the edge list ONCE (a zipped join — both
-    * sides already src-partitioned, no exchange) instead of re-joining
-    * deg inside every iteration: each iteration is then exactly two
-    * exchanges — the one-row-per-node rank table to src-partitioning,
-    * and the partial-agg combine on dst. */
-  private def prep(edges: DataFrame): (DataFrame, DataFrame) = {
-    val e = edges.select("src", "dst").repartition(col("src"))
-      .localCheckpoint(eager = false)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(eager = false)
-    val ew = e.join(deg, "src").localCheckpoint(eager = false)
-    (ew, deg.select(col("src").as("node"), lit(1000000L).as("r")))
+  private val NullMsg = "PageRank: edges must not have a null src or dst"
+
+  /** One damped power iteration per round: every ranked node sends
+    * `r div deg`; a node's next rank is `150000 + (85 · Σ) div 100` over
+    * what it received, and a node that received nothing leaves the
+    * table. The verdict is max |Δr| over nodes ranked in both rounds. */
+  private final case class Rank(tolMicros: Long)
+      extends Superstep.Program[Long, Unit, Long] {
+    def sends(r: Long): Boolean = true
+    def message(r: Long, deg: Int, e: Unit): Long = r / deg
+    def combine(a: Long, b: Long): Long = Math.addExact(a, b)
+    def update(prev: Option[Long], sc: Option[Long]): Option[Long] =
+      sc.map(s => Math.addExact(150000L, Math.multiplyExact(85L, s) / 100))
+    def delta(prev: Long, next: Long): Long =
+      Math.absExact(Math.subtractExact(next, prev))
+    def merge(a: Long, b: Long): Long = math.max(a, b)
+    def converged(moved: Long): Boolean = moved <= tolMicros
   }
 
-  /** One damped power-iteration superstep: rank⋈edges on src, integer
-    * per-neighbour contribution, partial-agg combine on dst. */
-  private def step(ew: DataFrame, r: DataFrame): DataFrame =
-    ew.join(r, ew("src") === r("node"))
-      .select(col("dst"), expr("r div deg").as("c"))
-      .groupBy("dst")
-      .agg(sum(col("c")).as("sc"))
-      .select(col("dst").as("node"),
-        (lit(150000L) + expr("(85 * sc) div 100")).as("r"))
+  /** Rounds of [[Rank]] from uniform ranks 1e6 on every node with an
+    * out-edge; (node, r) plus the rounds run. */
+  private def iterate(edges: DataFrame, maxIters: Int, probe: Boolean,
+      tolMicros: Long): (DataFrame, Int) = {
+    val e = edges.select("src", "dst")
+    val out = e.rdd.map { r =>
+      if (r.isNullAt(0) || r.isNullAt(1))
+        throw new IllegalArgumentException(NullMsg)
+      (r.get(0), (r.get(1), ()))
+    }
+    val (state, rounds) = Superstep.run(out, Superstep.partitions(edges),
+      Rank(tolMicros), maxIters, probe)(_.mapValues(_ => 1000000L))
+    val schema = StructType(Seq(e.schema("dst").copy(name = "node"),
+      StructField("r", LongType, nullable = true)))
+    (Superstep.toFrame(edges, state, schema)((n, r) => Row(n, r)), rounds)
+  }
 
   /** (node, r) with r = 1e6-scaled rank after `iters` damped iterations
     * over the DEDUPLICATED directed edge list (src, dst). */
   def ranks(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val (ew, r0) = prep(edges)
-    var r = r0
-    for (_ <- 1 to iters) r = step(ew, r)
-    r
+    iterate(edges, iters, probe = false, 0L)._1
   }
 
   /** Convergence-driven variant: iterate until no node's rank moved by
@@ -74,33 +79,11 @@ object PageRank {
     * the tolerance never met means the bound cut the run short — integer
     * PageRank can settle into a small period-2 oscillation instead of an
     * exact fixpoint, which is what a tolerance of a few micros absorbs.
-    *
-    * The probe is one bounded one-row max-|Δ| aggregate per round over
-    * the node table (never the edges), and each iterate materializes via
-    * localCheckpoint so the probe and the next round share the work —
-    * the [[DupClusters]] monotone-probe pattern. Fixed-`iters` callers
-    * ([[ranks]], the q57 oracle) keep the probe-free lazy chain. */
+    * After N rounds the ranks equal [[ranks]]`(edges, N)`. */
   def ranksConverged(edges: DataFrame, maxIters: Int,
       tolMicros: Long = 0L): (DataFrame, Int) = {
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
     require(tolMicros >= 0L, s"tolMicros must be >= 0, got $tolMicros")
-    val (ew, r0) = prep(edges)
-    var r = r0.localCheckpoint(eager = true)
-    var rounds = 0
-    var done = false
-    while (rounds < maxIters && !done) {
-      val next = step(ew, r).localCheckpoint(eager = true)
-      // max |Δr| over the (one row per node) rank tables; inner join —
-      // dangling nodes fall out of the table after round 1 and the node
-      // set is stable from then on. Empty graph ⇒ null max ⇒ 0 ⇒ done.
-      val moved = next
-        .join(r.select(col("node"), col("r").as("r_prev")), "node")
-        .agg(coalesce(max(abs(col("r") - col("r_prev"))), lit(0L)))
-        .collect()(0).getLong(0)
-      r = next
-      rounds += 1
-      done = moved <= tolMicros
-    }
-    (r, rounds)
+    iterate(edges, maxIters, probe = true, tolMicros)
   }
 }

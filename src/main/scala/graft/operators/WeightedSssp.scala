@@ -1,25 +1,30 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Single-source shortest paths over a WEIGHTED directed edge list as
   * bounded Bellman–Ford supersteps — [[BfsHops]]' relaxation generalized
-  * from hop counts to additive edge weights (the `min(fd) + 1` rollup
-  * becomes `min(fd + w)`).
+  * from hop counts to additive edge weights (BfsHops is this relaxation
+  * with every weight 1).
   *
-  * Same scale shape per superstep as BfsHops: one equi-join of the edge
-  * list against the current frontier on src + one min-rollup on dst +
-  * one left join back onto the one-row-per-node distance table — two
-  * exchanges over edge-scale data, no driver collect; the distance table
-  * localCheckpoints per round so iterative lineage never replays prior
-  * rounds. Negative weights are rejected AT FIRST USE, inside the
-  * relaxation expression itself — the guard costs one comparison per
-  * relaxed edge instead of a dedicated full-edge-list pre-scan job per
-  * call, and it is exactly as strong: an edge no relaxation ever reads
-  * cannot influence any distance, while every edge that COULD (including
-  * every edge of a reachable negative cycle, which would diverge forever
-  * under early exit) fires the guard the round it is first joined.
+  * Scale shape: a [[Superstep]] program, semi-naive: only a node whose
+  * distance improved in the previous round sends `dist + w` along its
+  * out-edges (in round 1, every node with a finite initial distance).
+  * The messages shuffle once per round, combined by min on dst, and are
+  * zipped onto the one-row-per-node distance table; a node that did not
+  * improve already sent the same offer, so distances and round counts
+  * equal the relaxation in which every reached node sends every round.
+  * With `earlyExit`: one job of two stages per round (four in round 1,
+  * which also partitions the edges and the initial table), the count of
+  * improved nodes reduced in the job that materializes the round.
+  * Without it, rounds chain lazily and materialize once per
+  * [[Superstep.Fence]] rounds. Null endpoints, null weights and negative
+  * weights are named errors from [[run]], checked once per edge as the
+  * edge list is partitioned in round 1's job (so an edge no relaxation
+  * reads is checked too, and no separate validation job runs).
   *
   * Distances are longs with an additive-overflow-safe [[Inf]] sentinel;
   * `maxRounds` bounds the run (n−1 rounds reach the true fixpoint on
@@ -32,104 +37,67 @@ object WeightedSssp {
     * Long overflow for `dist + w` on sane weights. */
   val Inf = 1000000000000L
 
+  private val NullMsg =
+    "WeightedSssp: edges must not have a null src, dst or w"
+
+  private val NegMsg =
+    "WeightedSssp: negative edge weights are not supported (a " +
+      "negative cycle would make the early-exit fixpoint diverge)"
+
+  /** Min-plus relaxation with sentinel `inf`. State: (dist, improved in
+    * the round that produced it); the next distance is
+    * `min(dist, coalesce(offer, inf))`; the verdict counts improved
+    * nodes. */
+  private final case class Relax(inf: Long)
+      extends Superstep.Program[(Long, Boolean), Long, Long] {
+    def sends(v: (Long, Boolean)): Boolean = v._2 && v._1 < inf
+    def message(v: (Long, Boolean), deg: Int, w: Long): Long =
+      Math.addExact(v._1, w)
+    def combine(a: Long, b: Long): Long = math.min(a, b)
+    def update(prev: Option[(Long, Boolean)],
+        offer: Option[Long]): Option[(Long, Boolean)] =
+      prev.map { case (d, _) =>
+        val n = math.min(d, offer.getOrElse(inf))
+        (n, n < d)
+      }
+    def delta(prev: (Long, Boolean), next: (Long, Boolean)): Long =
+      if (next._1 < prev._1) 1L else 0L
+    def merge(a: Long, b: Long): Long = a + b
+    def converged(improved: Long): Boolean = improved == 0L
+  }
+
+  /** At most `maxRounds` relaxation rounds of weighted `edges` (src →
+    * (dst, w)) from `dist0` (`v`, `dist`; a null dist counts as `inf`).
+    * Returns (v → dist, rounds run). Shared with [[BfsHops]]. */
+  private[operators] def relax(edges: RDD[(Any, (Any, Long))],
+      dist0: DataFrame, inf: Long, maxRounds: Int,
+      earlyExit: Boolean): (RDD[(Any, Long)], Int) = {
+    val d0 = dist0
+      .select(col("v"), coalesce(col("dist").cast("long"), lit(inf)))
+      .rdd.map(r => (r.get(0), (r.getLong(1), true)))
+    val (state, rounds) = Superstep.run(edges, Superstep.partitions(dist0),
+      Relax(inf), maxRounds, earlyExit)(_ => d0)
+    (state.mapValues(_._1), rounds)
+  }
+
   /** Run at most `maxRounds` relaxation rounds from `dist0` (one row
     * per node: `(v, dist)`, 0 at sources, [[Inf]] elsewhere) over
     * directed edges `(src, dst, w)` with non-negative long weights.
     * With `earlyExit`, stops after the first round that improves no
     * node. Returns (final distance table, rounds actually run). */
-  private val NegMsg =
-    "WeightedSssp: negative edge weights are not supported (a " +
-      "negative cycle would make the early-exit fixpoint diverge)"
-
-  /** Is `e` (anywhere in its cause chain) the relaxation guard's
-    * raise_error? Matched two ways so presentation changes cannot hide
-    * the contract violation: by the USER_RAISED_EXCEPTION error
-    * condition + its message parameters (survives a truncated or
-    * re-templated rendered message) AND by rendered-message substring
-    * (survives a wrapper that flattened the SparkThrowable away). The
-    * walk covers the FULL cause chain with a cycle guard — a deep
-    * executor-side wrap must not let the raw SparkException escape. */
-  private def isNegWeightGuard(e: Throwable): Boolean = {
-    val seen = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[Throwable, java.lang.Boolean]())
-    var t: Throwable = e
-    while (t != null && seen.add(t)) {
-      val byMessage =
-        Option(t.getMessage).exists(_.contains("negative edge weights"))
-      val byCondition = t match {
-        case st: org.apache.spark.SparkThrowable =>
-          Option(st.getCondition).contains("USER_RAISED_EXCEPTION") && {
-            import scala.jdk.CollectionConverters._
-            Option(st.getMessageParameters).exists(_.asScala.values
-              .exists(v => v != null && v.contains("negative edge weights")))
-          }
-        case _ => false
-      }
-      if (byMessage || byCondition) return true
-      t = t.getCause
-    }
-    false
-  }
-
   def run(edges: DataFrame, dist0: DataFrame, maxRounds: Int,
       earlyExit: Boolean = false): (DataFrame, Int) = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    // the weight guard, evaluated per RELAXED edge inside the rollup —
-    // no separate full-edge-list validation job (raise_error keeps the
-    // superstep's codegen; the catch below re-surfaces it by name)
-    val checkedW = when(col("w").cast("long") >= 0, col("w").cast("long"))
-      .otherwise(raise_error(lit(NegMsg)))
-    // lazy fixed-round chain when nothing acts per round — see
-    // [[BfsHops.run]]'s rationale; the probe-driven form keeps the
-    // per-round checkpoints
-    val lazyChain = !earlyExit && maxRounds <= 8
-    val d0 = dist0.select(col("v"), col("dist").cast("long").as("dist"))
-    var dist = if (lazyChain) d0 else d0.localCheckpoint(eager = true)
-    var rounds = 0
-    var done = false
-    while (rounds < maxRounds && !done) {
-      val frontier = dist.filter(col("dist") < Inf)
-        .select(col("v").as("fv"), col("dist").as("fd"))
-      val nd = edges.join(frontier, col("src") === col("fv"))
-        .groupBy("dst")
-        .agg(min(col("fd") + checkedW).as("nd"))
-      val next =
-        try {
-          val step = dist.join(nd, dist("v") === nd("dst"), "left")
-            .select(col("v"),
-              least(col("dist"), coalesce(col("nd"), lit(Inf)))
-                .as("dist"))
-          if (lazyChain) step else step.localCheckpoint(eager = true)
-        } catch {
-          // the raise_error surfaces as a SparkException chain; rethrow
-          // as the operator's own named contract violation
-          case e: Exception if isNegWeightGuard(e) =>
-            throw new IllegalArgumentException(NegMsg, e)
-        }
-      if (earlyExit) {
-        // distances only ever decrease, so "no row improved" is exactly
-        // the fixpoint; one bounded count over the node table
-        val improved = next
-          .join(dist.select(col("v"), col("dist").as("d_prev")), "v")
-          .filter(col("dist") < col("d_prev")).count()
-        done = improved == 0L
+    val weighted = edges.select(col("src"), col("dst"), col("w").cast("long"))
+      .rdd.map { r =>
+        if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2))
+          throw new IllegalArgumentException(NullMsg)
+        if (r.getLong(2) < 0L) throw new IllegalArgumentException(NegMsg)
+        (r.get(0), (r.get(1), r.getLong(2)))
       }
-      dist = next
-      rounds += 1
-    }
-    // the lazy chain ran no action inside the loop — ONE guarded
-    // materialization here keeps the operator's named-error contract
-    // (the weight guard must surface from run(), not from whatever
-    // terminal action a caller happens to run later) while still
-    // skipping the other maxRounds−1 round materializations
-    val out =
-      if (!lazyChain) dist
-      else
-        try dist.localCheckpoint(eager = true)
-        catch {
-          case e: Exception if isNegWeightGuard(e) =>
-            throw new IllegalArgumentException(NegMsg, e)
-        }
-    (out, rounds)
+    val (dist, rounds) = relax(weighted, dist0, Inf, maxRounds, earlyExit)
+    val schema = StructType(Seq(dist0.schema("v"),
+      StructField("dist", LongType, nullable = false)))
+    (Superstep.toFrame(dist0, dist, schema)((v, d) => Row(v, d)), rounds)
   }
 }

@@ -237,11 +237,11 @@ object Warehouse extends QueryPack {
     // per-neighbor contribution = r div deg, damping = (85·Σ) div 100):
     // integer sums are order-independent, so partial aggregation, AQE
     // re-partitioning, and DuckDB all produce bit-identical ranks — no
-    // float-accumulation drift. Per iteration: one shuffle join of ranks
-    // to edges + one partial-agg shuffle on dst; edges/degrees compute
-    // once and localCheckpoint so iterations don't replay the pair
-    // generation. Fan-out stays bounded by order size (the q51 pattern),
-    // never corpus-shaped.
+    // float-accumulation drift. On the Superstep kernel: edges grouped by
+    // src once, one message shuffle per iteration, the three iterations
+    // chained lazily and materialized once, so they never replay the
+    // pair generation. Fan-out stays bounded by order size (the q51
+    // pattern), never corpus-shaped.
     "q57_pagerank" -> ((s, d) => {
       // EAGER checkpoint of the co-purchase self-join: its consumers
       // (the two union branches here, plus everything upstream of
@@ -510,16 +510,17 @@ object Warehouse extends QueryPack {
     // k-hop BFS (single-source shortest hop distance) over the
     // co-purchase graph — the third iterative graph shape beside q57's
     // PageRank and d08's label propagation. Three Pregel supersteps via
-    // the BfsHops operator, each exactly two exchanges (frontier ⋈ edges
-    // on src + dst min-rollup), frontier-filtered so settled work
-    // shrinks as the wave passes; distances are small exact ints with an
-    // integer "infinity" sentinel (BfsHops.Inf — least() over NULL would
-    // silently poison, a sentinel cannot), per-iteration state
-    // checkpointed (the q57 discipline: iterations must not replay pair
-    // generation). The fixed 3-round form here matches the unrolled SQL
-    // oracle; production callers use BfsHops.run(…, earlyExit = true)
-    // and stop at the fixpoint. Output is the hop histogram — ≤ k+2 rows
-    // from any graph size, unreached nodes reported as dist −1.
+    // the BfsHops operator on the Superstep kernel, each one message
+    // shuffle from the nodes the previous round improved (semi-naive, so
+    // settled work drops out as the wave passes); distances are small
+    // exact ints with an integer "infinity" sentinel (BfsHops.Inf —
+    // least() over NULL would silently poison, a sentinel cannot), the
+    // rounds materialized once (the q57 discipline: iterations must not
+    // replay pair generation). The fixed 3-round form here matches the
+    // unrolled SQL oracle; production callers use BfsHops.run(…,
+    // earlyExit = true) and stop at the fixpoint. Output is the hop
+    // histogram — ≤ k+2 rows from any graph size, unreached nodes
+    // reported as dist −1.
     "q75_bfs_hops" -> ((s, d) => {
       val Inf = graft.operators.BfsHops.Inf
       val half = coPurchasePairs(Tables.lineitem(s, d)).distinct()
@@ -548,9 +549,9 @@ object Warehouse extends QueryPack {
     // co-purchase edges weighted by affinity (frequent pairs are
     // CHEAP: w = max(1, 4 − #orders-with-pair), so the distance is a
     // "recommendation hops" metric). Same per-round scale shape as
-    // BFS — frontier ⋈ edges + dst min-rollup + node-table left join,
-    // two exchanges per round, never a driver pull; 3 fixed rounds so
-    // the unrolled SQL oracle replays the relaxation exactly
+    // BFS — one message shuffle from the improved nodes, narrow joins
+    // with the edges and the node table, never a driver pull; 3 fixed
+    // rounds so the unrolled SQL oracle replays the relaxation exactly
     // (convergence-driven exit is the operator's earlyExit parameter,
     // spec-pinned in ConvergenceSpec). Distance histogram output —
     // bounded by the 3-round weighted-diameter, not node count.

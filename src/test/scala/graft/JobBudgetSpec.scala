@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 
 import graft.RequestFixtures.{Dim, vector}
-import graft.operators.{SnapshotStore, VersionedIvf, VersionedIvfAdc}
+import graft.operators.{BfsHops, PageRank, SnapshotStore, VersionedIvf,
+  VersionedIvfAdc, WeightedSssp}
 
 /** Job budgets of the request verbs — the first piece of the per-query
   * budget gate: each pinned count is the number of Spark jobs one WARM
@@ -19,6 +20,15 @@ import graft.operators.{SnapshotStore, VersionedIvf, VersionedIvfAdc}
   *  - VersionedIvfAdc.search:             11 → 8
   *  - SnapshotStore.readDocs, inline meta: 7 → 1
   *  - SnapshotStore.readDocs, sidecar:     7 → 3
+  *
+  * Graph operators (jobs per call, before → after the shared superstep
+  * kernel: one job per probed round, one per eight probe-free rounds,
+  * plus the collect):
+  *  - PageRank.ranksConverged, 6 rounds:  49 → 7
+  *  - PageRank.ranks, 3 iterations:        9 → 2
+  *  - BfsHops.run, earlyExit, 6 rounds:   54 → 7
+  *  - BfsHops.run, 3 fixed rounds:        10 → 2
+  *  - WeightedSssp.run, earlyExit, 6 rounds: 54 → 7
   */
 class JobBudgetSpec extends SparkTestBase {
 
@@ -95,5 +105,50 @@ class JobBudgetSpec extends SparkTestBase {
     info(s"readDocs inline: $i jobs, sidecar: $s jobs")
     assert(i <= 1, s"inline-metadata readDocs launched $i jobs")
     assert(s <= 3, s"sidecar readDocs launched $s jobs")
+  }
+
+  /** Jobs and rounds of one warm graph-operator call, collect included. */
+  private def warmRounds(call: => (DataFrame, Int)): (Int, Int) = {
+    call._1.collect()
+    val (rounds, jobs) = JobCounter(spark) {
+      val (df, n) = call
+      df.collect()
+      n
+    }
+    (jobs, rounds)
+  }
+
+  test("graph operators stay within budget") {
+    val sp = spark
+    import sp.implicits._
+    // ranks keep moving on this irregular graph, so a probed run goes to
+    // its bound
+    val irregular = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (3L, 4L),
+      (4L, 3L), (1L, 3L), (3L, 1L)).toDF("src", "dst")
+    val path = (0L until 5L).flatMap(i => Seq((i, i + 1), (i + 1, i)))
+      .toDF("src", "dst")
+    val hops0 = (0L to 5L).map(i => (i, if (i == 0L) 0 else BfsHops.Inf))
+      .toDF("v", "dist")
+    val weighted = (0L until 5L).flatMap(i =>
+      Seq((i, i + 1, 2L), (i + 1, i, 2L))).toDF("src", "dst", "w")
+    val cost0 = (0L to 5L)
+      .map(i => (i, if (i == 0L) 0L else WeightedSssp.Inf)).toDF("v", "dist")
+
+    val (pr, prRounds) = warmRounds(PageRank.ranksConverged(irregular, 6))
+    val ranks = warmJobs(PageRank.ranks(irregular, 3))
+    val (bfsEe, bfsRounds) =
+      warmRounds(BfsHops.run(path, hops0, 20, earlyExit = true))
+    val (bfsFixed, _) = warmRounds(BfsHops.run(path, hops0, 3))
+    val (sssp, ssspRounds) =
+      warmRounds(WeightedSssp.run(weighted, cost0, 20, earlyExit = true))
+    info(s"ranksConverged ($prRounds rounds): $pr, ranks(3): $ranks, " +
+      s"BFS earlyExit ($bfsRounds rounds): $bfsEe, BFS 3 rounds: " +
+      s"$bfsFixed, SSSP earlyExit ($ssspRounds rounds): $sssp jobs")
+    assert(prRounds === 6 && bfsRounds === 6 && ssspRounds === 6)
+    assert(pr <= 7, s"ranksConverged launched $pr jobs")
+    assert(ranks <= 2, s"ranks launched $ranks jobs")
+    assert(bfsEe <= 7, s"BFS with earlyExit launched $bfsEe jobs")
+    assert(bfsFixed <= 2, s"fixed-round BFS launched $bfsFixed jobs")
+    assert(sssp <= 7, s"SSSP with earlyExit launched $sssp jobs")
   }
 }

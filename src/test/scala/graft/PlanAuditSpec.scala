@@ -67,11 +67,6 @@ class PlanAuditSpec extends SparkTestBase {
     "t17_table_stats" -> Set("wide-shuffle"),
     // 1-row broadcast sides: eval-slice truth / threshold / total rows
     "d11_sketch_recall" -> Set("nested-loop-join"),
-    // q75's lazy fixed-round chain (round 13) keeps the dist0 seed in
-    // the returned plan: nodes × broadcast 1-row min-source aggregate —
-    // the benign 1-row class (previously hidden behind the per-round
-    // checkpoint, not absent)
-    "q75_bfs_hops" -> Set("nested-loop-join"),
     // d21: bounded eval-slice brute-force truth (the d11 class —
     // slice ≤ 512 rows × slice-sized other side; s29's slice crossJoin
     // needs no entry — its 5-row broadcast side audits clean)
