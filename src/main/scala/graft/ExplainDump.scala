@@ -126,16 +126,11 @@ object ExplainDump {
     }
 
     // Stored-IVF probe: written fresh so the dump is self-contained.
-    section("IvfIndex.searchIndexed (stored, partition-pruned probe)", {
-      val path = "target/explain-ivf-index"
-      val f = new java.io.File(path)
-      if (f.exists()) {
-        import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively()
-      }
+    section("VersionedIvf.search (stored, stats-skipping probe)", {
+      val root = Tables.freshRoot("explain-ivf-index")
       val emb = Tables.embeddings(spark, sfDir)
-      graft.operators.IvfIndex.writeIndex(emb, k = 16, path)
-      graft.operators.IvfIndex.searchIndexed(spark, path,
+      graft.operators.VersionedIvf.write(emb, k = 16, root)
+      graft.operators.VersionedIvf.search(spark, root,
         emb.filter(col("vec_id") < 5).select("vec_id", "embedding"),
         nProbe = 2, topK = 3)
         .queryExecution.explainString(

@@ -137,16 +137,6 @@ object ScaleRehearsal {
     val batches = args.lift(1).map(_.toInt).getOrElse(200)
     val buckets = 8
     val cap = 4
-    def freshRoot(tag: String): String = {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft-rehearsal-frag-$tag").getPath
-      val rf = new java.io.File(root)
-      if (rf.exists()) {
-        import scala.reflect.io.Directory
-        new Directory(rf).deleteRecursively()
-      }
-      root
-    }
     // one fresh document's chunk rows per micro-batch (5 rows, ids
     // disjoint per batch so every publish is a pure delta file)
     def batchRows(b: Int): DataFrame =
@@ -157,7 +147,7 @@ object ScaleRehearsal {
       SnapshotStore.manifestEntries(spark, root,
         SnapshotStore.currentVersion(spark, root).get).size
 
-    val unmanaged = freshRoot("unmanaged")
+    val unmanaged = Tables.freshRoot("rehearsal-frag-unmanaged")
     val (_, tUn) = timed("frag_unmanaged_ingest") {
       (0 until batches).foreach { b =>
         SnapshotStore.commitBatch(batchRows(b), unmanaged, buckets,
@@ -172,7 +162,7 @@ object ScaleRehearsal {
     }
     report += "frag_unmanaged_read_s" -> tReadUn
 
-    val managed = freshRoot("managed")
+    val managed = Tables.freshRoot("rehearsal-frag-managed")
     var compactions = 0
     val (_, tMan) = timed("frag_managed_ingest") {
       (0 until batches).foreach { b =>
@@ -227,13 +217,7 @@ object ScaleRehearsal {
     import spark.implicits._
     val report = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val rows = args.lift(1).map(_.toLong).getOrElse(100000L)
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"), "graft-rehearsal-manifest").getPath
-    val rf = new java.io.File(root)
-    if (rf.exists()) {
-      import scala.reflect.io.Directory
-      new Directory(rf).deleteRecursively()
-    }
+    val root = Tables.freshRoot("rehearsal-manifest")
     val df = spark.range(rows).select(col("id").as("doc_id"),
       col("id").as("n"), concat(lit("key_"), col("id")).as("k"))
     val (_, tCommit) = timed("manifest_commit") {
@@ -398,15 +382,7 @@ object ScaleRehearsal {
     val dim = 64
     val emb = synthEmbeddings(spark, n, dim)
       .localCheckpoint(eager = true) // synth once; verbs time the verb
-    def freshRoot(tag: String): String = {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft-rehearsal-$tag").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively(): Unit }
-      root
-    }
-    val root = freshRoot("ivf")
+    val root = Tables.freshRoot("rehearsal-ivf")
 
     val (v1, tWrite) = timed("ivf_write") {
       VersionedIvf.write(emb, k = 64, root, buckets = 8)
@@ -502,7 +478,7 @@ object ScaleRehearsal {
     require(tcFull.length == 64 && tcSamp.length == 64,
       "Lloyd training lost centroids")
 
-    val adcRoot = freshRoot("ivfadc")
+    val adcRoot = Tables.freshRoot("rehearsal-ivfadc")
     val (av1, tAdcWrite) = timed("ivfadc_write") {
       VersionedIvfAdc.write(emb, adcRoot, dim = dim, m = 8, k = 16,
         nCells = 64, buckets = 8)
@@ -559,17 +535,8 @@ object ScaleRehearsal {
     def mkEntries(from: Long, until: Long, vTag: String): Seq[(Long, String)] =
       (from until until).map(i => (i % 1024L,
         f"data/$vTag/bucket=${i % 1024L}%d/part-$i%08d.parquet"))
-    def clean(root: String): Unit = {
-      val rf = new java.io.File(root)
-      if (rf.exists()) {
-        import scala.reflect.io.Directory
-        new Directory(rf).deleteRecursively(): Unit
-      }
-    }
     def run(tag: String, threshold: Int): String = {
-      val root = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft-rehearsal-entries-$tag").getPath
-      clean(root)
+      val root = Tables.freshRoot(s"rehearsal-entries-$tag")
       val saved = SnapshotStore.entryThreshold
       SnapshotStore.entryThreshold = threshold
       try {
@@ -854,12 +821,12 @@ object ScaleRehearsal {
 
     // ---- stored IVF: full-probe ≡ brute force; upsert replaces ----
     val emb = synthEmbeddings(spark, 20000L).localCheckpoint(eager = true)
-    val ivfPath = "target/rehearsal-ivf"
+    val ivfRoot = Tables.freshRoot("rehearsal-ivf-20k")
     val (_, tBuild) = timed("ivf_build_20k")(
-      IvfIndex.writeIndex(emb, k = 16, ivfPath))
+      VersionedIvf.write(emb, k = 16, ivfRoot))
     val queries = emb.filter(col("vec_id") < 5)
     val (got, tSearch) = timed("ivf_fullprobe_search") {
-      IvfIndex.searchIndexed(spark, ivfPath, queries, nProbe = 16,
+      VersionedIvf.search(spark, ivfRoot, queries, nProbe = 16,
         topK = 10).collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     }
@@ -886,11 +853,11 @@ object ScaleRehearsal {
           .select(col("id").as("vec_id"),
             Embedder.embed(concat(lit("v"), col("id")), 64)
               .cast("array<float>").as("embedding")))
-      IvfIndex.upsertIndexed(spark, ivfPath, delta)
+      VersionedIvf.upsert(spark, ivfRoot, delta)
     }
-    val idx = spark.read.parquet(s"$ivfPath/index")
+    val idx = SnapshotStore.read(spark, ivfRoot)
     require(idx.count() == 20100L &&
-      idx.select("vec_id").distinct().count() == 20100L,
+      idx.select("doc_id").distinct().count() == 20100L,
       "stored-IVF upsert duplicated or dropped rows")
     report += "ivf_upsert_s" -> tUp
 
@@ -906,12 +873,7 @@ object ScaleRehearsal {
     // z-order-clustered into ~32 small files, and a 2%-selectivity
     // range must provably skip at least half the files while returning
     // exactly the full-scan filter's rows ----
-    val statRoot = "target/rehearsal-statstore"
-    val statRootFile = new java.io.File(statRoot)
-    if (statRootFile.exists()) {
-      import scala.reflect.io.Directory
-      new Directory(statRootFile).deleteRecursively(): Unit
-    }
+    val statRoot = Tables.freshRoot("rehearsal-statstore")
     val statDf = spark.range(1000000L).select(col("id").as("doc_id"),
       pmod(xxhash64(col("id")), lit(1000000L)).as("v"))
     val (_, tStatBuild) = timed("stats_build_1m") {

@@ -54,4 +54,13 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = p(s, d, "documents")
   /** Vector-index analog of the reference's Pinecone index (dim 64 here). */
   def embeddings(s: SparkSession, d: String): DataFrame = p(s, d, "embeddings")
+
+  /** An empty scratch root `<java.io.tmpdir>/graft-<tag>` for a query or
+    * rehearsal that builds its own store: whatever a previous run left
+    * there is deleted first, so every run starts from version 0. */
+  def freshRoot(tag: String): String = {
+    val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft-$tag")
+    if (root.exists()) new scala.reflect.io.Directory(root).deleteRecursively()
+    root.getPath
+  }
 }

@@ -287,7 +287,7 @@ object DupClusters {
   }
 
   /** Persist cluster labels as ONE atomic, time-travelable
-    * [[SnapshotStore]] version — the [[IvfIndex.writeIndex]] discipline
+    * [[SnapshotStore]] version — the [[VersionedIvf.write]] discipline
     * applied to the dedup side: the ANN tier persists its centroids once
     * and every consumer reads them, while the cluster consumers (split,
     * token budget, per-source loss) historically each re-ran the FULL

@@ -25,11 +25,11 @@ import graft.functions.VectorFunctions
   * moral equivalent of broadcasting the centroid table) and inlined as
   * literals, so cell ranking is a map-only scan with a per-row
   * array_sort over k (dist, cent_id) structs: NO shuffle, NO window, no
-  * crossJoin row expansion. At rest [[writeIndex]] partitions the stored
-  * index BY cent_id and [[searchIndexed]] reads it back with a
-  * `cent_id IN (probe cells)` predicate, which Spark turns into partition
-  * pruning (`PartitionFilters` on the scan) — a probe touches only the
-  * probed cells' files, never the whole index.
+  * crossJoin row expansion. At rest the index lives in one store:
+  * [[VersionedIvf]] (flat or SQ8 rows) and [[VersionedIvfAdc]] (PQ codes)
+  * publish rows and centroids as one [[SnapshotStore]] version and read a
+  * probe's cells through the store's cent_id statistics — a probe opens
+  * only the probed cells' files, never the whole index.
   */
 object IvfIndex {
 
@@ -53,7 +53,7 @@ object IvfIndex {
     * is what bounds per-probe work at corpus scale; everything stays
     * deterministic — quantized integer means of deterministic
     * assignments — so a trained index is as reproducible as a seeded one.
-    * Use with [[cellRanksWith]] / [[writeIndex]]'s explicit-centroid form.
+    * Use with [[cellRanksWith]] / [[searchWith]]'s explicit-centroid form.
     *
     * `trainSample` > 0 bounds the TRAINING corpus (the Faiss discipline:
     * quantizers train on a bounded sample — Faiss itself defaults to
@@ -207,7 +207,7 @@ object IvfIndex {
       maxBroadcastProbes)
 
   /** [[search]] against an explicit centroid set (e.g.
-    * [[trainCentroids]]-trained, or read back from a persisted sidecar) —
+    * [[trainCentroids]]-trained, or read back from a stored index) —
     * query-time never re-derives centroids from the corpus. */
   def searchWith(emb: DataFrame, queryFilter: Column,
       cents: Array[(Long, Array[Long])], nProbe: Int, topK: Int,
@@ -247,9 +247,7 @@ object IvfIndex {
     * starve the top-k (post-filtering an unfiltered top-k can return fewer
     * than topK survivors, silently). Cell assignment per vector is
     * independent of the rest of the corpus, so filter-then-assign equals
-    * assign-then-filter — and at rest the same predicate pushes down into
-    * the stored index scan, where it composes with cent_id partition
-    * pruning (probe prunes partitions, metadata prunes row groups).
+    * assign-then-filter.
     *
     * Centroids are still derived from the FULL corpus: the cell layout
     * stays stable across filters, so one stored index serves every
@@ -282,29 +280,8 @@ object IvfIndex {
     rankCandidates(assigned.join(probeSide, Seq("cent_id")), topK)
   }
 
-  /** Materialize the index at rest: rows partitioned BY cent_id (the probe
-    * key becomes the storage partition key), plus a self-contained
-    * centroid sidecar so query-time never re-derives centroids from the
-    * corpus. Layout: `<path>/index` (partitioned parquet) and
-    * `<path>/centroids` (k rows). */
-  def writeIndex(emb: DataFrame, k: Int, path: String): Unit =
-    writeIndexWith(emb, centroids(emb, k), path)
-
-  /** [[writeIndex]] with an explicit (e.g. [[trainCentroids]]-trained)
-    * centroid set. */
-  def writeIndexWith(emb: DataFrame, cents: Array[(Long, Array[Long])],
-      path: String): Unit = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    cents.toSeq.toDF("cent_id", "qc")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    cellAssign(emb, cents)
-      .select("vec_id", "embedding", "cent_id")
-      .write.mode("overwrite").partitionBy("cent_id").parquet(s"$path/index")
-  }
-
-  /** Dim guard for the persisted-index paths: vectors entering a stored
-    * layout (or querying it) must match the centroid dimensionality —
+  /** Dim guard for the stored-index verbs: vectors entering a stored
+    * index (or querying it) must match the centroid dimensionality —
     * a mismatch would silently score garbage distances (the fused
     * distance loop runs over the shorter length), the same
     * trusted-parameter corruption class as a wrong bucket modulus. A
@@ -373,204 +350,31 @@ object IvfIndex {
     (local, rows.map(_.getLong(2)).distinct.sorted)
   }
 
-  private[operators] def readCentroids(spark: SparkSession,
-      path: String): Array[(Long, Array[Long])] =
-    spark.read.parquet(s"$path/centroids")
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-      .sortBy(_._1)
+  /** The outcome of one deterministic hot-cell split pass, which
+    * [[VersionedIvf.rebalance]] and [[VersionedIvfAdc.rebalance]] publish
+    * as ONE atomic SnapshotStore version. `merged` holds the hot cells'
+    * rows with their NEW cent_id (all original columns, checkpointed);
+    * `newCents` is the complete new centroid table; `postCounts` the
+    * per-cell populations after the split. */
+  private[operators] final case class SplitPlan(merged: DataFrame,
+      newCents: Array[(Long, Array[Long])], splitCount: Int,
+      postCounts: Array[(Long, Long)])
 
-  /** Append NEW vectors to a stored index WITHOUT re-clustering: assign
-    * against the persisted centroids (map-only — the centroid table is
-    * the index's sidecar, never re-derived from the corpus) and append
-    * files into only the touched cent_id partitions. Commit cost ∝
-    * delta; existing files are never rewritten; queries see the same
-    * cells, so [[searchIndexed]] needs no change. The standard
-    * vector-index maintenance move — re-clustering is a separate,
-    * explicit [[trainCentroids]] + [[writeIndexWith]] rebuild. Caller
-    * contract: vec_ids in `newEmb` are NEW (use [[upsertIndexed]] when
-    * ids may already exist). */
-  def appendToIndex(spark: SparkSession, path: String,
-      newEmb: DataFrame): Unit = {
-    val cents = readCentroids(spark, path)
-    requireDim(newEmb, cents, "appendToIndex")
-    cellAssign(newEmb, cents)
-      .select("vec_id", "embedding", "cent_id")
-      .write.mode("append").partitionBy("cent_id").parquet(s"$path/index")
-  }
-
-  /** Keyed upsert into a stored index: re-embedded vectors REPLACE their
-    * old rows by vec_id. New assignments come from the persisted
-    * centroids; only the touched cells' partitions are read (partition
-    * pruning), anti-joined on vec_id, unioned with the fresh rows, and
-    * dynamic-partition-overwritten — commit cost ∝ touched cells, the
-    * rest of the index is untouched. NOTE: a re-embedded vector's home
-    * cell can CHANGE; the old cell is touched via the id lookup below, so
-    * no stale row survives. Merged rows localCheckpoint-materialize
-    * before the overwrite commits (Spark must never lazily re-read
-    * partitions the same job deletes). */
-  def upsertIndexed(spark: SparkSession, path: String,
-      newEmb: DataFrame): Unit = {
-    val cents = readCentroids(spark, path)
-    requireDim(newEmb, cents, "upsertIndexed")
-    val fresh = cellAssign(newEmb, cents)
-      .select("vec_id", "embedding", "cent_id")
-      .localCheckpoint(eager = true)
-    val freshIds = fresh.select("vec_id")
-    // cells touched by the NEW assignment plus cells currently holding
-    // any upserted id (a vector can migrate cells when re-embedded)
-    val index = spark.read.parquet(s"$path/index")
-    val oldCells = index.join(freshIds, Seq("vec_id"), "left_semi")
-      .select("cent_id").distinct()
-    val touched = fresh.select("cent_id").distinct()
-      .union(oldCells).distinct()
-      .collect().map(_.getLong(0))
-    val merged = index
-      .filter(col("cent_id").isin(touched: _*))
-      .join(freshIds, Seq("vec_id"), "left_anti")
-      .select("vec_id", "embedding", "cent_id")
-      .unionByName(fresh)
-      .localCheckpoint(eager = true)
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cent_id").parquet(s"$path/index")
-  }
-
-  /** Delete vectors from a stored index by id — the right-to-be-
-    * forgotten / poisoned-sample-removal primitive a production vector
-    * store cannot ship without. Only the cells holding deleted ids are
-    * read (partition pruning on `cent_id`) and rewritten without them —
-    * cost ∝ touched cells, the rest of the index is untouched. A cell
-    * whose rows are ALL deleted needs explicit removal: dynamic
-    * partition overwrite only rewrites partitions PRESENT in the output,
-    * so an emptied cell would otherwise silently keep its stale rows —
-    * the exact failure mode [[IngestionPipeline]]'s all-deleted-bucket
-    * cleanup guards against. Ids absent from the index are a no-op.
-    * Merged survivors localCheckpoint-materialize before the overwrite
-    * commits (Spark must never lazily re-read partitions the same job
-    * deletes). */
-  def deleteFromIndex(spark: SparkSession, path: String,
-      ids: DataFrame): Unit = {
-    val del = ids.select(col("vec_id").cast("long").as("vec_id"))
-      .distinct()
-    val index = spark.read.parquet(s"$path/index")
-    val touched = index
-      .join(del, index("vec_id").cast("long") === del("vec_id"),
-        "left_semi")
-      // read-back partition column may infer as int — normalize
-      .select(col("cent_id").cast("long")).distinct()
-      .collect().map(_.getLong(0))
-    if (touched.isEmpty) return
-    // keep the index's OWN payload columns (flat stores embedding, the
-    // SQ8 tier stores int8 codes — deletion must not know or care)
-    val merged = index.filter(col("cent_id").isin(touched: _*))
-      .join(del, index("vec_id").cast("long") === del("vec_id"),
-        "left_anti")
-      .select(index.columns.map(col).toIndexedSeq: _*)
-      // LAZY: the survivors distinct below references merged exactly
-      // once and materializes the checkpoint before the overwrite runs —
-      // the fence the scaladoc requires, one job cheaper than eager
-      .localCheckpoint(eager = false)
-    val survivors = merged.select(col("cent_id").cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cent_id").parquet(s"$path/index")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touched.filterNot(survivors.contains).foreach { c =>
-      fs.delete(
-        new org.apache.hadoop.fs.Path(s"$path/index/cent_id=$c"), true)
-    }
-  }
-
-  /** OPTIMIZE for the stored ANN index: split every over-populated cell
-    * in two, rewriting ONLY the split cells' partitions (the
-    * [[deleteFromIndex]] pruning pattern). Many [[upsertIndexed]] /
-    * [[appendToIndex]] rounds skew cell populations (s12 measures it) and
-    * a hot cell makes every probe that touches it scan-heavy; re-training
-    * the whole index ([[trainCentroids]] + [[writeIndexWith]]) fixes
-    * that at full-rebuild cost — this fixes it at cost ∝ the hot cells.
-    *
-    * Determinism: a hot cell's two sub-centroids seed from its two
-    * lowest vec_ids (the [[centroids]] rule applied cell-locally), one
-    * Lloyd refinement runs on the cell's own rows (integer means of
-    * integer-quantized vectors, ties to the lower cent_id), so the
-    * post-rebalance layout is engine-reproducible like everything else
-    * here. The surviving sub-cell keeps the old cent_id; the other gets
-    * `max(cent_id) + i`. Flat ([[writeIndex]]) layouts only — the SQ8
-    * tier stores codes, not geometry, and re-clustering codes would
-    * compound quantization error silently.
-    *
-    * NOT crash-atomic (same caveat as [[deleteFromIndex]], documented
-    * honestly): the centroid sidecar and the index partitions are two
-    * separate writes over a bare parquet layout. Centroids write FIRST —
-    * a crash between the two leaves new centroid ids whose cells are
-    * still merged in the old partition, which probes still find through
-    * the kept id (complete results, degraded pruning); the reverse order
-    * would leave rows assigned to cells no probe can rank, silently
-    * dropping them from every search. A store needing a transactional
-    * window should route the layout through a manifest-published root
-    * ([[SnapshotStore]]-style).
-    *
-    * Returns the number of cells ACTUALLY split — hot cells whose new
-    * sub-centroid received rows (0 = no cell exceeded `hotFactor` × mean
-    * population, nothing rewritten; a hot cell whose refinement moved
-    * nothing counts 0 and keeps its old centroid). */
-  def rebalance(spark: SparkSession, path: String,
-      hotFactor: Double = 2.0): Int =
-    rebalanceCarry(spark, path, hotFactor, None)._1
-
-  /** [[rebalance]] with the [[rebalanceUntil]] counts carry: round N's
-    * `postCounts` are round N+1's populations by row conservation, so
-    * only the FIRST round of a convergence loop pays the counts scan.
-    * Single-writer discipline (the bare layout's documented contract —
-    * nothing validates cross-writer freshness here anyway). */
-  private def rebalanceCarry(spark: SparkSession, path: String,
-      hotFactor: Double, preCounts: Option[Array[(Long, Long)]])
-      : (Int, Option[Array[(Long, Long)]]) = {
-    require(hotFactor >= 1.0, s"hotFactor must be >= 1, got $hotFactor")
-    val index = spark.read.parquet(s"$path/index")
-    require(index.columns.contains("embedding"),
-      "IvfIndex.rebalance needs the flat (writeIndex) layout — an SQ8 " +
-        "index stores codes, not geometry; re-train and rewrite instead")
-    splitPlan(spark, index, () => readCentroids(spark, path),
-        hotFactor, preCounts) match {
-      case None => (0, preCounts)
-      case Some(p) =>
-        applySplitBare(spark, path, p)
-        (p.splitCount, Some(p.postCounts))
-    }
-  }
-
-  /** The outcome of one deterministic hot-cell split pass, layout-
-    * agnostic: [[rebalance]] applies it to the bare parquet layout
-    * (centroid sidecar + dynamic partition overwrite, two writes with
-    * the documented crash window); [[VersionedIvf.rebalance]] applies it
-    * as ONE atomic SnapshotStore publish. `merged` holds the hot cells'
-    * rows with their NEW cent_id (all original columns, eagerly
-    * checkpointed); `newCents` is the complete new centroid table. */
-  private[operators] final case class SplitPlan(
-      hot: Array[Long], newIdOf: Map[Long, Long], merged: DataFrame,
-      survivors: Set[Long], newCents: Array[(Long, Array[Long])],
-      splitCount: Int, postCounts: Array[(Long, Long)])
-
-  /** Compute the split: hot cells (population > hotFactor × mean, ≥ 2
-    * rows), two sub-centroids seeded from each cell's two lowest
-    * vec_ids, one integer-Lloyd refinement, rows reassigned. `centsOf`
-    * is deferred so the (cheap) no-hot-cell exit never reads the
-    * centroid table. None = nothing to split.
+  /** Compute the split of `index` (vec_id, embedding, cent_id, extras)
+    * against its centroid table `cents`: hot cells (population >
+    * hotFactor × mean, ≥ 2 rows), two sub-centroids seeded from each
+    * cell's two lowest vec_ids, one integer-Lloyd refinement, rows
+    * reassigned. None = nothing to split.
     *
     * `preCounts`: per-cell populations of `index`, when the caller
-    * already knows them — a convergence loop ([[rebalanceUntil]]) knows
+    * already knows them — a convergence loop (`rebalanceUntil`) knows
     * the post-split populations of round N exactly (`postCounts`), so
     * round N+1 must not pay a full index scan to re-derive them. The
     * numbers are identical to a fresh scan by row conservation (the
     * split moves rows between cells, never in/out), which
-    * IvfIndexSpec's rebalanceUntil arm re-checks end-to-end. */
+    * IvfIndexSpec's counts-carry arm re-checks end-to-end. */
   private[operators] def splitPlan(spark: SparkSession, index: DataFrame,
-      centsOf: () => Array[(Long, Array[Long])],
-      hotFactor: Double,
+      cents: Array[(Long, Array[Long])], hotFactor: Double,
       preCounts: Option[Array[(Long, Long)]] = None): Option[SplitPlan] = {
     val counts: Array[(Long, Long)] = preCounts.getOrElse(index
       .groupBy(col("cent_id").cast("long").as("cent_id"))
@@ -582,7 +386,6 @@ object IvfIndex {
       n > hotFactor * mean && n >= 2 }
       .map(_._1).sorted
     if (hot.isEmpty) return None
-    val cents = centsOf()
     val maxId = cents.map(_._1).max
     val newIdOf = hot.zipWithIndex
       .map { case (c, i) => c -> (maxId + 1 + i) }.toMap
@@ -664,26 +467,23 @@ object IvfIndex {
       .select((index.columns.filterNot(_ == "cent_id").map(col) :+
         col("graft_new_cent").as("cent_id")).toIndexedSeq: _*)
       // LAZY: materialized by the single-reference counts collect below,
-      // BEFORE the apply/upsert write consumes it
+      // BEFORE the publish consumes it
       .localCheckpoint(eager = false)
-    // survivors AND per-cell populations in one bounded pass BEFORE the
-    // centroid write (merged is already materialized by the eager
-    // checkpoint): a refinement that assigns every row of a hot cell
-    // back to one side must not publish a centroid id with no backing
-    // partition — probes would waste one nProbe ranking slot on a
-    // provably empty cell forever, because the cleanup below only
-    // deletes emptied KEPT partitions and nothing ever retracts a
-    // published centroid. The populations feed `postCounts` so a
-    // convergence loop's next round skips its full counts scan.
+    // survivors AND per-cell populations in one bounded pass: a
+    // refinement that assigns every row of a hot cell back to one side
+    // must not publish a centroid id with no backing rows — probes would
+    // waste one nProbe ranking slot on a provably empty cell forever,
+    // since nothing ever retracts a published centroid. The populations
+    // feed `postCounts` so a convergence loop's next round skips its
+    // full counts scan.
     val mergedCounts = merged.groupBy(col("cent_id"))
       .agg(count(lit(1)).as("n")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val survivors = mergedCounts.map(_._1).toSet
-    // centroid sidecar FIRST (see the crash-order note above). Per hot
-    // cell: both sides survived → kept id re-points to sub-centroid 1,
-    // new id appends as sub-centroid 2; nothing moved to the new side →
-    // the cell is UN-SPLIT and keeps its old centroid (no new id);
-    // everything moved → the kept id's centroid drops with its partition.
+    // Per hot cell: both sides survived → kept id re-points to
+    // sub-centroid 1, new id appends as sub-centroid 2; nothing moved to
+    // the new side → the cell is UN-SPLIT and keeps its old centroid (no
+    // new id); everything moved → the kept id's centroid drops.
     val byId = cents.toMap
     val newCents = cents.flatMap { case (id, q) =>
       if (!newIdOf.contains(id)) Some((id, q))
@@ -702,142 +502,8 @@ object IvfIndex {
     val hotSet = hot.toSet
     val postCounts = (counts.filterNot(c => hotSet.contains(c._1)) ++
       mergedCounts).sortBy(_._1)
-    Some(SplitPlan(hot, newIdOf, merged, survivors, newCents,
+    Some(SplitPlan(merged, newCents,
       hot.count(c => survivors.contains(newIdOf(c))), postCounts))
-  }
-
-  /** Apply a [[SplitPlan]] to the bare parquet layout. Centroid sidecar
-    * FIRST (see the crash-order note above); then dynamic overwrite
-    * rewrites exactly the split cells' partitions and creates the new
-    * sub-cells'; a kept id emptied by the refinement (every row moved
-    * to the new side) needs the explicit removal [[deleteFromIndex]]
-    * documents. */
-  private def applySplitBare(spark: SparkSession, path: String,
-      p: SplitPlan): Unit = {
-    val sp = spark
-    import sp.implicits._
-    p.newCents.toSeq.map { case (id, q) => (id, q.toSeq) }
-      .toDF("cent_id", "qc")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    p.merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cent_id").parquet(s"$path/index")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    p.hot.filterNot(p.survivors.contains).foreach { c =>
-      fs.delete(
-        new org.apache.hadoop.fs.Path(s"$path/index/cent_id=$c"), true)
-    }
-  }
-
-  /** Bounded convergence loop over [[rebalance]] — one call splits each
-    * hot cell exactly once (binary), so a severely skewed cell (≫2× mean
-    * after one split) levels only under repeated calls. Same discipline
-    * as PageRank's `ranksConverged` probe: iterate until the signal
-    * (here: `rebalance` returning 0 splits) says fixpoint, with
-    * `maxRounds` bounding the worst case. Returns the total number of
-    * splits performed across rounds. */
-  def rebalanceUntil(spark: SparkSession, path: String,
-      hotFactor: Double = 2.0, maxRounds: Int = 8): Int = {
-    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    var total = 0
-    var rounds = 0
-    var last = -1
-    // counts carry: each round's split plan already knows the exact
-    // post-split populations, so rounds 2..N (and the terminal no-hot
-    // check) skip the full per-cell counts scan
-    var carry: Option[Array[(Long, Long)]] = None
-    while (rounds < maxRounds && last != 0) {
-      val (n, next) = rebalanceCarry(spark, path, hotFactor, carry)
-      last = n
-      carry = next
-      total += last
-      rounds += 1
-    }
-    total
-  }
-
-  /** Stored IVF-SQ8 index (the Faiss IVF-SQ idea): same cell-partitioned
-    * layout as [[writeIndex]], but rows store the SYMMETRIC-int8
-    * quantized vector ([[VectorFunctions.quantizeInt8]] — small integers,
-    * the 4×-at-rest compression tier between IVF-flat and PQ) instead of
-    * the raw floats. Cell assignment runs on the full-precision input
-    * (standard SQ: compression is for the stored payload, not the
-    * geometry), and because the quantization is integer-exact, search
-    * results over the compressed tier are oracle-checkable like the PQ
-    * path, not just spot-checked. */
-  def writeIndexSq(emb: DataFrame, k: Int, path: String): Unit = {
-    val cents = centroids(emb, k)
-    val spark = emb.sparkSession
-    import spark.implicits._
-    cents.toSeq.toDF("cent_id", "qc")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    cellAssign(emb, cents)
-      .select(col("vec_id"),
-        VectorFunctions.quantizeInt8(col("embedding")).as("q8"),
-        col("cent_id"))
-      .write.mode("overwrite").partitionBy("cent_id").parquet(s"$path/index")
-  }
-
-  /** Search a [[writeIndexSq]] layout: probe cells resolve against the
-    * centroid sidecar from the FULL-precision queries (dim-guarded),
-    * only the probed cells' partitions are scanned, and scoring is
-    * symmetric int8 — queries quantize through the same expression, so
-    * similarities match the in-memory s05 semantics exactly. */
-  def searchIndexedSq(spark: SparkSession, path: String,
-      queries: DataFrame, nProbe: Int, topK: Int): DataFrame = {
-    val cents = readCentroids(spark, path)
-    requireDim(queries, cents, "searchIndexedSq")
-    val probes = cellRanksWith(queries, cents)
-      .filter(col("rk") <= nProbe)
-      .select(col("vec_id").as("q_id"),
-        VectorFunctions.quantizeInt8(col("embedding"))
-          .cast("array<double>").as("q_q8"),
-        col("cent_id"))
-    // full probe: the probed set is the whole geometry by construction —
-    // skip the distinct+collect job
-    val probeCells =
-      if (nProbe >= cents.length) cents.map(_._1)
-      else probes.select("cent_id").distinct()
-        .collect().map(_.getLong(0))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("sim").desc, col("vec_id"))
-    spark.read.parquet(s"$path/index")
-      .filter(col("cent_id").isin(probeCells: _*))
-      .join(broadcast(probes), Seq("cent_id"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        round(VectorFunctions.cosine(
-          col("q8").cast("array<double>"), col("q_q8")), 6).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select("q_id", "rank", "vec_id", "sim")
-  }
-
-  /** Search a [[writeIndex]]-materialized index. Probe cell ids resolve
-    * driver-side (≤ queries × nProbe ids — `queries` is assumed to be a
-    * query set, not the corpus), then the stored index is read with
-    * `cent_id IN (...)`: partition pruning means only the probed cells'
-    * files are ever opened. `queries` needs (vec_id, embedding). */
-  def searchIndexed(spark: SparkSession, path: String, queries: DataFrame,
-      nProbe: Int, topK: Int): DataFrame = {
-    val cents = readCentroids(spark, path)
-    requireDim(queries, cents, "searchIndexed")
-    val probes = cellRanksWith(queries, cents)
-      .filter(col("rk") <= nProbe)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("cent_id"))
-    // full probe: the probed set is the whole geometry by construction —
-    // skip the distinct+collect job
-    val probeCells =
-      if (nProbe >= cents.length) cents.map(_._1)
-      else probes.select("cent_id").distinct()
-        .collect().map(_.getLong(0))
-    val assigned = spark.read.parquet(s"$path/index")
-      .filter(col("cent_id").isin(probeCells: _*))
-    // USING-join on cent_id: one output column, no ambiguous duplicate
-    // that a downstream rename could trip over.
-    rankCandidates(assigned.join(broadcast(probes), Seq("cent_id")), topK)
   }
 
   private[operators] def rankCandidates(cand: DataFrame, topK: Int): DataFrame = {

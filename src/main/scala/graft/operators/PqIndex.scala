@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,6 +32,8 @@ import graft.functions.VectorFunctions
   * partial-aggregates m rows per (query, vector). The relational
   * [[subspaceDists]] form remains for the query-side LUT, where the
   * input is queries-only and distances (not just the argmin) are needed.
+  * At rest, codes and both quantizers live in one store version:
+  * [[VersionedIvfAdc]].
   */
 object PqIndex {
 
@@ -46,8 +48,7 @@ object PqIndex {
         pmod(col("pos"), lit(subDim)).as("i"), col("v"))
 
   /** The codebook in exploded relational form — (cent_id, j, i, cv): the
-    * subvector components of `codebook`'s first `k` vectors. This is also
-    * the at-rest representation [[writeIndex]] persists. */
+    * subvector components of `codebook`'s first `k` vectors. */
   def codebookRows(codebook: DataFrame, subDim: Int, k: Int): DataFrame =
     components(codebook.filter(col("vec_id") < k), subDim)
       .select(col("vec_id").as("cent_id"), col("j"), col("i"),
@@ -254,120 +255,6 @@ object PqIndex {
     val cands = emb.select(col("vec_id"))
       .crossJoin(broadcast(lut.select(col("q_id")).distinct()))
       .filter(col("vec_id") =!= col("q_id"))
-    rankCoded(cands, codes, lut, topK)
-  }
-
-  /** Materialize the PQ index at rest: `<path>/codes` (m rows per corpus
-    * vector — the 32× compressed representation) and `<path>/codebook`
-    * (m·k exploded centroid component rows). Encode runs ONCE here;
-    * queries against the stored index never touch corpus embeddings. */
-  def writeIndex(emb: DataFrame, path: String, dim: Int = 64, m: Int = 8,
-      k: Int = 16): Unit = {
-    // validate geometry AND the codebook BEFORE the first write — a
-    // failure after the codebook overwrite would leave a previously
-    // valid index half-destroyed
-    require(dim % m == 0, s"dim=$dim not divisible by m=$m subvectors")
-    val cents = collectCodebook(emb, k) // raises on a short codebook
-    codebookRows(emb, dim / m, k)
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-    encodeFused(emb, cents, dim, m)
-      .write.mode("overwrite").parquet(s"$path/codes")
-    // geometry sidecar: searches validate their (dim, m) against what the
-    // codes were written with — a mismatched m would join the query LUT
-    // against the wrong subspace ids and silently return garbage ranks
-    val f = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(emb.sparkSession.sparkContext.hadoopConfiguration)
-    val out = f.create(
-      new org.apache.hadoop.fs.Path(path, "_graft_pq"), true)
-    try out.write(s"$dim\t$m\t$k\n".getBytes("UTF-8")) finally out.close()
-  }
-
-  /** The (dim, m, k) geometry `path`'s `_graft_pq` sidecar records (None
-    * for indexes written before the sidecar existed). */
-  def storedGeometry(spark: SparkSession,
-      path: String): Option[(Int, Int, Int)] = {
-    val p = new org.apache.hadoop.fs.Path(path, "_graft_pq")
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val Array(d, m, k) =
-        try scala.io.Source.fromInputStream(in, "UTF-8")
-          .mkString.trim.split("\t")
-        finally in.close()
-      Some((d.toInt, m.toInt, k.toInt))
-    }
-  }
-
-  private def requireGeometry(spark: SparkSession, path: String, dim: Int,
-      m: Int, what: String): Unit =
-    storedGeometry(spark, path).foreach { case (d, sm, _) =>
-      if (d != dim || sm != m)
-        throw new IllegalArgumentException(
-          s"$what: PQ index at $path was written with dim=$d, m=$sm but " +
-            s"the search passed dim=$dim, m=$m — mismatched geometry " +
-            "would rank garbage distances; pass the stored values")
-    }
-
-  /** Search a [[writeIndex]]-materialized index: the lookup table comes
-    * from the query vectors × the stored codebook (tiny, broadcast), the
-    * candidates from the stored codes — the corpus embeddings are never
-    * read. `queries` needs (vec_id, embedding) with `dim`-sized vectors
-    * matching the written index's `dim`/`m`. */
-  def searchIndexed(spark: SparkSession, path: String, queries: DataFrame,
-      dim: Int = 64, m: Int = 8, topK: Int = 3): DataFrame = {
-    requireGeometry(spark, path, dim, m, "searchIndexed")
-    val cent = spark.read.parquet(s"$path/codebook")
-    val codes = spark.read.parquet(s"$path/codes")
-    val lut = distsAgainst(components(queries, dim / m), cent)
-      .select(col("vec_id").as("q_id"), col("j"), col("cent_id"),
-        col("dist"))
-    val cands = codes.select(col("vec_id")).distinct()
-      .crossJoin(broadcast(
-        queries.select(col("vec_id").as("q_id")).distinct()))
-      .filter(col("vec_id") =!= col("q_id"))
-    rankCoded(cands, codes, lut, topK)
-  }
-
-  /** IVFADC **at rest**: [[searchIvf]]'s cascade with BOTH quantizers
-    * persisted. Candidates come from an [[IvfIndex.writeIndex]] store —
-    * probe cells resolve against its centroid sidecar (k rows,
-    * driver-side) and the index scan is PARTITION-PRUNED to the probed
-    * `cent_id=` dirs, reading only the id column; scores come from a
-    * [[writeIndex]] PQ store — stored codebook → broadcast query LUT,
-    * stored codes → asymmetric distance. The corpus embeddings are never
-    * read: the two index layouts fully replace them (plan-pinned in
-    * PqIndexSpec), which is the point of serving ANN from an index at
-    * 100 TB. Same result as the in-memory [[searchIvf]] when both stores
-    * were built from the same corpus with the same parameters
-    * (spec-asserted). `queries` needs (vec_id, embedding), and query ids
-    * SHARE the corpus id namespace: a query whose vec_id equals a stored
-    * id is treated as that vector itself and excluded from its own
-    * results (the self-exclusion every same-corpus search wants) —
-    * querying with foreign vectors requires ids outside the stored
-    * range. Same contract on [[searchIndexed]]. */
-  def searchIvfIndexed(spark: SparkSession, ivfPath: String, pqPath: String,
-      queries: DataFrame, dim: Int = 64, m: Int = 8, nProbe: Int = 2,
-      topK: Int = 3): DataFrame = {
-    requireGeometry(spark, pqPath, dim, m, "searchIvfIndexed")
-    val cents = IvfIndex.readCentroids(spark, ivfPath)
-    val probes = IvfIndex.cellRanksWith(queries, cents)
-      .filter(col("rk") <= nProbe)
-      .select(col("vec_id").as("q_id"), col("cent_id"))
-    // bounded driver pull: queries × nProbe cell ids
-    val probeCells = probes.select("cent_id").distinct()
-      .collect().map(_.getLong(0))
-    val cands = spark.read.parquet(s"$ivfPath/index")
-      .filter(col("cent_id").isin(probeCells: _*))
-      .select("vec_id", "cent_id") // column pruning: embeddings stay unread
-      .join(broadcast(probes), Seq("cent_id"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select("q_id", "vec_id")
-    val cent = spark.read.parquet(s"$pqPath/codebook")
-    val codes = spark.read.parquet(s"$pqPath/codes")
-    val lut = distsAgainst(components(queries, dim / m), cent)
-      .select(col("vec_id").as("q_id"), col("j"), col("cent_id"),
-        col("dist"))
     rankCoded(cands, codes, lut, topK)
   }
 

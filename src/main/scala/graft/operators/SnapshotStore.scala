@@ -1445,7 +1445,7 @@ object SnapshotStore {
     * written by every publish since the schema contract landed), as
     * (name, catalogString) in declaration order. None ⇒ legacy manifest
     * predating declarations (validation is skipped for those). */
-  private def declaredCols(spark: SparkSession, root: String,
+  private[graft] def declaredCols(spark: SparkSession, root: String,
       v: Long): Option[Seq[(String, String)]] = {
     val cols = manifestMeta(spark, root, v).collect {
       case l if l.startsWith("#col\t") =>

@@ -1,18 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** IVF index routed THROUGH [[SnapshotStore]] — closing the crash
-  * window [[IvfIndex.deleteFromIndex]]/[[IvfIndex.rebalance]] document:
-  * the bare-parquet layout writes its centroid sidecar and its cell
-  * partitions as two separate filesystem operations, so a crash between
-  * them leaves geometry and rows disagreeing (complete-but-degraded at
-  * best). Here the WHOLE index state publishes as one store version:
+import graft.functions.VectorFunctions
+
+/** The stored IVF index: rows and geometry publish as ONE
+  * [[SnapshotStore]] version, so no crash can tear centroids from cells:
   *
-  *  - vector rows are store rows (`doc_id` = vec_id, `embedding`,
+  *  - vector rows are store rows (`doc_id` = vec_id, a payload,
   *    `cent_id`), written range-clustered by cent_id so the per-file
-  *    cent_id stats envelopes are tight;
+  *    cent_id stats envelopes are tight. The payload is the flat
+  *    `embedding` ([[write]]) or the SQ8 tier's symmetric-int8 `q8`
+  *    codes ([[writeSq]]);
   *  - the centroid table rides the SAME manifest as `#ivfcent` metadata
   *    lines (k × dim longs, base64 — a few KB; the commit root is the
   *    right home for geometry this small), via the CREATE-EXCLUSIVE
@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *  - every maintenance verb (upsert, delete, rebalance) is ONE
   *    [[SnapshotStore.upsert]] — atomic, optimistic-concurrency-safe,
   *    and TIME-TRAVELABLE: `search(version = n)` serves the index
-  *    exactly as version n published it, which the bare layout cannot.
+  *    exactly as version n published it.
   *    Concurrency safety is end-to-end, not just per-publish: each
   *    verb reads geometry AT the observed version and publishes with
   *    `expectedVersion = observed` inside
@@ -31,9 +31,8 @@ import org.apache.spark.sql.functions._
   *    `#ivfcent` lines against newer rows' cent_ids.
   *
   * Search pruning: the store declares doc_id + cent_id statistics, so a
-  * probe reads each probed cell through [[SnapshotStore.readWhere]]'s
-  * file skipping — the versioned layout's equivalent of the bare
-  * layout's `cent_id=` partition pruning. A probe set covering most
+  * probe reads the probed cells through [[SnapshotStore.readWhereIn]]'s
+  * file skipping and opens only their files. A probe set covering most
   * cells (full-probe verification) reads the snapshot once and filters,
   * since per-cell skipping would open the same files repeatedly.
   *
@@ -103,6 +102,21 @@ object VersionedIvf {
       s"VersionedIvf.$verb: no published version at $root — write() " +
         "an initial index first")
 
+  /** The SQ8 tier's payload column. */
+  private val SqCodes = "q8"
+
+  /** The SQ8 tier stores codes, not geometry: the verbs that assign or
+    * split from embeddings refuse it by name (re-clustering codes would
+    * compound quantization error silently). */
+  private def requireFlat(spark: SparkSession, root: String, v: Long,
+      verb: String): Unit =
+    if (SnapshotStore.declaredCols(spark, root, v)
+        .exists(_.exists(_._1 == SqCodes)))
+      throw new IllegalArgumentException(
+        s"VersionedIvf.$verb needs the flat (write) layout — the index " +
+          s"at $root is the SQ8 tier, which stores int8 codes, not " +
+          "geometry; re-write it with writeSq instead")
+
   /** Build and publish version 1: assign every vector to its nearest
     * centroid cell (the [[IvfIndex.centroids]] deterministic seeds) and
     * commit rows + geometry in one manifest. Rows repartition by
@@ -110,13 +124,29 @@ object VersionedIvf {
     * narrow cent_id band — that is what makes the stats-skipping probe
     * path open ~1/k of the files per probed cell. */
   def write(emb: DataFrame, k: Int, root: String,
-      buckets: Int = 4): Long = {
+      buckets: Int = 4): Long =
+    writeWith(emb, k, root, buckets, col("embedding"))
+
+  /** The SQ8 tier (the Faiss IVF-SQ index type): [[write]] with rows
+    * storing the SYMMETRIC-int8 quantized vector
+    * ([[VectorFunctions.quantizeInt8]] — small integers, the
+    * 4×-at-rest compression tier between IVF-flat and PQ) as `q8`
+    * instead of the raw floats. Cells are assigned on the full-precision
+    * input (compression is for the stored payload, not the geometry), and
+    * because the quantization is integer-exact, [[searchSq]] results are
+    * oracle-checkable, not just spot-checked. Same `#ivfcent` lines and
+    * stats declaration as [[write]]; [[delete]] keeps the `q8` payload,
+    * while [[upsert]], [[upsertBatch]] and [[rebalance]] refuse the tier
+    * with a named IllegalArgumentException. */
+  def writeSq(emb: DataFrame, k: Int, root: String,
+      buckets: Int = 4): Long =
+    writeWith(emb, k, root, buckets,
+      VectorFunctions.quantizeInt8(col("embedding")).as(SqCodes))
+
+  private def writeWith(emb: DataFrame, k: Int, root: String,
+      buckets: Int, payload: Column): Long = {
     val cents = IvfIndex.centroids(emb, k)
-    val rows = IvfIndex.cellAssign(emb, cents)
-      .select(col("vec_id").cast("long").as("doc_id"), col("embedding"),
-        col("cent_id"))
-      .repartitionByRange(math.max(4, k / 2), col("cent_id"))
-    SnapshotStore.commit(rows, root, buckets,
+    SnapshotStore.commit(assignRows(emb, cents, payload), root, buckets,
       meta = centLines(cents) :+
         SnapshotStore.statsDeclaration(Seq("doc_id", "cent_id")))
   }
@@ -124,11 +154,10 @@ object VersionedIvf {
   /** Upsert vectors — the reference's most common write (Pinecone's
     * per-vector `index.upsert` is an insert-or-replace append,
     * `parser_pinecone_storage.py:154`) on the versioned layout: new
-    * vectors assign against the STORED `#ivfcent` geometry (the
-    * [[IvfIndex.appendToIndex]] discipline — appending never moves
-    * centroids; a later [[rebalance]] restores balance if cells run
-    * hot), existing ids are replaced, and rows + carried geometry
-    * publish as ONE atomic, time-travelable version.
+    * vectors assign against the STORED `#ivfcent` geometry (appending
+    * never moves centroids; a later [[rebalance]] restores balance if
+    * cells run hot), existing ids are replaced, and rows + carried
+    * geometry publish as ONE atomic, time-travelable version.
     *
     * Concurrent-writer safety: the geometry is read at the OBSERVED
     * version and the publish carries `expectedVersion = observed`
@@ -139,6 +168,7 @@ object VersionedIvf {
   def upsert(spark: SparkSession, root: String, emb: DataFrame): Long =
     SnapshotStore.withConflictRetry(spark, root) { observed =>
       requirePublished(observed, root, "upsert")
+      requireFlat(spark, root, observed, "upsert")
       val cents = storedCentroids(spark, root, observed)
       IvfIndex.requireDim(emb, cents, "VersionedIvf.upsert")
       val rows = assignRows(emb, cents)
@@ -148,10 +178,11 @@ object VersionedIvf {
     }
 
   private def assignRows(emb: DataFrame,
-      cents: Array[(Long, Array[Long])]): DataFrame =
+      cents: Array[(Long, Array[Long])],
+      payload: Column = col("embedding")): DataFrame =
     IvfIndex.cellAssign(emb, cents)
-      .select(col("vec_id").cast("long").as("doc_id"),
-        col("embedding"), col("cent_id"))
+      .select(col("vec_id").cast("long").as("doc_id"), payload,
+        col("cent_id"))
       .repartitionByRange(math.max(4, cents.length / 2), col("cent_id"))
 
   /** EXACTLY-ONCE micro-batch upsert — [[upsert]] carrying a
@@ -194,6 +225,7 @@ object VersionedIvf {
             SnapshotStore.txnMarker(streamId, batchId)),
           expectedVersion = Some(0L))
       } else {
+        requireFlat(spark, root, observed, "upsertBatch")
         val cents = storedCentroids(spark, root, observed)
         IvfIndex.requireDim(emb, cents, "VersionedIvf.upsertBatch")
         val rows = assignRows(emb, cents)
@@ -224,13 +256,21 @@ object VersionedIvf {
         expectedVersion = Some(observed))
     }
 
-  /** Hot-cell split ([[IvfIndex.rebalance]]'s deterministic
-    * [[IvfIndex.splitPlan]]) applied as ONE atomic publish: the
-    * reassigned rows AND the new centroid table land in the same
-    * manifest, so the crash window between "centroids updated" and
-    * "cells rewritten" that the bare layout documents cannot exist —
-    * any reader either sees the old version (old geometry, old rows) or
-    * the new one, never a mix. Returns the number of cells split. */
+  /** OPTIMIZE for the stored ANN index: split every over-populated cell
+    * in two. Many upserts skew cell populations and a hot cell makes
+    * every probe that touches it scan-heavy; re-training the whole index
+    * fixes that at full-rebuild cost — this fixes it at cost ∝ the hot
+    * cells. The split is [[IvfIndex.splitPlan]]'s deterministic one (a
+    * hot cell's two sub-centroids seed from its two lowest vec_ids, one
+    * integer-Lloyd refinement on the cell's own rows, ties to the lower
+    * cent_id; the surviving sub-cell keeps the old cent_id, the other
+    * gets `max(cent_id) + i`), so the post-rebalance layout is
+    * engine-reproducible. The reassigned rows AND the new centroid table
+    * publish as ONE atomic version: any reader sees either the old
+    * version (old geometry, old rows) or the new one, never a mix.
+    * Returns the number of cells ACTUALLY split (0 = no cell exceeded
+    * `hotFactor` × mean population, nothing published). The SQ8 tier is
+    * refused by name. */
   def rebalance(spark: SparkSession, root: String,
       hotFactor: Double = 2.0): Int =
     rebalanceCarry(spark, root, hotFactor, None)._1
@@ -248,13 +288,13 @@ object VersionedIvf {
     require(hotFactor >= 1.0, s"hotFactor must be >= 1, got $hotFactor")
     SnapshotStore.withConflictRetry(spark, root) { observed =>
       requirePublished(observed, root, "rebalance")
+      requireFlat(spark, root, observed, "rebalance")
       val cents = storedCentroids(spark, root, observed)
       val index = SnapshotStore.read(spark, root, observed)
         .select(col("doc_id").as("vec_id"), col("embedding"),
           col("cent_id"))
       val pre = carry.collect { case (v, c) if v == observed => c }
-      IvfIndex.splitPlan(spark, index, () => cents, hotFactor,
-          pre) match {
+      IvfIndex.splitPlan(spark, index, cents, hotFactor, pre) match {
         case None => (0, carry.filter(_._1 == observed))
         case Some(p) =>
           val rows = p.merged
@@ -270,10 +310,14 @@ object VersionedIvf {
     }
   }
 
-  /** Bounded convergence loop over [[rebalance]] — the
-    * [[IvfIndex.rebalanceUntil]] discipline on the versioned layout.
-    * Each round is one atomic version; a crash between rounds leaves a
-    * fully consistent, merely less-balanced index. */
+  /** Bounded convergence loop over [[rebalance]] — one call splits each
+    * hot cell exactly once (binary), so a severely skewed cell (≫2× mean
+    * after one split) levels only under repeated calls. Same discipline
+    * as PageRank's `ranksConverged` probe: iterate until `rebalance`
+    * returns 0 splits, with `maxRounds` bounding the worst case. Each
+    * round is one atomic version; a crash between rounds leaves a fully
+    * consistent, merely less-balanced index. Returns the total number
+    * of splits across rounds. */
   def rebalanceUntil(spark: SparkSession, root: String,
       hotFactor: Double = 2.0, maxRounds: Int = 8): Int = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
@@ -311,7 +355,9 @@ object VersionedIvf {
     * skipping — ONE metadata pass admits exactly the probed cells'
     * files, evaluated on the driver for an inline-metadata store and on
     * the executors for a sidecar store (a full probe degrades gracefully
-    * to the whole snapshot plus a residual filter).
+    * to the whole snapshot plus a residual filter). Query ids share the
+    * corpus namespace: a query whose vec_id equals a stored id is that
+    * vector itself and is excluded from its own results.
     *
     * Jobs per call, with the result's collect, on an inline-metadata
     * store: 4 (probe collect, broadcast build, the ranking's shuffle
@@ -319,14 +365,36 @@ object VersionedIvf {
     * frame returns an empty result with the normal schema; `nProbe` or
     * `topK` below 1 is a named IllegalArgumentException. */
   def search(spark: SparkSession, root: String, queries: DataFrame,
-      nProbe: Int, topK: Int, version: Long = -1L): DataFrame = {
-    IvfIndex.requireSearchBounds(nProbe, topK, "VersionedIvf.search")
+      nProbe: Int, topK: Int, version: Long = -1L): DataFrame =
+    probeSearch(spark, root, queries, nProbe, topK, version,
+      "VersionedIvf.search", col("embedding"), col("q_emb"))
+
+  /** [[search]] over a [[writeSq]] index: probe cells resolve against
+    * the stored centroids from the FULL-precision queries (dim-guarded),
+    * and scoring is symmetric int8 — queries quantize through the same
+    * expression as the stored rows, so similarities match the in-memory
+    * s05 semantics exactly. Same jobs per call as [[search]]. */
+  def searchSq(spark: SparkSession, root: String, queries: DataFrame,
+      nProbe: Int, topK: Int, version: Long = -1L): DataFrame =
+    probeSearch(spark, root, queries, nProbe, topK, version,
+      "VersionedIvf.searchSq",
+      col(SqCodes).cast("array<double>"),
+      VectorFunctions.quantizeInt8(col("q_emb")).cast("array<double>"))
+
+  /** The probe search both tiers share: `stored` is the stored rows'
+    * scored vector, `query` the query side's, both ranked by cosine. */
+  private def probeSearch(spark: SparkSession, root: String,
+      queries: DataFrame, nProbe: Int, topK: Int, version: Long,
+      what: String, stored: Column, query: Column): DataFrame = {
+    IvfIndex.requireSearchBounds(nProbe, topK, what)
     val v = SnapshotStore.resolveVersion(spark, root, version)
     val (probes, cells) = IvfIndex.collectProbes(spark, queries,
-      storedCentroids(spark, root, v), nProbe, "VersionedIvf.search")
+      storedCentroids(spark, root, v), nProbe, what)
     IvfIndex.rankCandidates(
       readCells(spark, root, cells, v)
-        .select(col("doc_id").as("vec_id"), col("embedding"), col("cent_id"))
-        .join(broadcast(probes), Seq("cent_id")), topK)
+        .select(col("doc_id").as("vec_id"), stored.as("embedding"),
+          col("cent_id"))
+        .join(broadcast(probes.select(col("q_id"), query.as("q_emb"),
+          col("cent_id"))), Seq("cent_id")), topK)
   }
 }

@@ -5,14 +5,13 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** IVFADC — the compressed production vector index (coarse IVF quantizer
-  * to prune, PQ fine quantizer to score, Jégou et al. 2011) — routed
-  * THROUGH [[SnapshotStore]], so the flagship index gets the same
-  * atomicity / OCC / time-travel story [[VersionedIvf]] gives the
-  * uncompressed layout. The bare cascade ([[PqIndex.searchIvfIndexed]],
-  * oracle s14) persists FOUR artifacts with no transactional tie: IVF
-  * cell partitions, IVF centroid sidecar, PQ codes, PQ codebook — a
-  * crash between any two leaves quantizers and codes disagreeing. Here
-  * the WHOLE index state is ONE manifest:
+  * to prune, PQ fine quantizer to score, Jégou et al. 2011) — stored in
+  * [[SnapshotStore]], with the atomicity / OCC / time-travel story
+  * [[VersionedIvf]] gives the uncompressed tiers. An IVFADC index has
+  * four parts (coarse cells, coarse centroids, PQ codes, PQ codebook);
+  * a crash between writing any two of them separately would leave
+  * quantizers and codes disagreeing, so the WHOLE index state is ONE
+  * manifest:
   *
   *  - rows are `(doc_id = vec_id, cent_id, codes)` — one row per vector,
   *    its m PQ codes as a single array cell (the 32×-compressed
@@ -54,7 +53,7 @@ object VersionedIvfAdc {
 
   /** The `(dim, m, k)` the index was written with — stored in the
     * manifest so searches and upserts can never encode against the
-    * wrong subspace split (the `_graft_pq` sidecar contract, manifested). */
+    * wrong subspace split. */
   def storedGeometry(spark: SparkSession, root: String,
       version: Long = -1L): (Int, Int, Int) = {
     val lines =
@@ -277,8 +276,7 @@ object VersionedIvfAdc {
             col("codes")),
         "vec_id", book, dim, m)
       val pre = carry.collect { case (v, c) if v == observed => c }
-      IvfIndex.splitPlan(spark, index, () => coarse, hotFactor,
-          pre) match {
+      IvfIndex.splitPlan(spark, index, coarse, hotFactor, pre) match {
         case None => (0, carry.filter(_._1 == observed))
         case Some(p) =>
           val rows = p.merged
@@ -492,8 +490,11 @@ object VersionedIvfAdc {
     * inline-metadata store, on the executors for a sidecar store) → PQ
     * asymmetric distance from the broadcast query LUT over the stored
     * codes. The corpus embeddings are never touched — the manifest IS
-    * the index. Query ids share the corpus namespace and self-exclude,
-    * the [[PqIndex.searchIvfIndexed]] contract.
+    * the index. Query ids share the corpus namespace: a query whose
+    * vec_id equals a stored id is that vector itself and is excluded
+    * from its own results (querying with foreign vectors needs ids
+    * outside the stored range). Same result as the in-memory
+    * [[PqIndex.searchIvf]] over the corpus the index was written from.
     *
     * Jobs per call, with the result's collect, on an inline-metadata
     * store: 8 — the probe collect, 3 for the query LUT (codebook

@@ -437,11 +437,7 @@ object DedupQueries extends QueryPack {
     // (d17's verbatim), so a stale or torn stored label is a hash
     // mismatch.
     "d29_stored_leakage" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-d29-labels").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively(): Unit }
+      val root = Tables.freshRoot("d29-labels")
       graft.operators.DupClusters
         .writeLabels(clusterAssignments(s, d), root)
       val b = pmod(CrossHash.hash60(
@@ -667,11 +663,7 @@ object DedupQueries extends QueryPack {
     // label lost (or changed) in the store round-trip is a hash
     // mismatch, not a silent skew.
     "d22_stored_labels" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-d22-labels").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively(): Unit }
+      val root = Tables.freshRoot("d22-labels")
       graft.operators.DupClusters
         .writeLabels(clusterAssignments(s, d), root)
       val labels = graft.operators.DupClusters.readLabels(s, root)
@@ -721,11 +713,7 @@ object DedupQueries extends QueryPack {
     // closure: incremental ≡ re-cluster, bit-exactly — including
     // batch documents that BRIDGE two prior clusters.
     "d24_incremental_clusters" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-d24-labels").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively(): Unit }
+      val root = Tables.freshRoot("d24-labels")
       val docs = Tables.documents(s, d)
       // 5%-of-corpus batch AT EVERY SCALE (an absolute id boundary
       // would make the "batch" the bulk of a larger corpus): the
@@ -777,11 +765,7 @@ object DedupQueries extends QueryPack {
     // a hash mismatch. One summary row; label-table scans + 1-row
     // aggregate crossJoins only.
     "d25_cluster_churn" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-d25-labels").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively(): Unit }
+      val root = Tables.freshRoot("d25-labels")
       val docs = Tables.documents(s, d)
       val arrived = col("doc_id") % 20 === 7
       val prior = docs.filter(!arrived)
@@ -915,11 +899,7 @@ object DedupQueries extends QueryPack {
     // print lost (or corrupted) in the store round-trip is a hash
     // mismatch. d28 is the matching write path.
     "d27_stored_prints" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-d27-prints").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively(): Unit }
+      val root = Tables.freshRoot("d27-prints")
       graft.operators.Winnowing.writePrints(
         graft.operators.Winnowing
           .fingerprints(Tables.documents(s, d), k = 8, w = 8), root)
@@ -941,11 +921,7 @@ object DedupQueries extends QueryPack {
     // At 100 TB: O(batch) text hashing per increment vs a daily
     // whole-corpus k-gram scan; v1 stays time-travelable for audits.
     "d28_incremental_winnow" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-d28-prints").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively(): Unit }
+      val root = Tables.freshRoot("d28-prints")
       val docs = Tables.documents(s, d)
       val arrived = col("doc_id") % 20 === 11
       graft.operators.Winnowing.writePrints(

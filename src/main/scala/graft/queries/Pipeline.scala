@@ -92,11 +92,7 @@ object Pipeline extends QueryPack {
     // versioned store + digest diff; the diff shuffles 16-byte digests,
     // never chunk payloads or embeddings).
     "i10_snapshot_cdf" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-i10-cdf").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively() }
+      val root = Tables.freshRoot("i10-cdf")
       val docs = Tables.documents(s, d)
       // doc 3 grows past a chunk boundary (changed + added rows); doc 4
       // is re-ingested with ZERO rows (removed rows — the delete edge)
@@ -213,11 +209,7 @@ object Pipeline extends QueryPack {
     // engines agree at every boundary). Per version: one bucket rollup
     // (≤10 rows from any corpus size); the compare is a 10-row join.
     "i11_snapshot_drift" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-i11-drift").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively() }
+      val root = Tables.freshRoot("i11-drift")
       val docs = Tables.documents(s, d)
       val v1 = graft.operators.SnapshotStore.commit(docs, root, buckets = 8)
       // the refresh: every doc_id % 5 == 0 re-ingests with doubled text
@@ -254,11 +246,7 @@ object Pipeline extends QueryPack {
     // against a scratch dir (wiped first, so the query is one
     // deterministic function of sfDir).
     "i05_snapshot_upsert" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-i05-snapshot").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively() }
+      val root = Tables.freshRoot("i05-snapshot")
       val docs = Tables.documents(s, d)
       val amended = concat(col("text"), lit(" amended"))
       val doc3 = docs.filter(col("doc_id") === 3)
@@ -343,11 +331,7 @@ object Pipeline extends QueryPack {
     // proven by the oracle, not assumed. CSV reads with an EXPLICIT
     // schema (inference is a second scan — never at 100 TB).
     "i09_format_roundtrip" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-i09-formats").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively() }
+      val root = Tables.freshRoot("i09-formats")
       val docs = Tables.documents(s, d)
         .select("doc_id", "lang", "source", "n_chars")
       docs.write.mode("overwrite").orc(s"$root/orc")
@@ -496,11 +480,7 @@ object Pipeline extends QueryPack {
     // the difference between scanning a handful of clustered files and
     // scanning every bucket of the table.
     "i15_stats_skipping" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-i15-stats").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively() }
+      val root = Tables.freshRoot("i15-stats")
       val docs = Tables.documents(s, d)
         .select("doc_id", "source", "n_chars")
       graft.operators.SnapshotStore.commit(docs, root, buckets = 8)
@@ -528,11 +508,7 @@ object Pipeline extends QueryPack {
     // cost extra scanned files (residual-filtered); false negatives are
     // impossible, so a pruned-away true row would hash-mismatch.
     "i16_bloom_point" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-i16-bloom").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively() }
+      val root = Tables.freshRoot("i16-bloom")
       val idx = IngestionPipeline.buildIndex(s, d, chunkSize = 120,
           overlap = 20, dim = 8)
         .select("doc_id", "chunk_idx", "vec_key", "vec_uid")
@@ -563,11 +539,7 @@ object Pipeline extends QueryPack {
     // oracle replays the deletion set-theoretically; any stale row in a
     // carried file or lost row in a rewritten one is a hash mismatch.
     "i17_delete_range" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-i17-del").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively() }
+      val root = Tables.freshRoot("i17-del")
       val docs = Tables.documents(s, d)
         .select("doc_id", "source", "n_chars")
       graft.operators.SnapshotStore.commit(docs, root, buckets = 8)
@@ -600,11 +572,7 @@ object Pipeline extends QueryPack {
     // require pins that the delete carried files verbatim (pruned by
     // bitset, not a full rewrite).
     "i18_delete_key" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-i18-delkey").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively() }
+      val root = Tables.freshRoot("i18-delkey")
       val idx = IngestionPipeline.buildIndex(s, d, chunkSize = 120,
           overlap = 20, dim = 8)
         .select("doc_id", "chunk_idx", "vec_uid")
@@ -641,11 +609,7 @@ object Pipeline extends QueryPack {
     // as a plain filter (DuckDB's default ASCII comparison is the same
     // binary order); the require pins that pruning actually engaged.
     "i19_string_skipping" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-i19-strstats").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively() }
+      val root = Tables.freshRoot("i19-strstats")
       val docs = Tables.documents(s, d)
         .select("doc_id", "source", "n_chars")
       graft.operators.SnapshotStore.commit(docs, root, buckets = 8,
@@ -674,11 +638,7 @@ object Pipeline extends QueryPack {
     // mismatch, so the bloom's no-false-negative contract is what the
     // compare actually checks.
     "i20_upsert_keypruned" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-i20-keyprune").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively() }
+      val root = Tables.freshRoot("i20-keyprune")
       val docs = Tables.documents(s, d)
         .select("doc_id", "source", "n_chars")
       graft.operators.SnapshotStore.commit(docs, root, buckets = 8,

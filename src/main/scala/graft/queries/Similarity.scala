@@ -51,7 +51,7 @@ object Similarity extends QueryPack {
 
   /** The IVFADC oracle: deterministic first-16 centroids for both
     * quantizers, integer-exact distances — shared by s07 (in-memory
-    * cascade) and s14 (the same cascade served from persisted layouts),
+    * cascade) and s14 (the same cascade served from a stored index),
     * which compute the identical quantity by construction. */
   private lazy val PqIvfOracleSql: String =
     s"""WITH q AS (SELECT vec_id,
@@ -234,27 +234,23 @@ object Similarity extends QueryPack {
         .orderBy("q_id", "rank")
     }),
 
-    // IVFADC at rest — s07's cascade with BOTH quantizers persisted:
-    // candidate cells from the stored IVF partition layout (probe =
-    // partition-pruned scan of the probed cent_id dirs, ids only),
-    // scores from the stored PQ codebook + codes. The corpus embeddings
-    // are read only to BUILD the stores and to select the query rows;
-    // the search itself never touches them (PqIndexSpec plan-pins it).
-    // Result ≡ s07 by construction, so it shares s07's oracle SQL.
+    // IVFADC at rest — s07's cascade with BOTH quantizers stored in one
+    // VersionedIvfAdc version: candidate cells from the stored coarse
+    // centroids (probe = stats-skipping read of the probed cells' files,
+    // codes only), scores from the stored PQ codebook + codes. The
+    // corpus embeddings are read only to BUILD the index and to select
+    // the query rows; the search itself never touches them (PqIndexSpec
+    // plan-pins it). Result ≡ s07 by construction, so it shares s07's
+    // oracle SQL.
     "s14_pq_ivf_stored" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-s14-ivfadc").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively() }
+      val root = Tables.freshRoot("s14-ivfadc")
       val emb = Tables.embeddings(s, d)
-      graft.operators.IvfIndex.writeIndex(emb, k = 16, s"$root/ivf")
-      graft.operators.PqIndex.writeIndex(emb, s"$root/pq", dim = Dim,
-        m = 8, k = 16)
-      graft.operators.PqIndex.searchIvfIndexed(s, s"$root/ivf", s"$root/pq",
+      graft.operators.VersionedIvfAdc.write(emb, root, dim = Dim,
+        m = 8, k = 16, nCells = 16)
+      graft.operators.VersionedIvfAdc.search(s, root,
         emb.filter(col("vec_id") < AnnEvalQueries)
           .select("vec_id", "embedding"),
-        dim = Dim, m = 8, nProbe = 2, topK = 3)
+        nProbe = 2, topK = 3)
         .orderBy("q_id", "rank")
     }),
 
@@ -585,126 +581,105 @@ object Similarity extends QueryPack {
     }),
 
     // IVF-SQ8 at rest — the scalar-quantized sibling of s14's stored
-    // IVFADC (the Faiss IVF-SQ index type): candidate cells from the
-    // stored partition layout (probe = partition-pruned scan of the
-    // probed cent_id dirs), scores from the STORED int8 codes (s05's
-    // symmetric quantization — integer-exact, so the 4×-compressed tier
-    // is oracle-checked end to end, not spot-checked). Cell assignment
-    // on full precision, scoring on the compressed codes; corpus
-    // embeddings are read only to build the store and select queries.
+    // IVFADC (the Faiss IVF-SQ index type, VersionedIvf.writeSq):
+    // candidate cells from the stored centroids (probe = stats-skipping
+    // read of the probed cells' files), scores from the STORED int8
+    // codes (s05's symmetric quantization — integer-exact, so the
+    // 4×-compressed tier is oracle-checked end to end, not
+    // spot-checked). Cell assignment on full precision, scoring on the
+    // compressed codes; corpus embeddings are read only to build the
+    // store and select queries.
     "s19_sq_ivf_stored" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-s19-sqivf").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively(): Unit }
+      val root = Tables.freshRoot("s19-sqivf")
       val emb = Tables.embeddings(s, d)
-      graft.operators.IvfIndex.writeIndexSq(emb, k = 16, root)
-      graft.operators.IvfIndex.searchIndexedSq(s, root,
+      graft.operators.VersionedIvf.writeSq(emb, k = 16, root)
+      graft.operators.VersionedIvf.searchSq(s, root,
         emb.filter(col("vec_id") < 5).select("vec_id", "embedding"),
         nProbe = 2, topK = 3)
         .orderBy("q_id", "rank")
     }),
 
-    // Stored-index DELETION (IvfIndex.deleteFromIndex): the
+    // Stored-index DELETION (VersionedIvf.delete): the
     // right-to-be-forgotten / poisoned-sample-removal loop — build the
-    // persisted IVF index, delete every vec_id ≡ 3 (mod 10), then
-    // search at FULL probe width so the stored result is exactly
-    // brute-force cosine top-3 over the SURVIVORS: the oracle replays
-    // the brute force minus the deleted set, so one stale row surviving
-    // in a touched (or emptied) cell partition is a hash mismatch, not
-    // a silent leak. Deletion cost ∝ touched cells (partition-pruned
-    // rewrite), never an index rebuild.
+    // stored IVF index, delete every vec_id ≡ 3 (mod 10), then search at
+    // FULL probe width so the stored result is exactly brute-force
+    // cosine top-3 over the SURVIVORS: the oracle replays the brute
+    // force minus the deleted set, so one stale row surviving the keyed
+    // delete is a hash mismatch, not a silent leak. Deletion is one
+    // publish whose read the store's doc_id stats prune, never an index
+    // rebuild.
     "s20_index_delete" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-s20-ivfdel").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively(): Unit }
+      val root = Tables.freshRoot("s20-ivfdel")
       val emb = Tables.embeddings(s, d)
-      graft.operators.IvfIndex.writeIndex(emb, k = 16, root)
-      graft.operators.IvfIndex.deleteFromIndex(s, root,
+      graft.operators.VersionedIvf.write(emb, k = 16, root)
+      graft.operators.VersionedIvf.delete(s, root,
         emb.filter(col("vec_id") % 10 === 3).select("vec_id"))
-      graft.operators.IvfIndex.searchIndexed(s, root,
+      graft.operators.VersionedIvf.search(s, root,
         emb.filter(col("vec_id") < AnnEvalQueries)
           .select("vec_id", "embedding"),
         nProbe = 16, topK = 3)
         .orderBy("q_id", "rank")
     }),
 
-    // Stored-index REBALANCE (IvfIndex.rebalance — OPTIMIZE for the ANN
-    // store): seeded cells skew by construction, the hottest split in
+    // Stored-index REBALANCE (VersionedIvf.rebalance — OPTIMIZE for the
+    // ANN store): seeded cells skew by construction, the hottest split in
     // two (sub-centroids seeded from each cell's two lowest ids + one
-    // integer-Lloyd refinement), ONLY the split cells' partitions
-    // rewrite. Full-probe search afterwards must STILL be exactly
-    // brute-force cosine top-3 — a row lost to a mis-assigned sub-cell,
-    // left stale in a rewritten partition, or double-stored would hash-
-    // mismatch. The require pins that at least one cell actually split.
+    // integer-Lloyd refinement), ONLY the split cells' rows republish.
+    // Full-probe search afterwards must STILL be exactly brute-force
+    // cosine top-3 — a row lost to a mis-assigned sub-cell, left stale
+    // by the keyed replace, or double-stored would hash-mismatch. The
+    // require pins that at least one cell actually split.
     "s21_ivf_rebalance" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-s21-rebal").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively(): Unit }
+      val root = Tables.freshRoot("s21-rebal")
       val emb = Tables.embeddings(s, d)
-      graft.operators.IvfIndex.writeIndex(emb, k = 16, root)
-      val split = graft.operators.IvfIndex.rebalance(s, root,
+      graft.operators.VersionedIvf.write(emb, k = 16, root)
+      val split = graft.operators.VersionedIvf.rebalance(s, root,
         hotFactor = 1.0)
       require(split >= 1,
         "s21: no cell exceeded mean population — rebalance untested")
-      graft.operators.IvfIndex.searchIndexed(s, root,
+      graft.operators.VersionedIvf.search(s, root,
         emb.filter(col("vec_id") < AnnEvalQueries)
           .select("vec_id", "embedding"),
         nProbe = 64, topK = 3)
         .orderBy("q_id", "rank")
     }),
 
-    // Iterative rebalance CONVERGENCE (IvfIndex.rebalanceUntil, round
-    // 9): one rebalance call splits each hot cell once (binary) — a
+    // Iterative rebalance CONVERGENCE (VersionedIvf.rebalanceUntil):
+    // one rebalance call splits each hot cell once (binary) — a
     // severely skewed cell levels only under repeated calls, so the
     // maintenance loop iterates until no cell exceeds hotFactor × mean
     // (bounded by maxRounds, the ranksConverged discipline). The loop
     // must preserve the index EXACTLY however many rounds it takes:
     // full-probe search afterwards is still brute-force cosine top-3.
     "s22_ivf_rebalance_until" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-s22-rebal").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively(): Unit }
+      val root = Tables.freshRoot("s22-rebal")
       val emb = Tables.embeddings(s, d)
-      graft.operators.IvfIndex.writeIndex(emb, k = 16, root)
+      graft.operators.VersionedIvf.write(emb, k = 16, root)
       // hotFactor 1.0 = "split anything above the mean" — the same
       // threshold s21 proves skewed on this corpus, so the loop always
       // has work; 3 bounded rounds cascade the splits the single-call
       // form cannot
-      val splits = graft.operators.IvfIndex.rebalanceUntil(s, root,
+      val splits = graft.operators.VersionedIvf.rebalanceUntil(s, root,
         hotFactor = 1.0, maxRounds = 3)
       require(splits >= 1,
         "s22: no cell exceeded mean population — convergence loop untested")
-      graft.operators.IvfIndex.searchIndexed(s, root,
+      graft.operators.VersionedIvf.search(s, root,
         emb.filter(col("vec_id") < AnnEvalQueries)
           .select("vec_id", "embedding"),
         nProbe = 64, topK = 3)
         .orderBy("q_id", "rank")
     }),
 
-    // TRANSACTIONAL stored-index maintenance (VersionedIvf — the
-    // SnapshotStore-routed layout, round 10): delete and rebalance are
-    // each ONE atomic manifest publish carrying the vector rows AND the
-    // `#ivfcent` centroid geometry, so the bare layout's documented
-    // crash window (centroid sidecar vs cell partitions, two separate
-    // writes) cannot exist and the index time-travels with the store's
+    // TRANSACTIONAL stored-index maintenance (VersionedIvf): delete and
+    // rebalance are each ONE atomic manifest publish carrying the vector
+    // rows AND the `#ivfcent` centroid geometry, so no crash can tear
+    // centroids from cells and the index time-travels with the store's
     // history. Full-probe search after delete + rebalance must be
     // EXACTLY survivors-only brute-force cosine top-3 — a row lost in
     // the upsert merge, a stale row surviving the keyed delete, or
     // geometry torn from rows would hash-mismatch.
     "s23_ivf_versioned" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-s23-vivf").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively(): Unit }
+      val root = Tables.freshRoot("s23-vivf")
       val emb = Tables.embeddings(s, d)
       graft.operators.VersionedIvf.write(emb, k = 16, root)
       graft.operators.VersionedIvf.delete(s, root,
@@ -736,11 +711,7 @@ object Similarity extends QueryPack {
     // row loses a neighbour, moved geometry breaks the carried-lines
     // contract the requires pin.
     "s24_ivf_upsert" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-s24-vup").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively(): Unit }
+      val root = Tables.freshRoot("s24-vup")
       val emb = Tables.embeddings(s, d)
       graft.operators.VersionedIvf.write(
         emb.filter(col("vec_id") % 3 =!= 0), k = 16, root)
@@ -769,19 +740,14 @@ object Similarity extends QueryPack {
     // compressed cascade (coarse IVF probe → PQ asymmetric distance)
     // with the WHOLE index state in ONE SnapshotStore manifest: rows =
     // (doc_id, cent_id, codes[m]), coarse centroids + PQ codebook +
-    // (dim,m,k) geometry as manifest lines — where the bare layout
-    // persists four artifacts with no transactional tie. The round trip
+    // (dim,m,k) geometry as manifest lines. The round trip
     // write → delete 10% → upsert the SAME vectors back (re-encoded
-    // against the STORED quantizers) must land EXACTLY on the bare
+    // against the STORED quantizers) must land EXACTLY on the fresh
     // cascade's result: a row not restored, a code drifting from the
     // carried codebook, or a duplicate surviving the keyed replace
     // would shift the integer distances the oracle replays.
     "s25_ivfadc_versioned" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-s25-vadc").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively(): Unit }
+      val root = Tables.freshRoot("s25-vadc")
       val emb = Tables.embeddings(s, d)
       graft.operators.VersionedIvfAdc.write(emb, root, dim = Dim,
         m = 8, k = 16, nCells = 16)
@@ -818,16 +784,12 @@ object Similarity extends QueryPack {
     // `#ivfcent` lines move), then a delete proves the split geometry
     // carries through later verbs. The split exists to bound probe
     // work, NOT to change results: a FULL probe after rebalance+delete
-    // must land exactly on the bare cascade's integer PQ distances over
+    // must land exactly on the s07 cascade's integer PQ distances over
     // the survivors — a row re-encoded (it must not be), lost to a
     // mis-assigned sub-cell, or scored against a moved codebook would
     // shift the approx distances the oracle replays.
     "s26_ivfadc_rebalance" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-s26-vadcreb").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively(): Unit }
+      val root = Tables.freshRoot("s26-vadcreb")
       val emb = Tables.embeddings(s, d)
       graft.operators.VersionedIvfAdc.write(emb, root, dim = Dim,
         m = 8, k = 16, nCells = 16)
@@ -863,11 +825,7 @@ object Similarity extends QueryPack {
     // land on the retrained book's integer distances — a stale code, a
     // drifted mean, or a renumbering slip all shift them.
     "s27_ivfadc_retrain" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-s27-vadcret").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively(): Unit }
+      val root = Tables.freshRoot("s27-vadcret")
       val emb = Tables.embeddings(s, d)
       graft.operators.VersionedIvfAdc.write(emb, root, dim = Dim,
         m = 8, k = 16, nCells = 16)
@@ -904,11 +862,7 @@ object Similarity extends QueryPack {
     // manifest), and moved centroids would break the carried-lines
     // require.
     "s28_ivf_stream_upsert" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-s28-vstream").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively(): Unit }
+      val root = Tables.freshRoot("s28-vstream")
       val emb = Tables.embeddings(s, d)
       val b0 = emb.filter(col("vec_id") % 3 =!= 0)
         .select("vec_id", "embedding")
@@ -956,11 +910,7 @@ object Similarity extends QueryPack {
     // decay-then-recovery shape itself (measured: drift 0‰ → 380‰ at
     // sf0.01, 160‰ → 400‰ at sf0.1, base stable ~260–380‰).
     "s29_ivfadc_drift" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-s29-drift").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively(): Unit }
+      val root = Tables.freshRoot("s29-drift")
       val emb = Tables.embeddings(s, d)
       val toD = transform(col("embedding"), x => x.cast("double"))
       val base = emb
@@ -1075,15 +1025,11 @@ object Similarity extends QueryPack {
     // 1, batch 1 PQ-encodes against the STORED book and appends, a
     // REPLAY of batch 1 must no-op (no version, no double-applied
     // rows), and geometry must ride every version verbatim. The final
-    // search replays s25's bare-cascade oracle: a row encoded against
+    // search replays s25's cascade oracle: a row encoded against
     // the wrong book, double-applied by the replay, or torn from the
     // carried quantizers shifts the integer PQ distances it pins.
     "s30_ivfadc_stream_upsert" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-s30-vadcstream").getPath
-      val f = new java.io.File(root)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively(): Unit }
+      val root = Tables.freshRoot("s30-vadcstream")
       val emb = Tables.embeddings(s, d)
       // batch 0 carries ids 0..15, so the streamed bootstrap's
       // lowest-16 quantizer seeds coincide with the batch write()'s —
@@ -1670,7 +1616,7 @@ object Similarity extends QueryPack {
 
     // full-probe ADC over the survivors: rebalance moves rows BETWEEN
     // coarse cells without touching codes or codebook, so the ranking
-    // is the bare cascade's integer PQ distances with the deleted set
+    // is the s07 cascade's integer PQ distances with the deleted set
     // gone — cell structure cancels out of a full probe entirely
     "s26_ivfadc_rebalance" ->
       s"""WITH q AS (SELECT vec_id,
@@ -1771,8 +1717,8 @@ object Similarity extends QueryPack {
     // full-probe search after it is plain brute-force cosine top-3
     "s21_ivf_rebalance" -> fullProbeTop3Oracle,
 
-    // the versioned layout preserves content exactly like the bare one:
-    // full-probe after delete + rebalance = survivors-only brute force
+    // delete + rebalance preserve content exactly (s20 and s21 in one
+    // pipeline): full-probe afterwards = survivors-only brute force
     "s23_ivf_versioned" ->
       s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb
         |  FROM embeddings WHERE vec_id < $AnnEvalQueries),
@@ -1808,7 +1754,7 @@ object Similarity extends QueryPack {
     // content, and recall@10 against exact integer-L2 truth
     "s29_ivfadc_drift" -> s29DriftOracle,
     // the streamed drain lands exactly where one batch write of the
-    // full corpus would — s25's bare-cascade integer-PQ oracle verbatim
+    // full corpus would — s25's cascade integer-PQ oracle verbatim
     "s30_ivfadc_stream_upsert" -> PqIvfOracleSql,
 
     "s13_hard_negatives" ->

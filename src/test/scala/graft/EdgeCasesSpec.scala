@@ -58,12 +58,11 @@ class EdgeCasesSpec extends SparkTestBase {
   test("stored IVFADC with an empty query set returns empty, not an error") {
     val emb = Tables.embeddings(spark, sf0001)
     val root = java.nio.file.Files.createTempDirectory("graft_edge_adc")
-      .toString
-    graft.operators.IvfIndex.writeIndex(emb, k = 16, s"$root/ivf")
-    graft.operators.PqIndex.writeIndex(emb, s"$root/pq")
-    val out = graft.operators.PqIndex.searchIvfIndexed(spark,
-      s"$root/ivf", s"$root/pq",
-      emb.filter(col("vec_id") < 0).select("vec_id", "embedding"))
+      .toString + "/index"
+    graft.operators.VersionedIvfAdc.write(emb, root)
+    val out = graft.operators.VersionedIvfAdc.search(spark, root,
+      emb.filter(col("vec_id") < 0).select("vec_id", "embedding"),
+      nProbe = 2, topK = 3)
     assert(out.count() === 0)
   }
 

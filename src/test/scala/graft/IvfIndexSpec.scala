@@ -1,42 +1,50 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.IvfIndex
+import graft.operators.{IvfIndex, SnapshotStore, VersionedIvf}
 
-/** The stored-index IVF path: writeIndex partitions the index at rest BY
-  * cent_id; searchIndexed must (a) return exactly what the in-memory
-  * search() returns for the same parameters, and (b) read the index with
-  * a `cent_id IN (...)` PARTITION filter — the partition-pruned probe is
-  * the whole point of the at-rest layout (only probed cells' files open,
-  * never the full index). */
+/** The IVF index: in-memory search, centroid training, and the stored
+  * index ([[VersionedIvf]], flat and SQ8 tiers) — stored search ≡
+  * in-memory search, keyed upsert and delete, hot-cell rebalance, and a
+  * narrow probe that opens only the probed cells' files. Tests of the
+  * stored index keep the names of the stored-layout verbs they were
+  * first written for (searchIndexed, upsertIndexed, deleteFromIndex,
+  * rebalance). */
 class IvfIndexSpec extends SparkTestBase {
 
-  private val indexPath = "target/ivf-index-spec"
-
-  private def cleanup(): Unit = {
-    val f = new java.io.File(indexPath)
+  /** An empty root at `path`. */
+  private def fresh(path: String): String = {
+    val f = new java.io.File(path)
     if (f.exists()) {
       import scala.reflect.io.Directory
       new Directory(f).deleteRecursively()
     }
+    path
   }
 
-  test("searchIndexed over a written index equals in-memory search") {
-    cleanup()
-    val emb = Tables.embeddings(spark, sf0001)
-    IvfIndex.writeIndex(emb, k = 16, indexPath)
+  private def rows(df: DataFrame): Seq[Seq[Any]] =
+    df.orderBy("q_id", "rank").collect().map(_.toSeq).toSeq
 
-    val live = IvfIndex
-      .search(emb, col("vec_id") < 5, k = 16, nProbe = 2, topK = 3)
-      .orderBy("q_id", "rank")
-      .collect().map(_.toSeq).toSeq
-    val stored = IvfIndex
-      .searchIndexed(spark, indexPath,
-        emb.filter(col("vec_id") < 5).select("vec_id", "embedding"),
-        nProbe = 2, topK = 3)
-      .orderBy("q_id", "rank")
-      .collect().map(_.toSeq).toSeq
+  private def cellCounts(root: String): Map[Long, Long] =
+    SnapshotStore.read(spark, root).groupBy("cent_id")
+      .agg(count(lit(1)).as("n"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private def centIds(root: String): Set[Long] =
+    VersionedIvf.storedCentroids(spark, root).map(_._1).toSet
+
+  test("searchIndexed over a written index equals in-memory search") {
+    val root = fresh("target/ivf-index-spec")
+    val emb = Tables.embeddings(spark, sf0001)
+    VersionedIvf.write(emb, k = 16, root)
+
+    val live = rows(IvfIndex
+      .search(emb, col("vec_id") < 5, k = 16, nProbe = 2, topK = 3))
+    val stored = rows(VersionedIvf.search(spark, root,
+      emb.filter(col("vec_id") < 5).select("vec_id", "embedding"),
+      nProbe = 2, topK = 3))
 
     assert(stored.nonEmpty, "stored-index search returned no rows")
     assert(stored === live)
@@ -44,15 +52,12 @@ class IvfIndexSpec extends SparkTestBase {
 
   test("stored SQ8 index: full-probe search ≡ symmetric-int8 brute force") {
     import graft.functions.VectorFunctions
-    val dir = "target/ivf-sq-spec"
-    val f = new java.io.File(dir)
-    if (f.exists()) { import scala.reflect.io.Directory
-      new Directory(f).deleteRecursively(): Unit }
+    val root = fresh("target/ivf-sq-spec")
     val emb = Tables.embeddings(spark, sf0001)
-    IvfIndex.writeIndexSq(emb, k = 16, dir)
+    VersionedIvf.writeSq(emb, k = 16, root)
     // nProbe = k probes every cell ⇒ the stored compressed tier must
     // reproduce the exhaustive symmetric-int8 ranking exactly
-    val got = IvfIndex.searchIndexedSq(spark, dir,
+    val got = VersionedIvf.searchSq(spark, root,
       emb.filter(col("vec_id") < 3).select("vec_id", "embedding"),
       nProbe = 16, topK = 5)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
@@ -74,7 +79,8 @@ class IvfIndexSpec extends SparkTestBase {
         r.getDouble(2))).toSet
     assert(got.nonEmpty && got === brute)
     // the stored rows carry int8-range codes, not floats
-    val stored = spark.read.parquet(s"$dir/index")
+    val stored = SnapshotStore.read(spark, root)
+    assert(!stored.columns.contains("embedding"))
     val mx = stored
       .select(max(array_max(transform(col("q8"), x => abs(x)))))
       .collect()(0)
@@ -82,63 +88,31 @@ class IvfIndexSpec extends SparkTestBase {
   }
 
   test("deleteFromIndex preserves the SQ8 tier's own payload columns") {
-    val dir = "target/ivf-sq-del-spec"
-    val f = new java.io.File(dir)
-    if (f.exists()) { import scala.reflect.io.Directory
-      new Directory(f).deleteRecursively(): Unit }
+    val root = fresh("target/ivf-sq-del-spec")
     val emb = Tables.embeddings(spark, sf0001)
-    IvfIndex.writeIndexSq(emb, k = 16, dir)
-    val before = spark.read.parquet(s"$dir/index")
+    VersionedIvf.writeSq(emb, k = 16, root)
+    val before = SnapshotStore.read(spark, root)
     val cols = before.columns.sorted.toSeq
     val n = before.count()
-    IvfIndex.deleteFromIndex(spark, dir,
+    VersionedIvf.delete(spark, root,
       emb.filter(col("vec_id") % 10 === 3).select("vec_id"))
-    val after = spark.read.parquet(s"$dir/index")
+    val after = SnapshotStore.read(spark, root)
     // schema survives (q8 codes, not the flat tier's embedding column)
     assert(after.columns.sorted.toSeq === cols)
     assert(cols.contains("q8"))
     val nDel = emb.filter(col("vec_id") % 10 === 3).count()
     assert(after.count() === n - nDel)
     // the compressed tier still searches after the delete
-    assert(IvfIndex.searchIndexedSq(spark, dir,
+    assert(VersionedIvf.searchSq(spark, root,
       emb.filter(col("vec_id") < 3).select("vec_id", "embedding"),
       nProbe = 16, topK = 5).count() === 15L)
   }
 
-  test("appendToIndex equals a fresh rebuild with the same centroids") {
-    cleanup()
-    val emb = Tables.embeddings(spark, sf0001)
-    val cents = IvfIndex.centroids(emb, 16)
-    // build from the even half, append the odd half incrementally
-    IvfIndex.writeIndexWith(emb.filter(col("vec_id") % 2 === 0), cents,
-      indexPath)
-    IvfIndex.appendToIndex(spark, indexPath,
-      emb.filter(col("vec_id") % 2 === 1))
-
-    val queries = emb.filter(col("vec_id") < 5)
-      .select("vec_id", "embedding")
-    val incremental = IvfIndex
-      .searchIndexed(spark, indexPath, queries, nProbe = 2, topK = 3)
-      .orderBy("q_id", "rank").collect().map(_.toSeq).toSeq
-
-    val rebuiltPath = indexPath + "-rebuilt"
-    val f = new java.io.File(rebuiltPath)
-    if (f.exists()) { import scala.reflect.io.Directory
-      new Directory(f).deleteRecursively() }
-    IvfIndex.writeIndexWith(emb, cents, rebuiltPath)
-    val rebuilt = IvfIndex
-      .searchIndexed(spark, rebuiltPath, queries, nProbe = 2, topK = 3)
-      .orderBy("q_id", "rank").collect().map(_.toSeq).toSeq
-
-    assert(incremental.nonEmpty)
-    assert(incremental === rebuilt)
-  }
-
   test("upsertIndexed replaces re-embedded vectors, even across cells") {
-    cleanup()
+    val root = fresh("target/ivf-upsert-spec")
     val emb = Tables.embeddings(spark, sf0001)
-    val cents = IvfIndex.centroids(emb, 16)
-    IvfIndex.writeIndexWith(emb, cents, indexPath)
+    VersionedIvf.write(emb, k = 16, root)
+    val cents = VersionedIvf.storedCentroids(spark, root)
 
     // re-embed vectors 40-44 with vector 7's embedding: same ids, new
     // values — their home cells can change, old rows must vanish
@@ -147,43 +121,35 @@ class IvfIndexSpec extends SparkTestBase {
     val mutated = emb.filter(col("vec_id").between(40, 44))
       .crossJoin(broadcast(donor))
       .select(col("vec_id"), col("donor").as("embedding"))
-    IvfIndex.upsertIndexed(spark, indexPath, mutated)
+    VersionedIvf.upsert(spark, root, mutated)
 
-    val stored = spark.read.parquet(s"$indexPath/index")
+    val stored = SnapshotStore.read(spark, root)
     // no duplicate ids, corpus size unchanged
     assert(stored.count() === emb.count())
-    assert(stored.select("vec_id").distinct().count() === emb.count())
+    assert(stored.select("doc_id").distinct().count() === emb.count())
 
-    // equals a fresh rebuild of the mutated corpus with the same cents
+    // equals a fresh assignment of the mutated corpus to the same cents
     val current = emb.filter(!col("vec_id").between(40, 44))
       .select("vec_id", "embedding")
       .unionByName(mutated)
-    val rebuiltPath = indexPath + "-rebuilt2"
-    val f = new java.io.File(rebuiltPath)
-    if (f.exists()) { import scala.reflect.io.Directory
-      new Directory(f).deleteRecursively() }
-    IvfIndex.writeIndexWith(current, cents, rebuiltPath)
-    val got = stored.select("vec_id", "cent_id")
-      .withColumn("cent_id", col("cent_id").cast("long"))
-      .orderBy("vec_id").collect().map(_.toSeq).toSeq
-    val want = spark.read.parquet(s"$rebuiltPath/index")
+    val got = stored.select("doc_id", "cent_id")
+      .orderBy("doc_id").collect().map(_.toSeq).toSeq
+    val want = IvfIndex.cellAssign(current, cents)
       .select("vec_id", "cent_id")
-      .withColumn("cent_id", col("cent_id").cast("long"))
       .orderBy("vec_id").collect().map(_.toSeq).toSeq
     assert(got === want)
   }
 
   test("deleteFromIndex removes exactly the given ids; an emptied cell " +
       "leaves no stale partition; absent ids are a no-op") {
-    cleanup()
+    val root = fresh("target/ivf-delete-spec")
     val emb = Tables.embeddings(spark, sf0001)
-    val cents = IvfIndex.centroids(emb, 16)
-    IvfIndex.writeIndexWith(emb, cents, indexPath)
-    val before = spark.read.parquet(s"$indexPath/index").count()
+    VersionedIvf.write(emb, k = 16, root)
+    val cents = VersionedIvf.storedCentroids(spark, root)
+    val before = SnapshotStore.read(spark, root).count()
 
     // pick one whole cell to empty out, plus a scattered handful
-    val assign = IvfIndex.cellRanksWith(emb, cents)
-      .filter(col("rk") === 1).select("vec_id", "cent_id")
+    val assign = IvfIndex.cellAssign(emb, cents).select("vec_id", "cent_id")
     val victimCell = assign.groupBy("cent_id")
       .agg(count(lit(1)).as("n")).orderBy("n", "cent_id")
       .limit(1).collect().head.getLong(0)
@@ -193,213 +159,180 @@ class IvfIndexSpec extends SparkTestBase {
         .select("vec_id"))
       .distinct()
     val nDoomed = doomed.count()
-    IvfIndex.deleteFromIndex(spark, indexPath, doomed)
+    VersionedIvf.delete(spark, root, doomed)
 
-    val after = spark.read.parquet(s"$indexPath/index")
+    val after = SnapshotStore.read(spark, root)
     assert(after.count() === before - nDoomed)
-    assert(after.join(doomed, Seq("vec_id"), "left_semi").count() === 0L)
-    // the emptied cell's partition dir is gone, not a stale leftover
-    assert(!new java.io.File(
-      s"$indexPath/index/cent_id=$victimCell").exists())
+    assert(after.join(doomed.select(col("vec_id").as("doc_id")),
+      Seq("doc_id"), "left_semi").count() === 0L)
+    // the emptied cell holds no stale row, not even through a probe of it
+    assert(after.filter(col("cent_id") === victimCell).count() === 0L)
+    assert(SnapshotStore.readWhereIn(spark, root, "cent_id",
+      Seq(victimCell)).filter(col("cent_id") === victimCell)
+      .count() === 0L)
     // surviving cells still answer searches (full probe = brute force
     // over survivors)
     val q = emb.filter(col("vec_id") < 3).select("vec_id", "embedding")
-    assert(IvfIndex.searchIndexed(spark, indexPath, q,
+    assert(VersionedIvf.search(spark, root, q,
       nProbe = 16, topK = 3).count() === 9L)
     // deleting ids that are not in the index changes nothing
     import spark.implicits._
-    IvfIndex.deleteFromIndex(spark, indexPath,
-      Seq(999999L, 999998L).toDF("vec_id"))
-    assert(spark.read.parquet(s"$indexPath/index").count() ===
-      before - nDoomed)
+    VersionedIvf.delete(spark, root, Seq(999999L, 999998L).toDF("vec_id"))
+    assert(SnapshotStore.read(spark, root).count() === before - nDoomed)
   }
 
   test("rebalance splits hot cells, bounds the max cell, and leaves " +
       "full-probe search ≡ the pre-rebalance brute-force results") {
-    cleanup()
+    val root = fresh("target/ivf-rebalance-spec")
     val emb = Tables.embeddings(spark, sf0001)
     // k = 4 seeded centroids over the fixture corpus are naturally
     // skewed (seeds are the 4 lowest vec_ids, not spread)
-    IvfIndex.writeIndex(emb, k = 4, indexPath)
-    def cellCounts() = spark.read.parquet(s"$indexPath/index")
-      .groupBy(col("cent_id").cast("long").as("cent_id"))
-      .agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val before = cellCounts()
+    VersionedIvf.write(emb, k = 4, root)
+    val before = cellCounts(root)
     val maxBefore = before.values.max
     val total = before.values.sum
+    val queries = emb.filter(col("vec_id") < 5).select("vec_id", "embedding")
     // full-probe truth BEFORE the rebalance: layout-independent
-    val want = IvfIndex.searchIndexed(spark, indexPath,
-        emb.filter(col("vec_id") < 5).select("vec_id", "embedding"),
-        nProbe = 4, topK = 3)
-      .orderBy("q_id", "rank").collect().map(_.toSeq).toSeq
+    val want = rows(VersionedIvf.search(spark, root, queries,
+      nProbe = 4, topK = 3))
 
-    val split = IvfIndex.rebalance(spark, indexPath, hotFactor = 1.0)
+    val split = VersionedIvf.rebalance(spark, root, hotFactor = 1.0)
     assert(split >= 1, s"no cell exceeded mean population? $before")
-    val after = cellCounts()
+    val after = cellCounts(root)
     assert(after.size === before.size + split)
     assert(after.values.sum === total, "rebalance lost or duplicated rows")
     assert(after.values.max < maxBefore,
       s"hottest cell did not shrink: ${after.values.max} vs $maxBefore")
-    // the centroid sidecar and the partition layout agree
-    val centIds = spark.read.parquet(s"$indexPath/centroids")
-      .select("cent_id").collect().map(_.getLong(0)).toSet
-    assert(after.keySet.subsetOf(centIds),
-      "partition holds a cell the centroid table cannot rank")
+    // the centroid table and the stored rows agree
+    assert(after.keySet.subsetOf(centIds(root)),
+      "a stored row sits in a cell the centroid table cannot rank")
     // full-probe search is STILL exactly brute force — no row lost to a
     // mis-assigned sub-cell, none double-counted
-    val got = IvfIndex.searchIndexed(spark, indexPath,
-        emb.filter(col("vec_id") < 5).select("vec_id", "embedding"),
-        nProbe = 64, topK = 3)
-      .orderBy("q_id", "rank").collect().map(_.toSeq).toSeq
-    assert(got === want)
+    assert(rows(VersionedIvf.search(spark, root, queries,
+      nProbe = 64, topK = 3)) === want)
     // idempotence-ish: a second pass either splits further or no-ops,
     // but never corrupts (row count conserved)
-    IvfIndex.rebalance(spark, indexPath, hotFactor = 2.0)
-    assert(cellCounts().values.sum === total)
-    // SQ8 layouts are refused by name (codes carry no geometry)
-    val sqPath = s"$indexPath-sq"
-    val f2 = new java.io.File(sqPath)
-    if (f2.exists()) { import scala.reflect.io.Directory
-      new Directory(f2).deleteRecursively() }
-    IvfIndex.writeIndexSq(emb, k = 4, sqPath)
-    val e = intercept[IllegalArgumentException] {
-      IvfIndex.rebalance(spark, sqPath)
+    VersionedIvf.rebalance(spark, root, hotFactor = 2.0)
+    assert(cellCounts(root).values.sum === total)
+    // the SQ8 tier is refused by name (codes carry no geometry) by every
+    // verb that assigns or splits from embeddings
+    val sqRoot = fresh("target/ivf-rebalance-spec-sq")
+    VersionedIvf.writeSq(emb, k = 4, sqRoot)
+    val batch = emb.filter(col("vec_id") < 3).select("vec_id", "embedding")
+    for (op <- Seq(
+        () => VersionedIvf.rebalance(spark, sqRoot),
+        () => VersionedIvf.upsert(spark, sqRoot, batch),
+        () => VersionedIvf.upsertBatch(spark, sqRoot, batch, "s", 0L))) {
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("flat") &&
+        e.getMessage.contains("SQ8"), e.getMessage)
     }
-    assert(e.getMessage.contains("flat"))
+    assert(SnapshotStore.currentVersion(spark, sqRoot) === Some(1L))
   }
 
-  test("rebalanceUntil levels a 10x-hot cell one binary split per round " +
-      "cannot, conserving rows and full-probe results") {
-    val dir = "target/ivf-rebalance-until-spec"
-    val f = new java.io.File(dir)
-    if (f.exists()) { import scala.reflect.io.Directory
-      new Directory(f).deleteRecursively(): Unit }
+  /** 10 well-separated 4-dim clusters: cluster 0 holds 640 vectors (≈8×
+    * the mean), clusters 1-9 hold 20 each — a skew one binary split
+    * cannot level (640 → ~320+320, both still >2× the new mean). Ids
+    * interleave the clusters (`i * 10 + j`), so the 10 lowest ids — the
+    * stored index's centroid seeds — are one per cluster. Jitter is
+    * deterministic so the layout reproduces bit-for-bit. */
+  private def skewedClusters: DataFrame = {
     import spark.implicits._
-    // 10 well-separated clusters: cluster 0 holds 640 vectors (≈8× the
-    // mean), clusters 1-9 hold 20 each — a skew one binary split cannot
-    // level (640 → ~320+320, both still >2× the new mean). Jitter is
-    // deterministic so the layout reproduces bit-for-bit.
     val rows = (0 until 10).flatMap { j =>
       val n = if (j == 0) 640 else 20
       (0 until n).map { i =>
         val em = Array.tabulate(4)(d =>
           (j * 10 + (((i * 31 + d * 17) % 101) - 50) / 100.0).toFloat)
-        (j * 1000L + i, em.toSeq)
+        (i * 10L + j, em.toSeq)
       }
     }
-    val emb = rows.toDF("vec_id", "embedding")
+    rows.toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>")
         .as("embedding"))
-    val cents = (0 until 10).map(j =>
-      (j.toLong, Array.tabulate(4)(_ => j * 10000000L))).toArray
-    IvfIndex.writeIndexWith(emb, cents, dir)
-    def cellCounts() = spark.read.parquet(s"$dir/index")
-      .groupBy(col("cent_id").cast("long").as("cent_id"))
-      .agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val total = cellCounts().values.sum
-    val want = IvfIndex.searchIndexed(spark, dir,
-        emb.filter(col("vec_id") < 3).select("vec_id", "embedding"),
-        nProbe = 10, topK = 3)
-      .orderBy("q_id", "rank").collect().map(_.toSeq).toSeq
+  }
+
+  test("rebalanceUntil levels a 10x-hot cell one binary split per round " +
+      "cannot, conserving rows and full-probe results") {
+    val root = fresh("target/ivf-rebalance-until-spec")
+    val emb = skewedClusters
+    VersionedIvf.write(emb, k = 10, root)
+    val before = cellCounts(root)
+    assert(before.values.max === 640L, s"fixture cells moved: $before")
+    val total = before.values.sum
+    val queries = emb.filter(col("vec_id") < 3)
+    val want = rows(VersionedIvf.search(spark, root, queries,
+      nProbe = 10, topK = 3))
     def isLeveled(c: Map[Long, Long]) = {
       val mean = c.values.sum.toDouble / c.size
       c.values.max <= 2.0 * mean
     }
-    val totalSplits = IvfIndex.rebalanceUntil(spark, dir,
+    val totalSplits = VersionedIvf.rebalanceUntil(spark, root,
       hotFactor = 2.0, maxRounds = 8)
     // one split of the 640-cell cannot reach ≤2× mean, so convergence
     // genuinely needed >1 round
     assert(totalSplits >= 2, s"expected a multi-round split cascade, " +
       s"got $totalSplits total splits")
-    val after = cellCounts()
+    val after = cellCounts(root)
     assert(after.values.sum === total, "rebalanceUntil lost/duped rows")
     assert(isLeveled(after),
       s"still a >2x-mean cell after rebalanceUntil: $after")
-    // every published centroid backs a partition and vice versa — the
-    // survivors-before-centroid-write rule means no empty ranking slots
-    val centIds = spark.read.parquet(s"$dir/centroids")
-      .select("cent_id").collect().map(_.getLong(0)).toSet
-    assert(after.keySet === centIds,
-      "centroid sidecar and partition layout diverged")
-    val got = IvfIndex.searchIndexed(spark, dir,
-        emb.filter(col("vec_id") < 3).select("vec_id", "embedding"),
-        nProbe = 64, topK = 3)
-      .orderBy("q_id", "rank").collect().map(_.toSeq).toSeq
-    assert(got === want)
+    // every published centroid backs stored rows and vice versa — the
+    // survivors-before-publish rule means no empty ranking slots
+    assert(after.keySet === centIds(root),
+      "centroid table and stored cells diverged")
+    assert(rows(VersionedIvf.search(spark, root, queries,
+      nProbe = 64, topK = 3)) === want)
   }
 
   test("rebalanceUntil's counts carry ≡ per-round fresh counts: " +
       "identical centroids and identical row placement") {
-    import spark.implicits._
-    // same deterministic skewed fixture written to two roots
-    val rows = (0 until 10).flatMap { j =>
-      val n = if (j == 0) 640 else 20
-      (0 until n).map { i =>
-        val em = Array.tabulate(4)(d =>
-          (j * 10 + (((i * 31 + d * 17) % 101) - 50) / 100.0).toFloat)
-        (j * 1000L + i, em.toSeq)
-      }
-    }
-    val emb = rows.toDF("vec_id", "embedding")
-      .select(col("vec_id"), col("embedding").cast("array<float>")
-        .as("embedding"))
-    val cents = (0 until 10).map(j =>
-      (j.toLong, Array.tabulate(4)(_ => j * 10000000L))).toArray
-    val dirs = Seq("target/ivf-carry-a-spec", "target/ivf-carry-b-spec")
-    dirs.foreach { dir =>
-      val f = new java.io.File(dir)
-      if (f.exists()) { import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively(): Unit }
-      IvfIndex.writeIndexWith(emb, cents, dir)
-    }
+    // the same deterministic skewed fixture written to two roots
+    val emb = skewedClusters
+    val roots = Seq("target/ivf-carry-a-spec", "target/ivf-carry-b-spec")
+      .map(fresh)
+    roots.foreach(VersionedIvf.write(emb, k = 10, _))
     // A: the loop (counts carried from each round's split plan)
-    val splitsA = IvfIndex.rebalanceUntil(spark, dirs(0),
+    val splitsA = VersionedIvf.rebalanceUntil(spark, roots(0),
       hotFactor = 2.0, maxRounds = 8)
     // B: manual per-round calls — every round re-scans for its counts
     var splitsB = 0
     var last = -1
     var rounds = 0
     while (rounds < 8 && last != 0) {
-      last = IvfIndex.rebalance(spark, dirs(1), hotFactor = 2.0)
+      last = VersionedIvf.rebalance(spark, roots(1), hotFactor = 2.0)
       splitsB += last
       rounds += 1
     }
-    assert(splitsA === splitsB)
-    def state(dir: String) = (
-      spark.read.parquet(s"$dir/centroids")
-        .collect().map(r => (r.getLong(0), r.getSeq[Long](1)))
-        .sortBy(_._1).toSeq,
-      spark.read.parquet(s"$dir/index")
-        .select(col("vec_id").cast("long"), col("cent_id").cast("long"))
+    assert(splitsA >= 2 && splitsA === splitsB)
+    def state(root: String) = (
+      VersionedIvf.storedCentroids(spark, root)
+        .map { case (i, q) => (i, q.toSeq) }.toSeq,
+      SnapshotStore.read(spark, root).select("doc_id", "cent_id")
         .collect().map(r => (r.getLong(0), r.getLong(1)))
         .sortBy(_._1).toSeq)
-    assert(state(dirs(0)) === state(dirs(1)),
+    assert(state(roots(0)) === state(roots(1)),
       "carried counts produced a different layout than fresh counts")
   }
 
   test("sub-centroid means round like Math.round — a negative .5 mean " +
       "rounds UP (toward +inf), not HALF_UP away from zero") {
     import spark.implicits._
-    val dir = "target/ivf-neg-half-spec"
-    val f = new java.io.File(dir)
-    if (f.exists()) { import scala.reflect.io.Directory
-      new Directory(f).deleteRecursively(): Unit }
+    val root = fresh("target/ivf-neg-half-spec")
     // dim-1 fixture engineered so the hot cell's second sub-centroid is
     // the mean of quantized values {-2, -9} = -5.5: Math.round(-5.5) =
-    // -5 (floor(x + 0.5)); BigDecimal HALF_UP would publish -6. Seeds
-    // are the two lowest vec_ids (qe -1 and -2); -9 is nearer seed -2.
+    // -5 (floor(x + 0.5)); BigDecimal HALF_UP would publish -6. The two
+    // lowest ids seed the stored centroids (qe 1e8 and -1); the hot
+    // cell's split seeds are its two lowest ids (qe -1 and -2); -9 is
+    // nearer seed -2.
     val emb = Seq(
-      (1L, Seq(-1e-6f)), (2L, Seq(-2e-6f)), (3L, Seq(-9e-6f)),
-      (10L, Seq(100.0f))
+      (0L, Seq(100.0f)), (1L, Seq(-1e-6f)), (2L, Seq(-2e-6f)),
+      (3L, Seq(-9e-6f))
     ).toDF("vec_id", "embedding")
-    val cents = Array((0L, Array(-1L)), (1L, Array(100000000L)))
-    IvfIndex.writeIndexWith(emb, cents, dir)
-    val split = IvfIndex.rebalance(spark, dir, hotFactor = 1.0)
-    assert(split === 1, "fixture cell 0 (3 rows vs mean 2) must split")
-    val got = spark.read.parquet(s"$dir/centroids")
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1).head)).toMap
+    VersionedIvf.write(emb, k = 2, root)
+    val split = VersionedIvf.rebalance(spark, root, hotFactor = 1.0)
+    assert(split === 1, "fixture cell 1 (3 rows vs mean 2) must split")
+    val got = VersionedIvf.storedCentroids(spark, root)
+      .map { case (i, q) => (i, q.head) }.toMap
     assert(got(2L) === -5L,
       s"negative .5 sub-centroid mean must round to -5 (Math.round " +
         s"semantics), got ${got(2L)}")
@@ -472,24 +405,21 @@ class IvfIndexSpec extends SparkTestBase {
   }
 
   test("searchIndexed prunes the index scan to the probed cells") {
-    // (depends on the index written by the previous test; rewrite if absent)
-    if (!new java.io.File(s"$indexPath/index").exists()) {
-      IvfIndex.writeIndex(Tables.embeddings(spark, sf0001), 16, indexPath)
+    val root = fresh("target/ivf-prune-spec")
+    val emb = Tables.embeddings(spark, sf0001)
+    VersionedIvf.write(emb, k = 16, root)
+    val cents = VersionedIvf.storedCentroids(spark, root)
+    for ((qs, nProbe) <- Seq((col("vec_id") < 1, 1), (col("vec_id") < 5, 2))) {
+      val queries = emb.filter(qs).select("vec_id", "embedding")
+      val cells = IvfIndex.cellRanksWith(queries, cents)
+        .filter(col("rk") <= nProbe).select("cent_id").collect()
+        .map(_.getLong(0)).toSet
+      val stored = VersionedIvf.search(spark, root, queries, nProbe, 3)
+      val (opened, total) = ProbeFiles.check(spark, root, stored, cells)
+      info(s"${cells.size} probed cells opened $opened of $total files")
+      if (nProbe == 1)
+        assert(opened < total, "a one-cell probe opened every file")
     }
-    val stored = IvfIndex.searchIndexed(spark, indexPath,
-      Tables.embeddings(spark, sf0001)
-        .filter(col("vec_id") < 5).select("vec_id", "embedding"),
-      nProbe = 2, topK = 3)
-    val plan = stored.queryExecution.executedPlan.toString
-    // the index scan must carry a non-empty PartitionFilters on cent_id —
-    // partition pruning, not a post-scan filter over the whole index
-    val scanLine = plan.linesIterator
-      .find(l => l.contains("ivf-index-spec/index") ||
-        (l.contains("PartitionFilters") && l.contains("cent_id")))
-    assert(scanLine.isDefined, s"no pruned scan of the stored index:\n$plan")
-    assert(plan.contains("PartitionFilters: [cent_id#") ||
-      plan.matches("(?s).*PartitionFilters: \\[.*cent_id.*"),
-      s"cent_id IN (...) did not become a partition filter:\n$plan")
   }
 
   test("filtered search returns only matching corpus rows, at full topK") {
@@ -531,14 +461,14 @@ class IvfIndexSpec extends SparkTestBase {
   test("wrong-dim vectors against a stored index raise a named error") {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sf0001)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_dim")
-      .toString
-    IvfIndex.writeIndex(emb, k = 16, path)
+    val root = java.nio.file.Files.createTempDirectory("graft_ivf_dim")
+      .toString + "/index"
+    VersionedIvf.write(emb, k = 16, root)
     val short = Seq((900001L, Seq.fill(8)(0.5))).toDF("vec_id", "embedding")
     for (op <- Seq(
-        () => IvfIndex.appendToIndex(spark, path, short),
-        () => IvfIndex.upsertIndexed(spark, path, short),
-        () => IvfIndex.searchIndexed(spark, path, short, nProbe = 2,
+        () => VersionedIvf.upsert(spark, root, short): Unit,
+        () => VersionedIvf.upsertBatch(spark, root, short, "s", 0L): Unit,
+        () => VersionedIvf.search(spark, root, short, nProbe = 2,
           topK = 3).collect(): Unit)) {
       val e = intercept[IllegalArgumentException](op())
       assert(e.getMessage.contains("dim 8..8") &&

@@ -17,6 +17,7 @@ import graft.operators.{BfsHops, PageRank, SnapshotStore, VersionedIvf,
   * doc_id verdicts computed from what the driver already holds):
   *  - VersionedIvf.search, narrow probe:   7 → 4
   *  - VersionedIvf.search, full probe:     5 → 4
+  *  - VersionedIvf.searchSq, narrow or full probe: 4 (the search shape)
   *  - VersionedIvfAdc.search:             11 → 8
   *  - SnapshotStore.readDocs, inline meta: 7 → 1
   *  - SnapshotStore.readDocs, sidecar:     7 → 3
@@ -81,6 +82,17 @@ class JobBudgetSpec extends SparkTestBase {
     info(s"narrow probe: $narrow jobs, full probe: $full jobs")
     assert(narrow <= 4, s"narrow-probe search launched $narrow jobs")
     assert(full <= 4, s"full-probe search launched $full jobs")
+  }
+
+  test("VersionedIvf.searchSq stays within the search budget") {
+    val root = "target/budget-vivf-sq"
+    cleanup(root)
+    VersionedIvf.writeSq(corpus, Cells, root)
+    val narrow = warmJobs(VersionedIvf.searchSq(spark, root, query, 2, 5))
+    val full = warmJobs(VersionedIvf.searchSq(spark, root, query, Cells, 5))
+    info(s"SQ8 narrow probe: $narrow jobs, full probe: $full jobs")
+    assert(narrow <= 4, s"narrow-probe SQ8 search launched $narrow jobs")
+    assert(full <= 4, s"full-probe SQ8 search launched $full jobs")
   }
 
   test("VersionedIvfAdc.search stays within budget") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.PqIndex
+import graft.operators.{PqIndex, VersionedIvfAdc}
 
 class PqIndexSpec extends SparkTestBase {
   import spark.implicits._
@@ -54,70 +54,61 @@ class PqIndexSpec extends SparkTestBase {
     assert(out.count() > 0)
   }
 
-  test("stored index search equals in-memory search and never reads the corpus") {
+  /** A VersionedIvfAdc index of the sf0.001 corpus (dim 64, m 8, k 16,
+    * 16 coarse cells) and its first 5 vectors as LITERAL query rows:
+    * the search plan can then touch only the stored index. */
+  private def storedIndex(tag: String) = {
     val emb = Tables.embeddings(spark, sf0001)
-    val path = java.nio.file.Files.createTempDirectory("graft_pq").toString
-    PqIndex.writeIndex(emb, path)
-
-    // literal query rows: the plan must then touch ONLY the stored index
+    val root = java.nio.file.Files.createTempDirectory(tag).toString +
+      "/index"
+    VersionedIvfAdc.write(emb, root)
     val qRows = emb.filter(col("vec_id") < 5)
       .select("vec_id", "embedding").collect().toSeq
     val queries = spark.createDataFrame(
       spark.sparkContext.parallelize(qRows),
       emb.select("vec_id", "embedding").schema)
+    (emb, root, queries)
+  }
 
-    val stored = PqIndex.searchIndexed(spark, path, queries)
+  private def sorted(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toSeq).sortBy(_.toString).toSeq
+
+  test("stored index search equals in-memory search and never reads the corpus") {
+    val (emb, root, queries) = storedIndex("graft_pq")
+    // a full coarse probe scores every stored code: exhaustive PQ
+    val stored = VersionedIvfAdc.search(spark, root, queries,
+      nProbe = 16, topK = 3)
     val live = PqIndex.search(emb, col("vec_id") < 5)
-    assert(stored.collect().map(_.toSeq).sortBy(_.toString).toSeq
-      === live.collect().map(_.toSeq).sortBy(_.toString).toSeq)
+    assert(sorted(stored) === sorted(live))
     val plan = stored.queryExecution.executedPlan.toString
     assert(!plan.contains("embeddings.parquet"),
       s"stored-index search scanned the corpus:\n$plan")
   }
 
   test("stored IVFADC equals the in-memory cascade, partition-pruned, corpus unread") {
-    val emb = Tables.embeddings(spark, sf0001)
-    val root = java.nio.file.Files.createTempDirectory("graft_ivfadc").toString
-    graft.operators.IvfIndex.writeIndex(emb, k = 16, s"$root/ivf")
-    PqIndex.writeIndex(emb, s"$root/pq")
-
-    // literal query rows: the plan must then touch ONLY the two stores
-    val qRows = emb.filter(col("vec_id") < 5)
-      .select("vec_id", "embedding").collect().toSeq
-    val queries = spark.createDataFrame(
-      spark.sparkContext.parallelize(qRows),
-      emb.select("vec_id", "embedding").schema)
-
-    val stored = PqIndex.searchIvfIndexed(spark, s"$root/ivf", s"$root/pq",
-      queries)
+    val (emb, root, queries) = storedIndex("graft_ivfadc")
+    val stored = VersionedIvfAdc.search(spark, root, queries,
+      nProbe = 2, topK = 3)
     val live = PqIndex.searchIvf(emb, col("vec_id") < 5)
-    assert(stored.collect().map(_.toSeq).sortBy(_.toString).toSeq
-      === live.collect().map(_.toSeq).sortBy(_.toString).toSeq)
-    stored.collect() // AQE-finalize before reading the plan
+    assert(sorted(stored) === sorted(live))
+    // AQE-finalized by the collect above before reading the plan
     val plan = stored.queryExecution.executedPlan.toString
     assert(!plan.contains("embeddings.parquet"),
       s"stored IVFADC scanned the corpus:\n$plan")
-    // the IVF store is read under partition pruning on the probed cells
-    val pruned = "PartitionFilters: \\[[^\\]]*cent_id".r
-    assert(pruned.findFirstIn(plan).isDefined,
-      s"IVF index scan is not partition-pruned on cent_id:\n$plan")
-  }
-
-  test("mismatched PQ geometry against a stored index raises a named error") {
-    val emb = Tables.embeddings(spark, sf0001)
-    val path = java.nio.file.Files.createTempDirectory("graft_pq_geo")
-      .toString
-    PqIndex.writeIndex(emb, path) // dim=64, m=8
-    assert(PqIndex.storedGeometry(spark, path) === Some((64, 8, 16)))
-    val queries = emb.filter(col("vec_id") < 3)
-      .select("vec_id", "embedding")
-    val e = intercept[IllegalArgumentException] {
-      PqIndex.searchIndexed(spark, path, queries, dim = 64, m = 16)
+    // the narrow probe opens only the probed cells' files; one query on
+    // one cell opens a strict subset of the index
+    val coarse = VersionedIvfAdc.storedCoarse(spark, root)
+    for ((q, nProbe) <- Seq((queries, 2),
+        (queries.filter(col("vec_id") === 0), 1))) {
+      val cells = graft.operators.IvfIndex.cellRanksWith(q, coarse)
+        .filter(col("rk") <= nProbe).select("cent_id").collect()
+        .map(_.getLong(0)).toSet
+      val probe = VersionedIvfAdc.search(spark, root, q, nProbe, 3)
+      val (opened, total) = ProbeFiles.check(spark, root, probe, cells)
+      info(s"${cells.size} probed cells opened $opened of $total files")
+      if (nProbe == 1)
+        assert(opened < total, "a one-cell probe opened every file")
     }
-    assert(e.getMessage.contains("m=8") && e.getMessage.contains("m=16"),
-      e.getMessage)
-    // the matching geometry still searches
-    assert(PqIndex.searchIndexed(spark, path, queries).count() > 0)
   }
 
   test("withDecoded: broadcast-join decode reconstructs exactly what the " +

@@ -2,11 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{IvfIndex, PqIndex, SnapshotStore, VersionedIvfAdc}
+import graft.operators.{PqIndex, SnapshotStore, VersionedIvfAdc}
 
-/** The SnapshotStore-routed IVFADC (round-11 verdict item 7): the
-  * compressed cascade's FOUR bare artifacts (IVF cells, IVF centroid
-  * sidecar, PQ codes, PQ codebook) collapse into one manifest — rows =
+/** The stored IVFADC (round-11 verdict item 7): the compressed cascade's
+  * four parts (IVF cells, IVF centroids, PQ codes, PQ codebook) live in
+  * one manifest — rows =
   * (doc_id, cent_id, codes[m]), both quantizers as manifest lines — so
   * maintenance is atomic, OCC-serialized, and time-travelable. */
 class VersionedIvfAdcSpec extends SparkTestBase {
@@ -63,38 +63,34 @@ class VersionedIvfAdcSpec extends SparkTestBase {
       "bare layout; upsert of new ids ≡ a fresh full build; history " +
       "time-travels") {
     val root = "target/vadc-basic"
-    val bare = "target/vadc-bare"
-    cleanup(root); cleanup(bare)
+    cleanup(root)
     val emb = corpus
     val queries = emb.filter(col("vec_id") < 5)
     val base = emb.filter(col("vec_id") < 50)
+    // the in-memory cascade over the same content: the quantizer seeds
+    // (first K and first Cells ids) are in every content state below
+    def cascade(content: org.apache.spark.sql.DataFrame, nProbe: Int) =
+      results(PqIndex.searchIvf(content, col("vec_id") < 5, dim = Dim,
+        m = M, k = K, nCells = Cells, nProbe = nProbe, topK = 3))
 
     VersionedIvfAdc.write(base, root, dim = Dim, m = M, k = K,
       nCells = Cells)
-    IvfIndex.writeIndex(base, k = Cells, s"$bare/ivf")
-    PqIndex.writeIndex(base, s"$bare/pq", dim = Dim, m = M, k = K)
     val v1 = SnapshotStore.currentVersion(spark, root).get
     val r1 = results(VersionedIvfAdc.search(spark, root, queries,
       nProbe = 2, topK = 3))
-    assert(r1 === results(PqIndex.searchIvfIndexed(spark, s"$bare/ivf",
-      s"$bare/pq", queries, dim = Dim, m = M, nProbe = 2, topK = 3)))
+    assert(r1 === cascade(base, 2))
     // full probe too (the one-snapshot-read path)
     assert(results(VersionedIvfAdc.search(spark, root, queries,
-      nProbe = Cells, topK = 3)) ===
-      results(PqIndex.searchIvfIndexed(spark, s"$bare/ivf", s"$bare/pq",
-        queries, dim = Dim, m = M, nProbe = Cells, topK = 3)))
+      nProbe = Cells, topK = 3)) === cascade(base, Cells))
 
-    // delete: candidates vanish atomically (the bare analog deletes
-    // from the IVF candidate tier)
+    // delete: candidates vanish atomically
     val sp = spark
     import sp.implicits._
     VersionedIvfAdc.delete(spark, root, Seq(40L, 41L).toDF("vec_id"))
-    IvfIndex.deleteFromIndex(spark, s"$bare/ivf",
-      Seq(40L, 41L).toDF("vec_id"))
     val r2 = results(VersionedIvfAdc.search(spark, root, queries,
       nProbe = Cells, topK = 3))
-    assert(r2 === results(PqIndex.searchIvfIndexed(spark, s"$bare/ivf",
-      s"$bare/pq", queries, dim = Dim, m = M, nProbe = Cells, topK = 3)))
+    assert(r2 === cascade(base.filter(!col("vec_id").isin(40L, 41L)),
+      Cells))
 
     // upsert restores the deleted ids and appends 50..59; because the
     // quantizer seeds (first K ids) are in `base`, the maintained index

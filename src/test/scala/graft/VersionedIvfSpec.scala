@@ -1,15 +1,16 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{IvfIndex, SnapshotStore, VersionedIvf}
 
-/** The SnapshotStore-routed IVF layout (round-10 verdict item 4): every
-  * maintenance verb is ONE atomic manifest publish carrying BOTH the
-  * vector rows and the `#ivfcent` centroid geometry, so the bare
-  * layout's documented crash window (centroid sidecar and cell
-  * partitions written separately) cannot exist, and the whole index
-  * time-travels. */
+/** The stored IVF index (round-10 verdict item 4): every maintenance
+  * verb is ONE atomic manifest publish carrying BOTH the vector rows and
+  * the `#ivfcent` centroid geometry, so no crash can tear centroids from
+  * cells, and the whole index time-travels. Test names that say "bare"
+  * keep the stored-layout verbs they were first compared against; the
+  * reference is now the in-memory search on the stored centroids. */
 class VersionedIvfSpec extends SparkTestBase {
 
   private def cleanup(path: String): Unit = {
@@ -36,53 +37,53 @@ class VersionedIvfSpec extends SparkTestBase {
     df.orderBy("q_id", "rank").collect()
       .map(r => s"${r.get(0)}|${r.get(1)}|${r.get(2)}|${r.get(3)}").toSeq
 
+  /** The in-memory search of `corpus` against `root`'s stored centroids
+    * — what the stored index must return for the same content. */
+  private def reference(root: String, corpus: DataFrame,
+      nProbe: Int): Seq[String] =
+    results(IvfIndex.searchWith(corpus, col("vec_id") < 5,
+      VersionedIvf.storedCentroids(spark, root), nProbe, topK = 3))
+
   test("versioned index ≡ bare searchIndexed; delete + rebalance stay " +
       "exact; history time-travels") {
     val root = "target/vivf-basic"
-    val bare = "target/vivf-bare"
-    cleanup(root); cleanup(bare)
+    cleanup(root)
     val emb = corpus
     val queries = emb.filter(col("vec_id") < 5)
 
     VersionedIvf.write(emb, k = 4, root)
-    IvfIndex.writeIndex(emb, k = 4, bare)
-    // full probe: versioned search ≡ bare stored search, both ≡ truth
+    // full probe: versioned search ≡ in-memory search on the stored
+    // centroids, both ≡ truth
     val v1 = results(VersionedIvf.search(spark, root, queries,
       nProbe = 4, topK = 3))
-    assert(v1 === results(IvfIndex.searchIndexed(spark, bare, queries,
-      nProbe = 4, topK = 3)))
+    assert(v1 === reference(root, emb, 4))
     // narrow probe too (exercises the per-cell readWhere path)
     assert(results(VersionedIvf.search(spark, root, queries,
-      nProbe = 1, topK = 3)) ===
-      results(IvfIndex.searchIndexed(spark, bare, queries,
-        nProbe = 1, topK = 3)))
+      nProbe = 1, topK = 3)) === reference(root, emb, 1))
 
     // delete: rows vanish atomically, geometry carried
     val sp = spark
     import sp.implicits._
     VersionedIvf.delete(spark, root, Seq(50L, 51L).toDF("vec_id"))
-    IvfIndex.deleteFromIndex(spark, bare, Seq(50L, 51L).toDF("vec_id"))
+    val survivors = emb.filter(!col("vec_id").isin(50L, 51L))
     val v2 = results(VersionedIvf.search(spark, root, queries,
       nProbe = 4, topK = 3))
-    assert(v2 === results(IvfIndex.searchIndexed(spark, bare, queries,
-      nProbe = 4, topK = 3)))
+    assert(v2 === reference(root, survivors, 4))
+    assert(results(VersionedIvf.search(spark, root, queries,
+      nProbe = 1, topK = 3)) === reference(root, survivors, 1))
 
-    // rebalance: same deterministic split plan as the bare layout →
-    // same geometry, same full-probe results
-    val splitV = VersionedIvf.rebalance(spark, root, hotFactor = 1.0)
-    val splitB = IvfIndex.rebalance(spark, bare, hotFactor = 1.0)
-    assert(splitV === splitB)
-    assert(splitV >= 1, "corpus not skewed enough to split — spec inert")
-    val centsV = VersionedIvf.storedCentroids(spark, root)
-      .map { case (i, q) => (i, q.toSeq) }.toSeq.sortBy(_._1)
-    val centsB = spark.read.parquet(s"$bare/centroids").collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq.sortBy(_._1)
-    assert(centsV === centsB)
-    val nCells = centsV.size
+    // rebalance: each split adds one centroid, every stored row sits in
+    // a published cell, and full-probe results are unchanged
+    val split = VersionedIvf.rebalance(spark, root, hotFactor = 1.0)
+    assert(split >= 1, "corpus not skewed enough to split — spec inert")
+    val cents = VersionedIvf.storedCentroids(spark, root).map(_._1).toSet
+    assert(cents.size === 4 + split)
+    assert(SnapshotStore.read(spark, root).select("cent_id").distinct()
+      .collect().map(_.getLong(0)).toSet === cents)
+    val nCells = cents.size
     val v3 = results(VersionedIvf.search(spark, root, queries,
       nProbe = nCells, topK = 3))
-    assert(v3 === results(IvfIndex.searchIndexed(spark, bare, queries,
-      nProbe = nCells, topK = 3)))
+    assert(v3 === reference(root, survivors, nCells))
     // rebalance moves rows between cells, never in/out: full-probe
     // results unchanged from the post-delete state
     assert(v3 === v2)
@@ -139,8 +140,7 @@ class VersionedIvfSpec extends SparkTestBase {
       "ids replaced, new ids assigned to nearest stored cell, one " +
       "atomic time-travelable version") {
     val root = "target/vivf-upsert"
-    val bare = "target/vivf-upsert-bare"
-    cleanup(root); cleanup(bare)
+    cleanup(root)
     val emb = corpus
     val queries = emb.filter(col("vec_id") < 5)
     val base = emb.filter(col("vec_id") < 45)
@@ -154,35 +154,36 @@ class VersionedIvfSpec extends SparkTestBase {
       }.toDF("vec_id", "embedding"))
 
     VersionedIvf.write(base, k = 4, root)
-    IvfIndex.writeIndex(base, k = 4, bare)
     val centsBefore = VersionedIvf.storedCentroids(spark, root)
     val v1 = SnapshotStore.currentVersion(spark, root).get
     val preUpsert = results(VersionedIvf.search(spark, root, queries,
       nProbe = 4, topK = 3))
 
     VersionedIvf.upsert(spark, root, batch)
-    IvfIndex.upsertIndexed(spark, bare, batch)
 
     // geometry carried verbatim; exactly one new version published
     val centsAfter = VersionedIvf.storedCentroids(spark, root)
     assert(centsAfter.map { case (i, q) => (i, q.toSeq) }.toSeq ===
       centsBefore.map { case (i, q) => (i, q.toSeq) }.toSeq)
     assert(SnapshotStore.currentVersion(spark, root).get === v1 + 1)
-    // content ≡ the bare layout's keyed upsert, full AND narrow probe
+    // content ≡ the upserted corpus searched in memory against the
+    // stored (unmoved) centroids, full AND narrow probe
+    val current = emb.filter(col("vec_id") < 40).unionByName(batch)
     assert(results(VersionedIvf.search(spark, root, queries,
-      nProbe = 4, topK = 3)) ===
-      results(IvfIndex.searchIndexed(spark, bare, queries,
-        nProbe = 4, topK = 3)))
+      nProbe = 4, topK = 3)) === reference(root, current, 4))
     assert(results(VersionedIvf.search(spark, root, queries,
-      nProbe = 1, topK = 3)) ===
-      results(IvfIndex.searchIndexed(spark, bare, queries,
-        nProbe = 1, topK = 3)))
+      nProbe = 1, topK = 3)) === reference(root, current, 1))
     // replaced ids exist exactly once, with the NEW embedding's cell
     val rows = SnapshotStore.read(spark, root)
       .filter(col("doc_id") >= 40 && col("doc_id") < 45)
     assert(rows.count() === 5L)
     assert(rows.groupBy("doc_id").count()
       .filter(col("count") > 1).count() === 0L)
+    assert(rows.select("doc_id", "cent_id").orderBy("doc_id").collect()
+      .map(_.toSeq).toSeq === IvfIndex.cellAssign(
+        batch.filter(col("vec_id") < 45), centsAfter)
+      .select("vec_id", "cent_id").orderBy("vec_id").collect()
+      .map(_.toSeq).toSeq)
     // the pre-upsert version still serves the pre-upsert index
     assert(results(VersionedIvf.search(spark, root, queries,
       nProbe = 4, topK = 3, version = v1)) === preUpsert)
