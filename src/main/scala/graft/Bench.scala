@@ -258,6 +258,13 @@ object Bench {
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    // Each query's FIRST attempt, whatever the re-time rules kept in
+    // `queries`: a parent-vs-change comparison of single queries can
+    // then compare first passes with first passes. Written before
+    // `queries`, so parseQueryTimes (last match wins) still reads the
+    // kept times from an artifact.
+    val firstPassJson = results.map { case (k, _) =>
+      s"\"" + k + "\":" + attempts(k).head }.mkString("{", ",", "}")
     // A run with failures must not look FASTER than a clean one: failures
     // are counted explicitly and the total is only comparable when
     // failed == 0 (the driver's gate treats a failed run as failed, not
@@ -310,7 +317,7 @@ object Bench {
     // a future reader can adjudicate "regression vs loaded host" from
     // the JSON alone instead of cross-referencing sbt wall clocks
     val loadJson = s""""load_1m_start":${num(loadStart, 2)},"load_1m_end":${num(loadEnd, 2)},"anchor_total":${num(anchorTotal, 3)},"rerun_full":$rerunFull,"total_firstpass":${num(totalFirstpass, 3)}"""
-    val big = s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"n_queries":${results.size},"total_r04suite":$totalR04,"failed_r04suite":$failedR04,$loadJson,"retimed":$retimed,"queries":$qs,"sf":"$sfDir"}"""
+    val big = s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"n_queries":${results.size},"total_r04suite":$totalR04,"failed_r04suite":$failedR04,$loadJson,"retimed":$retimed,"first_pass":$firstPassJson,"queries":$qs,"sf":"$sfDir"}"""
     println(big)
     // Artifact durability (BENCH_r05.json lost its totals to a tail
     // capture that truncated from the FRONT of this line): repeat the

@@ -4,7 +4,12 @@ import scala.collection.mutable
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
+  SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{ColumnBridge, PlanBridge}
 
 /** Atomic, versioned publication for a parquet-backed index — the
   * transactional edge the plain directory layouts
@@ -910,13 +915,15 @@ object SnapshotStore {
     * sequentially in the forked test JVM. */
   @volatile private[graft] var entryThreshold: Int = 16384
 
-  /** Distinct-doc_id count above which the keyed upsert SKIPS key
-    * pruning ([[docIdCandidates]]) and treats every touched-bucket file
-    * as a candidate. The pruning path broadcasts the sorted id set (and
-    * its bloom probe positions) as ONE aggregate row; past this many
-    * keys that row is an OOM/broadcast risk and the prune admits nearly
-    * everything anyway. private[graft] var so the spec can force the
-    * fallback on small fixtures. */
+  /** Distinct-doc_id count above which the keyed upsert keeps its ids a
+    * frame instead of collecting them (its bounded collect stops at one
+    * past this), SKIPS key pruning ([[docIdCandidates]]) and treats
+    * every touched-bucket file as a candidate. The pruning path holds
+    * the sorted id set on the driver (and, on a sidecar store,
+    * broadcasts it with its bloom probe positions as ONE row); past
+    * this many keys that is an OOM/broadcast risk and the prune admits
+    * nearly everything anyway. private[graft] var so the spec can force
+    * the fallback on small fixtures. */
   @volatile private[graft] var docIdPruneCap: Int = 200000
 
   private def entryFileLine(rel: String) = s"#entryfile\t$rel"
@@ -2109,9 +2116,9 @@ object SnapshotStore {
     // within the target buckets, doc_id stats/blooms (when declared)
     // drop the files that provably hold none of the ids — a point
     // lookup then opens ~1 file, not every file of its bucket
-    val (candidates, _) =
+    val candidates =
       docIdCandidates(spark, root, manifestMeta(spark, root, v), entries,
-        Left(docIds))
+        docIds)
     val base =
       if (candidates.nonEmpty) assemble(spark, root, v, candidates)
       else read(spark, root, v).limit(0) // schema-only empty edge
@@ -2215,12 +2222,56 @@ object SnapshotStore {
         s"no version published at or before epoch-millis $tsMillis at " +
           s"$root — too early, or that history was vacuumed")))
 
+  /** The layout a delta writer ([[upsert]], [[deleteWhere]],
+    * [[deletePoint]]) publishes its merged rows with; they are never
+    * written by upstream task boundaries, where every task opens a file
+    * in every bucket it holds rows of:
+    *  - rows whose frame ENDS in a range repartition (the stored IVF
+    *    index's cent_id clustering, [[VersionedIvf]]) keep it, and the
+    *    carried rows they merge with get the same clustering, so every
+    *    written file stays a narrow band of the range column. The input's
+    *    own exchange is peeled off (the first element is the rows below
+    *    it), so the fresh rows shuffle once, with the carried ones;
+    *  - anything else is hash-distributed on `bucket`: one file per
+    *    touched bucket, as [[commit]]'s `distributeByBucket` writes.
+    * Returns (rows to merge, layout of the merged rows). */
+  private def deltaLayout(rows: DataFrame)
+      : (DataFrame, DataFrame => DataFrame) =
+    PlanBridge.analyzed(rows) match {
+      case RepartitionByExpression(exprs, child, n, _)
+          if exprs.nonEmpty && exprs.forall(_.isInstanceOf[SortOrder]) =>
+        // by name: the merged frame's attributes are not the input's
+        val order = exprs.map(e => ColumnBridge.column(e.transform {
+          case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
+        }))
+        (PlanBridge.ofRows(rows.sparkSession, child),
+          df => n.fold(df.repartitionByRange(order: _*))(
+            df.repartitionByRange(_, order: _*)))
+      case _ => (rows, byBucket)
+    }
+
+  private def byBucket(df: DataFrame): DataFrame =
+    df.repartition(col("bucket"))
+
   /** Keyed upsert as a new version: every doc_id in `reingestedDocs` has
     * its old vectors dropped and `newRows`' replacements added, touching
     * only the buckets those documents hash to; all other buckets' files
     * carry forward into the new manifest unrewritten. A re-ingest that
     * yields zero rows for a document deletes its vectors ("upsert equals
-    * fresh rebuild" holds in the empty edge). Returns the new version. */
+    * fresh rebuild" holds in the empty edge). Returns the new version.
+    *
+    * Cost follows the delta. The distinct upserted ids are collected
+    * once, bounded by [[docIdPruneCap]], and everything derived from
+    * them is computed on the driver: the touched buckets, the doc_id
+    * verdicts that carry provably-clean files, and the keys of the
+    * anti-join (a local relation). The merged rows are written in the
+    * [[deltaLayout]]: one file per touched bucket on a store clustered
+    * only by key, the input's range bands (a stored IVF index's cent_id
+    * clustering) otherwise. Jobs per call on a key-only, inline-metadata
+    * store: 5 (the id collect's map and result stages, the key
+    * broadcast, the bucket shuffle's map stage and the write). An id
+    * set over the cap stays a checkpointed frame and rewrites the
+    * touched buckets whole. */
   def upsert(spark: SparkSession, newRows: DataFrame,
       reingestedDocs: DataFrame, root: String, buckets: Int,
       meta: Seq[String] = Nil,
@@ -2240,7 +2291,8 @@ object SnapshotStore {
             s"upsert passed buckets = $buckets — a mismatched modulus " +
             "would corrupt the keyed delete; pass the stored count")
     }
-    val fresh = withBucket(newRows, buckets)
+    val (src, layout) = deltaLayout(newRows)
+    val fresh = withBucket(src, buckets)
     // Retype guard — at WRITE time, because the union below would coerce
     // a retyped fresh column to the common type and write already-merged
     // files, masking the drift from read()'s declared-vs-stored check.
@@ -2267,42 +2319,39 @@ object SnapshotStore {
     // (SQL CHECK: null passes)
     val checks = storedChecks(spark, root, cur)
     if (checks.nonEmpty) {
-      val freshNames = newRows.schema.fieldNames.toSet
+      val freshNames = src.schema.fieldNames.toSet
       val checkTarget = curCols.filterNot(c => freshNames.contains(c._1))
-        .foldLeft(newRows) { case (df, (n, t)) =>
+        .foldLeft(src) { case (df, (n, t)) =>
           df.withColumn(n, lit(null).cast(t))
         }
       validateChecks(checkTarget, checks, root)
     }
     // union newRows' own ids: a doc present in newRows but omitted from
-    // reingestedDocs must replace, not duplicate, its old vectors.
-    // Checkpointed (ids only — delta-bounded at any scale): three
-    // consumers below (touched-bucket probe, prune-cap count, candidate
-    // stat/bloom probes) would otherwise each re-evaluate the id
-    // projection of the fresh rows' lineage — for a fingerprint upsert
-    // that projection cannot prune past the per-document explode, so
-    // every probe re-ran the full k-gram scan (measured: 3× the batch
-    // hashing cost per d28-shaped upsert).
-    // LAZY checkpoint: the grouped count right below references this
-    // frame exactly once, so its job materializes the checkpoint —
-    // eager + collect would pay the same pass twice (two jobs); the
-    // remaining consumers plan after the collect and read the
-    // materialized blocks
-    val upserted = reingestedDocs.select(col("doc_id").cast("long")
+    // reingestedDocs must replace, not duplicate, its old vectors
+    val idFrame = reingestedDocs.select(col("doc_id").cast("long")
       .as("doc_id"))
-      .union(newRows.select(col("doc_id").cast("long").as("doc_id")))
+      .union(src.select(col("doc_id").cast("long").as("doc_id")))
       .distinct()
-      .localCheckpoint(false)
-    // fresh's buckets need no extra union here: upserted already
-    // contains every newRows doc_id, and both hash through the same
-    // withBucket expression. Grouped count instead of distinct: the SAME
-    // one job also yields the distinct-id total (upserted is distinct by
-    // construction), which docIdCandidates' cardinality guard needs —
-    // previously a separate limit+count job per upsert.
-    val bucketCounts = withBucket(upserted, buckets).groupBy("bucket")
-      .agg(count(lit(1)).as("n")).collect()
-    val touched = bucketCounts.map(_.getLong(0)).toSet
-    val nUpserted = bucketCounts.map(_.getAs[Long]("n")).sum
+    // DRIVER-HELD KEYS: one bounded collect of the distinct ids (a null
+    // id replaces nothing, so it is left out). Under docIdPruneCap every
+    // fact derived from them is computed on the driver: the touched
+    // buckets ([[targetBuckets]], no job), their count, and the doc_id
+    // verdicts of [[docIdCandidates]] (no job on an inline-metadata
+    // store); the anti-join below runs against them as a local relation.
+    val held = idFrame.filter(col("doc_id").isNotNull)
+      .limit(docIdPruneCap + 1).collect().map(_.getLong(0))
+    val byDriver = held.length <= docIdPruneCap
+    // Over the cap the ids stay a FRAME, checkpointed (ids only): the
+    // grouped count and the anti-join below would otherwise each
+    // re-evaluate the id projection of the fresh rows' lineage. LAZY:
+    // the grouped count references it exactly once, so its job
+    // materializes the checkpoint. Key pruning is skipped there — the
+    // stats envelopes admit nearly every file at that cardinality.
+    lazy val upsertedDf = idFrame.localCheckpoint(false)
+    val touched =
+      if (byDriver) targetBuckets(spark, held.toSeq, buckets)
+      else withBucket(upsertedDf, buckets).groupBy("bucket")
+        .agg(count(lit(1)).as("n")).collect().map(_.getLong(0)).toSet
     // only the TOUCHED buckets' entries ever reach the driver (the
     // untouched rest of the store carries through publishDelta without
     // being resolved): upsert driver work is ∝ touched-bucket files,
@@ -2314,29 +2363,26 @@ object SnapshotStore {
     // cost ∝ admitting files, not whole-bucket file counts (at 10⁵+
     // one-row files per store this is the difference between rewriting
     // ~3k files per touched bucket and rewriting the handful that match).
-    // The id set stays a FRAME end-to-end (docIdCandidates broadcasts a
-    // Spark-aggregated id row) — no driver id collect, no size cap.
-    val meta0 = manifestMeta(spark, root, cur)
-    val hasDocIdMeta =
-      statColsLineOf(meta0).map(parseStatCols).getOrElse(Nil)
-        .contains("doc_id") ||
-      bloomColsLineOf(meta0).map(parseBloomCols)
-        .exists(_._1.contains("doc_id"))
-    val (candidateEntries, cleanEntries) =
-      if (!hasDocIdMeta || touchedEntries.isEmpty)
-        (touchedEntries, Seq.empty[(Long, String)])
-      else docIdCandidates(spark, root, meta0, touchedEntries,
-        Right(upserted.select(col("doc_id"))), knownIdCount = nUpserted)
+    val candidateEntries =
+      if (!byDriver) touchedEntries
+      else docIdCandidates(spark, root, manifestMeta(spark, root, cur),
+        touchedEntries, held.toSeq)
     val v = cur + 1
     val merged = {
       // carried survivors read through assemble — the same dir-grouped,
       // SCHEMA-VALIDATED path read() uses (the previous inline copy
       // skipped the declared-vs-stored check, so a drifted touched
       // bucket could be union-coerced and rewritten, masking the drift)
+      val keys =
+        if (!byDriver) upsertedDf
+        else {
+          import spark.implicits._
+          held.toSeq.toDF("doc_id")
+        }
       val kept =
         if (candidateEntries.isEmpty) None
         else Some(assemble(spark, root, cur, candidateEntries)
-          .join(upserted, Seq("doc_id"), "left_anti"))
+          .join(keys, Seq("doc_id"), "left_anti"))
       // allowMissingColumns: an upsert may carry new columns (schema
       // evolution) — surviving old rows null-fill them
       kept.map(_.unionByName(fresh, allowMissingColumns = true))
@@ -2344,7 +2390,7 @@ object SnapshotStore {
     }
     // old files are immutable — no checkpoint fence needed before the
     // write; the attempt-unique dir keeps racers out of each other's files
-    val dirName = writeVersionDir(merged, spark, root, v)
+    val dirName = writeVersionDir(layout(merged), spark, root, v)
     // declared schema grows monotonically: current declaration + any
     // columns the fresh rows ADD (drops are impossible through upsert —
     // carried files retain every stored column)
@@ -2973,65 +3019,46 @@ object SnapshotStore {
     probes.exists(_.forall(bs.get))
   }
 
-  /** Split `entries` into (candidates, provablyClean) for an upserted/
-    * looked-up doc_id set — the [[deletePoint]] candidate trick applied
+  /** The `entries` that may hold a row of an upserted/looked-up doc_id
+    * set — the [[deletePoint]] candidate trick applied
     * to the KEY column: a file whose doc_id stats envelope contains
     * none of the ids, or whose doc_id bloom bitset rejects all of them,
     * PROVABLY holds no row any of the ids could replace or match
     * (bloom false negatives impossible, stats envelopes sound), so
     * upsert carries it verbatim and readDocs never opens it. Requires a
-    * doc_id stats/bloom declaration; without one everything is a
-    * candidate.
+    * doc_id stats/bloom declaration; without one, or past
+    * [[docIdPruneCap]] ids, everything is a candidate.
     *
-    * Where the verdicts run:
-    *  - ids the driver already holds (`Left` — readDocs' argument) on a
-    *    store whose `#stat`/`#bloom` lines are all INLINE: on the
+    * The ids are driver-held (readDocs' argument, upsert's bounded
+    * collect). Where the verdicts run:
+    *  - a store whose `#stat`/`#bloom` lines are all INLINE: on the
     *    driver, over the lines the manifest text already holds, with
     *    bloom probe positions from the SAME [[bloomPositions]]
     *    expressions over a local relation — no Spark job;
-    *  - a sidecar store, or an id FRAME (`Right` — upsert's fresh ids,
-    *    with their distinct count in `knownIdCount` when known): the id
-    *    set is sorted/probe-expanded by Spark aggregates into a single
-    *    row that broadcast-joins against the sidecar rows AND the inline
-    *    lines (threshold-bounded, parallelized into the same frames), so
-    *    a frame's ids never reach user driver code; the verdicts
-    *    evaluate ON EXECUTORS with the id array materialized once per
-    *    partition, and only the REJECTED relpaths collect. Driver-held
-    *    ids skip the aggregates: their sorted array and probe positions
-    *    ride one-row local relations. */
+    *  - a sidecar store: on the executors, the sidecar rows and inline
+    *    lines cross-joined with the sorted id array and the probe
+    *    positions as one-row local relations (materialized once per
+    *    partition); only the REJECTED relpaths collect. */
   private def docIdCandidates(spark: SparkSession, root: String,
-      meta: Seq[String], entries: Seq[(Long, String)],
-      ids: Either[Seq[Long], DataFrame], knownIdCount: Long = -1L)
-      : (Seq[(Long, String)], Seq[(Long, String)]) = {
-    if (entries.isEmpty) return (entries, Nil)
+      meta: Seq[String], entries: Seq[(Long, String)], ids: Seq[Long])
+      : Seq[(Long, String)] = {
+    if (entries.isEmpty) return entries
     val statDeclared = statColsLineOf(meta).map(parseStatCols)
       .getOrElse(Nil).contains("doc_id")
     val bloomDecl = bloomColsLineOf(meta).map(parseBloomCols)
       .filter(_._1.contains("doc_id"))
-    if (!statDeclared && bloomDecl.isEmpty) return (entries, Nil)
+    if (!statDeclared && bloomDecl.isEmpty) return entries
+    val sorted = ids.distinct.sorted.toArray
+    // Cardinality guard: past ~hundreds of thousands of keys the sorted
+    // id array (broadcast and materialized per partition on a sidecar
+    // store) is an executor-OOM risk, and in that regime the stats
+    // envelopes admit nearly every file anyway, so pruning buys nothing:
+    // every entry stays a candidate.
+    if (sorted.length > docIdPruneCap) return entries
     import spark.implicits._
     val sideRel = metaFileRelOf(meta)
-    val held = ids.left.toOption.map(_.distinct.sorted.toArray)
-    lazy val idsL = ids.fold(_.toDF("doc_id"), identity)
-      .select(col("doc_id").cast("long").as("id")).distinct()
-    // Cardinality guard: the pruning machinery below funnels the WHOLE
-    // distinct id set through one collect_list row (and one probe-array
-    // row for bloom) that is broadcast and materialized per partition.
-    // Past ~hundreds of thousands of keys that single aggregate row is
-    // an executor-OOM / broadcast-size risk — and in that regime the
-    // stats envelopes admit nearly every file anyway, so pruning buys
-    // nothing. A cheap bounded probe (limit(cap+1).count stops counting
-    // at cap+1) restores the graceful whole-bucket fallback: every
-    // entry stays a candidate, nothing is carried by key pruning.
-    // Callers that already hold the DISTINCT id count (upsert's touched-
-    // bucket rollup, a driver-held id list) skip the job.
-    val idCount = held.map(_.length.toLong).getOrElse(knownIdCount)
-    if (idCount >= 0) {
-      if (idCount > docIdPruneCap) return (entries, Nil)
-    } else if (idsL.limit(docIdPruneCap + 1).count() > docIdPruneCap)
-      return (entries, Nil)
     val dec = java.util.Base64.getDecoder
-    lazy val inlineStats =
+    val inlineStats =
       meta.filter(_.startsWith("#stat\t")).flatMap { l =>
         val a = l.split("\t", 7)
         if (a.length == 7 && a(2) == "doc_id")
@@ -3039,90 +3066,76 @@ object SnapshotStore {
             Some(a(5)).filter(_.nonEmpty), Some(a(6)).filter(_.nonEmpty)))
         else None
       }
-    lazy val inlineBlooms =
+    val inlineBlooms =
       meta.filter(_.startsWith("#bloom\t")).flatMap { l =>
         val a = l.split("\t", 4)
         if (a.length == 4 && a(2) == "doc_id")
           Some((a(1), dec.decode(a(3))))
         else None
       }
-    // probe positions of driver-held ids via the SAME Spark hash
-    // expressions as the write side (which hashed cast(doc_id as long)
-    // cast to string), over a local relation whose projection folds —
-    // this collect runs no job
-    val heldProbes = for ((_, bits) <- bloomDecl; sorted <- held)
-      yield sorted.toSeq.toDF("id")
+    // probe positions via the SAME Spark hash expressions as the write
+    // side (which hashed cast(doc_id as long) cast to string), over a
+    // local relation whose projection folds — this collect runs no job
+    val probes = bloomDecl.map { case (_, bits) =>
+      sorted.toSeq.toDF("id")
         .select(array(bloomPositions($"id", bits): _*))
         .collect().map(_.getSeq[Int](0).toArray)
-    // stat and bloom verdicts evaluate as TWO branches of ONE unioned
-    // frame — a single job/collect where this used to launch one of
-    // each (two broadcast builds, two stage rounds, per upsert)
-    lazy val statRej: Option[DataFrame] =
-      if (!statDeclared) None
-      else {
-        // inline lines ride the same executor-side evaluation as
-        // sidecar rows
-        val inlineDf = inlineStats
-          .toDF("rel", "rows", "nulls", "mn", "mx")
-        val sideDf = sideRel.map(rel => sidecarDf(spark, root, rel)
-          .filter(col("kind") === "stat" && col("col") === "doc_id")
-          .select("rel", "rows", "nulls", "mn", "mx"))
-        val statRows = sideDf.map(_.unionByName(inlineDf))
-          .getOrElse(inlineDf)
-        // driver-held ids ride as a one-row local relation; a frame's
-        // ids are sorted by an aggregate
-        val idArr = held.fold(
-          idsL.agg(sort_array(collect_list($"id")).as("ids")))(
-          sorted => Seq(sorted.toSeq).toDF("ids"))
-        Some(statRows.crossJoin(broadcast(idArr))
-          .as[(String, Long, Long, Option[String], Option[String],
-            Seq[Long])]
-          .mapPartitions { it =>
-            var sorted: Array[Long] = null
-            it.flatMap { case (p, rows, nulls, mn, mx, idSeq) =>
-              if (sorted == null) sorted = idSeq.toArray
-              if (statsAdmitIds(sorted, rows, nulls, mn, mx)) None
-              else Some(p)
-            }
-          }.toDF("rel"))
-      }
-    lazy val bloomRej: Option[DataFrame] = bloomDecl.map { case (_, bits) =>
-      val inlineDf = inlineBlooms.toDF("rel", "bloom")
-      val sideDf = sideRel.map(rel => sidecarDf(spark, root, rel)
-        .filter(col("kind") === "bloom" && col("col") === "doc_id")
-        .select("rel", "bloom"))
-      val bloomRows = sideDf.map(_.unionByName(inlineDf))
-        .getOrElse(inlineDf)
-      val probesRow = heldProbes.fold(idsL
-        .select(array(bloomPositions($"id", bits): _*).as("ps"))
-        .agg(collect_list($"ps").as("pss")))(
-        pr => Seq(pr.map(_.toSeq).toSeq).toDF("pss"))
-      bloomRows.crossJoin(broadcast(probesRow))
-        .as[(String, Array[Byte], Seq[Seq[Int]])]
-        .mapPartitions { it =>
-          var probes: Array[Array[Int]] = null
-          it.flatMap { case (p, bytes, pss) =>
-            if (probes == null) probes = pss.map(_.toArray).toArray
-            if (bloomAdmitsIds(bytes, probes)) None else Some(p)
-          }
-        }.toDF("rel")
     }
-    val rejected = (held, sideRel) match {
-      // driver-held ids, every verdict line inline: evaluate right here
-      case (Some(sorted), None) =>
+    val rejected = sideRel match {
+      // every verdict line inline: evaluate right here
+      case None =>
         val statRejected = if (!statDeclared) Nil
           else inlineStats.collect { case (p, rows, nulls, mn, mx)
             if !statsAdmitIds(sorted, rows, nulls, mn, mx) => p }
-        val bloomRejected = heldProbes.toSeq.flatMap(pr =>
+        val bloomRejected = probes.toSeq.flatMap(pr =>
           inlineBlooms.collect {
             case (p, bytes) if !bloomAdmitsIds(bytes, pr) => p })
         (statRejected ++ bloomRejected).toSet
-      case _ =>
+      // sidecar rows evaluate on the executors: stat and bloom verdicts
+      // as TWO branches of ONE unioned frame, a single job/collect
+      case Some(rel) =>
+        val statRej =
+          if (!statDeclared) None
+          else {
+            val statRows = sidecarDf(spark, root, rel)
+              .filter(col("kind") === "stat" && col("col") === "doc_id")
+              .select("rel", "rows", "nulls", "mn", "mx")
+              .unionByName(inlineStats.toDF("rel", "rows", "nulls", "mn",
+                "mx"))
+            Some(statRows
+              .crossJoin(broadcast(Seq(sorted.toSeq).toDF("ids")))
+              .as[(String, Long, Long, Option[String], Option[String],
+                Seq[Long])]
+              .mapPartitions { it =>
+                var arr: Array[Long] = null
+                it.flatMap { case (p, rows, nulls, mn, mx, idSeq) =>
+                  if (arr == null) arr = idSeq.toArray
+                  if (statsAdmitIds(arr, rows, nulls, mn, mx)) None
+                  else Some(p)
+                }
+              }.toDF("rel"))
+          }
+        val bloomRej = probes.map { pr =>
+          val bloomRows = sidecarDf(spark, root, rel)
+            .filter(col("kind") === "bloom" && col("col") === "doc_id")
+            .select("rel", "bloom")
+            .unionByName(inlineBlooms.toDF("rel", "bloom"))
+          bloomRows
+            .crossJoin(broadcast(Seq(pr.map(_.toSeq).toSeq).toDF("pss")))
+            .as[(String, Array[Byte], Seq[Seq[Int]])]
+            .mapPartitions { it =>
+              var ps: Array[Array[Int]] = null
+              it.flatMap { case (p, bytes, pss) =>
+                if (ps == null) ps = pss.map(_.toArray).toArray
+                if (bloomAdmitsIds(bytes, ps)) None else Some(p)
+              }
+            }.toDF("rel")
+        }
         (statRej.toSeq ++ bloomRej.toSeq)
           .reduce(_.unionByName(_))
           .collect().map(_.getString(0)).toSet
     }
-    entries.partition(e => !rejected.contains(e._2))
+    entries.filterNot(e => rejected.contains(e._2))
   }
 
   /** Equality point read with BLOOM FILE SKIPPING: scan only the files
@@ -3353,7 +3366,7 @@ object SnapshotStore {
     val survivors = assemble(spark, root, cur, candidates)
       .filter(!hit || c.isNull)
     val v = cur + 1
-    val dirName = writeVersionDir(survivors, spark, root, v)
+    val dirName = writeVersionDir(byBucket(survivors), spark, root, v)
     publishDelta(spark, root, v,
       listVersionFiles(spark, root, dirName),
       candidates.map(_._2).toSet,
@@ -3394,7 +3407,7 @@ object SnapshotStore {
     val survivors = assemble(spark, root, cur, candidates)
       .filter(c =!= lit(value).cast(dt) || c.isNull)
     val v = cur + 1
-    val dirName = writeVersionDir(survivors, spark, root, v)
+    val dirName = writeVersionDir(byBucket(survivors), spark, root, v)
     publishDelta(spark, root, v,
       listVersionFiles(spark, root, dirName),
       candidates.map(_._2).toSet,

@@ -28,7 +28,11 @@ import graft.functions.VectorFunctions
   *    [[SnapshotStore.withConflictRetry]], so two racing verbs
   *    serialize — the loser re-reads the winner's geometry and
   *    re-derives its rows, and a manifest can never carry stale
-  *    `#ivfcent` lines against newer rows' cent_ids.
+  *    `#ivfcent` lines against newer rows' cent_ids;
+  *  - maintenance keeps the layout: every verb hands the store its rows
+  *    in cent_id range bands ([[clustered]]), and the store's upsert
+  *    writes the rows it carries in the same bands, so after an upsert,
+  *    delete or rebalance each file still covers a narrow cent_id band.
   *
   * Search pruning: the store declares doc_id + cent_id statistics, so a
   * probe reads the probed cells through [[SnapshotStore.readWhereIn]]'s
@@ -164,15 +168,16 @@ object VersionedIvf {
     * inside [[SnapshotStore.withConflictRetry]], so a racing verb
     * can never make this manifest carry stale centroid lines against
     * the winner's rows — the retry re-reads geometry and re-assigns.
-    * Returns the new version. */
+    * Jobs per call: 8–9 (the dim check's two, the id collect's two, the
+    * key broadcast, the cent_id bands' sampling and map stage, the
+    * write). Returns the new version. */
   def upsert(spark: SparkSession, root: String, emb: DataFrame): Long =
     SnapshotStore.withConflictRetry(spark, root) { observed =>
       requirePublished(observed, root, "upsert")
       requireFlat(spark, root, observed, "upsert")
       val cents = storedCentroids(spark, root, observed)
       IvfIndex.requireDim(emb, cents, "VersionedIvf.upsert")
-      val rows = assignRows(emb, cents)
-      SnapshotStore.upsert(spark, rows, rows.select("doc_id"), root,
+      SnapshotStore.upsert(spark, assignRows(emb, cents), idsOf(emb), root,
         bucketsAt(spark, root, observed), meta = centLines(cents),
         expectedVersion = Some(observed))
     }
@@ -180,10 +185,21 @@ object VersionedIvf {
   private def assignRows(emb: DataFrame,
       cents: Array[(Long, Array[Long])],
       payload: Column = col("embedding")): DataFrame =
-    IvfIndex.cellAssign(emb, cents)
+    clustered(IvfIndex.cellAssign(emb, cents)
       .select(col("vec_id").cast("long").as("doc_id"), payload,
-        col("cent_id"))
-      .repartitionByRange(math.max(4, cents.length / 2), col("cent_id"))
+        col("cent_id")), cents.length)
+
+  /** The index's file layout: rows range-partitioned by cent_id into
+    * `max(4, cells / 2)` bands, so every written file covers a narrow
+    * cent_id band. Every verb hands its rows to the store in this form;
+    * [[SnapshotStore.upsert]] gives the rows it carries the same
+    * clustering, so maintenance keeps the layout [[write]] made. */
+  private[operators] def clustered(rows: DataFrame, cells: Int): DataFrame =
+    rows.repartitionByRange(math.max(4, cells / 2), col("cent_id"))
+
+  /** The ids of an input vector frame, as the store's key. */
+  private[operators] def idsOf(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id").cast("long").as("doc_id"))
 
   /** EXACTLY-ONCE micro-batch upsert — [[upsert]] carrying a
     * [[SnapshotStore.txnMarker]], the verb a Structured Streaming
@@ -228,9 +244,8 @@ object VersionedIvf {
         requireFlat(spark, root, observed, "upsertBatch")
         val cents = storedCentroids(spark, root, observed)
         IvfIndex.requireDim(emb, cents, "VersionedIvf.upsertBatch")
-        val rows = assignRows(emb, cents)
-        SnapshotStore.upsert(spark, rows, rows.select("doc_id"), root,
-          bucketsAt(spark, root, observed),
+        SnapshotStore.upsert(spark, assignRows(emb, cents), idsOf(emb),
+          root, bucketsAt(spark, root, observed),
           meta = centLines(cents) :+
             SnapshotStore.txnMarker(streamId, batchId),
           expectedVersion = Some(observed))
@@ -243,16 +258,19 @@ object VersionedIvf {
     * new manifest, read at the observed version and published with
     * `expectedVersion` under [[SnapshotStore.withConflictRetry]] so a
     * concurrent rebalance cannot be overwritten with its pre-split
-    * centroids. Returns the new version. */
+    * centroids. The surviving rows of the rewritten files are written
+    * in cent_id bands like [[write]]'s. Jobs per call: 5 (the id
+    * collect's two, the bands' sampling and map stage, the write).
+    * Returns the new version. */
   def delete(spark: SparkSession, root: String, ids: DataFrame): Long =
     SnapshotStore.withConflictRetry(spark, root) { observed =>
       requirePublished(observed, root, "delete")
       val cents = storedCentroids(spark, root, observed)
       val empty = SnapshotStore.read(spark, root, observed)
         .drop("bucket").limit(0)
-      SnapshotStore.upsert(spark, empty,
-        ids.select(col("vec_id").cast("long").as("doc_id")),
-        root, bucketsAt(spark, root, observed), meta = centLines(cents),
+      SnapshotStore.upsert(spark, clustered(empty, cents.length),
+        idsOf(ids), root, bucketsAt(spark, root, observed),
+        meta = centLines(cents),
         expectedVersion = Some(observed))
     }
 
@@ -297,12 +315,11 @@ object VersionedIvf {
       IvfIndex.splitPlan(spark, index, cents, hotFactor, pre) match {
         case None => (0, carry.filter(_._1 == observed))
         case Some(p) =>
-          val rows = p.merged
+          val rows = clustered(p.merged
             .select(col("vec_id").as("doc_id"), col("embedding"),
-              col("cent_id"))
+              col("cent_id")), p.newCents.length)
           val published = SnapshotStore.upsert(spark, rows,
-            rows.select("doc_id"), root,
-            bucketsAt(spark, root, observed),
+            idsOf(p.merged), root, bucketsAt(spark, root, observed),
             meta = centLines(p.newCents),
             expectedVersion = Some(observed))
           (p.splitCount, Some((published, p.postCounts)))

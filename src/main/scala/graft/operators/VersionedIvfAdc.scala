@@ -103,11 +103,10 @@ object VersionedIvfAdc {
   private def encodedRows(emb: DataFrame,
       coarse: Array[(Long, Array[Long])],
       book: Array[(Long, Array[Long])], dim: Int, m: Int): DataFrame =
-    IvfIndex.cellAssign(emb, coarse)
+    VersionedIvf.clustered(IvfIndex.cellAssign(emb, coarse)
       .select(col("vec_id").cast("long").as("doc_id"),
         col("cent_id"),
-        PqIndex.codesColumn(book, dim, m).as("codes"))
-      .repartitionByRange(math.max(4, coarse.length / 2), col("cent_id"))
+        PqIndex.codesColumn(book, dim, m).as("codes")), coarse.length)
 
   /** Build and publish version 1: both quantizers trained (the
     * deterministic first-k seeds [[IvfIndex.centroids]] /
@@ -135,9 +134,8 @@ object VersionedIvfAdc {
       val coarse = storedCoarse(spark, root, observed)
       val book = storedBook(spark, root, observed)
       IvfIndex.requireDim(emb, coarse, "VersionedIvfAdc.upsert")
-      val rows = encodedRows(emb, coarse, book, dim, m)
-      SnapshotStore.upsert(spark, rows, rows.select("doc_id"), root,
-        bucketsAt(spark, root, observed),
+      SnapshotStore.upsert(spark, encodedRows(emb, coarse, book, dim, m),
+        VersionedIvf.idsOf(emb), root, bucketsAt(spark, root, observed),
         meta = metaLines(coarse, book, dim, m, k),
         expectedVersion = Some(observed))
     }
@@ -214,9 +212,9 @@ object VersionedIvfAdc {
         val coarse = storedCoarse(spark, root, observed)
         val book = storedBook(spark, root, observed)
         IvfIndex.requireDim(emb, coarse, "VersionedIvfAdc.upsertBatch")
-        val rows = encodedRows(emb, coarse, book, sDim, sM)
-        SnapshotStore.upsert(spark, rows, rows.select("doc_id"), root,
-          bucketsAt(spark, root, observed),
+        SnapshotStore.upsert(spark,
+          encodedRows(emb, coarse, book, sDim, sM), VersionedIvf.idsOf(emb),
+          root, bucketsAt(spark, root, observed),
           meta = metaLines(coarse, book, sDim, sM, sK) :+
             SnapshotStore.txnMarker(streamId, batchId),
           expectedVersion = Some(observed))
@@ -233,8 +231,8 @@ object VersionedIvfAdc {
       val book = storedBook(spark, root, observed)
       val empty = SnapshotStore.read(spark, root, observed)
         .drop("bucket").limit(0)
-      SnapshotStore.upsert(spark, empty,
-        ids.select(col("vec_id").cast("long").as("doc_id")),
+      SnapshotStore.upsert(spark,
+        VersionedIvf.clustered(empty, coarse.length), VersionedIvf.idsOf(ids),
         root, bucketsAt(spark, root, observed),
         meta = metaLines(coarse, book, dim, m, k),
         expectedVersion = Some(observed))
@@ -279,13 +277,11 @@ object VersionedIvfAdc {
       IvfIndex.splitPlan(spark, index, coarse, hotFactor, pre) match {
         case None => (0, carry.filter(_._1 == observed))
         case Some(p) =>
-          val rows = p.merged
+          val rows = VersionedIvf.clustered(p.merged
             .select(col("vec_id").as("doc_id"), col("cent_id"),
-              col("codes"))
-            .repartitionByRange(math.max(4, p.newCents.length / 2),
-              col("cent_id"))
+              col("codes")), p.newCents.length)
           val published = SnapshotStore.upsert(spark, rows,
-            rows.select("doc_id"), root,
+            VersionedIvf.idsOf(p.merged), root,
             bucketsAt(spark, root, observed),
             meta = metaLines(p.newCents, book, dim, m, k),
             expectedVersion = Some(observed))
@@ -360,9 +356,8 @@ object VersionedIvfAdc {
       val trained = IvfIndex.trainCentroids(seedSrc, k, iters, trainSample)
       val book = trained.sortBy(_._1).zipWithIndex
         .map { case ((_, q), i) => (i.toLong, q) }
-      val rows = encodedRows(src, coarse, book, dim, m)
-      SnapshotStore.upsert(spark, rows, rows.select("doc_id"), root,
-        bucketsAt(spark, root, observed),
+      SnapshotStore.upsert(spark, encodedRows(src, coarse, book, dim, m),
+        VersionedIvf.idsOf(src), root, bucketsAt(spark, root, observed),
         meta = metaLines(coarse, book, dim, m, k),
         expectedVersion = Some(observed))
     }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 import graft.RequestFixtures.{Dim, vector}
 import graft.operators.{BfsHops, PageRank, SnapshotStore, VersionedIvf,
@@ -30,6 +31,12 @@ import graft.operators.{BfsHops, PageRank, SnapshotStore, VersionedIvf,
   *  - BfsHops.run, earlyExit, 6 rounds:   54 → 7
   *  - BfsHops.run, 3 fixed rounds:        10 → 2
   *  - WeightedSssp.run, earlyExit, 6 rounds: 54 → 7
+  *
+  * Keyed writes (jobs per call, before → after driver-held upsert keys
+  * and one written layout for the merged rows):
+  *  - SnapshotStore.upsert, key-only store, inline metadata: 9 → 5
+  *  - VersionedIvf.upsert:                 15 → 9
+  *  - VersionedIvf.delete:                  8 → 5
   */
 class JobBudgetSpec extends SparkTestBase {
 
@@ -117,6 +124,42 @@ class JobBudgetSpec extends SparkTestBase {
     info(s"readDocs inline: $i jobs, sidecar: $s jobs")
     assert(i <= 1, s"inline-metadata readDocs launched $i jobs")
     assert(s <= 3, s"sidecar readDocs launched $s jobs")
+  }
+
+  test("keyed upsert and delete stay within budget") {
+    val sp = spark
+    import sp.implicits._
+    // key-only store, inline metadata: 50 replaced and 50 new docs
+    val root = "target/budget-upsert"
+    docStore(root)
+    def docs(from: Long) = ((from until from + 50L) ++
+      (from + 10000L until from + 10050L)).map(i => (i, s"new_$i"))
+      .toDF("doc_id", "text")
+    def upsertDocs(from: Long): Unit = {
+      val d = docs(from)
+      SnapshotStore.upsert(spark, d, d.select("doc_id"), root, 8): Unit
+    }
+    upsertDocs(0L)
+    val up = JobCounter(spark)(upsertDocs(500L))._2
+    // stored IVF index: 40 replaced and 40 new vectors, 30 deleted ids
+    val vroot = "target/budget-vivf-maint"
+    cleanup(vroot)
+    VersionedIvf.write(corpus, Cells, vroot)
+    def upsertVecs(from: Long): Unit =
+      VersionedIvf.upsert(spark, vroot, vecs(((from until from + 40L) ++
+        (from + 1000L until from + 1040L)).map(i => (i, vector(i * 3))))): Unit
+    def deleteVecs(from: Long): Unit =
+      VersionedIvf.delete(spark, vroot,
+        spark.range(from, from + 30L).select(col("id").as("vec_id"))): Unit
+    upsertVecs(0L)
+    val vup = JobCounter(spark)(upsertVecs(100L))._2
+    deleteVecs(200L)
+    val vdel = JobCounter(spark)(deleteVecs(300L))._2
+    info(s"SnapshotStore.upsert: $up jobs, VersionedIvf.upsert: $vup, " +
+      s"VersionedIvf.delete: $vdel")
+    assert(up <= 5, s"key-only upsert launched $up jobs")
+    assert(vup <= 9, s"VersionedIvf.upsert launched $vup jobs")
+    assert(vdel <= 5, s"VersionedIvf.delete launched $vdel jobs")
   }
 
   /** Jobs and rounds of one warm graph-operator call, collect included. */

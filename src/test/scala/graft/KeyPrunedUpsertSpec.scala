@@ -154,4 +154,95 @@ class KeyPrunedUpsertSpec extends SparkTestBase {
     assert(b2.intersect(a2).size >= b2.size - 4,
       "key pruning did not resume under the cap")
   }
+  /** The buckets `ids` hash to in a `buckets`-way store (the store's own
+    * bucketing expression). */
+  private def bucketsOf(ids: Seq[Long], buckets: Int): Set[Long] = {
+    val sp = spark
+    import sp.implicits._
+    ids.toDF("doc_id")
+      .select(pmod(xxhash64(col("doc_id")), lit(buckets.toLong)))
+      .collect().map(_.getLong(0)).toSet
+  }
+
+  test("an upsert into a key-only store adds at most one file per " +
+      "touched bucket, however many tasks produced its rows") {
+    val root = "target/keypruned-layout"
+    cleanup(root)
+    val sp = spark
+    import sp.implicits._
+    val df = (0L until 2000L).map(i => (i, i * 3)).toDF("doc_id", "n")
+    SnapshotStore.commit(df, root, buckets = 8,
+      meta = Seq(SnapshotStore.statsDeclaration(Seq("doc_id"))))
+    val before = SnapshotStore.read(spark, root).inputFiles.toSet
+    // 60 replaced and 40 new ids, spread over 6 upstream tasks
+    val ids = (0L until 2000L by 33L).take(60) ++ (5000L until 5040L)
+    val fresh = ids.map(i => (i, -i)).toDF("doc_id", "n").repartition(6)
+    SnapshotStore.upsert(spark, fresh, fresh.select("doc_id"), root,
+      buckets = 8)
+    val snap = SnapshotStore.read(spark, root)
+    val added = snap.inputFiles.toSet -- before
+    val touched = bucketsOf(ids, 8)
+    assert(added.size <= touched.size,
+      s"${added.size} files added for ${touched.size} touched buckets")
+    assert(snap.count() === 2040L)
+    assert(snap.filter(col("doc_id").isin(ids: _*)).select("n")
+      .as[Long].collect().toSet === ids.map(-_).toSet)
+  }
+
+  test("over docIdPruneCap the frame path publishes what the driver path " +
+      "does: identical read() contents, the same files carried") {
+    val sp = spark
+    import sp.implicits._
+    val ids = Seq(10L, 20L, 30L, 40L, 50L, 7777L)
+    val fresh = ids.map(i => (i, -i)).toDF("doc_id", "n")
+    // reingested-only ids (no fresh rows) are deleted
+    val gone = Seq(60L, 70L).toDF("doc_id")
+    // both paths upsert from the SAME parent version: the driver path
+    // publishes v2, a rollback republishes v1's files as v3, the frame
+    // path publishes v4
+    def bothPaths(root: String, meta: Seq[String]): Unit = {
+      cleanup(root)
+      SnapshotStore.commit(
+        (0L until 2000L).map(i => (i, i * 3)).toDF("doc_id", "n"),
+        root, buckets = 8, meta = meta)
+      SnapshotStore.optimize(spark, root, maxRecordsPerFile = 64L)
+      val parent = SnapshotStore.read(spark, root).inputFiles.toSet
+      def upsert(): Set[String] = {
+        SnapshotStore.upsert(spark, fresh,
+          fresh.select("doc_id").union(gone), root, buckets = 8)
+        SnapshotStore.read(spark, root).inputFiles.toSet
+      }
+      val v0 = SnapshotStore.currentVersion(spark, root).get
+      val byDriver = upsert()
+      val driverRows = SnapshotStore.read(spark, root)
+        .drop("bucket").as[(Long, Long)].collect().sorted.toSeq
+      SnapshotStore.rollback(spark, root, v0)
+      val savedCap = SnapshotStore.docIdPruneCap
+      SnapshotStore.docIdPruneCap = ids.size
+      val byFrame = try upsert() finally SnapshotStore.docIdPruneCap = savedCap
+      val frameRows = SnapshotStore.read(spark, root)
+        .drop("bucket").as[(Long, Long)].collect().sorted.toSeq
+      assert(frameRows === driverRows)
+      assert(frameRows.length === 2000 - 2 + 1)
+      val untouched = parent.filter { f =>
+        !bucketsOf(ids ++ Seq(60L, 70L), 8)
+          .exists(b => f.contains(s"/bucket=$b/"))
+      }
+      assert(untouched.nonEmpty, "every bucket was touched")
+      if (meta.isEmpty)
+        assert((byFrame & parent) === (byDriver & parent),
+          "the two paths carried different files")
+      else {
+        // key pruning runs under the cap only: the driver path carries
+        // the touched buckets' clean files as well
+        assert((byFrame & parent) === untouched)
+        assert(untouched.subsetOf(byDriver & parent) &&
+          (byDriver & parent).size > untouched.size,
+          "the driver path did not carry clean files")
+      }
+    }
+    bothPaths("target/keypruned-paths-plain", Nil)
+    bothPaths("target/keypruned-paths-stats",
+      Seq(SnapshotStore.statsDeclaration(Seq("doc_id"))))
+  }
 }

@@ -9,8 +9,10 @@ import graft.operators.SnapshotStore
   * against what its probed cells require. */
 object ProbeFiles {
 
+  /** `bucket=<b>/<file>`: one write names its files alike in every
+    * bucket dir, so the bare file name is not unique within a version. */
   private def name(path: String): String =
-    path.substring(path.lastIndexOf('/') + 1)
+    path.split("/").takeRight(2).mkString("/")
 
   /** Asserts the probe opened no file whose cent_id envelope misses
     * every probed cell and skipped no file holding a probed cell's row;
