@@ -354,11 +354,12 @@ object IvfIndex {
     * [[VersionedIvf.rebalance]] and [[VersionedIvfAdc.rebalance]] publish
     * as ONE atomic SnapshotStore version. `merged` holds the hot cells'
     * rows with their NEW cent_id (all original columns, checkpointed);
-    * `newCents` is the complete new centroid table; `postCounts` the
-    * per-cell populations after the split. */
+    * `hot` the ids of the split cells, which held every row of `merged`
+    * before the split; `newCents` is the complete new centroid table;
+    * `postCounts` the per-cell populations after the split. */
   private[operators] final case class SplitPlan(merged: DataFrame,
-      newCents: Array[(Long, Array[Long])], splitCount: Int,
-      postCounts: Array[(Long, Long)])
+      hot: Seq[Long], newCents: Array[(Long, Array[Long])],
+      splitCount: Int, postCounts: Array[(Long, Long)])
 
   /** Compute the split of `index` (vec_id, embedding, cent_id, extras)
     * against its centroid table `cents`: hot cells (population >
@@ -502,7 +503,7 @@ object IvfIndex {
     val hotSet = hot.toSet
     val postCounts = (counts.filterNot(c => hotSet.contains(c._1)) ++
       mergedCounts).sortBy(_._1)
-    Some(SplitPlan(merged, newCents,
+    Some(SplitPlan(merged, hot.toSeq, newCents,
       hot.count(c => survivors.contains(newIdOf(c))), postCounts))
   }
 

@@ -4,12 +4,7 @@ import scala.collection.mutable
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
-  SortOrder}
-import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{ColumnBridge, PlanBridge}
 
 /** Atomic, versioned publication for a parquet-backed index — the
   * transactional edge the plain directory layouts
@@ -2222,37 +2217,6 @@ object SnapshotStore {
         s"no version published at or before epoch-millis $tsMillis at " +
           s"$root — too early, or that history was vacuumed")))
 
-  /** The layout a delta writer ([[upsert]], [[deleteWhere]],
-    * [[deletePoint]]) publishes its merged rows with; they are never
-    * written by upstream task boundaries, where every task opens a file
-    * in every bucket it holds rows of:
-    *  - rows whose frame ENDS in a range repartition (the stored IVF
-    *    index's cent_id clustering, [[VersionedIvf]]) keep it, and the
-    *    carried rows they merge with get the same clustering, so every
-    *    written file stays a narrow band of the range column. The input's
-    *    own exchange is peeled off (the first element is the rows below
-    *    it), so the fresh rows shuffle once, with the carried ones;
-    *  - anything else is hash-distributed on `bucket`: one file per
-    *    touched bucket, as [[commit]]'s `distributeByBucket` writes.
-    * Returns (rows to merge, layout of the merged rows). */
-  private def deltaLayout(rows: DataFrame)
-      : (DataFrame, DataFrame => DataFrame) =
-    PlanBridge.analyzed(rows) match {
-      case RepartitionByExpression(exprs, child, n, _)
-          if exprs.nonEmpty && exprs.forall(_.isInstanceOf[SortOrder]) =>
-        // by name: the merged frame's attributes are not the input's
-        val order = exprs.map(e => ColumnBridge.column(e.transform {
-          case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
-        }))
-        (PlanBridge.ofRows(rows.sparkSession, child),
-          df => n.fold(df.repartitionByRange(order: _*))(
-            df.repartitionByRange(_, order: _*)))
-      case _ => (rows, byBucket)
-    }
-
-  private def byBucket(df: DataFrame): DataFrame =
-    df.repartition(col("bucket"))
-
   /** Keyed upsert as a new version: every doc_id in `reingestedDocs` has
     * its old vectors dropped and `newRows`' replacements added, touching
     * only the buckets those documents hash to; all other buckets' files
@@ -2264,18 +2228,51 @@ object SnapshotStore {
     * once, bounded by [[docIdPruneCap]], and everything derived from
     * them is computed on the driver: the touched buckets, the doc_id
     * verdicts that carry provably-clean files, and the keys of the
-    * anti-join (a local relation). The merged rows are written in the
-    * [[deltaLayout]]: one file per touched bucket on a store clustered
-    * only by key, the input's range bands (a stored IVF index's cent_id
-    * clustering) otherwise. Jobs per call on a key-only, inline-metadata
-    * store: 5 (the id collect's map and result stages, the key
-    * broadcast, the bucket shuffle's map stage and the write). An id
-    * set over the cap stays a checkpointed frame and rewrites the
-    * touched buckets whole. */
+    * anti-join (a broadcast local relation). The fresh rows are written
+    * one file per touched bucket (a rebalance on `bucket`, so adaptive
+    * execution splits a skewed bucket of a large upsert); the surviving
+    * rows of the rewritten files are written by the scan tasks that read
+    * them, never shuffled, so rows from different files of one layout
+    * (an optimize's sort or z-order, a column only old rows lack) are
+    * not mixed with the fresh ones. Jobs per call on an inline-metadata
+    * store: 4 or 5 (the id collect's map and result stages, the bucket
+    * rebalance's map stage, the write; the key broadcast when carried
+    * rows are read). An id set over the cap stays a checkpointed frame,
+    * rewrites the touched buckets whole and writes its fresh rows by
+    * their upstream tasks, as a bulk load does. */
   def upsert(spark: SparkSession, newRows: DataFrame,
       reingestedDocs: DataFrame, root: String, buckets: Int,
       meta: Seq[String] = Nil,
-      expectedVersion: Option[Long] = None): Long = {
+      expectedVersion: Option[Long] = None): Long =
+    upsert(spark, newRows, reingestedDocs, root, buckets, meta,
+      expectedVersion, clusterBy = None, storedIn = None)
+
+  /** Fresh rows of a key-only upsert under [[docIdPruneCap]] ids: one
+    * file per touched bucket. A rebalance rather than a plain
+    * repartition, so a large upsert keeps its parallelism (adaptive
+    * execution splits a skewed bucket) while a small one coalesces into
+    * a single writer task. */
+  private def freshByBucket(fresh: DataFrame): DataFrame =
+    fresh.hint("rebalance", col("bucket"))
+
+  /** [[upsert]] for a store whose files are clustered by a column other
+    * than the key: `clusterBy` lays out EVERY row the upsert writes, the
+    * fresh rows and the surviving rows of the rewritten files, with
+    * their `bucket` column. [[VersionedIvf]] and [[VersionedIvfAdc]]
+    * pass their cent_id bands, so after maintenance every file still
+    * covers the narrow cent_id band [[VersionedIvf.write]]'s do; a scan
+    * task, which packs several files, would write their cells into one.
+    * None is [[upsert]]'s own layout.
+    *
+    * `storedIn = Some((c, values))` promises that every stored row of an
+    * upserted id has `c` in `values` (a rebalance moves rows of its
+    * split cells only): a file whose `c` stats envelope admits none of
+    * them is carried, whatever its doc_id envelope says. */
+  private[graft] def upsert(spark: SparkSession, newRows: DataFrame,
+      reingestedDocs: DataFrame, root: String, buckets: Int,
+      meta: Seq[String], expectedVersion: Option[Long],
+      clusterBy: Option[DataFrame => DataFrame],
+      storedIn: Option[(String, Seq[Any])]): Long = {
     checkExpected(spark, root, expectedVersion)
     val cur = currentVersion(spark, root).getOrElse(
       throw new IllegalArgumentException(
@@ -2291,8 +2288,7 @@ object SnapshotStore {
             s"upsert passed buckets = $buckets — a mismatched modulus " +
             "would corrupt the keyed delete; pass the stored count")
     }
-    val (src, layout) = deltaLayout(newRows)
-    val fresh = withBucket(src, buckets)
+    val fresh = withBucket(newRows, buckets)
     // Retype guard — at WRITE time, because the union below would coerce
     // a retyped fresh column to the common type and write already-merged
     // files, masking the drift from read()'s declared-vs-stored check.
@@ -2319,9 +2315,9 @@ object SnapshotStore {
     // (SQL CHECK: null passes)
     val checks = storedChecks(spark, root, cur)
     if (checks.nonEmpty) {
-      val freshNames = src.schema.fieldNames.toSet
+      val freshNames = newRows.schema.fieldNames.toSet
       val checkTarget = curCols.filterNot(c => freshNames.contains(c._1))
-        .foldLeft(src) { case (df, (n, t)) =>
+        .foldLeft(newRows) { case (df, (n, t)) =>
           df.withColumn(n, lit(null).cast(t))
         }
       validateChecks(checkTarget, checks, root)
@@ -2330,27 +2326,31 @@ object SnapshotStore {
     // reingestedDocs must replace, not duplicate, its old vectors
     val idFrame = reingestedDocs.select(col("doc_id").cast("long")
       .as("doc_id"))
-      .union(src.select(col("doc_id").cast("long").as("doc_id")))
+      .union(newRows.select(col("doc_id").cast("long").as("doc_id")))
       .distinct()
+    // Checkpointed (ids only): the bounded collect below and, over the
+    // cap, the grouped count and the anti-join all read the distinct ids,
+    // and would otherwise each re-evaluate the id projection of the fresh
+    // rows' lineage (for a fingerprint upsert that cannot prune past the
+    // per-document explode). LAZY: the collect computes it.
+    val upserted = idFrame.localCheckpoint(false)
     // DRIVER-HELD KEYS: one bounded collect of the distinct ids (a null
     // id replaces nothing, so it is left out). Under docIdPruneCap every
     // fact derived from them is computed on the driver: the touched
     // buckets ([[targetBuckets]], no job), their count, and the doc_id
     // verdicts of [[docIdCandidates]] (no job on an inline-metadata
     // store); the anti-join below runs against them as a local relation.
-    val held = idFrame.filter(col("doc_id").isNotNull)
+    // Over the cap the ids stay the checkpointed frame and key pruning is
+    // skipped — the stats envelopes admit nearly every file at that
+    // cardinality. One partition, so the bounded collect is one job that
+    // computes the whole checkpoint (a limit over several partitions
+    // scans them in rounds of jobs).
+    val held = upserted.filter(col("doc_id").isNotNull).coalesce(1)
       .limit(docIdPruneCap + 1).collect().map(_.getLong(0))
     val byDriver = held.length <= docIdPruneCap
-    // Over the cap the ids stay a FRAME, checkpointed (ids only): the
-    // grouped count and the anti-join below would otherwise each
-    // re-evaluate the id projection of the fresh rows' lineage. LAZY:
-    // the grouped count references it exactly once, so its job
-    // materializes the checkpoint. Key pruning is skipped there — the
-    // stats envelopes admit nearly every file at that cardinality.
-    lazy val upsertedDf = idFrame.localCheckpoint(false)
     val touched =
       if (byDriver) targetBuckets(spark, held.toSeq, buckets)
-      else withBucket(upsertedDf, buckets).groupBy("bucket")
+      else withBucket(upserted, buckets).groupBy("bucket")
         .agg(count(lit(1)).as("n")).collect().map(_.getLong(0)).toSet
     // only the TOUCHED buckets' entries ever reach the driver (the
     // untouched rest of the store carries through publishDelta without
@@ -2363,21 +2363,26 @@ object SnapshotStore {
     // cost ∝ admitting files, not whole-bucket file counts (at 10⁵+
     // one-row files per store this is the difference between rewriting
     // ~3k files per touched bucket and rewriting the handful that match).
-    val candidateEntries =
+    val meta0 = manifestMeta(spark, root, cur)
+    val keyCandidates =
       if (!byDriver) touchedEntries
-      else docIdCandidates(spark, root, manifestMeta(spark, root, cur),
-        touchedEntries, held.toSeq)
+      else docIdCandidates(spark, root, meta0, touchedEntries, held.toSeq)
+    val candidateEntries = storedIn.fold(keyCandidates) { case (c, vs) =>
+      statsAdmitting(spark, root, cur, meta0, keyCandidates, c, vs) }
     val v = cur + 1
     val merged = {
       // carried survivors read through assemble — the same dir-grouped,
       // SCHEMA-VALIDATED path read() uses (the previous inline copy
       // skipped the declared-vs-stored check, so a drifted touched
-      // bucket could be union-coerced and rewritten, masking the drift)
+      // bucket could be union-coerced and rewritten, masking the drift).
+      // Driver-held keys are a BROADCAST local relation: the anti-join
+      // then keeps the scan's split, so without a clusterBy the
+      // survivors are written by the tasks that read them
       val keys =
-        if (!byDriver) upsertedDf
+        if (!byDriver) upserted
         else {
           import spark.implicits._
-          held.toSeq.toDF("doc_id")
+          broadcast(held.toSeq.toDF("doc_id"))
         }
       val kept =
         if (candidateEntries.isEmpty) None
@@ -2385,12 +2390,17 @@ object SnapshotStore {
           .join(keys, Seq("doc_id"), "left_anti"))
       // allowMissingColumns: an upsert may carry new columns (schema
       // evolution) — surviving old rows null-fill them
-      kept.map(_.unionByName(fresh, allowMissingColumns = true))
-        .getOrElse(fresh)
+      def withKept(df: DataFrame) =
+        kept.map(_.unionByName(df, allowMissingColumns = true))
+          .getOrElse(df)
+      // over the cap the fresh rows are written as they come: a bulk
+      // upsert keeps its upstream parallelism and pays no bucket shuffle
+      clusterBy.fold(withKept(if (byDriver) freshByBucket(fresh) else fresh))(
+        lay => lay(withKept(fresh)))
     }
     // old files are immutable — no checkpoint fence needed before the
     // write; the attempt-unique dir keeps racers out of each other's files
-    val dirName = writeVersionDir(layout(merged), spark, root, v)
+    val dirName = writeVersionDir(merged, spark, root, v)
     // declared schema grows monotonically: current declaration + any
     // columns the fresh rows ADD (drops are impossible through upsert —
     // carried files retain every stored column)
@@ -3206,6 +3216,59 @@ object SnapshotStore {
     * SLOWER than reading the whole snapshot (6.8 s vs 2.9 s); this is
     * one pass. Conservative like readWhere: no stats for the column (or
     * no declaration) keeps every file. */
+  /** The relpaths whose INLINE `#stat` line for `colName` provably
+    * holds none of `canonVals` (canonical stat strings, [[canonAs]]). */
+  private def inlineStatRejects(meta: Seq[String], colName: String,
+      canonVals: Seq[String]): Set[String] =
+    meta.filter(_.startsWith("#stat\t")).flatMap { l =>
+      val a = l.split("\t", 7)
+      if (a.length == 7 && a(2) == colName && canonVals.forall(x =>
+          statsReject(a(3).toLong, a(4).toLong, Some(a(5)).filter(_.nonEmpty),
+            Some(a(6)).filter(_.nonEmpty), Some(x), Some(x))))
+        Some(a(1))
+      else None
+    }.toSet
+
+  /** The relpaths (column `rel`) whose SIDECAR stat row for `colName`
+    * provably holds none of `canonVals`, evaluated on the executors. */
+  private def sidecarStatRejects(spark: SparkSession, root: String,
+      rel: String, colName: String, canonVals: Seq[String]): DataFrame = {
+    import spark.implicits._
+    val cv = canonVals // local vals: closure must not capture `this`
+    val cn = colName
+    sidecarDf(spark, root, rel)
+      .filter(col("kind") === "stat" && col("col") === cn)
+      .select("rel", "rows", "nulls", "mn", "mx")
+      .as[(String, Long, Long, Option[String], Option[String])]
+      .flatMap { case (p, rows, nulls, mn, mx) =>
+        if (cv.forall(x =>
+          statsReject(rows, nulls, mn, mx, Some(x), Some(x)))) Some(p)
+        else None
+      }.toDF("rel")
+  }
+
+  /** `entries` minus the files whose `colName` stats envelope provably
+    * holds none of `values`: inline lines evaluate on the driver, sidecar
+    * rows on the executors (only the rejected relpaths collect). Files
+    * without a stat line, or a store not declaring `colName`, keep every
+    * entry. */
+  private def statsAdmitting(spark: SparkSession, root: String, v: Long,
+      meta: Seq[String], entries: Seq[(Long, String)], colName: String,
+      values: Seq[Any]): Seq[(Long, String)] = {
+    val declaredStats = statColsLineOf(meta).map(parseStatCols)
+      .getOrElse(Nil)
+    if (entries.isEmpty || !declaredStats.contains(colName)) return entries
+    val declared = declaredCols(spark, root, v).getOrElse(
+      schemaCols(read(spark, root, v).schema)).toMap
+    val t = probeType(declared, colName, root, "upsert")
+    val canonVals = values.map(x => canonAs(spark, x, t, colName))
+    val sideRejected = metaFileRelOf(meta).fold(Set.empty[String])(rel =>
+      sidecarStatRejects(spark, root, rel, colName, canonVals)
+        .collect().map(_.getString(0)).toSet)
+    val rejected = sideRejected ++ inlineStatRejects(meta, colName, canonVals)
+    entries.filterNot(e => rejected.contains(e._2))
+  }
+
   def readWhereIn(spark: SparkSession, root: String, colName: String,
       values: Seq[Any], version: Long = -1L): DataFrame = {
     require(values.nonEmpty, "readWhereIn needs at least one probe value")
@@ -3232,19 +3295,7 @@ object SnapshotStore {
     val kept0 = (if (statDeclared) metaFileRelOf(meta) else None) match {
       case None => readManifest(spark, root, v).sortBy(identity)
       case Some(rel) =>
-        import spark.implicits._
-        val cv = canonVals // local vals: closure must not capture `this`
-        val cn = colName
-        val rej = sidecarDf(spark, root, rel)
-          .filter(col("kind") === "stat" && col("col") === cn)
-          .select("rel", "rows", "nulls", "mn", "mx")
-          .as[(String, Long, Long, Option[String], Option[String])]
-          .flatMap { case (p, rows, nulls, mn, mx) =>
-            if (cv.forall(x =>
-              statsReject(rows, nulls, mn, mx, Some(x), Some(x))))
-              Some(p)
-            else None
-          }.toDF("rel")
+        val rej = sidecarStatRejects(spark, root, rel, colName, canonVals)
         liveEntriesDf(spark, root, v)
           .join(rej, Seq("rel"), "left_anti").select("bucket", "rel")
           .collect()
@@ -3254,21 +3305,8 @@ object SnapshotStore {
     val kept =
       if (!statDeclared) kept0
       else {
-        val inline = meta.filter(_.startsWith("#stat\t")).flatMap { l =>
-          val a = l.split("\t", 7)
-          if (a.length == 7 && a(2) == colName)
-            Some(a(1) -> ((a(3).toLong, a(4).toLong,
-              Some(a(5)).filter(_.nonEmpty), Some(a(6)).filter(_.nonEmpty))))
-          else None
-        }.toMap
-        kept0.filter { case (_, p) =>
-          inline.get(p) match {
-            case None => true
-            case Some((rows, nulls, mn, mx)) =>
-              !canonVals.forall(x =>
-                statsReject(rows, nulls, mn, mx, Some(x), Some(x)))
-          }
-        }
+        val rejected = inlineStatRejects(meta, colName, canonVals)
+        kept0.filterNot(e => rejected.contains(e._2))
       }
     val base =
       if (kept.nonEmpty) assemble(spark, root, v, kept)
@@ -3366,7 +3404,7 @@ object SnapshotStore {
     val survivors = assemble(spark, root, cur, candidates)
       .filter(!hit || c.isNull)
     val v = cur + 1
-    val dirName = writeVersionDir(byBucket(survivors), spark, root, v)
+    val dirName = writeVersionDir(survivors, spark, root, v)
     publishDelta(spark, root, v,
       listVersionFiles(spark, root, dirName),
       candidates.map(_._2).toSet,
@@ -3407,7 +3445,7 @@ object SnapshotStore {
     val survivors = assemble(spark, root, cur, candidates)
       .filter(c =!= lit(value).cast(dt) || c.isNull)
     val v = cur + 1
-    val dirName = writeVersionDir(byBucket(survivors), spark, root, v)
+    val dirName = writeVersionDir(survivors, spark, root, v)
     publishDelta(spark, root, v,
       listVersionFiles(spark, root, dirName),
       candidates.map(_._2).toSet,

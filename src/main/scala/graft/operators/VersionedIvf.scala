@@ -9,8 +9,8 @@ import graft.functions.VectorFunctions
   * [[SnapshotStore]] version, so no crash can tear centroids from cells:
   *
   *  - vector rows are store rows (`doc_id` = vec_id, a payload,
-  *    `cent_id`), written range-clustered by cent_id so the per-file
-  *    cent_id stats envelopes are tight. The payload is the flat
+  *    `cent_id`), written in cent_id bands ([[clustered]]) so the
+  *    per-file cent_id stats envelopes are tight. The payload is the flat
   *    `embedding` ([[write]]) or the SQ8 tier's symmetric-int8 `q8`
   *    codes ([[writeSq]]);
   *  - the centroid table rides the SAME manifest as `#ivfcent` metadata
@@ -29,9 +29,9 @@ import graft.functions.VectorFunctions
   *    serialize — the loser re-reads the winner's geometry and
   *    re-derives its rows, and a manifest can never carry stale
   *    `#ivfcent` lines against newer rows' cent_ids;
-  *  - maintenance keeps the layout: every verb hands the store its rows
-  *    in cent_id range bands ([[clustered]]), and the store's upsert
-  *    writes the rows it carries in the same bands, so after an upsert,
+  *  - maintenance keeps the layout: every verb has the store write the
+  *    rows it adds AND the surviving rows of the files it rewrites in
+  *    the same cent_id bands ([[upsertRows]]), so after an upsert,
   *    delete or rebalance each file still covers a narrow cent_id band.
   *
   * Search pruning: the store declares doc_id + cent_id statistics, so a
@@ -123,10 +123,10 @@ object VersionedIvf {
 
   /** Build and publish version 1: assign every vector to its nearest
     * centroid cell (the [[IvfIndex.centroids]] deterministic seeds) and
-    * commit rows + geometry in one manifest. Rows repartition by
-    * cent_id RANGE before the commit so each written file covers a
-    * narrow cent_id band — that is what makes the stats-skipping probe
-    * path open ~1/k of the files per probed cell. */
+    * commit rows + geometry in one manifest. Rows are partitioned into
+    * cent_id bands ([[clustered]]) before the commit so each written
+    * file covers a narrow cent_id band — that is what makes the
+    * stats-skipping probe path open ~1/k of the files per probed cell. */
   def write(emb: DataFrame, k: Int, root: String,
       buckets: Int = 4): Long =
     writeWith(emb, k, root, buckets, col("embedding"))
@@ -150,7 +150,8 @@ object VersionedIvf {
   private def writeWith(emb: DataFrame, k: Int, root: String,
       buckets: Int, payload: Column): Long = {
     val cents = IvfIndex.centroids(emb, k)
-    SnapshotStore.commit(assignRows(emb, cents, payload), root, buckets,
+    SnapshotStore.commit(clustered(assignRows(emb, cents, payload),
+      cents.map(_._1)), root, buckets,
       meta = centLines(cents) :+
         SnapshotStore.statsDeclaration(Seq("doc_id", "cent_id")))
   }
@@ -168,38 +169,60 @@ object VersionedIvf {
     * inside [[SnapshotStore.withConflictRetry]], so a racing verb
     * can never make this manifest carry stale centroid lines against
     * the winner's rows — the retry re-reads geometry and re-assigns.
-    * Jobs per call: 8–9 (the dim check's two, the id collect's two, the
-    * key broadcast, the cent_id bands' sampling and map stage, the
-    * write). Returns the new version. */
+    * Jobs per call: 7 (the dim check's two, the id collect's two, the
+    * key broadcast, the cent_id bands' map stage, the write). Returns
+    * the new version. */
   def upsert(spark: SparkSession, root: String, emb: DataFrame): Long =
     SnapshotStore.withConflictRetry(spark, root) { observed =>
       requirePublished(observed, root, "upsert")
       requireFlat(spark, root, observed, "upsert")
       val cents = storedCentroids(spark, root, observed)
       IvfIndex.requireDim(emb, cents, "VersionedIvf.upsert")
-      SnapshotStore.upsert(spark, assignRows(emb, cents), idsOf(emb), root,
-        bucketsAt(spark, root, observed), meta = centLines(cents),
-        expectedVersion = Some(observed))
+      upsertRows(spark, root, observed, assignRows(emb, cents),
+        cents.map(_._1), centLines(cents))
     }
 
   private def assignRows(emb: DataFrame,
       cents: Array[(Long, Array[Long])],
       payload: Column = col("embedding")): DataFrame =
-    clustered(IvfIndex.cellAssign(emb, cents)
+    IvfIndex.cellAssign(emb, cents)
       .select(col("vec_id").cast("long").as("doc_id"), payload,
-        col("cent_id")), cents.length)
+        col("cent_id"))
 
-  /** The index's file layout: rows range-partitioned by cent_id into
-    * `max(4, cells / 2)` bands, so every written file covers a narrow
-    * cent_id band. Every verb hands its rows to the store in this form;
-    * [[SnapshotStore.upsert]] gives the rows it carries the same
-    * clustering, so maintenance keeps the layout [[write]] made. */
-  private[operators] def clustered(rows: DataFrame, cells: Int): DataFrame =
-    rows.repartitionByRange(math.max(4, cells / 2), col("cent_id"))
+  /** The index's file layout for a geometry with cells `cellIds`: rows
+    * partitioned into `max(4, cells / 2)` cent_id bands, each a run of
+    * consecutive cells in cent_id order, so every written file covers at
+    * most ⌈cells / bands⌉ cells (two or three) and every cell lies in
+    * one band. A row's band comes
+    * from its cent_id alone, so laying rows out costs one shuffle and no
+    * sampling pass. */
+  private[operators] def clustered(rows: DataFrame,
+      cellIds: Seq[Long]): DataFrame = {
+    val ids = cellIds.sorted
+    val bands = math.max(4, ids.length / 2)
+    val bandOf = typedLit(ids.zipWithIndex.map { case (c, i) =>
+      c -> (i.toLong * bands / ids.length).toInt }.toMap)
+    rows.repartitionById(bands,
+      coalesce(try_element_at(bandOf, col("cent_id")), lit(0)))
+  }
 
-  /** The ids of an input vector frame, as the store's key. */
-  private[operators] def idsOf(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id").cast("long").as("doc_id"))
+  /** A maintenance verb's publish against the `observed` version:
+    * `rows` replace the stored rows of their own ids (the store's upsert
+    * keys on newRows' ids itself) and the ids in `deleted` lose theirs;
+    * `meta` carries the geometry lines. Everything written, the rows and
+    * the survivors of the rewritten files, is laid out in the cent_id
+    * bands of the geometry with cells `cellIds`. `fromCells`: the cells
+    * that stored every replaced row, when known (a rebalance's split
+    * cells), so only their bands' files are rewritten. */
+  private[operators] def upsertRows(spark: SparkSession, root: String,
+      observed: Long, rows: DataFrame, cellIds: Seq[Long],
+      meta: Seq[String], deleted: Option[DataFrame] = None,
+      fromCells: Option[Seq[Long]] = None): Long =
+    SnapshotStore.upsert(spark, rows,
+      deleted.getOrElse(rows.select("doc_id").limit(0)), root,
+      bucketsAt(spark, root, observed), meta, Some(observed),
+      clusterBy = Some(clustered(_, cellIds)),
+      storedIn = fromCells.map("cent_id" -> _))
 
   /** EXACTLY-ONCE micro-batch upsert — [[upsert]] carrying a
     * [[SnapshotStore.txnMarker]], the verb a Structured Streaming
@@ -235,7 +258,8 @@ object VersionedIvf {
             "write() an index first, or pass bootstrapCells to train " +
             "from the first batch"))
         val cents = IvfIndex.centroids(emb, k)
-        SnapshotStore.commit(assignRows(emb, cents), root, buckets,
+        SnapshotStore.commit(clustered(assignRows(emb, cents),
+          cents.map(_._1)), root, buckets,
           meta = centLines(cents) ++ Seq(
             SnapshotStore.statsDeclaration(Seq("doc_id", "cent_id")),
             SnapshotStore.txnMarker(streamId, batchId)),
@@ -244,11 +268,9 @@ object VersionedIvf {
         requireFlat(spark, root, observed, "upsertBatch")
         val cents = storedCentroids(spark, root, observed)
         IvfIndex.requireDim(emb, cents, "VersionedIvf.upsertBatch")
-        SnapshotStore.upsert(spark, assignRows(emb, cents), idsOf(emb),
-          root, bucketsAt(spark, root, observed),
-          meta = centLines(cents) :+
-            SnapshotStore.txnMarker(streamId, batchId),
-          expectedVersion = Some(observed))
+        upsertRows(spark, root, observed, assignRows(emb, cents),
+          cents.map(_._1),
+          centLines(cents) :+ SnapshotStore.txnMarker(streamId, batchId))
       }
     }
 
@@ -259,19 +281,18 @@ object VersionedIvf {
     * `expectedVersion` under [[SnapshotStore.withConflictRetry]] so a
     * concurrent rebalance cannot be overwritten with its pre-split
     * centroids. The surviving rows of the rewritten files are written
-    * in cent_id bands like [[write]]'s. Jobs per call: 5 (the id
-    * collect's two, the bands' sampling and map stage, the write).
-    * Returns the new version. */
+    * in the index's cent_id bands. Jobs per call: 4 (the id collect,
+    * the key broadcast, the bands' map stage, the write). Returns the
+    * new version. */
   def delete(spark: SparkSession, root: String, ids: DataFrame): Long =
     SnapshotStore.withConflictRetry(spark, root) { observed =>
       requirePublished(observed, root, "delete")
       val cents = storedCentroids(spark, root, observed)
       val empty = SnapshotStore.read(spark, root, observed)
         .drop("bucket").limit(0)
-      SnapshotStore.upsert(spark, clustered(empty, cents.length),
-        idsOf(ids), root, bucketsAt(spark, root, observed),
-        meta = centLines(cents),
-        expectedVersion = Some(observed))
+      upsertRows(spark, root, observed, empty, cents.map(_._1),
+        centLines(cents),
+        deleted = Some(ids.select(col("vec_id").cast("long").as("doc_id"))))
     }
 
   /** OPTIMIZE for the stored ANN index: split every over-populated cell
@@ -315,13 +336,11 @@ object VersionedIvf {
       IvfIndex.splitPlan(spark, index, cents, hotFactor, pre) match {
         case None => (0, carry.filter(_._1 == observed))
         case Some(p) =>
-          val rows = clustered(p.merged
-            .select(col("vec_id").as("doc_id"), col("embedding"),
-              col("cent_id")), p.newCents.length)
-          val published = SnapshotStore.upsert(spark, rows,
-            idsOf(p.merged), root, bucketsAt(spark, root, observed),
-            meta = centLines(p.newCents),
-            expectedVersion = Some(observed))
+          val published = upsertRows(spark, root, observed,
+            p.merged.select(col("vec_id").as("doc_id"), col("embedding"),
+              col("cent_id")),
+            p.newCents.map(_._1), centLines(p.newCents),
+            fromCells = Some(p.hot))
           (p.splitCount, Some((published, p.postCounts)))
       }
     }

@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   *  - rows are `(doc_id = vec_id, cent_id, codes)` — one row per vector,
   *    its m PQ codes as a single array cell (the 32×-compressed
   *    representation; raw embeddings are NOT stored, which is the point
-  *    of serving ANN from codes at 100 TB) — written range-clustered by
-  *    cent_id with doc_id + cent_id statistics declared, so probes read
+  *    of serving ANN from codes at 100 TB) — written in cent_id bands
+  *    ([[VersionedIvf.clustered]], by every maintenance verb too) with
+  *    doc_id + cent_id statistics declared, so probes read
   *    cells through stats skipping and keyed verbs prune by doc_id;
   *  - the coarse centroids ride as `#ivfcent` lines, the PQ codebook as
   *    `#pqcent` lines, and `(dim, m, k)` as a `#pqgeom` line — a few KB
@@ -98,15 +99,15 @@ object VersionedIvfAdc {
 
   /** Assign + encode in ONE scan: nearest coarse cell from the fused
     * cell-distance projection, m PQ codes from the fused code
-    * projection — no join, no shuffle beyond the final range
-    * clustering. */
+    * projection — no join, no shuffle. Writers lay the rows out in
+    * cent_id bands ([[VersionedIvf.clustered]]). */
   private def encodedRows(emb: DataFrame,
       coarse: Array[(Long, Array[Long])],
       book: Array[(Long, Array[Long])], dim: Int, m: Int): DataFrame =
-    VersionedIvf.clustered(IvfIndex.cellAssign(emb, coarse)
+    IvfIndex.cellAssign(emb, coarse)
       .select(col("vec_id").cast("long").as("doc_id"),
         col("cent_id"),
-        PqIndex.codesColumn(book, dim, m).as("codes")), coarse.length)
+        PqIndex.codesColumn(book, dim, m).as("codes"))
 
   /** Build and publish version 1: both quantizers trained (the
     * deterministic first-k seeds [[IvfIndex.centroids]] /
@@ -116,7 +117,8 @@ object VersionedIvfAdc {
       k: Int = 16, nCells: Int = 16, buckets: Int = 4): Long = {
     val coarse = IvfIndex.centroids(emb, nCells)
     val book = PqIndex.collectCodebook(emb, k)
-    SnapshotStore.commit(encodedRows(emb, coarse, book, dim, m), root,
+    SnapshotStore.commit(VersionedIvf.clustered(
+      encodedRows(emb, coarse, book, dim, m), coarse.map(_._1)), root,
       buckets, meta = metaLines(coarse, book, dim, m, k) :+
         SnapshotStore.statsDeclaration(Seq("doc_id", "cent_id")))
   }
@@ -134,10 +136,9 @@ object VersionedIvfAdc {
       val coarse = storedCoarse(spark, root, observed)
       val book = storedBook(spark, root, observed)
       IvfIndex.requireDim(emb, coarse, "VersionedIvfAdc.upsert")
-      SnapshotStore.upsert(spark, encodedRows(emb, coarse, book, dim, m),
-        VersionedIvf.idsOf(emb), root, bucketsAt(spark, root, observed),
-        meta = metaLines(coarse, book, dim, m, k),
-        expectedVersion = Some(observed))
+      VersionedIvf.upsertRows(spark, root, observed,
+        encodedRows(emb, coarse, book, dim, m), coarse.map(_._1),
+        metaLines(coarse, book, dim, m, k))
     }
 
   /** Streamed-bootstrap codebook: the k LOWEST-vec_id vectors of the
@@ -202,7 +203,8 @@ object VersionedIvfAdc {
               "to train both quantizers from the first batch"))
         val coarse = IvfIndex.centroids(emb, nCells)
         val book = bootstrapBook(emb, k)
-        SnapshotStore.commit(encodedRows(emb, coarse, book, dim, m),
+        SnapshotStore.commit(VersionedIvf.clustered(
+          encodedRows(emb, coarse, book, dim, m), coarse.map(_._1)),
           root, buckets, meta = metaLines(coarse, book, dim, m, k) ++ Seq(
             SnapshotStore.statsDeclaration(Seq("doc_id", "cent_id")),
             SnapshotStore.txnMarker(streamId, batchId)),
@@ -212,12 +214,10 @@ object VersionedIvfAdc {
         val coarse = storedCoarse(spark, root, observed)
         val book = storedBook(spark, root, observed)
         IvfIndex.requireDim(emb, coarse, "VersionedIvfAdc.upsertBatch")
-        SnapshotStore.upsert(spark,
-          encodedRows(emb, coarse, book, sDim, sM), VersionedIvf.idsOf(emb),
-          root, bucketsAt(spark, root, observed),
-          meta = metaLines(coarse, book, sDim, sM, sK) :+
-            SnapshotStore.txnMarker(streamId, batchId),
-          expectedVersion = Some(observed))
+        VersionedIvf.upsertRows(spark, root, observed,
+          encodedRows(emb, coarse, book, sDim, sM), coarse.map(_._1),
+          metaLines(coarse, book, sDim, sM, sK) :+
+            SnapshotStore.txnMarker(streamId, batchId))
       }
     }
 
@@ -231,11 +231,9 @@ object VersionedIvfAdc {
       val book = storedBook(spark, root, observed)
       val empty = SnapshotStore.read(spark, root, observed)
         .drop("bucket").limit(0)
-      SnapshotStore.upsert(spark,
-        VersionedIvf.clustered(empty, coarse.length), VersionedIvf.idsOf(ids),
-        root, bucketsAt(spark, root, observed),
-        meta = metaLines(coarse, book, dim, m, k),
-        expectedVersion = Some(observed))
+      VersionedIvf.upsertRows(spark, root, observed, empty,
+        coarse.map(_._1), metaLines(coarse, book, dim, m, k),
+        deleted = Some(ids.select(col("vec_id").cast("long").as("doc_id"))))
     }
 
   /** Hot-cell split on the COMPRESSED layout — [[VersionedIvf.rebalance]]
@@ -277,14 +275,11 @@ object VersionedIvfAdc {
       IvfIndex.splitPlan(spark, index, coarse, hotFactor, pre) match {
         case None => (0, carry.filter(_._1 == observed))
         case Some(p) =>
-          val rows = VersionedIvf.clustered(p.merged
-            .select(col("vec_id").as("doc_id"), col("cent_id"),
-              col("codes")), p.newCents.length)
-          val published = SnapshotStore.upsert(spark, rows,
-            VersionedIvf.idsOf(p.merged), root,
-            bucketsAt(spark, root, observed),
-            meta = metaLines(p.newCents, book, dim, m, k),
-            expectedVersion = Some(observed))
+          val published = VersionedIvf.upsertRows(spark, root, observed,
+            p.merged.select(col("vec_id").as("doc_id"), col("cent_id"),
+              col("codes")),
+            p.newCents.map(_._1), metaLines(p.newCents, book, dim, m, k),
+            fromCells = Some(p.hot))
           (p.splitCount, Some((published, p.postCounts)))
       }
     }
@@ -356,10 +351,9 @@ object VersionedIvfAdc {
       val trained = IvfIndex.trainCentroids(seedSrc, k, iters, trainSample)
       val book = trained.sortBy(_._1).zipWithIndex
         .map { case ((_, q), i) => (i.toLong, q) }
-      SnapshotStore.upsert(spark, encodedRows(src, coarse, book, dim, m),
-        VersionedIvf.idsOf(src), root, bucketsAt(spark, root, observed),
-        meta = metaLines(coarse, book, dim, m, k),
-        expectedVersion = Some(observed))
+      VersionedIvf.upsertRows(spark, root, observed,
+        encodedRows(src, coarse, book, dim, m), coarse.map(_._1),
+        metaLines(coarse, book, dim, m, k))
     }
 
   /** `(q_id, j, code, dist)` — exact integer subspace distances of the

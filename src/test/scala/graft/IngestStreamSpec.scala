@@ -981,15 +981,10 @@ class IngestStreamSpec extends SparkTestBase {
     docs.zipWithIndex.foreach { case (d, i) => land(d, s"f$i.parquet") }
 
     // six paced single-doc batches, compaction armed at 2 files/bucket:
-    // on a store that declares doc_id stats (bootstrapped empty here)
-    // every batch is a pure-delta upsert (fresh doc_ids carry the
-    // bucket's files), so WITHOUT the policy the hot bucket's file count
-    // grows one per batch forever — the policy's probe runs after each
-    // commit and compacts any bucket the moment it crosses the cap, so
-    // steady state is ≤ cap files
-    SnapshotStore.commit(IngestionPipeline.buildIndexFrom(docs.head, 20, 5,
-      8).limit(0), store, buckets = 2,
-      meta = Seq(SnapshotStore.statsDeclaration(Seq("doc_id"))))
+    // every batch is a pure-delta upsert (fresh doc_ids), so WITHOUT the
+    // policy the hot bucket's file count grows one per batch forever —
+    // the policy's probe runs after each commit and compacts any bucket
+    // the moment it crosses the cap, so steady state is ≤ cap files
     IngestStream.transactionalAvailable(spark, src, store, cp,
       streamId = "frag", buckets = 2, chunkSize = 20, overlap = 5,
       dim = 8, maxFilesPerTrigger = Some(1), compactOver = Some(2))

@@ -8,8 +8,9 @@ import graft.operators.{IvfIndex, SnapshotStore, VersionedIvf,
   VersionedIvfAdc}
 
 /** Maintenance keeps the stored index's cent_id clustering: after an
-  * upsert, a delete and a rebalance, the rows each verb rewrites or
-  * carries are written in cent_id bands like [[VersionedIvf.write]]'s,
+  * upsert, a delete and a rebalance, the rows each verb writes (its new
+  * rows and the survivors of the files it rewrites) are laid out in
+  * cent_id bands like [[VersionedIvf.write]]'s,
   * so a one-cell narrow probe still opens only the probed cell's files
   * ([[ProbeFiles.check]]) and no larger share of the index's files than
   * right after the write. Both tiers: flat ([[VersionedIvf]]) and

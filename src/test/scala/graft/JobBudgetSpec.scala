@@ -33,10 +33,10 @@ import graft.operators.{BfsHops, PageRank, SnapshotStore, VersionedIvf,
   *  - WeightedSssp.run, earlyExit, 6 rounds: 54 → 7
   *
   * Keyed writes (jobs per call, before → after driver-held upsert keys
-  * and one written layout for the merged rows):
+  * and cent_id bands computed from the cent_id):
   *  - SnapshotStore.upsert, key-only store, inline metadata: 9 → 5
-  *  - VersionedIvf.upsert:                 15 → 9
-  *  - VersionedIvf.delete:                  8 → 5
+  *  - VersionedIvf.upsert:                 15 → 7
+  *  - VersionedIvf.delete:                  8 → 4
   */
 class JobBudgetSpec extends SparkTestBase {
 
@@ -158,8 +158,8 @@ class JobBudgetSpec extends SparkTestBase {
     info(s"SnapshotStore.upsert: $up jobs, VersionedIvf.upsert: $vup, " +
       s"VersionedIvf.delete: $vdel")
     assert(up <= 5, s"key-only upsert launched $up jobs")
-    assert(vup <= 9, s"VersionedIvf.upsert launched $vup jobs")
-    assert(vdel <= 5, s"VersionedIvf.delete launched $vdel jobs")
+    assert(vup <= 7, s"VersionedIvf.upsert launched $vup jobs")
+    assert(vdel <= 4, s"VersionedIvf.delete launched $vdel jobs")
   }
 
   /** Jobs and rounds of one warm graph-operator call, collect included. */

