@@ -309,15 +309,15 @@ object ScaleRehearsal {
       SnapshotStore.upsert(spark, fresh, fresh.select("doc_id"),
         root, buckets = 32)
     }
-    // the KEY-PRUNED upsert's whole point: 10 fresh ids against 10^5
-    // one-row files may rewrite only the files that can contain them
-    // (bloom/stats admitting), never the touched buckets wholesale
-    // (~3.1k files per bucket at 32 buckets)
+    // the merge-on-read upsert's whole point: 10 fresh ids against 10^5
+    // one-row files rewrite no carried file (a delete entry masks the
+    // replaced rows), never the touched buckets wholesale (~3.1k files
+    // per bucket at 32 buckets)
     val relsAfterUpsert = SnapshotStore.manifestEntries(spark, root,
       SnapshotStore.currentVersion(spark, root).get).map(_._2).toSet
     val rewritten = relsBefore.diff(relsAfterUpsert).size
     require(rewritten <= 64,
-      s"upsert rewrote $rewritten carried files — key pruning off?")
+      s"upsert rewrote $rewritten carried files — merge-on-read off?")
     report += "manifest_upsert_files_rewritten" -> rewritten.toDouble
     require(SnapshotStore.readPoint(spark, root, "k", s"key_$rows")
       .count() == 1L, "upserted key not findable")

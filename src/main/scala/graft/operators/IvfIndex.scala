@@ -295,6 +295,13 @@ object IvfIndex {
     if (!r.isNullAt(0)) checkDim(r.getInt(0), r.getInt(1), cents, what)
   }
 
+  /** [[requireDim]] riding a pass the caller already makes: the
+    * per-row dimension to aggregate and the check of its (min, max), for
+    * [[SnapshotStore.upsert]]'s `freshRange` (same named error). */
+  private[operators] def dimGuard(cents: Array[(Long, Array[Long])],
+      what: String): (Column, (Int, Int) => Unit) =
+    (dimOf(col("embedding")), (lo, hi) => checkDim(lo, hi, cents, what))
+
   /** A vector's dimension; -1 for a null vector (never a centroid dim). */
   private def dimOf(c: Column): Column = coalesce(size(c), lit(-1))
 
@@ -354,11 +361,10 @@ object IvfIndex {
     * [[VersionedIvf.rebalance]] and [[VersionedIvfAdc.rebalance]] publish
     * as ONE atomic SnapshotStore version. `merged` holds the hot cells'
     * rows with their NEW cent_id (all original columns, checkpointed);
-    * `hot` the ids of the split cells, which held every row of `merged`
-    * before the split; `newCents` is the complete new centroid table;
+    * `newCents` is the complete new centroid table;
     * `postCounts` the per-cell populations after the split. */
   private[operators] final case class SplitPlan(merged: DataFrame,
-      hot: Seq[Long], newCents: Array[(Long, Array[Long])],
+      newCents: Array[(Long, Array[Long])],
       splitCount: Int, postCounts: Array[(Long, Long)])
 
   /** Compute the split of `index` (vec_id, embedding, cent_id, extras)
@@ -503,7 +509,7 @@ object IvfIndex {
     val hotSet = hot.toSet
     val postCounts = (counts.filterNot(c => hotSet.contains(c._1)) ++
       mergedCounts).sortBy(_._1)
-    Some(SplitPlan(merged, hot.toSeq, newCents,
+    Some(SplitPlan(merged, newCents,
       hot.count(c => survivors.contains(newIdOf(c))), postCounts))
   }
 

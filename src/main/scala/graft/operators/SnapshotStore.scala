@@ -25,19 +25,24 @@ import org.apache.spark.sql.functions._
   * follow manifest relpaths):
   * {{{
   *   data/v00001-<uuid>/bucket=<b>/part-*.parquet — version 1's new files
-  *   data/v00002-<uuid>/bucket=<b>/part-*.parquet — only the buckets v2 rewrote
+  *   data/v00002-<uuid>/bucket=<b>/part-*.parquet — v2's fresh rows only
   *   _versions/v00001.manifest                    — "<bucket>\t<relpath>" lines
-  *   _versions/v00002.manifest                    — untouched v1 files + v2's
+  *   _versions/v00002.manifest                    — v1's files + v2's, and
+  *                                                  v2's delete entry
   * }}}
   *
-  * An upsert rewrites ONLY the touched buckets' rows into the new
-  * version's data dir; the new manifest carries every untouched bucket's
-  * entries forward verbatim — file-level reuse, so commit cost scales
-  * with the delta, not the index. Because old files are never mutated or
-  * deleted by a commit, prior versions stay readable (time travel) until
-  * [[vacuum]] drops them, and no localCheckpoint fence is needed (the
-  * bucketed dynamic-overwrite upsert must materialize its merge before
-  * deleting what it reads; here nothing is ever deleted on commit).
+  * Keyed writes are MERGE-ON-READ: an upsert writes only its fresh rows
+  * into the new version's data dir, and a [[deleteWhere]]/[[deletePoint]]
+  * writes no data file at all. Each records what it removed as a delete
+  * entry in the new manifest, tagged with its version (the upserted
+  * doc_id set, or the verb's own range/point predicate), and every read
+  * drops the rows an entry newer than their data dir matches (see the
+  * delete-set notes below). The manifest carries every existing file
+  * forward verbatim, so commit cost scales with the delta, not the index;
+  * an [[optimize]] folds the entries into rewritten files. Because old
+  * files are never mutated or deleted by a commit, prior versions stay
+  * readable (time travel) until [[vacuum]] drops them, and no
+  * localCheckpoint fence is needed (nothing is ever deleted on commit).
   *
   * Concurrency contract: OPTIMISTIC single-winner. Pass
   * `expectedVersion` (the version a writer based its work on; 0 = empty
@@ -912,13 +917,13 @@ object SnapshotStore {
 
   /** Distinct-doc_id count above which the keyed upsert keeps its ids a
     * frame instead of collecting them (its bounded collect stops at one
-    * past this), SKIPS key pruning ([[docIdCandidates]]) and treats
-    * every touched-bucket file as a candidate. The pruning path holds
-    * the sorted id set on the driver (and, on a sidecar store,
-    * broadcasts it with its bloom probe positions as ONE row); past
-    * this many keys that is an OOM/broadcast risk and the prune admits
-    * nearly everything anyway. private[graft] var so the spec can force
-    * the fallback on small fixtures. */
+    * past this) and rewrites its touched buckets whole instead of
+    * publishing a delete entry, and above which [[docIdCandidates]]
+    * skips key pruning. Under it the id set is held on the driver (and,
+    * on a sidecar store, broadcast with its bloom probe positions as ONE
+    * row); past this many keys that is an OOM/broadcast risk and the
+    * prune admits nearly everything anyway. private[graft] var so the
+    * spec can force the fallback on small fixtures. */
   @volatile private[graft] var docIdPruneCap: Int = 200000
 
   private def entryFileLine(rel: String) = s"#entryfile\t$rel"
@@ -991,6 +996,196 @@ object SnapshotStore {
     val rel = entryFileRelName(v)
     entries.write.mode("overwrite").parquet(s"$root/$rel")
     rel
+  }
+
+  // ---- merge-on-read delete set --------------------------------------
+  //
+  // A keyed write publishes only its delta: an upsert writes its fresh
+  // rows, a deleteWhere/deletePoint writes no data file, and each records
+  // what it removed as ONE delete entry in the new manifest, tagged with
+  // the version that published it (the shape of Iceberg v2 equality
+  // deletes):
+  //   #del\t<v>\tids\t<id>,<id>,…           — an upserted doc_id set
+  //   #del\t<v>\tidfile\t<rel>               — the same set past
+  //                                            [[entryThreshold]] ids, as a
+  //                                            parquet file under meta/
+  //   #del\t<v>\trange\t<col>\t<lo>\t<hi>    — deleteWhere's bounds, or
+  //                                            deletePoint's value as lo = hi
+  // Bounds are [[canonAs]]' canonical strings; an empty bound is open.
+  // A row stored in data dir `data/v<d>-…` is LIVE iff no entry with
+  // version > d matches it — the equality-delete sequence rule, so an
+  // upsert's fresh rows (dir v) survive its own entry (version v) while
+  // every older copy of their ids does not. [[assemble]] applies the rule
+  // per dir as one filter over driver-held values (an IN set, a range);
+  // a dir newer than every entry, and any version without entries, reads
+  // unfiltered. A range deletes only rows it holds TRUE for (SQL DELETE:
+  // a NULL is kept). The verbs that keep older files live carry their
+  // parent's entries; [[publish]] drops an entry once no live file is
+  // older than it, so a full optimize or commit folds them all.
+
+  private sealed trait DeleteEntry { def version: Long }
+  private final case class IdsDeleted(version: Long, ids: Seq[Long])
+    extends DeleteEntry
+  private final case class IdFileDeleted(version: Long, rel: String)
+    extends DeleteEntry
+  private final case class RangeDeleted(version: Long, colName: String,
+      lo: Option[String], hi: Option[String]) extends DeleteEntry
+
+  private val DeletePrefix = "#del\t"
+
+  private def deleteLine(e: DeleteEntry): String = e match {
+    case IdsDeleted(v, ids) => s"$DeletePrefix$v\tids\t${ids.mkString(",")}"
+    case IdFileDeleted(v, rel) => s"$DeletePrefix$v\tidfile\t$rel"
+    case RangeDeleted(v, c, lo, hi) =>
+      s"$DeletePrefix$v\trange\t$c\t${lo.getOrElse("")}\t${hi.getOrElse("")}"
+  }
+
+  private def deleteLinesOf(meta: Seq[String]): Seq[String] =
+    meta.filter(_.startsWith(DeletePrefix))
+
+  private def parseDeletes(meta: Seq[String]): Seq[DeleteEntry] =
+    deleteLinesOf(meta).map { l =>
+      val a = l.split("\t", -1)
+      val v = a(1).toLong
+      a(2) match {
+        case "ids" => IdsDeleted(v, a(3).split(",").toSeq.map(_.toLong))
+        case "idfile" => IdFileDeleted(v, a(3))
+        case "range" => RangeDeleted(v, a(3), Some(a(4)).filter(_.nonEmpty),
+          Some(a(5)).filter(_.nonEmpty))
+        case k => throw new IllegalStateException(
+          s"SnapshotStore: unknown delete-entry kind '$k' in '$l'")
+      }
+    }
+
+  /** The version of the data dir a manifest relpath (or a dir) lives in:
+    * `data/v<d>` or `data/v<d>-<uuid8>`. Files are only ever published by
+    * the version whose number names their dir (clones write `data/v00001`
+    * and publish version 1), so d orders every file against every delete
+    * entry. */
+  private val DataDirOf = "data/v(\\d{5})(?:-[0-9a-f]{8})?(?:/.*)?".r
+
+  private def dataVersionOf(rel: String): Long = rel match {
+    case DataDirOf(n) => n.toLong
+    case _ => throw new IllegalStateException(
+      s"SnapshotStore: '$rel' is not under a data/vNNNNN dir — its order " +
+        "against the delete set is unknown")
+  }
+
+  /** `meta` minus the delete entries no live file in `entries` is older
+    * than: such an entry can match no live row. */
+  private def withLiveDeletes(meta: Seq[String],
+      entries: Seq[(Long, String)]): Seq[String] =
+    if (!meta.exists(_.startsWith(DeletePrefix))) meta
+    else {
+      val oldest =
+        if (entries.isEmpty) Long.MaxValue
+        else entries.iterator.map(e => dataVersionOf(e._2)).min
+      meta.filterNot(l => l.startsWith(DeletePrefix) &&
+        l.split("\t", 3)(1).toLong <= oldest)
+    }
+
+  /** The delete entry of version `v`'s upserted/deleted `ids`: inline up
+    * to [[entryThreshold]] ids, else a parquet file written here (before
+    * the manifest, like the data files: a crash leaves it vacuum
+    * garbage). Written and read on the driver, no Spark job. */
+  private def idsDeleteLine(spark: SparkSession, root: String, v: Long,
+      ids: Seq[Long]): String = {
+    val sorted = ids.distinct.sorted
+    if (sorted.length <= entryThreshold) deleteLine(IdsDeleted(v, sorted))
+    else {
+      import org.apache.parquet.example.data.simple.SimpleGroupFactory
+      val rel = f"meta/deletes-v$v%05d-" +
+        s"${java.util.UUID.randomUUID().toString.take(8)}.parquet"
+      val schema = org.apache.parquet.schema.MessageTypeParser
+        .parseMessageType("message deletes { required int64 doc_id; }")
+      val conf = spark.sessionState.newHadoopConf()
+      val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+        .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
+          .fromPath(new Path(root, rel), conf))
+        .withType(schema).withConf(conf).build()
+      val groups = new SimpleGroupFactory(schema)
+      try sorted.foreach(id => w.write(groups.newGroup().append("doc_id", id)))
+      finally w.close()
+      FaultInjection.fire("delete-file-written")
+      deleteLine(IdFileDeleted(v, rel))
+    }
+  }
+
+  /** Immutable delete files' ids, read once per JVM. */
+  private val deleteFileCache =
+    new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
+
+  private def deleteFileIds(spark: SparkSession, root: String,
+      rel: String): Array[Long] = {
+    val p = new Path(root, rel)
+    val key = fs(spark, root).makeQualified(p).toString
+    val hit = deleteFileCache.get(key)
+    if (hit != null) return hit
+    val r = org.apache.parquet.hadoop.ParquetReader
+      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), p)
+      .withConf(spark.sessionState.newHadoopConf()).build()
+    val ids = Array.newBuilder[Long]
+    try {
+      var g = r.read()
+      while (g != null) { ids += g.getLong("doc_id", 0); g = r.read() }
+    } finally r.close()
+    if (deleteFileCache.size() >= MaxManifestCache) deleteFileCache.clear()
+    val read = ids.result()
+    deleteFileCache.put(key, read)
+    read
+  }
+
+  /** A canonical bound ([[canonAs]]) back as a literal of type `dt`. */
+  private def canonLit(b: String,
+      dt: org.apache.spark.sql.types.DataType): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case DateType => lit(java.time.LocalDate.ofEpochDay(b.toLong))
+      case TimestampType =>
+        lit(java.time.Instant.EPOCH.plus(b.toLong,
+          java.time.temporal.ChronoUnit.MICROS))
+      case TimestampNTZType =>
+        lit(java.time.LocalDateTime.ofEpochSecond(
+          Math.floorDiv(b.toLong, 1000000L),
+          (Math.floorMod(b.toLong, 1000000L) * 1000L).toInt,
+          java.time.ZoneOffset.UTC))
+      case StringType =>
+        lit(new String(java.util.Base64.getDecoder.decode(
+          b.stripPrefix(StringCanonPrefix)),
+          java.nio.charset.StandardCharsets.UTF_8))
+      case _: DecimalType => lit(new java.math.BigDecimal(b)).cast(dt)
+      case FloatType | DoubleType => lit(b.toDouble).cast(dt)
+      case _ => lit(b.toLong).cast(dt)
+    }
+  }
+
+  /** `df` (the scan of data dir `dir`) minus the rows a delete entry
+    * newer than the dir matches. No such entry ⇒ `df` itself. A range on
+    * a column the dir's files lack matches nothing there (the column
+    * null-fills on read). */
+  private def liveRows(spark: SparkSession, root: String, dir: String,
+      deletes: Seq[DeleteEntry], df: DataFrame): DataFrame = {
+    val newer = deletes.filter(_.version > dataVersionOf(dir))
+    if (newer.isEmpty) return df
+    val ids = newer.flatMap {
+      case IdsDeleted(_, ids) => ids
+      case IdFileDeleted(_, rel) => deleteFileIds(spark, root, rel).toSeq
+      case _ => Nil
+    }.distinct
+    val matched =
+      (if (ids.isEmpty) None
+       else Some(col("doc_id").cast("long").isInCollection(ids))) ++
+        newer.collect {
+          case RangeDeleted(_, c, lo, hi) if df.columns.contains(c) =>
+            val (x, dt) =
+              if (c == "doc_id")
+                (col(c).cast("long"), org.apache.spark.sql.types.LongType)
+              else (col(c), df.schema(c).dataType)
+            (lo.map(b => x >= canonLit(b, dt)) ++
+              hi.map(b => x <= canonLit(b, dt))).reduce(_ && _)
+        }
+    if (matched.isEmpty) df
+    else df.filter(!coalesce(matched.reduce(_ || _), lit(false)))
   }
 
   private def sidecarSchema: org.apache.spark.sql.types.StructType = {
@@ -1529,6 +1724,9 @@ object SnapshotStore {
     *    attempt-unique `data/vNNNNN-<uuid>` dir, no manifest yet (a
     *    reader sees nothing; a replayed commit writes a fresh attempt
     *    dir and the orphan is vacuum garbage);
+    *  - `delete-file-written` — a keyed write's parquet delete file
+    *    (an id set past [[entryThreshold]]) written under `meta/`, no
+    *    manifest yet (nothing published; the file is vacuum garbage);
     *  - `manifest-tmp-written` — manifest bytes written to the
     *    `_versions/.tmp-*` file, the create-exclusive not yet attempted
     *    (nothing published; the tmp file is vacuum garbage);
@@ -1557,7 +1755,7 @@ object SnapshotStore {
     * silently strip a versioned index's geometry — the
     * VersionedIvfAdcSpec maintenance arm caught exactly that. */
   private val OwnedMetaPrefixes: Set[String] = Set(
-    "#bloom", "#bloomcols", "#buckets", "#check", "#col", "#dropfile",
+    "#bloom", "#bloomcols", "#buckets", "#check", "#col", "#del", "#dropfile",
     "#entryfile", "#metafile", "#op", "#stat", "#statcols", "#txn")
 
   private def metaPrefixOf(l: String): String = l.takeWhile(_ != '\t')
@@ -1598,13 +1796,16 @@ object SnapshotStore {
       l.startsWith("#entryfile\t") || l.startsWith("#dropfile\t"))
     // file statistics + bloom filters ride the SAME atomic manifest
     // creation as the file list (computed BEFORE the tmp write; no
-    // declaration ⇒ no-op)
+    // declaration ⇒ no-op). Delete entries come from the incoming meta
+    // only (a verb that keeps older files live passes its parent's), less
+    // those no live file is older than.
     val prevMeta =
       if (v > 1 && fs(spark, root).exists(manifestPath(root, v - 1)))
         manifestMeta(spark, root, v - 1)
       else Seq.empty[String]
     val fullMeta = withFileIndexes(spark, root, v, entries,
-      cleanMeta ++ carriedForeignMeta(prevMeta, cleanMeta),
+      withLiveDeletes(cleanMeta, entries) ++
+        carriedForeignMeta(prevMeta, cleanMeta),
       prevMeta)
     // entry-list scale: past the threshold the file list lives in a
     // parquet entryfile and only the DELTA vs it is text (see the
@@ -1731,7 +1932,11 @@ object SnapshotStore {
     * columns (a declaration change must recompute coverage over every
     * file, which is O(files) by nature). Resurrecting a dropped
     * entryfile path is rollback territory and rejected here — rollback
-    * re-derives its bookkeeping through the full path. */
+    * re-derives its bookkeeping through the full path. Delete entries
+    * come from `meta` (the caller's parent's plus its own); with an
+    * entryfile parent they all carry, since dropping one needs the
+    * oldest live file, which this path never resolves (an entry older
+    * than every live file only filters nothing). */
   private[graft] def publishDelta(spark: SparkSession, root: String,
       v: Long, adds: Seq[(Long, String)], dropRels: Set[String],
       meta: Seq[String] = Nil): Unit = {
@@ -2133,7 +2338,9 @@ object SnapshotStore {
   }
 
   /** Build the snapshot frame for a (sub)set of one version's manifest
-    * entries, schema-validated against the version's declaration. */
+    * entries, schema-validated against the version's declaration, with
+    * the version's delete set applied — every read of the store passes
+    * here. */
   private def assemble(spark: SparkSession, root: String, v: Long,
       entries: Seq[(Long, String)]): DataFrame = {
     // one scan per contributing version dir (the manifest-driven
@@ -2150,6 +2357,7 @@ object SnapshotStore {
       .map { case (dir, es) =>
         (dir, StoreScan.scanDir(spark, root, dir, es))
       }
+    val deletes = parseDeletes(manifestMeta(spark, root, v))
     // Validate every dir's PHYSICAL schema against the version's DECLARED
     // schema (the `#col` manifest lines): a column a dir stores under a
     // different type, or one the declaration no longer carries, is
@@ -2179,7 +2387,8 @@ object SnapshotStore {
         }
       }
     }
-    dirDfs.map(_._2)
+    // merge-on-read: each dir drops the rows a newer delete entry matches
+    dirDfs.map { case (dir, df) => liveRows(spark, root, dir, deletes, df) }
       .reduce(_.unionByName(_, allowMissingColumns = true))
       .withColumn("doc_id", col("doc_id").cast("long"))
       .withColumn("bucket", col("bucket").cast("long"))
@@ -2217,70 +2426,58 @@ object SnapshotStore {
         s"no version published at or before epoch-millis $tsMillis at " +
           s"$root — too early, or that history was vacuumed")))
 
-  /** Keyed upsert as a new version: every doc_id in `reingestedDocs` has
-    * its old vectors dropped and `newRows`' replacements added, touching
-    * only the buckets those documents hash to; all other buckets' files
-    * carry forward into the new manifest unrewritten. A re-ingest that
-    * yields zero rows for a document deletes its vectors ("upsert equals
-    * fresh rebuild" holds in the empty edge). Returns the new version.
+  /** Keyed upsert as a new version: every doc_id in `reingestedDocs` or
+    * `newRows` has its old rows dropped and `newRows`' replacements
+    * added. A re-ingest that yields zero rows for a document deletes it
+    * ("upsert equals fresh rebuild" holds in the empty edge). Returns the
+    * new version.
     *
-    * Cost follows the delta. The distinct upserted ids are collected
-    * once, bounded by [[docIdPruneCap]], and everything derived from
-    * them is computed on the driver: the touched buckets, the doc_id
-    * verdicts that carry provably-clean files, and the keys of the
-    * anti-join (a broadcast local relation). The fresh rows are written
-    * one file per touched bucket (a rebalance on `bucket`, so adaptive
-    * execution splits a skewed bucket of a large upsert); the surviving
-    * rows of the rewritten files are written by the scan tasks that read
-    * them, never shuffled, so rows from different files of one layout
-    * (an optimize's sort or z-order, a column only old rows lack) are
-    * not mixed with the fresh ones. Jobs per call on an inline-metadata
-    * store: 4 or 5 (the id collect's map and result stages, the bucket
-    * rebalance's map stage, the write; the key broadcast when carried
-    * rows are read). An id set over the cap stays a checkpointed frame,
-    * rewrites the touched buckets whole and writes its fresh rows by
-    * their upstream tasks, as a bulk load does. */
+    * Merge-on-read, so the cost is the delta's. The distinct ids are
+    * collected once, bounded by [[docIdPruneCap]]; the new version adds
+    * the fresh rows' files (one per touched bucket; none when there are
+    * no fresh rows) and one delete entry holding the ids, and carries
+    * every existing file unread. Reads drop the old rows of those ids
+    * (see the delete-set notes). Jobs per call on an inline-metadata
+    * store: 3 (the id collect's map and result stages, the write); at
+    * most 2 when there are no fresh rows. An id set over the cap stays a
+    * checkpointed frame and rewrites the touched buckets whole, its
+    * fresh rows written by their upstream tasks, as a bulk load does. */
   def upsert(spark: SparkSession, newRows: DataFrame,
       reingestedDocs: DataFrame, root: String, buckets: Int,
       meta: Seq[String] = Nil,
       expectedVersion: Option[Long] = None): Long =
     upsert(spark, newRows, reingestedDocs, root, buckets, meta,
-      expectedVersion, clusterBy = None, storedIn = None)
+      expectedVersion, clusterBy = None, freshRange = None)
 
-  /** Fresh rows of a key-only upsert under [[docIdPruneCap]] ids: one
-    * file per touched bucket. A rebalance rather than a plain
-    * repartition, so a large upsert keeps its parallelism (adaptive
-    * execution splits a skewed bucket) while a small one coalesces into
-    * a single writer task. */
-  private def freshByBucket(fresh: DataFrame): DataFrame =
-    fresh.hint("rebalance", col("bucket"))
+  /** Upserts of at most this many ids write their fresh rows from one
+    * task; larger ones rebalance on `bucket`, so adaptive execution
+    * splits a skewed bucket. Either way one file per touched bucket. */
+  private val SingleWriterIds = 4096
 
   /** [[upsert]] for a store whose files are clustered by a column other
-    * than the key: `clusterBy` lays out EVERY row the upsert writes, the
-    * fresh rows and the surviving rows of the rewritten files, with
-    * their `bucket` column. [[VersionedIvf]] and [[VersionedIvfAdc]]
-    * pass their cent_id bands, so after maintenance every file still
-    * covers the narrow cent_id band [[VersionedIvf.write]]'s do; a scan
-    * task, which packs several files, would write their cells into one.
-    * None is [[upsert]]'s own layout.
+    * than the key: `clusterBy` lays out every row the upsert writes, with
+    * their `bucket` column. [[VersionedIvf]] and [[VersionedIvfAdc]] pass
+    * their cent_id bands, so every written file covers the narrow cent_id
+    * band [[VersionedIvf.write]]'s do. None is [[upsert]]'s own layout.
     *
-    * `storedIn = Some((c, values))` promises that every stored row of an
-    * upserted id has `c` in `values` (a rebalance moves rows of its
-    * split cells only): a file whose `c` stats envelope admits none of
-    * them is carried, whatever its doc_id envelope says. */
+    * `freshRange = Some((x, check))`: the id collect also takes the min
+    * and max of the integer expression `x` over `newRows`, and `check`
+    * receives them on the driver before anything is written (the stored
+    * index's dim guard); no fresh rows, no call. */
   private[graft] def upsert(spark: SparkSession, newRows: DataFrame,
       reingestedDocs: DataFrame, root: String, buckets: Int,
       meta: Seq[String], expectedVersion: Option[Long],
       clusterBy: Option[DataFrame => DataFrame],
-      storedIn: Option[(String, Seq[Any])]): Long = {
+      freshRange: Option[(org.apache.spark.sql.Column, (Int, Int) => Unit)])
+      : Long = {
     checkExpected(spark, root, expectedVersion)
     val cur = currentVersion(spark, root).getOrElse(
       throw new IllegalArgumentException(
         s"no published version at $root — commit() an initial snapshot first"))
     // Bucket-count guard: hashing fresh rows with a DIFFERENT modulus
     // than the stored layout would land them in the wrong partitions AND
-    // make the touched-bucket delete miss stale rows — silent corruption,
-    // so a mismatch is a named error, not a trusted parameter.
+    // make the over-cap touched-bucket rewrite miss stale rows — silent
+    // corruption, so a mismatch is a named error, not a trusted parameter.
     storedBuckets(spark, root, cur).foreach { b =>
       if (b != buckets)
         throw new IllegalArgumentException(
@@ -2289,12 +2486,52 @@ object SnapshotStore {
             "would corrupt the keyed delete; pass the stored count")
     }
     val fresh = withBucket(newRows, buckets)
-    // Retype guard — at WRITE time, because the union below would coerce
-    // a retyped fresh column to the common type and write already-merged
-    // files, masking the drift from read()'s declared-vs-stored check.
-    // Fresh rows MAY omit stored columns (their rows null-fill — the
-    // additive contract's read behavior applied at write) and MAY add
-    // new ones; they may never change a stored column's type.
+    // ONE pass over the keys: per distinct id (newRows' own ids included,
+    // so a doc present in newRows but omitted from reingestedDocs
+    // replaces, not duplicates, its old rows), whether newRows holds a
+    // row of it, and the freshRange min/max over its rows
+    val probe = freshRange.map(_._1)
+    def keys(df: DataFrame, isFresh: Boolean): DataFrame = df.select(
+      Seq(col("doc_id").cast("long").as("doc_id"),
+        lit(isFresh).as("graft_fresh")) ++
+        probe.toSeq.map(x => (if (isFresh) x else lit(null)).cast("int")
+          .as("graft_x")): _*)
+    val idFrame = keys(reingestedDocs, isFresh = false)
+      .union(keys(newRows, isFresh = true))
+      .groupBy("doc_id")
+      .agg(max("graft_fresh").as("graft_fresh"), probe.toSeq.flatMap(_ =>
+        Seq(min("graft_x").as("graft_lo"), max("graft_x").as("graft_hi"))): _*)
+    // Checkpointed (ids only): over the cap the grouped count and the
+    // anti-join both read the distinct ids, and would otherwise each
+    // re-evaluate the id projection of the fresh rows' lineage. LAZY: the
+    // collect below computes it.
+    val upserted = idFrame.localCheckpoint(false)
+    // DRIVER-HELD KEYS: one bounded collect of the id rows (a null id
+    // replaces nothing, so it is no key; its row still says whether fresh
+    // rows carry a null id). One partition, so the bounded collect is one
+    // job that computes the whole checkpoint (a limit over several
+    // partitions scans them in rounds of jobs).
+    val idRows = upserted.coalesce(1).limit(docIdPruneCap + 2).collect()
+    val held = idRows.filterNot(_.isNullAt(0)).map(_.getLong(0))
+    val byDriver = held.length <= docIdPruneCap
+    freshRange.foreach { case (x, check) =>
+      val range =
+        if (byDriver) {
+          val ranged = idRows.filterNot(_.isNullAt(2))
+          if (ranged.isEmpty) None
+          else Some((ranged.map(_.getInt(2)).min, ranged.map(_.getInt(3)).max))
+        } else {
+          val r = newRows.agg(min(x.cast("int")), max(x.cast("int")))
+            .collect()(0)
+          if (r.isNullAt(0)) None else Some((r.getInt(0), r.getInt(1)))
+        }
+      range.foreach { case (lo, hi) => check(lo, hi) }
+    }
+    // Retype guard — at WRITE time: fresh files of a retyped column would
+    // otherwise only fail read()'s declared-vs-stored check after the
+    // publish. Fresh rows MAY omit stored columns (their rows null-fill —
+    // the additive contract's read behavior) and MAY add new ones; they
+    // may never change a stored column's type.
     val curCols = declaredCols(spark, root, cur).getOrElse(
       schemaCols(read(spark, root, cur).schema))
     val curTypes = curCols.toMap
@@ -2311,8 +2548,8 @@ object SnapshotStore {
     }
     // CHECK constraints enforce on the FRESH rows only (carried rows
     // passed at their own write), with stored columns the fresh rows
-    // omit null-filled — matching what the union below actually writes
-    // (SQL CHECK: null passes)
+    // omit null-filled — matching what is actually written (SQL CHECK:
+    // null passes)
     val checks = storedChecks(spark, root, cur)
     if (checks.nonEmpty) {
       val freshNames = newRows.schema.fieldNames.toSet
@@ -2322,100 +2559,49 @@ object SnapshotStore {
         }
       validateChecks(checkTarget, checks, root)
     }
-    // union newRows' own ids: a doc present in newRows but omitted from
-    // reingestedDocs must replace, not duplicate, its old vectors
-    val idFrame = reingestedDocs.select(col("doc_id").cast("long")
-      .as("doc_id"))
-      .union(newRows.select(col("doc_id").cast("long").as("doc_id")))
-      .distinct()
-    // Checkpointed (ids only): the bounded collect below and, over the
-    // cap, the grouped count and the anti-join all read the distinct ids,
-    // and would otherwise each re-evaluate the id projection of the fresh
-    // rows' lineage (for a fingerprint upsert that cannot prune past the
-    // per-document explode). LAZY: the collect computes it.
-    val upserted = idFrame.localCheckpoint(false)
-    // DRIVER-HELD KEYS: one bounded collect of the distinct ids (a null
-    // id replaces nothing, so it is left out). Under docIdPruneCap every
-    // fact derived from them is computed on the driver: the touched
-    // buckets ([[targetBuckets]], no job), their count, and the doc_id
-    // verdicts of [[docIdCandidates]] (no job on an inline-metadata
-    // store); the anti-join below runs against them as a local relation.
-    // Over the cap the ids stay the checkpointed frame and key pruning is
-    // skipped — the stats envelopes admit nearly every file at that
-    // cardinality. One partition, so the bounded collect is one job that
-    // computes the whole checkpoint (a limit over several partitions
-    // scans them in rounds of jobs).
-    val held = upserted.filter(col("doc_id").isNotNull).coalesce(1)
-      .limit(docIdPruneCap + 1).collect().map(_.getLong(0))
-    val byDriver = held.length <= docIdPruneCap
-    val touched =
-      if (byDriver) targetBuckets(spark, held.toSeq, buckets)
-      else withBucket(upserted, buckets).groupBy("bucket")
-        .agg(count(lit(1)).as("n")).collect().map(_.getLong(0)).toSet
-    // only the TOUCHED buckets' entries ever reach the driver (the
-    // untouched rest of the store carries through publishDelta without
-    // being resolved): upsert driver work is ∝ touched-bucket files,
-    // never ∝ live files
-    val touchedEntries = entriesInBuckets(spark, root, cur, touched)
-    // KEY-PRUNED read-merge-write: with a doc_id stats/bloom declaration,
-    // only the touched buckets' files that CAN contain an upserted id are
-    // read and rewritten; provably-clean files carry verbatim — upsert
-    // cost ∝ admitting files, not whole-bucket file counts (at 10⁵+
-    // one-row files per store this is the difference between rewriting
-    // ~3k files per touched bucket and rewriting the handful that match).
-    val meta0 = manifestMeta(spark, root, cur)
-    val keyCandidates =
-      if (!byDriver) touchedEntries
-      else docIdCandidates(spark, root, meta0, touchedEntries, held.toSeq)
-    val candidateEntries = storedIn.fold(keyCandidates) { case (c, vs) =>
-      statsAdmitting(spark, root, cur, meta0, keyCandidates, c, vs) }
     val v = cur + 1
-    val merged = {
-      // carried survivors read through assemble — the same dir-grouped,
-      // SCHEMA-VALIDATED path read() uses (the previous inline copy
-      // skipped the declared-vs-stored check, so a drifted touched
-      // bucket could be union-coerced and rewritten, masking the drift).
-      // Driver-held keys are a BROADCAST local relation: the anti-join
-      // then keeps the scan's split, so without a clusterBy the
-      // survivors are written by the tasks that read them
-      val keys =
-        if (!byDriver) upserted
-        else {
-          import spark.implicits._
-          broadcast(held.toSeq.toDF("doc_id"))
-        }
-      val kept =
-        if (candidateEntries.isEmpty) None
-        else Some(assemble(spark, root, cur, candidateEntries)
-          .join(keys, Seq("doc_id"), "left_anti"))
-      // allowMissingColumns: an upsert may carry new columns (schema
-      // evolution) — surviving old rows null-fill them
-      def withKept(df: DataFrame) =
-        kept.map(_.unionByName(df, allowMissingColumns = true))
-          .getOrElse(df)
-      // over the cap the fresh rows are written as they come: a bulk
-      // upsert keeps its upstream parallelism and pays no bucket shuffle
-      clusterBy.fold(withKept(if (byDriver) freshByBucket(fresh) else fresh))(
-        lay => lay(withKept(fresh)))
-    }
-    // old files are immutable — no checkpoint fence needed before the
-    // write; the attempt-unique dir keeps racers out of each other's files
-    val dirName = writeVersionDir(merged, spark, root, v)
     // declared schema grows monotonically: current declaration + any
-    // columns the fresh rows ADD (drops are impossible through upsert —
-    // carried files retain every stored column)
+    // columns the fresh rows ADD
     val newCols = curCols ++ schemaCols(fresh.schema)
       .filterNot { case (n, _) => curTypes.contains(n) }
-    // delta publish: carried files (untouched buckets + provably-clean
-    // candidates) are never enumerated — only the rewritten files drop
-    // and the fresh files add
-    publishDelta(spark, root, v,
-      listVersionFiles(spark, root, dirName),
-      candidateEntries.map(_._2).toSet,
-      carriedTxn(spark, root, meta) ++
-        carriedCheckLines(spark, root) ++
-        newCols.map { case (n, t) => colLine(n, t) } ++
-        Seq(bucketsLine(buckets), opLine("upsert")))
+    val publishMeta = carriedTxn(spark, root, meta) ++
+      carriedCheckLines(spark, root) ++
+      newCols.map { case (n, t) => colLine(n, t) } ++
+      Seq(bucketsLine(buckets), opLine("upsert")) ++
+      deleteLinesOf(manifestMeta(spark, root, cur))
+    if (byDriver) {
+      // merge-on-read: the fresh rows' files plus one delete entry of the
+      // ids; no stored file is read, rewritten or dropped
+      val adds =
+        if (!idRows.exists(_.getBoolean(1))) Nil
+        else {
+          val laid = clusterBy.fold(
+            if (held.length <= SingleWriterIds) fresh.coalesce(1)
+            else fresh.hint("rebalance", col("bucket")))(_(fresh))
+          listVersionFiles(spark, root, writeVersionDir(laid, spark, root, v))
+        }
+      val entry =
+        if (held.isEmpty) Nil else Seq(idsDeleteLine(spark, root, v, held))
+      publishDelta(spark, root, v, adds, Set.empty, publishMeta ++ entry)
+    } else {
+      // over the cap: rewrite the touched buckets whole, their live rows
+      // (read through assemble, so the delete set applies) minus the ids
+      val touched = withBucket(upserted, buckets).groupBy("bucket")
+        .agg(count(lit(1)).as("n")).collect().map(_.getLong(0)).toSet
+      // only the TOUCHED buckets' entries ever reach the driver
+      val touchedEntries = entriesInBuckets(spark, root, cur, touched)
+      // allowMissingColumns: an upsert may carry new columns (schema
+      // evolution) — surviving old rows null-fill them
+      val merged =
+        if (touchedEntries.isEmpty) fresh
+        else assemble(spark, root, cur, touchedEntries)
+          .join(upserted.select("doc_id"), Seq("doc_id"), "left_anti")
+          .unionByName(fresh, allowMissingColumns = true)
+      val dirName =
+        writeVersionDir(clusterBy.fold(merged)(_(merged)), spark, root, v)
+      publishDelta(spark, root, v, listVersionFiles(spark, root, dirName),
+        touchedEntries.map(_._2).toSet, publishMeta)
+    }
     v
   }
 
@@ -2651,7 +2837,10 @@ object SnapshotStore {
       carriedTxn(spark, root, Nil) ++
         carriedCheckLines(spark, root) ++
         declaredSeq.map { case (n, t) => colLine(n, t) } ++
-        storedBuckets(spark, root, cur).map(bucketsLine).toSeq :+
+        storedBuckets(spark, root, cur).map(bucketsLine).toSeq ++
+        // the carried buckets' older files still need the delete set; a
+        // full optimize rewrites every file, so publish drops it all
+        deleteLinesOf(manifestMeta(spark, root, cur)) :+
         opLine(if (bucketScope.isEmpty) "optimize" else "optimize_scoped"))
     v
   }
@@ -3029,18 +3218,17 @@ object SnapshotStore {
     probes.exists(_.forall(bs.get))
   }
 
-  /** The `entries` that may hold a row of an upserted/looked-up doc_id
-    * set — the [[deletePoint]] candidate trick applied
-    * to the KEY column: a file whose doc_id stats envelope contains
-    * none of the ids, or whose doc_id bloom bitset rejects all of them,
-    * PROVABLY holds no row any of the ids could replace or match
-    * (bloom false negatives impossible, stats envelopes sound), so
-    * upsert carries it verbatim and readDocs never opens it. Requires a
-    * doc_id stats/bloom declaration; without one, or past
-    * [[docIdPruneCap]] ids, everything is a candidate.
+  /** The `entries` that may hold a row of a looked-up doc_id set — the
+    * [[deletePoint]] candidate trick applied to the KEY column: a file
+    * whose doc_id stats envelope contains none of the ids, or whose
+    * doc_id bloom bitset rejects all of them, PROVABLY holds no row of
+    * them (bloom false negatives impossible, stats envelopes sound), so
+    * readDocs never opens it. Requires a doc_id stats/bloom declaration;
+    * without one, or past [[docIdPruneCap]] ids, everything is a
+    * candidate.
     *
-    * The ids are driver-held (readDocs' argument, upsert's bounded
-    * collect). Where the verdicts run:
+    * The ids are driver-held (readDocs' argument). Where the verdicts
+    * run:
     *  - a store whose `#stat`/`#bloom` lines are all INLINE: on the
     *    driver, over the lines the manifest text already holds, with
     *    bloom probe positions from the SAME [[bloomPositions]]
@@ -3247,28 +3435,6 @@ object SnapshotStore {
       }.toDF("rel")
   }
 
-  /** `entries` minus the files whose `colName` stats envelope provably
-    * holds none of `values`: inline lines evaluate on the driver, sidecar
-    * rows on the executors (only the rejected relpaths collect). Files
-    * without a stat line, or a store not declaring `colName`, keep every
-    * entry. */
-  private def statsAdmitting(spark: SparkSession, root: String, v: Long,
-      meta: Seq[String], entries: Seq[(Long, String)], colName: String,
-      values: Seq[Any]): Seq[(Long, String)] = {
-    val declaredStats = statColsLineOf(meta).map(parseStatCols)
-      .getOrElse(Nil)
-    if (entries.isEmpty || !declaredStats.contains(colName)) return entries
-    val declared = declaredCols(spark, root, v).getOrElse(
-      schemaCols(read(spark, root, v).schema)).toMap
-    val t = probeType(declared, colName, root, "upsert")
-    val canonVals = values.map(x => canonAs(spark, x, t, colName))
-    val sideRejected = metaFileRelOf(meta).fold(Set.empty[String])(rel =>
-      sidecarStatRejects(spark, root, rel, colName, canonVals)
-        .collect().map(_.getString(0)).toSet)
-    val rejected = sideRejected ++ inlineStatRejects(meta, colName, canonVals)
-    entries.filterNot(e => rejected.contains(e._2))
-  }
-
   def readWhereIn(spark: SparkSession, root: String, colName: String,
       values: Seq[Any], version: Long = -1L): DataFrame = {
     require(values.nonEmpty, "readWhereIn needs at least one probe value")
@@ -3362,18 +3528,18 @@ object SnapshotStore {
   }
 
   /** Row-level DELETE by range — the data-retention / GDPR primitive,
-    * file-pruned the way the log-structured formats do it: files whose
-    * recorded [min, max] envelope provably contains NO row in [lo, hi]
-    * carry into the new manifest VERBATIM (zero rewrite); only the
-    * candidate files' rows are read, filtered, and rewritten — delete
-    * cost ∝ files that might match, not table size. SQL DELETE
-    * semantics: a NULL predicate deletes nothing, so null-valued rows
-    * are kept explicitly. Without a stats declaration every file is a
-    * candidate (correct, just unpruned). A delete that provably touches
-    * nothing is a version-free no-op returning the current version.
-    * CHECK constraints cannot be violated by removing rows; the schema,
-    * bucket modulus, txn watermarks, and declarations all carry.
-    * Returns the (possibly unchanged) version. */
+    * merge-on-read: the new version writes NO data file; it carries every
+    * file and adds one delete entry holding the bounds (canonicalized
+    * through the column's declared type), which every read of it applies
+    * to the rows of older files. SQL DELETE semantics: a NULL predicate
+    * deletes nothing, so null-valued rows are kept. File statistics still
+    * decide whether anything can match: a delete whose bounds provably
+    * miss every file's envelope is a version-free no-op returning the
+    * current version. On a store whose `#stat` lines are inline in the
+    * manifest it launches no Spark job. CHECK constraints cannot be
+    * violated by removing rows; the schema, bucket modulus, txn
+    * watermarks, and declarations all carry. Returns the (possibly
+    * unchanged) version. */
   def deleteWhere(spark: SparkSession, root: String, colName: String,
       lo: Any, hi: Any,
       expectedVersion: Option[Long] = None): Long = {
@@ -3385,45 +3551,29 @@ object SnapshotStore {
         s"no published version at $root — nothing to delete from"))
     val declaredSeq = declaredCols(spark, root, cur).getOrElse(
       schemaCols(read(spark, root, cur).schema))
-    val declared = declaredSeq.toMap
-    val dt = probeType(declared, colName, root, "deleteWhere")
+    val dt = probeType(declaredSeq.toMap, colName, root, "deleteWhere")
+    val loC = Option(lo).map(canonAs(spark, _, dt, colName))
+    val hiC = Option(hi).map(canonAs(spark, _, dt, colName))
     val meta = manifestMeta(spark, root, cur)
-    // only the ADMITTED candidates ever collect (executor-side
-    // anti-join against the stat verdicts); untouched files carry
-    // through publishDelta without being enumerated
+    // only the ADMITTED candidates ever collect (executor-side anti-join
+    // against a sidecar's stat verdicts); none admitted ⇒ nothing to do
     val candidates = pruneByStats(meta,
       statKeptEntries(spark, root, cur, meta,
         canonBounds(spark, meta, Map(colName -> ((lo, hi))),
-          Map(colName -> dt))), colName,
-      Option(lo).map(canonAs(spark, _, dt, colName)),
-      Option(hi).map(canonAs(spark, _, dt, colName)))
-    if (candidates.isEmpty) return cur
-    val c = col(colName)
-    val hit = (Option(lo).map(x => c >= lit(x).cast(dt)) ++
-      Option(hi).map(x => c <= lit(x).cast(dt))).reduce(_ && _)
-    val survivors = assemble(spark, root, cur, candidates)
-      .filter(!hit || c.isNull)
-    val v = cur + 1
-    val dirName = writeVersionDir(survivors, spark, root, v)
-    publishDelta(spark, root, v,
-      listVersionFiles(spark, root, dirName),
-      candidates.map(_._2).toSet,
-      carriedTxn(spark, root, Nil) ++
-        carriedCheckLines(spark, root) ++
-        declaredSeq.map { case (n, ty) => colLine(n, ty) } ++
-        storedBuckets(spark, root, cur).map(bucketsLine).toSeq :+
-        opLine("delete_where"))
-    v
+          Map(colName -> dt))), colName, loC, hiC)
+    if (candidates.isEmpty) cur
+    else publishDeleteEntry(spark, root, cur, declaredSeq,
+      RangeDeleted(cur + 1, colName, loC, hiC), "delete_where")
   }
 
   /** Equality companion of [[deleteWhere]] — delete every row whose
-    * `colName` equals `value`, with BLOOM pruning choosing the
-    * candidate files: the delete-by-key (right-to-be-forgotten) shape,
-    * where the key is typically a high-cardinality string no min/max
-    * envelope could prune. Files whose bitset rejects the value carry
-    * verbatim (false negatives impossible, so no stale row can hide in
-    * a carried file); NULL never equals anything, so null rows are
-    * kept. Provably-empty deletes are version-free no-ops. */
+    * `colName` equals `value`: the delete-by-key (right-to-be-forgotten)
+    * shape, where the key is typically a high-cardinality string no
+    * min/max envelope could prune. Merge-on-read like [[deleteWhere]]:
+    * one delete entry (the value as a one-point range), no data file.
+    * BLOOM filters decide whether anything can match: a value every
+    * file's bitset rejects is a version-free no-op (false negatives are
+    * impossible). NULL never equals anything, so null rows are kept. */
   def deletePoint(spark: SparkSession, root: String, colName: String,
       value: Any, expectedVersion: Option[Long] = None): Long = {
     require(value != null,
@@ -3435,26 +3585,26 @@ object SnapshotStore {
         s"no published version at $root — nothing to delete from"))
     val declaredSeq = declaredCols(spark, root, cur).getOrElse(
       schemaCols(read(spark, root, cur).schema))
-    val declared = declaredSeq.toMap
-    val dt = probeType(declared, colName, root, "deletePoint")
-    // only the bloom-ADMITTING candidates ever collect; carried files
-    // pass through publishDelta unenumerated
-    val candidates = bloomKeptEntries(spark, root, cur, colName, value, dt)
-    if (candidates.isEmpty) return cur
-    val c = col(colName)
-    val survivors = assemble(spark, root, cur, candidates)
-      .filter(c =!= lit(value).cast(dt) || c.isNull)
-    val v = cur + 1
-    val dirName = writeVersionDir(survivors, spark, root, v)
-    publishDelta(spark, root, v,
-      listVersionFiles(spark, root, dirName),
-      candidates.map(_._2).toSet,
+    val dt = probeType(declaredSeq.toMap, colName, root, "deletePoint")
+    val at = Some(canonAs(spark, value, dt, colName))
+    if (bloomKeptEntries(spark, root, cur, colName, value, dt).isEmpty) cur
+    else publishDeleteEntry(spark, root, cur, declaredSeq,
+      RangeDeleted(cur + 1, colName, at, at), "delete_point")
+  }
+
+  /** Publish version `cur + 1` = version `cur` plus one delete `entry`:
+    * every file and every parent entry carries, nothing is written. */
+  private def publishDeleteEntry(spark: SparkSession, root: String,
+      cur: Long, declaredSeq: Seq[(String, String)], entry: DeleteEntry,
+      op: String): Long = {
+    publishDelta(spark, root, cur + 1, Nil, Set.empty,
       carriedTxn(spark, root, Nil) ++
         carriedCheckLines(spark, root) ++
         declaredSeq.map { case (n, ty) => colLine(n, ty) } ++
-        storedBuckets(spark, root, cur).map(bucketsLine).toSeq :+
-        opLine("delete_point"))
-    v
+        storedBuckets(spark, root, cur).map(bucketsLine).toSeq ++
+        deleteLinesOf(manifestMeta(spark, root, cur)) ++
+        Seq(deleteLine(entry), opLine(op)))
+    cur + 1
   }
 
   /** (files kept, files total) a [[readWhere]] with these bounds would
@@ -3502,8 +3652,9 @@ object SnapshotStore {
     * manifest write — the old version's file entries and metadata
     * (schema declaration, bucket modulus, txn markers — the restored
     * state's exactly-once watermark belongs to the restored state) are
-    * re-referenced verbatim; no data file is copied or touched, so the
-    * restored files survive vacuum for as long as the new head does.
+    * re-referenced verbatim, its delete set included; no data file is
+    * copied or touched, so the restored files survive vacuum for as long
+    * as the new head does.
     *
     * An explicit restore is by nature the full-rewrite opt-in: the head
     * schema becomes `toVersion`'s declaration even where that drops a
@@ -3535,9 +3686,11 @@ object SnapshotStore {
   /** Version history — the DESCRIBE HISTORY analog: one row per
     * retained version with the operation that published it (`#op`
     * manifest line; versions published before op recording report
-    * "unknown"), its file count, and its CHECK-constraint count.
-    * Bounded by retained-version count, assembled from manifest reads
-    * only — no data file is touched. */
+    * "unknown"), its file count, its CHECK-constraint count, and the
+    * delete entries its reads apply: `n_deletes` entries, of which
+    * `n_delete_files` keep their id set in a parquet file (the rest are
+    * inline manifest lines). Bounded by retained-version count,
+    * assembled from manifest reads only — no data file is touched. */
   def history(spark: SparkSession, root: String): DataFrame = {
     val dir = new Path(root, "_versions")
     val f = fs(spark, root)
@@ -3547,15 +3700,19 @@ object SnapshotStore {
         case VersionRe(n) => n.toLong
       }.sorted
     val rows = vs.map { v =>
-      val op = manifestMeta(spark, root, v).collectFirst {
+      val meta = manifestMeta(spark, root, v)
+      val op = meta.collectFirst {
         case l if l.startsWith("#op\t") => l.split("\t", 2)(1)
       }.getOrElse("unknown")
+      val deletes = parseDeletes(meta)
       (v, op, readManifest(spark, root, v).size.toLong,
-        storedChecks(spark, root, v).size.toLong)
+        storedChecks(spark, root, v).size.toLong, deletes.size.toLong,
+        deletes.count(_.isInstanceOf[IdFileDeleted]).toLong)
     }
     val sp = spark
     import sp.implicits._
-    rows.toDF("version", "op", "n_files", "n_checks")
+    rows.toDF("version", "op", "n_files", "n_checks", "n_deletes",
+      "n_delete_files")
       .orderBy(col("version").desc)
   }
 
@@ -3600,7 +3757,10 @@ object SnapshotStore {
     * because carrying the source's `data/vNNNNN` relpaths verbatim would
     * collide with the clone's future version `N` — whose crashed-attempt
     * recovery overwrites the directory, destroying still-referenced
-    * files. Metadata carried: schema declaration, bucket modulus, CHECK
+    * files. A file the version's delete set filters is not copied but
+    * rewritten with the set applied, so the clone holds exactly the
+    * version's live rows and no delete entry. Metadata carried: schema
+    * declaration, bucket modulus, CHECK
     * constraints, and txn watermarks (a failed-over stream resumes
     * exactly-once against the clone). NOT carried: version history
     * (the clone starts at v1, op `clone`) and tags (they name the
@@ -3624,10 +3784,18 @@ object SnapshotStore {
       throw new IllegalArgumentException(
         s"SnapshotStore: clone destination $dstRoot already has published " +
           "versions — clone only initializes a FRESH store")
+    // the clone publishes every file as its version 1, which would put
+    // the source's delete set out of order with the files it filters:
+    // the files a delete entry is newer than are rewritten with the set
+    // applied (their live rows only), every other file is byte-copied,
+    // and the clone starts with no delete entry
+    val deletes = parseDeletes(manifestMeta(spark, srcRoot, cur))
+    val (folded, copied) = readManifest(spark, srcRoot, cur).partition(e =>
+      deletes.exists(_.version > dataVersionOf(e._2)))
     // relpath rewrite: data/vNNNNN[-uuid]/bucket=B/part-x →
     // v1/bucket=B/vNNNNN[-uuid]-part-x (the source dir name prefixes the
     // file so files from different source versions cannot collide)
-    val mapping = readManifest(spark, srcRoot, cur).map { case (b, rel) =>
+    val mapping = copied.map { case (b, rel) =>
       val parts = rel.split("/")
       val srcV = parts.find(_.matches("v\\d{5}(-[0-9a-f]{8})?"))
         .getOrElse("vsrc")
@@ -3658,11 +3826,17 @@ object SnapshotStore {
         throw new IllegalStateException(
           s"SnapshotStore: failed to copy $rel while cloning")
     }
-    val newEntries = mapping.map { case (b, _, newRel) => (b, newRel) }
+    val foldedEntries =
+      if (folded.isEmpty) Nil
+      else listVersionFiles(spark, dstRoot, writeVersionDir(
+        assemble(spark, srcRoot, cur, folded), spark, dstRoot, 1L))
+    val newEntries =
+      mapping.map { case (b, _, newRel) => (b, newRel) } ++ foldedEntries
     // carried `#stat`/`#bloom` lines keep their VALUES but must follow
     // the relpath rewrite — dropped or stale-pathed lines would force
     // publish's withFileIndexes to re-scan the entire cloned snapshot
-    // (bounded-by-delta maintenance suddenly costing a full table read)
+    // (bounded-by-delta maintenance suddenly costing a full table read);
+    // the rewritten files' lines drop, and publish computes theirs
     val relMap = mapping.map { case (_, rel, newRel) => rel -> newRel }.toMap
     // a metadata SIDECAR clones like the data files do: read the
     // source's, rewrite the rel column through the SAME mapping
@@ -3683,7 +3857,8 @@ object SnapshotStore {
         dstRel
       }
     val meta = manifestMeta(spark, srcRoot, cur)
-      .filterNot(l => l.startsWith("#op\t") || l.startsWith("#metafile\t"))
+      .filterNot(l => l.startsWith("#op\t") || l.startsWith("#metafile\t") ||
+        l.startsWith(DeletePrefix))
       .flatMap { l =>
         if (l.startsWith("#stat\t") || l.startsWith("#bloom\t")) {
           // limit -1: a stat line's min/max fields may be EMPTY (all-null
@@ -3869,7 +4044,10 @@ object SnapshotStore {
 
   /** Drop all but the newest `keepVersions` manifests and delete every
     * data file no retained manifest references (including files from
-    * crashed commits that never published). Tagged versions are PINNED:
+    * crashed commits that never published), and every metadata file —
+    * sidecar, entryfile, parquet delete file — none references. A file a
+    * retained version's delete set still filters stays live: its manifest
+    * lists it. Tagged versions are PINNED:
     * their manifests and files are retained regardless of age until
     * [[deleteTag]]. Returns the deleted paths.
     *
@@ -3907,7 +4085,8 @@ object SnapshotStore {
     // lost-race garbage
     val referencedMeta = keep.flatMap { v =>
       val m = manifestMeta(spark, root, v)
-      metaFileRelOf(m).toSeq ++ entryFileRelOf(m).toSeq
+      metaFileRelOf(m).toSeq ++ entryFileRelOf(m).toSeq ++
+        parseDeletes(m).collect { case IdFileDeleted(_, rel) => rel }
     }.toSet
     val deleted = mutable.ArrayBuffer.empty[String]
     val StagingRe = "\\.staging-v(\\d{5})-.*".r // legacy layout leftovers
@@ -3955,10 +4134,11 @@ object SnapshotStore {
             s.isDirectory && s.getPath.getName.startsWith("bucket=")))
         f.delete(vd.getPath, true)
     }
-    // metadata sidecar + entryfile dirs: unreferenced ones are garbage,
-    // except the possibly-in-flight version's (same discipline as data
-    // dirs)
-    val MetaDirRe = "(?:entries-)?v(\\d{5})-[0-9a-f]{8}".r
+    // metadata sidecar + entryfile dirs and delete files: unreferenced
+    // ones are garbage, except the possibly-in-flight version's (same
+    // discipline as data dirs)
+    val MetaDirRe =
+      "(?:entries-|deletes-)?v(\\d{5})-[0-9a-f]{8}(?:\\.parquet)?".r
     val metaDir = new Path(root, "meta")
     if (f.exists(metaDir)) f.listStatus(metaDir).foreach { md =>
       val name = md.getPath.getName

@@ -19,9 +19,11 @@ import graft.functions.VectorFunctions
   *    publish — so no interleaving of a maintenance verb and a crash
   *    can ever tear centroids from cells;
   *  - every maintenance verb (upsert, delete, rebalance) is ONE
-  *    [[SnapshotStore.upsert]] — atomic, optimistic-concurrency-safe,
-  *    and TIME-TRAVELABLE: `search(version = n)` serves the index
-  *    exactly as version n published it.
+  *    merge-on-read [[SnapshotStore.upsert]] — it writes only the rows
+  *    it adds and publishes the replaced or deleted ids as a delete
+  *    entry; atomic, optimistic-concurrency-safe, and TIME-TRAVELABLE:
+  *    `search(version = n)` serves the index exactly as version n
+  *    published it.
   *    Concurrency safety is end-to-end, not just per-publish: each
   *    verb reads geometry AT the observed version and publishes with
   *    `expectedVersion = observed` inside
@@ -30,9 +32,9 @@ import graft.functions.VectorFunctions
   *    re-derives its rows, and a manifest can never carry stale
   *    `#ivfcent` lines against newer rows' cent_ids;
   *  - maintenance keeps the layout: every verb has the store write the
-  *    rows it adds AND the surviving rows of the files it rewrites in
-  *    the same cent_id bands ([[upsertRows]]), so after an upsert,
-  *    delete or rebalance each file still covers a narrow cent_id band.
+  *    rows it adds in the same cent_id bands ([[upsertRows]]) and
+  *    rewrites no stored file, so after an upsert, delete or rebalance
+  *    each file still covers a narrow cent_id band.
   *
   * Search pruning: the store declares doc_id + cent_id statistics, so a
   * probe reads the probed cells through [[SnapshotStore.readWhereIn]]'s
@@ -169,17 +171,18 @@ object VersionedIvf {
     * inside [[SnapshotStore.withConflictRetry]], so a racing verb
     * can never make this manifest carry stale centroid lines against
     * the winner's rows — the retry re-reads geometry and re-assigns.
-    * Jobs per call: 7 (the dim check's two, the id collect's two, the
-    * key broadcast, the cent_id bands' map stage, the write). Returns
-    * the new version. */
+    * Wrong-dim (or null) vectors are a named IllegalArgumentException
+    * before anything is written; the dim range rides the store's id
+    * collect. Jobs per call: 4 (the id collect's two, the cent_id bands'
+    * map stage, the write). Returns the new version. */
   def upsert(spark: SparkSession, root: String, emb: DataFrame): Long =
     SnapshotStore.withConflictRetry(spark, root) { observed =>
       requirePublished(observed, root, "upsert")
       requireFlat(spark, root, observed, "upsert")
       val cents = storedCentroids(spark, root, observed)
-      IvfIndex.requireDim(emb, cents, "VersionedIvf.upsert")
       upsertRows(spark, root, observed, assignRows(emb, cents),
-        cents.map(_._1), centLines(cents))
+        cents.map(_._1), centLines(cents),
+        freshRange = Some(IvfIndex.dimGuard(cents, "VersionedIvf.upsert")))
     }
 
   private def assignRows(emb: DataFrame,
@@ -209,20 +212,19 @@ object VersionedIvf {
   /** A maintenance verb's publish against the `observed` version:
     * `rows` replace the stored rows of their own ids (the store's upsert
     * keys on newRows' ids itself) and the ids in `deleted` lose theirs;
-    * `meta` carries the geometry lines. Everything written, the rows and
-    * the survivors of the rewritten files, is laid out in the cent_id
-    * bands of the geometry with cells `cellIds`. `fromCells`: the cells
-    * that stored every replaced row, when known (a rebalance's split
-    * cells), so only their bands' files are rewritten. */
+    * `meta` carries the geometry lines. The rows are written in the
+    * cent_id bands of the geometry with cells `cellIds`; the replaced
+    * and deleted ids become the version's delete entry, so no stored
+    * file is read or rewritten. `freshRange`: a check over the rows that
+    * rides the store's id collect ([[IvfIndex.dimGuard]]). */
   private[operators] def upsertRows(spark: SparkSession, root: String,
       observed: Long, rows: DataFrame, cellIds: Seq[Long],
       meta: Seq[String], deleted: Option[DataFrame] = None,
-      fromCells: Option[Seq[Long]] = None): Long =
+      freshRange: Option[(Column, (Int, Int) => Unit)] = None): Long =
     SnapshotStore.upsert(spark, rows,
       deleted.getOrElse(rows.select("doc_id").limit(0)), root,
       bucketsAt(spark, root, observed), meta, Some(observed),
-      clusterBy = Some(clustered(_, cellIds)),
-      storedIn = fromCells.map("cent_id" -> _))
+      clusterBy = Some(clustered(_, cellIds)), freshRange = freshRange)
 
   /** EXACTLY-ONCE micro-batch upsert — [[upsert]] carrying a
     * [[SnapshotStore.txnMarker]], the verb a Structured Streaming
@@ -267,22 +269,21 @@ object VersionedIvf {
       } else {
         requireFlat(spark, root, observed, "upsertBatch")
         val cents = storedCentroids(spark, root, observed)
-        IvfIndex.requireDim(emb, cents, "VersionedIvf.upsertBatch")
         upsertRows(spark, root, observed, assignRows(emb, cents),
           cents.map(_._1),
-          centLines(cents) :+ SnapshotStore.txnMarker(streamId, batchId))
+          centLines(cents) :+ SnapshotStore.txnMarker(streamId, batchId),
+          freshRange =
+            Some(IvfIndex.dimGuard(cents, "VersionedIvf.upsertBatch")))
       }
     }
 
   /** Delete vectors by id — ONE atomic publish (an empty-re-ingest
-    * upsert keyed on doc_id: the store's own doc_id stats prune the
-    * read to admitting files). Geometry is unchanged and re-rides the
+    * upsert keyed on doc_id) that writes no data file: the ids become
+    * the version's delete entry. Geometry is unchanged and re-rides the
     * new manifest, read at the observed version and published with
     * `expectedVersion` under [[SnapshotStore.withConflictRetry]] so a
     * concurrent rebalance cannot be overwritten with its pre-split
-    * centroids. The surviving rows of the rewritten files are written
-    * in the index's cent_id bands. Jobs per call: 4 (the id collect,
-    * the key broadcast, the bands' map stage, the write). Returns the
+    * centroids. Jobs per call: at most 2 (the id collect). Returns the
     * new version. */
   def delete(spark: SparkSession, root: String, ids: DataFrame): Long =
     SnapshotStore.withConflictRetry(spark, root) { observed =>
@@ -339,8 +340,7 @@ object VersionedIvf {
           val published = upsertRows(spark, root, observed,
             p.merged.select(col("vec_id").as("doc_id"), col("embedding"),
               col("cent_id")),
-            p.newCents.map(_._1), centLines(p.newCents),
-            fromCells = Some(p.hot))
+            p.newCents.map(_._1), centLines(p.newCents))
           (p.splitCount, Some((published, p.postCounts)))
       }
     }

@@ -278,8 +278,7 @@ object VersionedIvfAdc {
           val published = VersionedIvf.upsertRows(spark, root, observed,
             p.merged.select(col("vec_id").as("doc_id"), col("cent_id"),
               col("codes")),
-            p.newCents.map(_._1), metaLines(p.newCents, book, dim, m, k),
-            fromCells = Some(p.hot))
+            p.newCents.map(_._1), metaLines(p.newCents, book, dim, m, k))
           (p.splitCount, Some((published, p.postCounts)))
       }
     }

@@ -474,5 +474,14 @@ class IvfIndexSpec extends SparkTestBase {
       assert(e.getMessage.contains("dim 8..8") &&
         e.getMessage.contains("centroid dim 64"), e.getMessage)
     }
+    // the upserts' check rides their id collect: nothing was published,
+    // and a null vector fails it too
+    assert(SnapshotStore.currentVersion(spark, root) === Some(1L))
+    val none = Seq((900002L, null: Seq[Float]), (900003L, Seq.fill(64)(0.5f)))
+      .toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException](
+      VersionedIvf.upsert(spark, root, none))
+    assert(e.getMessage.contains("dim -1..64"), e.getMessage)
+    assert(SnapshotStore.currentVersion(spark, root) === Some(1L))
   }
 }

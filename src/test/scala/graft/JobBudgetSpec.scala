@@ -32,11 +32,14 @@ import graft.operators.{BfsHops, PageRank, SnapshotStore, VersionedIvf,
   *  - BfsHops.run, 3 fixed rounds:        10 → 2
   *  - WeightedSssp.run, earlyExit, 6 rounds: 54 → 7
   *
-  * Keyed writes (jobs per call, before → after driver-held upsert keys
-  * and cent_id bands computed from the cent_id):
-  *  - SnapshotStore.upsert, key-only store, inline metadata: 9 → 5
-  *  - VersionedIvf.upsert:                 15 → 7
-  *  - VersionedIvf.delete:                  8 → 4
+  * Keyed writes (jobs per call: before driver-held upsert keys → with
+  * them → merge-on-read, where a write publishes only its fresh rows and
+  * a delete entry, and the stored index's dim check rides the id
+  * collect):
+  *  - SnapshotStore.upsert, key-only store, inline metadata: 9 → 5 → 3
+  *  - VersionedIvf.upsert:                 15 → 7 → 4
+  *  - VersionedIvf.delete:                  8 → 4 → 1 (no data file)
+  *  - SnapshotStore.deleteWhere, inline stats: 1 → 0
   */
 class JobBudgetSpec extends SparkTestBase {
 
@@ -141,6 +144,10 @@ class JobBudgetSpec extends SparkTestBase {
     }
     upsertDocs(0L)
     val up = JobCounter(spark)(upsertDocs(500L))._2
+    def deleteDocs(from: Long): Unit =
+      SnapshotStore.deleteWhere(spark, root, "doc_id", from, from + 29L): Unit
+    deleteDocs(1000L)
+    val del = JobCounter(spark)(deleteDocs(1100L))._2
     // stored IVF index: 40 replaced and 40 new vectors, 30 deleted ids
     val vroot = "target/budget-vivf-maint"
     cleanup(vroot)
@@ -155,11 +162,14 @@ class JobBudgetSpec extends SparkTestBase {
     val vup = JobCounter(spark)(upsertVecs(100L))._2
     deleteVecs(200L)
     val vdel = JobCounter(spark)(deleteVecs(300L))._2
-    info(s"SnapshotStore.upsert: $up jobs, VersionedIvf.upsert: $vup, " +
-      s"VersionedIvf.delete: $vdel")
-    assert(up <= 5, s"key-only upsert launched $up jobs")
-    assert(vup <= 7, s"VersionedIvf.upsert launched $vup jobs")
-    assert(vdel <= 4, s"VersionedIvf.delete launched $vdel jobs")
+    info(s"SnapshotStore.upsert: $up jobs, deleteWhere: $del, " +
+      s"VersionedIvf.upsert: $vup, VersionedIvf.delete: $vdel")
+    assert(up <= 3, s"key-only upsert launched $up jobs")
+    assert(del === 0, s"inline-stats deleteWhere launched $del jobs")
+    assert(SnapshotStore.readDocs(spark, root, Seq(1100L, 1129L, 1130L))
+      .select("doc_id").as[Long].collect().toSeq === Seq(1130L))
+    assert(vup <= 4, s"VersionedIvf.upsert launched $vup jobs")
+    assert(vdel <= 1, s"VersionedIvf.delete launched $vdel jobs")
   }
 
   /** Jobs and rounds of one warm graph-operator call, collect included. */

@@ -4,13 +4,15 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.SnapshotStore
 
-/** Key-pruned upsert/readDocs: with a doc_id stats/bloom declaration the
-  * store's read-merge-write touches only the files that CAN contain the
-  * incoming keys (the deletePoint candidate trick applied to the key
-  * column) — every other file of the touched buckets carries into the
-  * new manifest verbatim, so a point upsert against a store with
-  * thousands of files per bucket rewrites a handful of files, not whole
-  * buckets. Results must stay EXACTLY upsert-equals-fresh-rebuild. */
+/** Keyed upsert and key-pruned readDocs: under [[SnapshotStore.docIdPruneCap]]
+  * ids an upsert is merge-on-read — it adds its fresh rows' files and a
+  * delete entry of its ids, and carries every stored file into the new
+  * manifest verbatim, so a point upsert against a store with thousands
+  * of files per bucket rewrites nothing; past the cap it rewrites its
+  * touched buckets whole. With a doc_id stats/bloom declaration a point
+  * lookup opens only the files that CAN contain its keys (the
+  * deletePoint candidate trick applied to the key column). Results must
+  * stay EXACTLY upsert-equals-fresh-rebuild. */
 class KeyPrunedUpsertSpec extends SparkTestBase {
 
   private def cleanup(path: String): Unit = {
@@ -42,11 +44,11 @@ class KeyPrunedUpsertSpec extends SparkTestBase {
       root, buckets = 2)
     val snap = SnapshotStore.read(spark, root)
     val after = snap.inputFiles.toSet
-    // the touched bucket's ~63 files: all but the admitting file(s)
-    // must carry verbatim — allow a little bloom false-positive slack
+    // merge-on-read: every stored file carries, one fresh file is added
     val carried = before.intersect(after).size
-    assert(carried >= before.size - 4,
-      s"whole-bucket rewrite: carried only $carried of ${before.size}")
+    assert(carried === before.size,
+      s"the upsert rewrote stored files: carried $carried of ${before.size}")
+    assert((after -- before).size === 1)
     assert(snap.count() === 2000L)
     assert(snap.filter(col("doc_id") === 777L)
       .select("n").collect().map(_.getLong(0)).toSeq === Seq(-1L))
@@ -166,7 +168,7 @@ class KeyPrunedUpsertSpec extends SparkTestBase {
   }
 
   test("an upsert adds at most one file per touched bucket for its new " +
-      "rows, however many tasks produced them, and one per rewritten " +
+      "rows, however many tasks produced them, and rewrites no stored " +
       "file") {
     val root = "target/keypruned-layout"
     cleanup(root)
@@ -191,21 +193,23 @@ class KeyPrunedUpsertSpec extends SparkTestBase {
     assert(added1.size <= bucketsOf(newIds, 8).size,
       s"${added1.size} files added for ${bucketsOf(newIds, 8).size} " +
         "touched buckets")
-    // 60 replaced and 40 new ids
+    // 60 replaced and 40 new ids: the replaced rows stay in their files,
+    // masked by the version's delete entry
     val ids = (0L until 2000L by 33L).take(60) ++ (6000L until 6040L)
     val (added2, rewritten2) = upsert(ids)
-    assert(rewritten2.nonEmpty)
-    assert(added2.size <= bucketsOf(ids, 8).size + rewritten2.size,
+    assert(rewritten2.isEmpty, s"a keyed upsert rewrote $rewritten2")
+    assert(added2.size <= bucketsOf(ids, 8).size,
       s"${added2.size} files added for ${bucketsOf(ids, 8).size} touched " +
-        s"buckets and ${rewritten2.size} rewritten files")
+        "buckets")
     val snap = SnapshotStore.read(spark, root)
     assert(snap.count() === 2080L)
     assert(snap.filter(col("doc_id").isin(ids ++ newIds: _*)).select("n")
       .as[Long].collect().toSet === (ids ++ newIds).map(-_).toSet)
   }
 
-  test("over docIdPruneCap the frame path publishes what the driver path " +
-      "does: identical read() contents, the same files carried") {
+  test("over docIdPruneCap the frame path reads as the driver path does; " +
+      "the driver path carries every stored file, the frame path only " +
+      "the untouched buckets' files") {
     val sp = spark
     import sp.implicits._
     val ids = Seq(10L, 20L, 30L, 40L, 50L, 7777L)
@@ -244,17 +248,12 @@ class KeyPrunedUpsertSpec extends SparkTestBase {
           .exists(b => f.contains(s"/bucket=$b/"))
       }
       assert(untouched.nonEmpty, "every bucket was touched")
-      if (meta.isEmpty)
-        assert((byFrame & parent) === (byDriver & parent),
-          "the two paths carried different files")
-      else {
-        // key pruning runs under the cap only: the driver path carries
-        // the touched buckets' clean files as well
-        assert((byFrame & parent) === untouched)
-        assert(untouched.subsetOf(byDriver & parent) &&
-          (byDriver & parent).size > untouched.size,
-          "the driver path did not carry clean files")
-      }
+      // merge-on-read under the cap; the touched buckets rewritten whole
+      // over it, whatever the store declares
+      assert(parent.subsetOf(byDriver),
+        "the driver path rewrote stored files")
+      assert((byFrame & parent) === untouched,
+        "the frame path did not rewrite exactly the touched buckets")
     }
     bothPaths("target/keypruned-paths-plain", Nil)
     bothPaths("target/keypruned-paths-stats",

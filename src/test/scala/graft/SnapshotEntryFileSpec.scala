@@ -95,20 +95,32 @@ class SnapshotEntryFileSpec extends SparkTestBase {
       val ef0 = entryFileOf(manifestText(root))
       assert(ef0.nonEmpty)
       val total0 = SnapshotStore.read(spark, root).count()
-      // one small upsert: the pointer CARRIES, the touched buckets'
-      // replaced files become dropfile lines, the new files ride inline
+      // one small upsert: the pointer CARRIES, the new file rides
+      // inline, and no stored file drops (merge-on-read)
       val fresh = Seq((9001L, 42L)).toDF("doc_id", "n")
       SnapshotStore.upsert(spark, fresh, fresh.select("doc_id"),
         root, buckets = 4)
+      val m0 = manifestText(root)
+      assert(entryFileOf(m0) === ef0, "1-row upsert rewrote the entryfile")
+      assert(dropCount(m0) === 0 && inlineEntryCount(m0) === 1,
+        s"1-row upsert: ${dropCount(m0)} drops, " +
+          s"${inlineEntryCount(m0)} adds")
+      // an upsert over docIdPruneCap rewrites its touched bucket: the
+      // replaced files become dropfile lines against the same pointer
+      val savedCap = SnapshotStore.docIdPruneCap
+      SnapshotStore.docIdPruneCap = 0
+      try SnapshotStore.upsert(spark, Seq((7L, -7L)).toDF("doc_id", "n"),
+        Seq(7L).toDF("doc_id"), root, buckets = 4)
+      finally SnapshotStore.docIdPruneCap = savedCap
       val m1 = manifestText(root)
-      assert(entryFileOf(m1) === ef0, "1-row upsert rewrote the entryfile")
+      assert(entryFileOf(m1) === ef0, "keyed rewrite rewrote the entryfile")
       assert(dropCount(m1) > 0, "no dropfile tombstones for the " +
         "touched bucket's replaced files")
-      assert(inlineEntryCount(m1) > 0 && inlineEntryCount(m1) <= 8,
+      assert(inlineEntryCount(m1) > 1 && inlineEntryCount(m1) <= 8,
         s"inline adds not delta-sized: ${inlineEntryCount(m1)}")
       assert(SnapshotStore.read(spark, root).count() === total0 + 1)
-      assert(SnapshotStore.readDocs(spark, root, Seq(9001L))
-        .select("n").collect().map(_.getLong(0)).toSeq === Seq(42L))
+      assert(SnapshotStore.readDocs(spark, root, Seq(7L, 9001L))
+        .select("n").collect().map(_.getLong(0)).toSet === Set(-7L, 42L))
       // keep upserting: once inline + drops outgrow the threshold a
       // FRESH entryfile compacts them away
       var i = 0L

@@ -151,12 +151,14 @@ class SnapshotSidecarSpec extends SparkTestBase {
           SnapshotStore.bloomDeclaration(Seq("k"), bits = 2048)))
       SnapshotStore.optimize(spark, root, sortByDocId = false,
         zorderBy = Seq("n"), maxRecordsPerFile = 16L)
-      // a LARGE delta (> threshold inline lines) forces a re-compaction:
-      // new sidecar = old rows ∪ delta
-      val fresh = (10000L until 10200L).map(i => (i, i, s"key_$i"))
-        .toDF("doc_id", "n", "k")
-      SnapshotStore.upsert(spark, fresh, fresh.select("doc_id"),
-        root, buckets = 4)
+      // inline deltas past the threshold force a re-compaction: new
+      // sidecar = old rows ∪ delta. Each upsert adds one file per
+      // bucket (8 stat + bloom lines); the third outgrows 16
+      (10000L until 10200L).grouped(70).foreach { ids =>
+        val fresh = ids.map(i => (i, i, s"key_$i")).toDF("doc_id", "n", "k")
+        SnapshotStore.upsert(spark, fresh, fresh.select("doc_id"),
+          root, buckets = 4)
+      }
       val m = manifestText(root)
       assert(m.contains("#metafile\t") && !m.contains("#stat\t"),
         "large delta should have re-compacted into a fresh sidecar")

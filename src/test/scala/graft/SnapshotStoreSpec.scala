@@ -555,46 +555,215 @@ class SnapshotStoreSpec extends SparkTestBase {
 
   test("random op sequences: store state always equals the driver-side model") {
     import spark.implicits._
-    val root = "target/snap-model"
-    cleanup(root)
-    val rnd = new scala.util.Random(11)
     def df(m: Map[Long, Long]) =
       m.toSeq.sortBy(_._1).toDF("doc_id", "tag")
-    var model: Map[Long, Long] = (1L to 10L).map(i => i -> 0L).toMap
-    SnapshotStore.commit(df(model), root, buckets = 4)
-    // version → model at that version, for rollback targets (vacuum
-    // keepVersions=2 always retains head and head−1)
-    var history: Map[Long, Map[Long, Long]] = Map(1L -> model)
-    for (step <- 1 to 16) {
-      rnd.nextInt(6) match {
-        case 0 => // upsert: mutate an existing doc / add a new one
-          val ids = Seq(rnd.nextLong(20) + 1, rnd.nextLong(20) + 1).distinct
-          model = model ++ ids.map(_ -> step.toLong)
-          SnapshotStore.upsert(spark,
-            df(ids.map(_ -> step.toLong).toMap), ids.toDF("doc_id"),
-            root, 4)
-        case 1 if model.nonEmpty => // delete via empty re-ingest
-          val ids = Seq(model.keys.toSeq(rnd.nextInt(model.size)))
-          model = model -- ids
-          SnapshotStore.upsert(spark,
-            Seq.empty[(Long, Long)].toDF("doc_id", "tag"),
-            ids.toDF("doc_id"), root, 4)
-        case 2 => SnapshotStore.optimize(spark, root): Unit
-        case 3 => SnapshotStore.vacuum(spark, root, keepVersions = 2): Unit
-        case 4 => // restore the previous head (always retained)
-          val head = SnapshotStore.currentVersion(spark, root).get
-          if (head >= 2 && history.contains(head - 1)) {
-            SnapshotStore.rollback(spark, root, head - 1): Unit
-            model = history(head - 1)
-          }
-        case _ => // full-rewrite commit of the current model
-          SnapshotStore.commit(df(model), root, buckets = 4): Unit
-      }
-      history += (SnapshotStore.currentVersion(spark, root).get -> model)
-      val got = SnapshotStore.read(spark, root)
+    def readModel(v: Long): Map[Long, Long] =
+      SnapshotStore.read(spark, "target/snap-model", v)
         .select("doc_id", "tag").as[(Long, Long)].collect().toMap
-      assert(got === model, s"diverged from the model at step $step")
+    // every keyed verb, maintenance verb, tag and rollback; after each
+    // step EVERY retained version and every tag must read as the model
+    // had it when that version was published. Returns the most delete
+    // entries kept in parquet files that any version carried.
+    def run(seed: Int, steps: Int): Long = {
+      val root = "target/snap-model"
+      cleanup(root)
+      val rnd = new scala.util.Random(seed)
+      var model: Map[Long, Long] = (1L to 10L).map(i => i -> 0L).toMap
+      SnapshotStore.commit(df(model), root, buckets = 4,
+        meta = Seq(SnapshotStore.statsDeclaration(Seq("doc_id", "tag"))))
+      var history: Map[Long, Map[Long, Long]] = Map(1L -> model)
+      var deleteFiles = 0L
+      for (step <- 1 to steps) {
+        val tag = step.toLong
+        rnd.nextInt(11) match {
+          case 0 | 1 => // upsert: mutate existing docs / add new ones
+            val ids = Seq.fill(1 + rnd.nextInt(4))(rnd.nextLong(20) + 1)
+              .distinct
+            model = model ++ ids.map(_ -> tag)
+            SnapshotStore.upsert(spark, df(ids.map(_ -> tag).toMap),
+              ids.toDF("doc_id"), root, 4)
+          case 2 if model.nonEmpty => // delete via empty re-ingest
+            val ids = Seq(model.keys.toSeq(rnd.nextInt(model.size)))
+            model = model -- ids
+            SnapshotStore.upsert(spark,
+              Seq.empty[(Long, Long)].toDF("doc_id", "tag"),
+              ids.toDF("doc_id"), root, 4)
+          case 3 => // range delete on the key or on the payload
+            val lo = rnd.nextLong(20) + 1
+            val hi = lo + rnd.nextLong(4)
+            if (rnd.nextBoolean()) {
+              model = model.filterNot { case (k, _) => k >= lo && k <= hi }
+              SnapshotStore.deleteWhere(spark, root, "doc_id", lo, hi)
+            } else {
+              model = model.filterNot { case (_, t) => t >= lo - 1 && t <= hi }
+              SnapshotStore.deleteWhere(spark, root, "tag", lo - 1, hi)
+            }
+          case 4 => // point delete on the payload
+            val t = rnd.nextLong(step + 1)
+            model = model.filterNot(_._2 == t)
+            SnapshotStore.deletePoint(spark, root, "tag", t)
+          case 5 => SnapshotStore.optimize(spark, root): Unit
+          case 6 => SnapshotStore.optimize(spark, root,
+            onlyBuckets = Seq(rnd.nextLong(4))): Unit
+          case 7 => SnapshotStore.vacuum(spark, root, keepVersions = 2): Unit
+          case 8 => // restore any retained version
+            val retained = history.keys.toSeq.sorted
+            val to = retained(rnd.nextInt(retained.size))
+            SnapshotStore.rollback(spark, root, to)
+            model = history(to)
+          case 9 => // pin the head; keep at most two tags
+            SnapshotStore.listTags(spark, root).dropRight(1)
+              .foreach(t => SnapshotStore.deleteTag(spark, root, t._1))
+            SnapshotStore.tag(spark, root, f"t$step%03d"): Unit
+          case _ => // full-rewrite commit of the current model
+            SnapshotStore.commit(df(model), root, buckets = 4): Unit
+        }
+        history += (SnapshotStore.currentVersion(spark, root).get -> model)
+        val hist = SnapshotStore.history(spark, root)
+          .select("version", "n_delete_files").as[(Long, Long)].collect()
+        deleteFiles = (deleteFiles +: hist.map(_._2)).max
+        val retained = hist.map(_._1).toSet
+        history = history.filter(e => retained.contains(e._1))
+        assert(history.keySet === retained, s"step $step: history lost")
+        history.foreach { case (v, m) =>
+          assert(readModel(v) === m,
+            s"seed $seed step $step: version $v diverged from the model")
+        }
+        SnapshotStore.listTags(spark, root).foreach { case (t, v) =>
+          assert(SnapshotStore.readTag(spark, root, t)
+            .select("doc_id", "tag").as[(Long, Long)].collect().toMap ===
+            history(v), s"seed $seed step $step: tag $t diverged")
+        }
+      }
+      deleteFiles
     }
+    run(seed = 11, steps = 24)
+    // the parquet delete-file regime: past entryThreshold ids an upsert's
+    // delete entry is a file (and the entry list an entryfile)
+    val saved = SnapshotStore.entryThreshold
+    SnapshotStore.entryThreshold = 2
+    val deleteFiles =
+      try run(seed = 12, steps = 24)
+      finally SnapshotStore.entryThreshold = saved
+    assert(deleteFiles > 0, "the lowered threshold wrote no delete file")
+  }
+
+  test("kill-window over the merge-on-read verbs: a crashed upsert or " +
+      "deleteWhere leaves the old version, the retry lands, vacuum reaps " +
+      "the orphan") {
+    import spark.implicits._
+    val root = "target/snap-kill-mor"
+    def df(m: Map[Long, Long]) = m.toSeq.sortBy(_._1).toDF("doc_id", "tag")
+    def state(): Map[Long, Long] = SnapshotStore.read(spark, root)
+      .select("doc_id", "tag").as[(Long, Long)].collect().toMap
+    val base = (1L to 20L).map(i => i -> 0L).toMap
+    val fresh = Map(3L -> 7L, 4L -> 7L, 5L -> 7L, 40L -> 7L)
+    // crash point → what the crashed attempt left for vacuum
+    val upsertPoints = Seq("data-dir-written" -> "data/v00002-",
+      "delete-file-written" -> "meta/deletes-v00002-",
+      "manifest-tmp-written" -> "_versions/.tmp-v00002-",
+      "manifest-renamed" -> "")
+    val verbs = Seq(
+      ("upsert", () => SnapshotStore.upsert(spark, df(fresh),
+        fresh.keys.toSeq.toDF("doc_id"), root, 4): Unit,
+        base ++ fresh, upsertPoints),
+      ("deleteWhere",
+        () => SnapshotStore.deleteWhere(spark, root, "doc_id", 10L, 14L): Unit,
+        base.filterNot(e => e._1 >= 10L && e._1 <= 14L),
+        upsertPoints.drop(2)))
+    val saved = SnapshotStore.entryThreshold
+    // 4 upserted ids past the threshold: the delete entry is a file
+    SnapshotStore.entryThreshold = 2
+    try for ((verb, call, after, points) <- verbs;
+        (point, orphan) <- points) {
+      cleanup(root)
+      SnapshotStore.commit(df(base), root, buckets = 4)
+      val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+      SnapshotStore.FaultInjection.arm { p =>
+        seen += p
+        if (p == point) throw new RuntimeException(s"injected crash at $p")
+      }
+      try intercept[RuntimeException](call())
+      finally SnapshotStore.FaultInjection.disarm()
+      assert(seen.last === point, s"$verb never reached $point: $seen")
+      if (verb == "deleteWhere")
+        assert(!seen.contains("data-dir-written") &&
+          !seen.contains("delete-file-written"),
+          s"deleteWhere wrote a data or delete file: $seen")
+      // the store reads as either the old version or the new one
+      val published = orphan.isEmpty
+      assert(SnapshotStore.currentVersion(spark, root) ===
+        Some(if (published) 2L else 1L), s"$verb at $point")
+      assert(state() === (if (published) after else base),
+        s"$verb at $point: torn state")
+      if (!published) {
+        call() // the retry publishes version 2 from a fresh attempt
+        assert(state() === after, s"$verb retry after $point")
+        val reaped = SnapshotStore.vacuum(spark, root, keepVersions = 1)
+        assert(reaped.exists(_.startsWith(orphan)),
+          s"vacuum left $verb's $orphan orphan: ${reaped.mkString(", ")}")
+      }
+      SnapshotStore.vacuum(spark, root, keepVersions = 1)
+      assert(state() === after, s"$verb at $point: vacuum took a live file")
+    } finally SnapshotStore.entryThreshold = saved
+  }
+
+  test("merge-on-read delete set: versioned entries, null semantics, time " +
+      "travel, rollback, optimize folds, clone rewrites, history counts") {
+    import spark.implicits._
+    val root = "target/snap-mor"
+    cleanup(root)
+    def state(v: Long = -1L): Set[(Long, Option[Long])] =
+      SnapshotStore.read(spark, root, v).select("doc_id", "tag")
+        .as[(Long, Option[Long])].collect().toSet
+    def deletes(): Map[Long, (Long, Long)] = SnapshotStore.history(spark, root)
+      .select("version", "n_deletes", "n_delete_files")
+      .as[(Long, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
+    val v1Rows = (1L to 12L).map(i => (i, if (i % 4 == 0) None else Some(i)))
+    SnapshotStore.commit(v1Rows.toDF("doc_id", "tag"), root, buckets = 4)
+    // v2 replaces 2 and 3 and adds 20; v3 deletes tag in [5, 7] (a NULL
+    // tag is kept); v4 deletes tag = 9; v5 deletes doc 20 by id
+    SnapshotStore.upsert(spark, Seq((2L, Some(50L)), (3L, None),
+      (20L, Some(6L))).toDF("doc_id", "tag"), Seq(2L).toDF("doc_id"), root, 4)
+    SnapshotStore.deleteWhere(spark, root, "tag", 5L, 7L)
+    SnapshotStore.deletePoint(spark, root, "tag", 9L)
+    SnapshotStore.upsert(spark, Seq.empty[(Long, Option[Long])]
+      .toDF("doc_id", "tag"), Seq(20L).toDF("doc_id"), root, 4)
+    val v2 = v1Rows.toSet -- Set((2L, Some(2L)), (3L, Some(3L))) ++
+      Set((2L, Some(50L)), (3L, None), (20L, Some(6L)))
+    // the range deletes v1's 5, 6, 7 and v2's 20 (tag 6), not the NULLs
+    val v3 = v2.filterNot(r => r._2.exists(t => t >= 5L && t <= 7L))
+    val v4 = v3.filterNot(_._2.contains(9L))
+    val v5 = v4.filterNot(_._1 == 20L)
+    Seq(1L -> v1Rows.toSet, 2L -> v2, 3L -> v3, 4L -> v4, 5L -> v5)
+      .foreach { case (v, want) => assert(state(v) === want, s"v$v") }
+    // keyed writes added no stored file beyond the fresh rows'
+    val v1Files = SnapshotStore.manifestEntries(spark, root, 1L).toSet
+    assert(v1Files.subsetOf(
+      SnapshotStore.manifestEntries(spark, root, 5L).toSet))
+    assert(SnapshotStore.manifestEntries(spark, root, 4L) ===
+      SnapshotStore.manifestEntries(spark, root, 2L))
+    assert(deletes().view.mapValues(_._1).toMap ===
+      Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L, 5L -> 4L))
+    // a clone rewrites the filtered files and starts with no entry
+    val dst = "target/snap-mor-clone"
+    cleanup(dst)
+    SnapshotStore.cloneTo(spark, root, dst)
+    assert(SnapshotStore.read(spark, dst).select("doc_id", "tag")
+      .as[(Long, Option[Long])].collect().toSet === v5)
+    assert(SnapshotStore.history(spark, dst).select("n_deletes")
+      .as[Long].collect().toSeq === Seq(0L))
+    // rollback restores the target's delete set with its files
+    assert(SnapshotStore.rollback(spark, root, 3L) === 6L)
+    assert(state() === v3 && deletes()(6L) === ((2L, 0L)))
+    // optimize rewrites every file, so the entries fold and drop
+    SnapshotStore.optimize(spark, root)
+    assert(state() === v3 && deletes()(7L) === ((0L, 0L)))
+    // a range on a column older files lack matches only newer rows
+    SnapshotStore.upsert(spark, Seq((30L, Some(1L), 5L), (31L, Some(1L), 50L))
+      .toDF("doc_id", "tag", "extra"), Seq(30L).toDF("doc_id"), root, 4)
+    SnapshotStore.deleteWhere(spark, root, "extra", 0L, 10L)
+    assert(state() === v3 + ((31L, Some(1L))))
   }
 
   // --- non-additive schema evolution ----------------------------------
@@ -981,6 +1150,11 @@ class SnapshotStoreSpec extends SparkTestBase {
       .filter(col("version") === 3L)
       .select("n_files").as[Long].head()
     assert(nf >= 1L && nf <= 4L)
+    // the upsert's delete entry: optimize folds it, the rollback to v2
+    // restores it with v2's files
+    assert(SnapshotStore.history(spark, root)
+      .select("n_deletes", "n_delete_files").as[(Long, Long)].collect()
+      .toSeq === Seq((1L, 0L), (0L, 0L), (0L, 0L), (1L, 0L), (0L, 0L)))
   }
 
   test("vacuum's tmp-manifest sweep never touches versions AT or ABOVE " +

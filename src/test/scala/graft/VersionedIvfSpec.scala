@@ -202,12 +202,13 @@ class VersionedIvfSpec extends SparkTestBase {
 
     VersionedIvf.write(emb, k = 4, root)
     // the racing writer: after the delete's first attempt has read
-    // geometry at v1 and written its data dir, a rebalance publishes v2
-    // (splitting cells and reassigning rows) — the delete's publish
-    // must lose the v2 CAS, retry, and re-read the POST-SPLIT geometry
+    // geometry at v1 and staged its manifest (a delete writes no data
+    // file), a rebalance publishes v2 (splitting cells and reassigning
+    // rows) — the delete's publish must lose the v2 CAS, retry, and
+    // re-read the POST-SPLIT geometry
     var fired = false
     SnapshotStore.FaultInjection.arm { p =>
-      if (p == "data-dir-written" && !fired) {
+      if (p == "manifest-tmp-written" && !fired) {
         fired = true
         SnapshotStore.FaultInjection.disarm()
         assert(VersionedIvf.rebalance(spark, root, hotFactor = 1.0) >= 1)
