@@ -285,34 +285,57 @@ object IvfIndex {
     * a mismatch would silently score garbage distances (the fused
     * distance loop runs over the shorter length), the same
     * trusted-parameter corruption class as a wrong bucket modulus. A
-    * null embedding has no dimension and fails the guard too. One tiny
-    * min/max-size aggregate over the delta/query frame (never the
-    * corpus). */
-  private[operators] def requireDim(emb: DataFrame,
-      cents: Array[(Long, Array[Long])], what: String): Unit = {
-    val r = emb.agg(min(dimOf(col("embedding"))).as("lo"),
-      max(dimOf(col("embedding"))).as("hi")).collect()(0)
-    if (!r.isNullAt(0)) checkDim(r.getInt(0), r.getInt(1), cents, what)
+    * null embedding has no dimension and fails the guard too.
+    *
+    * `emb` with its `vec_id` guarded row by row: a wrong-dim row raises
+    * the named error when its id is read, so a verb whose first job
+    * reads the ids (the store upsert's id collect) fails before it
+    * writes anything, and no job of its own is added. Run the verb
+    * under [[namedDimError]]. */
+  private[operators] def dimChecked(emb: DataFrame,
+      cents: Array[(Long, Array[Long])], what: String): DataFrame = {
+    val dim = cents.head._2.length
+    val d = dimOf(col("embedding"))
+    val (head, tail) = dimText(what, dim)
+    emb.withColumn("vec_id", when(d === dim, col("vec_id"))
+      .otherwise(raise_error(concat(lit(head), d.cast("string"), lit(".."),
+        d.cast("string"), lit(tail)))))
   }
 
-  /** [[requireDim]] riding a pass the caller already makes: the
-    * per-row dimension to aggregate and the check of its (min, max), for
-    * [[SnapshotStore.upsert]]'s `freshRange` (same named error). */
-  private[operators] def dimGuard(cents: Array[(Long, Array[Long])],
-      what: String): (Column, (Int, Int) => Unit) =
-    (dimOf(col("embedding")), (lo, hi) => checkDim(lo, hi, cents, what))
+  /** `body`, with a [[dimChecked]] error raised inside a task (it reaches
+    * the driver wrapped in the job's abort) rethrown as the named
+    * IllegalArgumentException carrying the guard's own text. */
+  private[operators] def namedDimError[T](body: => T): T =
+    try body catch {
+      case e: Exception =>
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .flatMap(t => Option(t.getMessage))
+          .collectFirst { case DimErrorRe(m) => m } match {
+            case Some(m) => throw new IllegalArgumentException(m, e)
+            case None => throw e
+          }
+    }
 
   /** A vector's dimension; -1 for a null vector (never a centroid dim). */
   private def dimOf(c: Column): Column = coalesce(size(c), lit(-1))
 
+  /** The dim error's text around its `lo..hi` range. */
+  private def dimText(what: String, dim: Int): (String, String) =
+    (s"$what: embedding dim ",
+      s" does not match the stored index's centroid dim $dim — wrong-dim " +
+        "vectors would silently score garbage distances")
+
+  private val DimErrorRe = ("(?s).*?(\\S+: embedding dim -?\\d+\\.\\.-?\\d+ " +
+    "does not match the stored index's centroid dim \\d+ — wrong-dim " +
+    "vectors would silently score garbage distances).*").r
+
   private def checkDim(lo: Int, hi: Int,
       cents: Array[(Long, Array[Long])], what: String): Unit = {
     val dim = cents.head._2.length
-    if (lo != dim || hi != dim)
-      throw new IllegalArgumentException(
-        s"$what: embedding dim $lo..$hi does not match the stored " +
-          s"index's centroid dim $dim — wrong-dim vectors would silently " +
-          "score garbage distances")
+    if (lo != dim || hi != dim) {
+      val (head, tail) = dimText(what, dim)
+      throw new IllegalArgumentException(s"$head$lo..$hi$tail")
+    }
   }
 
   /** Named errors for a search's bounds: no probe or no neighbour is
@@ -333,7 +356,8 @@ object IvfIndex {
     * probe set is queries × nProbe rows — what a broadcast join side
     * pulls onto the driver anyway — and the one collect yields all three
     * facts a stored search needs before it scans:
-    *  - the [[requireDim]] check (same named error);
+    *  - the dim check over the queries' (min, max) (the named error
+    *    [[dimChecked]] raises);
     *  - the probed cells, sorted (empty for an empty query frame);
     *  - the join side, as a LOCAL relation of the collected rows, so the
     *    ranking never runs a second time.

@@ -926,6 +926,20 @@ object SnapshotStore {
     * spec can force the fallback on small fixtures. */
   @volatile private[graft] var docIdPruneCap: Int = 200000
 
+  /** Fresh-row count (taken by the upsert's id collect) up to which a
+    * merge-on-read upsert writes its fresh rows from ONE task, their
+    * narrow upstream included; past it the rows rebalance on `bucket`,
+    * which keeps the upstream parallel and lets adaptive execution split
+    * a skewed bucket at the cost of one more job (a shuffle map stage).
+    * Either way one file per touched bucket. Measured on a 4-core host
+    * over an 8-task upstream that chunks and embeds documents
+    * (`artifacts/pr6/single_writer.log`): the two paths tie up to ~2000
+    * written rows, and one task is 39 % slower at 5000 and 2.5× at
+    * 80000; this bound keeps a 2× margin below the tie's end.
+    * private[graft] var so a spec (or a measurement) can force either
+    * path. */
+  @volatile private[graft] var singleWriterRows: Long = 1000L
+
   private def entryFileLine(rel: String) = s"#entryfile\t$rel"
 
   private def entryFileRelOf(meta: Seq[String]): Option[String] =
@@ -1016,10 +1030,12 @@ object SnapshotStore {
   // version > d matches it — the equality-delete sequence rule, so an
   // upsert's fresh rows (dir v) survive its own entry (version v) while
   // every older copy of their ids does not. [[assemble]] applies the rule
-  // per dir as one filter over driver-held values (an IN set, a range);
-  // a dir newer than every entry, and any version without entries, reads
-  // unfiltered. A range deletes only rows it holds TRUE for (SQL DELETE:
-  // a NULL is kept). The verbs that keep older files live carry their
+  // as ONE filter over the dirs' union, built from driver-held values
+  // (each deleted id in the IN set of its newest entry, a range per
+  // range entry), which the optimizer narrows per dir; a dir newer than
+  // every entry, and any version without entries, reads unfiltered. A
+  // range deletes only rows it holds TRUE for (SQL DELETE: a NULL is
+  // kept). The verbs that keep older files live carry their
   // parent's entries; [[publish]] drops an entry once no live file is
   // older than it, so a full optimize or commit folds them all.
 
@@ -1159,34 +1175,64 @@ object SnapshotStore {
     }
   }
 
-  /** `df` (the scan of data dir `dir`) minus the rows a delete entry
-    * newer than the dir matches. No such entry ⇒ `df` itself. A range on
-    * a column the dir's files lack matches nothing there (the column
-    * null-fills on read). */
-  private def liveRows(spark: SparkSession, root: String, dir: String,
-      deletes: Seq[DeleteEntry], df: DataFrame): DataFrame = {
-    val newer = deletes.filter(_.version > dataVersionOf(dir))
-    if (newer.isEmpty) return df
-    val ids = newer.flatMap {
-      case IdsDeleted(_, ids) => ids
-      case IdFileDeleted(_, rel) => deleteFileIds(spark, root, rel).toSeq
-      case _ => Nil
-    }.distinct
-    val matched =
-      (if (ids.isEmpty) None
-       else Some(col("doc_id").cast("long").isInCollection(ids))) ++
-        newer.collect {
-          case RangeDeleted(_, c, lo, hi) if df.columns.contains(c) =>
-            val (x, dt) =
-              if (c == "doc_id")
-                (col(c).cast("long"), org.apache.spark.sql.types.LongType)
-              else (col(c), df.schema(c).dataType)
-            (lo.map(b => x >= canonLit(b, dt)) ++
-              hi.map(b => x <= canonLit(b, dt))).reduce(_ && _)
-        }
-    if (matched.isEmpty) df
-    else df.filter(!coalesce(matched.reduce(_ || _), lit(false)))
+  /** The union of the data-dir scans `dirDfs` minus the rows a delete
+    * entry newer than their dir matches. Each scan carries its dir's
+    * version as a literal column, and ONE filter over the union holds
+    * every entry once: a deleted id sits only in the set of its newest
+    * entry (a row of dir d is deleted iff that entry's version > d) and
+    * a range stays one predicate. The optimizer pushes the filter into
+    * each scan and folds the version comparisons there, so a dir keeps
+    * only the entries newer than it, the sets shared by reference. No
+    * entry newer than the oldest dir ⇒ the plain union. A range on a
+    * column a dir's files lack null-fills there and so matches nothing
+    * (SQL null semantics); one on a column no dir stores is dropped. */
+  private def liveUnion(spark: SparkSession, root: String,
+      dirDfs: Seq[(String, DataFrame)],
+      deletes: Seq[DeleteEntry]): DataFrame = {
+    def union(dfs: Seq[DataFrame]) =
+      dfs.reduce(_.unionByName(_, allowMissingColumns = true))
+    val oldest = dirDfs.map(d => dataVersionOf(d._1)).min
+    val newer = deletes.filter(_.version > oldest)
+    if (newer.isEmpty) return union(dirDfs.map(_._2))
+    val tagged = union(dirDfs.map { case (dir, df) =>
+      df.withColumn(DirVersionCol, lit(dataVersionOf(dir)))
+    })
+    val newest = mutable.HashMap.empty[Long, Long]
+    def deleted(v: Long, ids: Iterable[Long]): Unit = ids.foreach { id =>
+      if (newest.getOrElse(id, Long.MinValue) < v) newest(id) = v
+    }
+    newer.foreach {
+      case IdsDeleted(v, ids) => deleted(v, ids)
+      case IdFileDeleted(v, rel) => deleted(v, deleteFileIds(spark, root, rel))
+      case _ =>
+    }
+    val dv = col(DirVersionCol)
+    val byIds = newest.toSeq.groupBy(_._2).toSeq.sortBy(_._1)
+      .map { case (v, ids) =>
+        val set: Set[Any] = ids.iterator.map(_._1).toSet
+        dv < v && org.apache.spark.sql.graft.ColumnBridge.column(
+          org.apache.spark.sql.catalyst.expressions.InSet(
+            org.apache.spark.sql.graft.ColumnBridge.expression(
+              col("doc_id").cast("long")), set))
+      }
+    val byRanges = newer.collect {
+      case RangeDeleted(v, c, lo, hi) if tagged.columns.contains(c) =>
+        val (x, dt) =
+          if (c == "doc_id")
+            (col(c).cast("long"), org.apache.spark.sql.types.LongType)
+          else (col(c), tagged.schema(c).dataType)
+        dv < v && (lo.map(b => x >= canonLit(b, dt)) ++
+          hi.map(b => x <= canonLit(b, dt))).reduce(_ && _)
+    }
+    val matched = byIds ++ byRanges
+    (if (matched.isEmpty) tagged
+     else tagged.filter(!coalesce(matched.reduce(_ || _), lit(false))))
+      .drop(DirVersionCol)
   }
+
+  /** [[liveUnion]]'s per-scan dir-version column, dropped before any
+    * caller sees the rows. */
+  private val DirVersionCol = "graft_dir_version"
 
   private def sidecarSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
@@ -2388,8 +2434,7 @@ object SnapshotStore {
       }
     }
     // merge-on-read: each dir drops the rows a newer delete entry matches
-    dirDfs.map { case (dir, df) => liveRows(spark, root, dir, deletes, df) }
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    liveUnion(spark, root, dirDfs, deletes)
       .withColumn("doc_id", col("doc_id").cast("long"))
       .withColumn("bucket", col("bucket").cast("long"))
   }
@@ -2438,38 +2483,28 @@ object SnapshotStore {
     * no fresh rows) and one delete entry holding the ids, and carries
     * every existing file unread. Reads drop the old rows of those ids
     * (see the delete-set notes). Jobs per call on an inline-metadata
-    * store: 3 (the id collect's map and result stages, the write); at
-    * most 2 when there are no fresh rows. An id set over the cap stays a
-    * checkpointed frame and rewrites the touched buckets whole, its
-    * fresh rows written by their upstream tasks, as a bulk load does. */
+    * store: 3 (the id collect's map and result stages, the write) up to
+    * [[singleWriterRows]] fresh rows, 4 past it (the write's rebalance
+    * map stage); at most 2 when there are no fresh rows. An id set over
+    * the cap stays a checkpointed frame and rewrites the touched buckets
+    * whole, its fresh rows written by their upstream tasks, as a bulk
+    * load does. */
   def upsert(spark: SparkSession, newRows: DataFrame,
       reingestedDocs: DataFrame, root: String, buckets: Int,
       meta: Seq[String] = Nil,
       expectedVersion: Option[Long] = None): Long =
     upsert(spark, newRows, reingestedDocs, root, buckets, meta,
-      expectedVersion, clusterBy = None, freshRange = None)
-
-  /** Upserts of at most this many ids write their fresh rows from one
-    * task; larger ones rebalance on `bucket`, so adaptive execution
-    * splits a skewed bucket. Either way one file per touched bucket. */
-  private val SingleWriterIds = 4096
+      expectedVersion, clusterBy = None)
 
   /** [[upsert]] for a store whose files are clustered by a column other
     * than the key: `clusterBy` lays out every row the upsert writes, with
     * their `bucket` column. [[VersionedIvf]] and [[VersionedIvfAdc]] pass
     * their cent_id bands, so every written file covers the narrow cent_id
-    * band [[VersionedIvf.write]]'s do. None is [[upsert]]'s own layout.
-    *
-    * `freshRange = Some((x, check))`: the id collect also takes the min
-    * and max of the integer expression `x` over `newRows`, and `check`
-    * receives them on the driver before anything is written (the stored
-    * index's dim guard); no fresh rows, no call. */
+    * band [[VersionedIvf.write]]'s do. None is [[upsert]]'s own layout. */
   private[graft] def upsert(spark: SparkSession, newRows: DataFrame,
       reingestedDocs: DataFrame, root: String, buckets: Int,
       meta: Seq[String], expectedVersion: Option[Long],
-      clusterBy: Option[DataFrame => DataFrame],
-      freshRange: Option[(org.apache.spark.sql.Column, (Int, Int) => Unit)])
-      : Long = {
+      clusterBy: Option[DataFrame => DataFrame]): Long = {
     checkExpected(spark, root, expectedVersion)
     val cur = currentVersion(spark, root).getOrElse(
       throw new IllegalArgumentException(
@@ -2488,45 +2523,29 @@ object SnapshotStore {
     val fresh = withBucket(newRows, buckets)
     // ONE pass over the keys: per distinct id (newRows' own ids included,
     // so a doc present in newRows but omitted from reingestedDocs
-    // replaces, not duplicates, its old rows), whether newRows holds a
-    // row of it, and the freshRange min/max over its rows
-    val probe = freshRange.map(_._1)
+    // replaces, not duplicates, its old rows) and how many rows newRows
+    // holds of it. Before the schema guards, so an error the caller
+    // raises in the ids (the stored index's dim guard) comes first.
     def keys(df: DataFrame, isFresh: Boolean): DataFrame = df.select(
-      Seq(col("doc_id").cast("long").as("doc_id"),
-        lit(isFresh).as("graft_fresh")) ++
-        probe.toSeq.map(x => (if (isFresh) x else lit(null)).cast("int")
-          .as("graft_x")): _*)
+      col("doc_id").cast("long").as("doc_id"),
+      lit(if (isFresh) 1L else 0L).as("graft_n"))
     val idFrame = keys(reingestedDocs, isFresh = false)
       .union(keys(newRows, isFresh = true))
       .groupBy("doc_id")
-      .agg(max("graft_fresh").as("graft_fresh"), probe.toSeq.flatMap(_ =>
-        Seq(min("graft_x").as("graft_lo"), max("graft_x").as("graft_hi"))): _*)
+      .agg(sum("graft_n").as("graft_n"))
     // Checkpointed (ids only): over the cap the grouped count and the
     // anti-join both read the distinct ids, and would otherwise each
     // re-evaluate the id projection of the fresh rows' lineage. LAZY: the
     // collect below computes it.
     val upserted = idFrame.localCheckpoint(false)
     // DRIVER-HELD KEYS: one bounded collect of the id rows (a null id
-    // replaces nothing, so it is no key; its row still says whether fresh
-    // rows carry a null id). One partition, so the bounded collect is one
-    // job that computes the whole checkpoint (a limit over several
-    // partitions scans them in rounds of jobs).
+    // replaces nothing, so it is no key; its row still counts the fresh
+    // rows that carry a null id). One partition, so the bounded collect
+    // is one job that computes the whole checkpoint (a limit over
+    // several partitions scans them in rounds of jobs).
     val idRows = upserted.coalesce(1).limit(docIdPruneCap + 2).collect()
     val held = idRows.filterNot(_.isNullAt(0)).map(_.getLong(0))
     val byDriver = held.length <= docIdPruneCap
-    freshRange.foreach { case (x, check) =>
-      val range =
-        if (byDriver) {
-          val ranged = idRows.filterNot(_.isNullAt(2))
-          if (ranged.isEmpty) None
-          else Some((ranged.map(_.getInt(2)).min, ranged.map(_.getInt(3)).max))
-        } else {
-          val r = newRows.agg(min(x.cast("int")), max(x.cast("int")))
-            .collect()(0)
-          if (r.isNullAt(0)) None else Some((r.getInt(0), r.getInt(1)))
-        }
-      range.foreach { case (lo, hi) => check(lo, hi) }
-    }
     // Retype guard — at WRITE time: fresh files of a retyped column would
     // otherwise only fail read()'s declared-vs-stored check after the
     // publish. Fresh rows MAY omit stored columns (their rows null-fill —
@@ -2572,11 +2591,12 @@ object SnapshotStore {
     if (byDriver) {
       // merge-on-read: the fresh rows' files plus one delete entry of the
       // ids; no stored file is read, rewritten or dropped
+      val freshRows = idRows.iterator.map(_.getLong(1)).sum
       val adds =
-        if (!idRows.exists(_.getBoolean(1))) Nil
+        if (freshRows == 0) Nil
         else {
           val laid = clusterBy.fold(
-            if (held.length <= SingleWriterIds) fresh.coalesce(1)
+            if (freshRows <= singleWriterRows) fresh.coalesce(1)
             else fresh.hint("rebalance", col("bucket")))(_(fresh))
           listVersionFiles(spark, root, writeVersionDir(laid, spark, root, v))
         }

@@ -172,18 +172,20 @@ object VersionedIvf {
     * can never make this manifest carry stale centroid lines against
     * the winner's rows — the retry re-reads geometry and re-assigns.
     * Wrong-dim (or null) vectors are a named IllegalArgumentException
-    * before anything is written; the dim range rides the store's id
-    * collect. Jobs per call: 4 (the id collect's two, the cent_id bands'
-    * map stage, the write). Returns the new version. */
+    * before anything is written; the check rides the ids the store's id
+    * collect reads ([[IvfIndex.dimChecked]]). Jobs per call: 4 (the id
+    * collect's two, the cent_id bands' map stage, the write). Returns
+    * the new version. */
   def upsert(spark: SparkSession, root: String, emb: DataFrame): Long =
-    SnapshotStore.withConflictRetry(spark, root) { observed =>
+    IvfIndex.namedDimError(SnapshotStore.withConflictRetry(spark, root) {
+      observed =>
       requirePublished(observed, root, "upsert")
       requireFlat(spark, root, observed, "upsert")
       val cents = storedCentroids(spark, root, observed)
-      upsertRows(spark, root, observed, assignRows(emb, cents),
-        cents.map(_._1), centLines(cents),
-        freshRange = Some(IvfIndex.dimGuard(cents, "VersionedIvf.upsert")))
-    }
+      upsertRows(spark, root, observed, assignRows(
+        IvfIndex.dimChecked(emb, cents, "VersionedIvf.upsert"), cents),
+        cents.map(_._1), centLines(cents))
+    })
 
   private def assignRows(emb: DataFrame,
       cents: Array[(Long, Array[Long])],
@@ -215,16 +217,14 @@ object VersionedIvf {
     * `meta` carries the geometry lines. The rows are written in the
     * cent_id bands of the geometry with cells `cellIds`; the replaced
     * and deleted ids become the version's delete entry, so no stored
-    * file is read or rewritten. `freshRange`: a check over the rows that
-    * rides the store's id collect ([[IvfIndex.dimGuard]]). */
+    * file is read or rewritten. */
   private[operators] def upsertRows(spark: SparkSession, root: String,
       observed: Long, rows: DataFrame, cellIds: Seq[Long],
-      meta: Seq[String], deleted: Option[DataFrame] = None,
-      freshRange: Option[(Column, (Int, Int) => Unit)] = None): Long =
+      meta: Seq[String], deleted: Option[DataFrame] = None): Long =
     SnapshotStore.upsert(spark, rows,
       deleted.getOrElse(rows.select("doc_id").limit(0)), root,
       bucketsAt(spark, root, observed), meta, Some(observed),
-      clusterBy = Some(clustered(_, cellIds)), freshRange = freshRange)
+      clusterBy = Some(clustered(_, cellIds)))
 
   /** EXACTLY-ONCE micro-batch upsert — [[upsert]] carrying a
     * [[SnapshotStore.txnMarker]], the verb a Structured Streaming
@@ -250,7 +250,8 @@ object VersionedIvf {
   def upsertBatch(spark: SparkSession, root: String, emb: DataFrame,
       streamId: String, batchId: Long,
       bootstrapCells: Option[Int] = None, buckets: Int = 4): Long =
-    SnapshotStore.withConflictRetry(spark, root) { observed =>
+    IvfIndex.namedDimError(SnapshotStore.withConflictRetry(spark, root) {
+      observed =>
       if (SnapshotStore.lastCommittedBatch(spark, root, streamId)
           .exists(_ >= batchId)) {
         observed // replayed batch: marker already published — no-op
@@ -269,13 +270,12 @@ object VersionedIvf {
       } else {
         requireFlat(spark, root, observed, "upsertBatch")
         val cents = storedCentroids(spark, root, observed)
-        upsertRows(spark, root, observed, assignRows(emb, cents),
+        upsertRows(spark, root, observed, assignRows(IvfIndex.dimChecked(
+          emb, cents, "VersionedIvf.upsertBatch"), cents),
           cents.map(_._1),
-          centLines(cents) :+ SnapshotStore.txnMarker(streamId, batchId),
-          freshRange =
-            Some(IvfIndex.dimGuard(cents, "VersionedIvf.upsertBatch")))
+          centLines(cents) :+ SnapshotStore.txnMarker(streamId, batchId))
       }
-    }
+    })
 
   /** Delete vectors by id — ONE atomic publish (an empty-re-ingest
     * upsert keyed on doc_id) that writes no data file: the ids become

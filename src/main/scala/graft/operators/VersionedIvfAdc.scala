@@ -130,16 +130,16 @@ object VersionedIvfAdc {
     * new rows + carried geometry publish as ONE atomic version under
     * the OCC retry loop. Returns the new version. */
   def upsert(spark: SparkSession, root: String, emb: DataFrame): Long =
-    SnapshotStore.withConflictRetry(spark, root) { observed =>
+    IvfIndex.namedDimError(SnapshotStore.withConflictRetry(spark, root) {
+      observed =>
       requirePublished(observed, root, "upsert")
       val (dim, m, k) = storedGeometry(spark, root, observed)
       val coarse = storedCoarse(spark, root, observed)
       val book = storedBook(spark, root, observed)
-      IvfIndex.requireDim(emb, coarse, "VersionedIvfAdc.upsert")
-      VersionedIvf.upsertRows(spark, root, observed,
-        encodedRows(emb, coarse, book, dim, m), coarse.map(_._1),
-        metaLines(coarse, book, dim, m, k))
-    }
+      VersionedIvf.upsertRows(spark, root, observed, encodedRows(
+        IvfIndex.dimChecked(emb, coarse, "VersionedIvfAdc.upsert"), coarse,
+        book, dim, m), coarse.map(_._1), metaLines(coarse, book, dim, m, k))
+    })
 
   /** Streamed-bootstrap codebook: the k LOWEST-vec_id vectors of the
     * first batch, renumbered 0..k-1 (the positional-decode contract the
@@ -191,7 +191,8 @@ object VersionedIvfAdc {
       streamId: String, batchId: Long,
       bootstrapCells: Option[Int] = None, dim: Int = 64, m: Int = 8,
       k: Int = 16, buckets: Int = 4): Long =
-    SnapshotStore.withConflictRetry(spark, root) { observed =>
+    IvfIndex.namedDimError(SnapshotStore.withConflictRetry(spark, root) {
+      observed =>
       if (SnapshotStore.lastCommittedBatch(spark, root, streamId)
           .exists(_ >= batchId)) {
         observed // replayed batch: marker already published — no-op
@@ -213,13 +214,13 @@ object VersionedIvfAdc {
         val (sDim, sM, sK) = storedGeometry(spark, root, observed)
         val coarse = storedCoarse(spark, root, observed)
         val book = storedBook(spark, root, observed)
-        IvfIndex.requireDim(emb, coarse, "VersionedIvfAdc.upsertBatch")
-        VersionedIvf.upsertRows(spark, root, observed,
-          encodedRows(emb, coarse, book, sDim, sM), coarse.map(_._1),
+        VersionedIvf.upsertRows(spark, root, observed, encodedRows(
+          IvfIndex.dimChecked(emb, coarse, "VersionedIvfAdc.upsertBatch"),
+          coarse, book, sDim, sM), coarse.map(_._1),
           metaLines(coarse, book, sDim, sM, sK) :+
             SnapshotStore.txnMarker(streamId, batchId))
       }
-    }
+    })
 
   /** Delete vectors by id — one atomic empty-re-ingest publish, geometry
     * carried, doc_id stats pruning the keyed read. */
@@ -317,14 +318,15 @@ object VersionedIvfAdc {
     * `#pqcent` lines publish as ONE OCC version. Returns it. */
   def retrain(spark: SparkSession, root: String, emb: DataFrame,
       iters: Int = 1, trainSample: Long = 0L): Long =
-    SnapshotStore.withConflictRetry(spark, root) { observed =>
+    IvfIndex.namedDimError(SnapshotStore.withConflictRetry(spark, root) {
+      observed =>
       requirePublished(observed, root, "retrain")
       val (dim, m, k) = storedGeometry(spark, root, observed)
       val coarse = storedCoarse(spark, root, observed)
-      IvfIndex.requireDim(emb, coarse, "VersionedIvfAdc.retrain")
       val ids = SnapshotStore.read(spark, root, observed)
         .select(col("doc_id"))
-      val src = emb
+      // the missing-id check below is the first job to read the ids
+      val src = IvfIndex.dimChecked(emb, coarse, "VersionedIvfAdc.retrain")
         .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
         .join(ids.select(col("doc_id").as("vec_id")), Seq("vec_id"),
           "left_semi")
@@ -353,7 +355,7 @@ object VersionedIvfAdc {
       VersionedIvf.upsertRows(spark, root, observed,
         encodedRows(src, coarse, book, dim, m), coarse.map(_._1),
         metaLines(coarse, book, dim, m, k))
-    }
+    })
 
   /** `(q_id, j, code, dist)` — exact integer subspace distances of the
     * query vectors to a codebook (stored or historical): the asymmetric-

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{IvfIndex, SnapshotStore, VersionedIvf}
+import graft.operators.{IvfIndex, SnapshotStore, VersionedIvf, VersionedIvfAdc}
 
 /** The IVF index: in-memory search, centroid training, and the stored
   * index ([[VersionedIvf]], flat and SQ8 tiers) — stored search ≡
@@ -474,14 +474,32 @@ class IvfIndexSpec extends SparkTestBase {
       assert(e.getMessage.contains("dim 8..8") &&
         e.getMessage.contains("centroid dim 64"), e.getMessage)
     }
-    // the upserts' check rides their id collect: nothing was published,
-    // and a null vector fails it too
+    // the upserts' check rides the ids their id collect reads: nothing
+    // was published, and a null vector fails it too
     assert(SnapshotStore.currentVersion(spark, root) === Some(1L))
     val none = Seq((900002L, null: Seq[Float]), (900003L, Seq.fill(64)(0.5f)))
       .toDF("vec_id", "embedding")
     val e = intercept[IllegalArgumentException](
       VersionedIvf.upsert(spark, root, none))
-    assert(e.getMessage.contains("dim -1..64"), e.getMessage)
+    assert(e.getMessage.contains("VersionedIvf.upsert: embedding dim -1..-1") &&
+      e.getMessage.contains("centroid dim 64"), e.getMessage)
     assert(SnapshotStore.currentVersion(spark, root) === Some(1L))
+    // the compressed index's upserts and retrain raise the same error
+    val adc = root + "-adc"
+    VersionedIvfAdc.write(emb, adc)
+    val shortF = Seq((900001L, Seq.fill(8)(0.5f))).toDF("vec_id", "embedding")
+    for ((name, op) <- Seq(
+        "upsert" -> (() => VersionedIvfAdc.upsert(spark, adc, shortF): Unit),
+        "upsertBatch" -> (() =>
+          VersionedIvfAdc.upsertBatch(spark, adc, shortF, "s", 0L): Unit),
+        "retrain" -> (() =>
+          VersionedIvfAdc.retrain(spark, adc,
+            emb.select("vec_id", "embedding").union(shortF)): Unit))) {
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains(s"VersionedIvfAdc.$name: embedding dim " +
+        "8..8 does not match the stored index's centroid dim 64"),
+        e.getMessage)
+    }
+    assert(SnapshotStore.currentVersion(spark, adc) === Some(1L))
   }
 }

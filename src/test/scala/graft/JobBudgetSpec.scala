@@ -115,6 +115,21 @@ class JobBudgetSpec extends SparkTestBase {
     assert(jobs <= 8, s"ADC search launched $jobs jobs")
   }
 
+  test("VersionedIvfAdc.upsert stays within budget: its dim check adds " +
+      "no job") {
+    val root = "target/budget-vadc-upsert"
+    cleanup(root)
+    VersionedIvfAdc.write(corpus, root, dim = Dim, m = 2, k = 8,
+      nCells = Cells)
+    def upsertVecs(from: Long): Unit =
+      VersionedIvfAdc.upsert(spark, root, vecs(((from until from + 40L) ++
+        (from + 1000L until from + 1040L)).map(i => (i, vector(i * 3))))): Unit
+    upsertVecs(0L)
+    val jobs = JobCounter(spark)(upsertVecs(100L))._2
+    info(s"VersionedIvfAdc.upsert: $jobs jobs")
+    assert(jobs <= 4, s"VersionedIvfAdc.upsert launched $jobs jobs")
+  }
+
   test("readDocs stays within budget on inline and sidecar metadata") {
     val inline = "target/budget-docs-inline"
     docStore(inline)

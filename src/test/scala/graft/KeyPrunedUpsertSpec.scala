@@ -170,41 +170,47 @@ class KeyPrunedUpsertSpec extends SparkTestBase {
   test("an upsert adds at most one file per touched bucket for its new " +
       "rows, however many tasks produced them, and rewrites no stored " +
       "file") {
-    val root = "target/keypruned-layout"
-    cleanup(root)
-    val sp = spark
-    import sp.implicits._
-    val df = (0L until 2000L).map(i => (i, i * 3)).toDF("doc_id", "n")
-    SnapshotStore.commit(df, root, buckets = 8,
-      meta = Seq(SnapshotStore.statsDeclaration(Seq("doc_id"))))
-    def upsert(ids: Seq[Long]): (Set[String], Set[String]) = {
-      val before = SnapshotStore.read(spark, root).inputFiles.toSet
-      // spread over 6 upstream tasks
-      val fresh = ids.map(i => (i, -i)).toDF("doc_id", "n").repartition(6)
-      SnapshotStore.upsert(spark, fresh, fresh.select("doc_id"), root,
-        buckets = 8)
-      val after = SnapshotStore.read(spark, root).inputFiles.toSet
-      (after -- before, before -- after)
-    }
-    // 40 new ids past every file's doc_id envelope: a pure delta
-    val newIds = (5000L until 5040L)
-    val (added1, rewritten1) = upsert(newIds)
-    assert(rewritten1.isEmpty, s"a pure delta rewrote $rewritten1")
-    assert(added1.size <= bucketsOf(newIds, 8).size,
-      s"${added1.size} files added for ${bucketsOf(newIds, 8).size} " +
-        "touched buckets")
-    // 60 replaced and 40 new ids: the replaced rows stay in their files,
-    // masked by the version's delete entry
-    val ids = (0L until 2000L by 33L).take(60) ++ (6000L until 6040L)
-    val (added2, rewritten2) = upsert(ids)
-    assert(rewritten2.isEmpty, s"a keyed upsert rewrote $rewritten2")
-    assert(added2.size <= bucketsOf(ids, 8).size,
-      s"${added2.size} files added for ${bucketsOf(ids, 8).size} touched " +
-        "buckets")
-    val snap = SnapshotStore.read(spark, root)
-    assert(snap.count() === 2080L)
-    assert(snap.filter(col("doc_id").isin(ids ++ newIds: _*)).select("n")
-      .as[Long].collect().toSet === (ids ++ newIds).map(-_).toSet)
+    // both write paths: one writer task (the default at this size) and
+    // the bucket rebalance past singleWriterRows
+    val default = SnapshotStore.singleWriterRows
+    try for (writerRows <- Seq(default, 0L)) {
+      SnapshotStore.singleWriterRows = writerRows
+      val root = s"target/keypruned-layout-$writerRows"
+      cleanup(root)
+      val sp = spark
+      import sp.implicits._
+      val df = (0L until 2000L).map(i => (i, i * 3)).toDF("doc_id", "n")
+      SnapshotStore.commit(df, root, buckets = 8,
+        meta = Seq(SnapshotStore.statsDeclaration(Seq("doc_id"))))
+      def upsert(ids: Seq[Long]): (Set[String], Set[String]) = {
+        val before = SnapshotStore.read(spark, root).inputFiles.toSet
+        // spread over 6 upstream tasks
+        val fresh = ids.map(i => (i, -i)).toDF("doc_id", "n").repartition(6)
+        SnapshotStore.upsert(spark, fresh, fresh.select("doc_id"), root,
+          buckets = 8)
+        val after = SnapshotStore.read(spark, root).inputFiles.toSet
+        (after -- before, before -- after)
+      }
+      // 40 new ids past every file's doc_id envelope: a pure delta
+      val newIds = (5000L until 5040L)
+      val (added1, rewritten1) = upsert(newIds)
+      assert(rewritten1.isEmpty, s"a pure delta rewrote $rewritten1")
+      assert(added1.size <= bucketsOf(newIds, 8).size,
+        s"${added1.size} files added for ${bucketsOf(newIds, 8).size} " +
+          "touched buckets")
+      // 60 replaced and 40 new ids: the replaced rows stay in their files,
+      // masked by the version's delete entry
+      val ids = (0L until 2000L by 33L).take(60) ++ (6000L until 6040L)
+      val (added2, rewritten2) = upsert(ids)
+      assert(rewritten2.isEmpty, s"a keyed upsert rewrote $rewritten2")
+      assert(added2.size <= bucketsOf(ids, 8).size,
+        s"${added2.size} files added for ${bucketsOf(ids, 8).size} touched " +
+          "buckets")
+      val snap = SnapshotStore.read(spark, root)
+      assert(snap.count() === 2080L)
+      assert(snap.filter(col("doc_id").isin(ids ++ newIds: _*)).select("n")
+        .as[Long].collect().toSet === (ids ++ newIds).map(-_).toSet)
+    } finally SnapshotStore.singleWriterRows = default
   }
 
   test("over docIdPruneCap the frame path reads as the driver path does; " +
