@@ -33,23 +33,12 @@ object Bench {
       .split("\\s+")(0).toDouble
     catch { case _: Throwable => -1.0 }
 
-  def main(args: Array[String]): Unit = {
-    val loadStart = loadavg1m()
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // pinned HERE, not only via build.sbt's forked-run javaOptions: a
-      // spark-submit launch of Bench must render NTZ timestamps in the
-      // same zone the oracle (and Verify) use
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Steady-state warmup: JIT/codegen paths and parquet footers, so the
-    // first timed query does not absorb one-time JVM cost.
+  /** Steady-state warm-up before any timed query, shared by [[Bench]] and
+    * [[Profile]] so both time the same warm JVM: JIT/codegen paths and
+    * parquet footers, then one tiny run of each operator family and of
+    * the store verbs, so the first timed query does not absorb one-time
+    * JVM cost. Failures are swallowed: a warm-up only moves cost. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
     spark.range(1000000L).selectExpr("sum(id)").collect()
     Seq("lineitem", "orders", "customer", "documents", "embeddings", "events")
       .foreach { t =>
@@ -61,6 +50,8 @@ object Bench {
     // whichever query runs them first — measured ~2.5 s billed to
     // d02_minhash_lsh alone. Run each family once over a tiny slice so the
     // timed windows measure steady-state operator cost, not first-use JIT.
+    val wroot = java.nio.file.Files
+      .createTempDirectory("graft_bench_warm").toString
     try {
       val docs20 = spark.read.parquet(s"$sfDir/documents.parquet").limit(20)
       val emb50 = spark.read.parquet(s"$sfDir/embeddings.parquet").limit(50)
@@ -83,8 +74,6 @@ object Bench {
       // parquet-footer code JIT once here so i05/i10 time the operator,
       // not first-use initialization (same rationale as the sketch
       // warmup above) — a 20-doc store, built and dropped
-      val wroot = java.nio.file.Files
-        .createTempDirectory("graft_bench_warm").toString
       val idx20 = operators.IngestionPipeline
         .buildIndexFrom(spark.read.parquet(s"$sfDir/documents.parquet")
           .limit(20), 120, 20, 8)
@@ -104,6 +93,30 @@ object Bench {
       operators.VersionedIvf.search(spark, vroot, emb20.limit(2),
         nProbe = 2, topK = 3).count()
     } catch { case _: Throwable => () }
+    finally {
+      val p = new org.apache.hadoop.fs.Path(wroot)
+      try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(p, true): Unit
+      catch { case _: Throwable => () }
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val loadStart = loadavg1m()
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSfDir)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .withExtensions(new graft.plans.GraftExtensions)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      // pinned HERE, not only via build.sbt's forked-run javaOptions: a
+      // spark-submit launch of Bench must render NTZ timestamps in the
+      // same zone the oracle (and Verify) use
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    warmUp(spark, sfDir)
     // SPARK_GRAFT_ONLY=d05,s03 restricts the run for local iteration; the
     // driver never sets it, so round artifacts always cover every query.
     // SPARK_GRAFT_SKIP excludes named queries (same contract as Verify —

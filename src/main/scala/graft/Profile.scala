@@ -26,13 +26,8 @@ object Profile {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // same family warmup as Bench so first-use JIT is not misattributed
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    Seq("lineitem", "orders", "customer", "documents", "embeddings", "events")
-      .foreach { t =>
-        try spark.read.parquet(s"$sfDir/$t.parquet").count()
-        catch { case _: Throwable => () }
-      }
+    // Bench's warm-up, so a profiled query runs as warm as a timed one
+    Bench.warmUp(spark, sfDir)
     case class Job(id: Int, site: String, start: Long, var dur: Long = -1L)
     val jobs = scala.collection.mutable.ArrayBuffer.empty[Job]
     // SQL executions carry the ACTION's callsite as their description —

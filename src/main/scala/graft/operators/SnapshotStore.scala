@@ -506,110 +506,102 @@ object SnapshotStore {
     val enc = java.util.Base64.getEncoder
     val statOut = Seq.newBuilder[((String, String), String)]
     val bloomOut = Seq.newBuilder[((String, String), String)]
-    allPaths.groupBy(_.split("/").take(2).mkString("/")).toSeq
-      .sortBy(_._1).foreach { case (dir, ps) =>
-        // manifest-driven scan (StoreScan): no per-publish listing jobs
-        // or schema inference for the bloom/fallback metadata pass; the
-        // bucket partition column is dropped to keep the exact frame
-        // shape the bare multi-path read produced
-        val df = StoreScan.scanDir(spark, root, dir,
-          ps.map(p => (p.split("/")(2).stripPrefix("bucket=").toLong, p)))
-          .drop("bucket")
-        val fields = df.schema.fieldNames.toSet
-        val presentS = statCols.filter(fields.contains)
-        val presentB = bloomCols.filter(fields.contains)
-        val isStr = presentS.filter(c => df.schema(c).dataType ==
-          org.apache.spark.sql.types.StringType).toSet
-        // doc_id's PHYSICAL type may vary across version dirs (the store
-        // normalizes it to long on read) — canonicalize through the same
-        // cast on the metadata write side, so a probe hashing/bounding a
-        // Long can never miss an int-stored file
-        def srcCol(c: String) =
-          if (c == "doc_id") col(c).cast("long") else col(c)
-        // key by bucket=<b>/<file>: one write job reuses part filenames
-        // across its bucket dirs, so the bare filename is NOT unique
-        // within an attempt dir
-        val byName = ps.map(p =>
-          p.split("/").takeRight(2).mkString("/") -> p).toMap
-        val aggs = Seq(count(lit(1)).as("graft_rows")) ++
-          presentS.flatMap { c =>
-            // string columns aggregate TRUNCATED prefixes — min/max of a
-            // 32-cp substring never ships a multi-KB document text to
-            // the driver, and min(trunc) / inc(max(trunc)) are valid
-            // (possibly loose) envelope bounds in binary byte order;
-            // max(length) decides whether the envelope is exact
-            val statSrc =
-              if (isStr(c)) substring(col(c), 1, StringStatChars)
-              else srcCol(c)
-            Seq(min(statSrc).as(s"graft_min_$c"),
-              max(statSrc).as(s"graft_max_$c"),
-              sum(when(col(c).isNull, 1L).otherwise(0L))
-                .as(s"graft_nulls_$c")) ++
-              (if (isStr(c))
-                 Seq(max(length(col(c))).as(s"graft_len_$c"))
-               else Nil)
-          } ++
-          presentB.map { c =>
-            // positions fold into the bitset ON THE EXECUTORS
-            // (graft.plans.BloomBitsetAgg): the driver receives bits/8
-            // finished bytes per (file, column), never the up-to-K×bits
-            // distinct Int positions a collect_set would pull — the
-            // difference between ~8 KB and ~1 MB per file at the default
-            // width, and between ~2 MB and a multi-GB allocation at the
-            // permitted 2^24 bits
-            graft.plans.BloomBitsetAgg.bloom_bitset(
-              when(col(c).isNotNull,
-                array(bloomPositions(srcCol(c), bloomBits): _*)),
-              bloomBits).as(s"graft_bloom_$c")
+    // ONE manifest-driven scan (StoreScan) over every dir the paths
+    // span: no per-publish listing jobs or schema inference for the
+    // bloom/fallback metadata pass. A column some dirs lack null-fills
+    // there, which aggregates to exactly the all-null lines an absent
+    // column records.
+    val df = StoreScan.dirs(spark, root,
+      allPaths.map(p => (p.split("/")(2).stripPrefix("bucket=").toLong, p)))
+      .frame.drop("bucket", StoreScan.DirVersionCol)
+    val fields = df.schema.fieldNames.toSet
+    val presentS = statCols.filter(fields.contains)
+    val presentB = bloomCols.filter(fields.contains)
+    val isStr = presentS.filter(c => df.schema(c).dataType ==
+      org.apache.spark.sql.types.StringType).toSet
+    // key by <dir>/bucket=<b>/<file>: one write job reuses part
+    // filenames across its bucket dirs, so the bare filename is NOT
+    // unique within an attempt dir
+    def fileKey(path: String) = path.split("/").takeRight(3).mkString("/")
+    val byName = allPaths.map(p => fileKey(p) -> p).toMap
+    val aggs = Seq(count(lit(1)).as("graft_rows")) ++
+      presentS.flatMap { c =>
+        // string columns aggregate TRUNCATED prefixes — min/max of a
+        // 32-cp substring never ships a multi-KB document text to
+        // the driver, and min(trunc) / inc(max(trunc)) are valid
+        // (possibly loose) envelope bounds in binary byte order;
+        // max(length) decides whether the envelope is exact
+        val statSrc =
+          if (isStr(c)) substring(col(c), 1, StringStatChars)
+          else col(c)
+        Seq(min(statSrc).as(s"graft_min_$c"),
+          max(statSrc).as(s"graft_max_$c"),
+          sum(when(col(c).isNull, 1L).otherwise(0L))
+            .as(s"graft_nulls_$c")) ++
+          (if (isStr(c))
+             Seq(max(length(col(c))).as(s"graft_len_$c"))
+           else Nil)
+      } ++
+      presentB.map { c =>
+        // positions fold into the bitset ON THE EXECUTORS
+        // (graft.plans.BloomBitsetAgg): the driver receives bits/8
+        // finished bytes per (file, column), never the up-to-K×bits
+        // distinct Int positions a collect_set would pull — the
+        // difference between ~8 KB and ~1 MB per file at the default
+        // width, and between ~2 MB and a multi-GB allocation at the
+        // permitted 2^24 bits
+        graft.plans.BloomBitsetAgg.bloom_bitset(
+          when(col(c).isNotNull,
+            array(bloomPositions(col(c), bloomBits): _*)),
+          bloomBits).as(s"graft_bloom_$c")
+      }
+    val rows = df.groupBy(input_file_name().as("graft_file"))
+      .agg(aggs.head, aggs.tail: _*).collect().toSeq
+    rows.foreach { r =>
+      val fname = fileKey(r.getString(0))
+      val rel = byName.getOrElse(fname,
+        throw new IllegalStateException(
+          s"SnapshotStore: metadata scan surfaced unexpected file " +
+            fname))
+      val n = r.getAs[Long]("graft_rows")
+      if (statPaths.contains(rel)) statCols.foreach { c =>
+        if (!presentS.contains(c))
+          // column absent from every dir's files: additive evolution
+          // — every row null-fills it on read
+          statOut += ((rel, c) -> statLine(rel, c, n, n, None, None))
+        else if (isStr(c)) {
+          val nulls = r.getAs[Long](s"graft_nulls_$c")
+          val mnT = Option(r.getAs[String](s"graft_min_$c"))
+          val mxT = Option(r.getAs[String](s"graft_max_$c"))
+          val exact = !r.isNullAt(r.fieldIndex(s"graft_len_$c")) &&
+            r.getAs[Int](s"graft_len_$c") <= StringStatChars
+          val mn = mnT.map(canonString)
+          val mx = mxT.flatMap { m =>
+            if (exact) Some(canonString(m)) // truncation was identity
+            else incBytes(m.getBytes(
+                java.nio.charset.StandardCharsets.UTF_8))
+              .map(b => StringCanonPrefix + java.util.Base64
+                .getEncoder.encodeToString(b))
           }
-        val rows = df.groupBy(input_file_name().as("graft_file"))
-          .agg(aggs.head, aggs.tail: _*).collect().toSeq
-        rows.foreach { r =>
-          val fname = r.getString(0).split("/").takeRight(2).mkString("/")
-          val rel = byName.getOrElse(fname,
-            throw new IllegalStateException(
-              s"SnapshotStore: metadata scan surfaced unexpected file " +
-                fname))
-          val n = r.getAs[Long]("graft_rows")
-          if (statPaths.contains(rel)) statCols.foreach { c =>
-            if (!presentS.contains(c))
-              // column absent from this dir's files: additive evolution
-              // — every row null-fills it on read
-              statOut += ((rel, c) -> statLine(rel, c, n, n, None, None))
-            else if (isStr(c)) {
-              val nulls = r.getAs[Long](s"graft_nulls_$c")
-              val mnT = Option(r.getAs[String](s"graft_min_$c"))
-              val mxT = Option(r.getAs[String](s"graft_max_$c"))
-              val exact = !r.isNullAt(r.fieldIndex(s"graft_len_$c")) &&
-                r.getAs[Int](s"graft_len_$c") <= StringStatChars
-              val mn = mnT.map(canonString)
-              val mx = mxT.flatMap { m =>
-                if (exact) Some(canonString(m)) // truncation was identity
-                else incBytes(m.getBytes(
-                    java.nio.charset.StandardCharsets.UTF_8))
-                  .map(b => StringCanonPrefix + java.util.Base64
-                    .getEncoder.encodeToString(b))
-              }
-              statOut += ((rel, c) -> statLine(rel, c, n, nulls, mn, mx))
-            } else {
-              val nulls = r.getAs[Long](s"graft_nulls_$c")
-              val mn = canon(r.get(r.fieldIndex(s"graft_min_$c")))
-              val mx = canon(r.get(r.fieldIndex(s"graft_max_$c")))
-              statOut += ((rel, c) -> statLine(rel, c, n, nulls, mn, mx))
-            }
-          }
-          if (bloomPaths.contains(rel)) bloomCols.foreach { c =>
-            // absent column = all-null fill on read = empty bitset, same
-            // bytes the aggregate yields for an all-null present column
-            val bytes =
-              if (presentB.contains(c))
-                r.getAs[Array[Byte]](s"graft_bloom_$c")
-              else Array.empty[Byte]
-            bloomOut += ((rel, c) -> bloomLine(rel, c,
-              enc.encodeToString(bytes)))
-          }
+          statOut += ((rel, c) -> statLine(rel, c, n, nulls, mn, mx))
+        } else {
+          val nulls = r.getAs[Long](s"graft_nulls_$c")
+          val mn = canon(r.get(r.fieldIndex(s"graft_min_$c")))
+          val mx = canon(r.get(r.fieldIndex(s"graft_max_$c")))
+          statOut += ((rel, c) -> statLine(rel, c, n, nulls, mn, mx))
         }
       }
+      if (bloomPaths.contains(rel)) bloomCols.foreach { c =>
+        // absent column = all-null fill on read = empty bitset, same
+        // bytes the aggregate yields for an all-null present column
+        val bytes =
+          if (presentB.contains(c))
+            r.getAs[Array[Byte]](s"graft_bloom_$c")
+          else Array.empty[Byte]
+        bloomOut += ((rel, c) -> bloomLine(rel, c,
+          enc.encodeToString(bytes)))
+      }
+    }
     (footerStats ++ statOut.result(), bloomOut.result())
   }
 
@@ -1030,10 +1022,10 @@ object SnapshotStore {
   // version > d matches it — the equality-delete sequence rule, so an
   // upsert's fresh rows (dir v) survive its own entry (version v) while
   // every older copy of their ids does not. [[assemble]] applies the rule
-  // as ONE filter over the dirs' union, built from driver-held values
-  // (each deleted id in the IN set of its newest entry, a range per
-  // range entry), which the optimizer narrows per dir; a dir newer than
-  // every entry, and any version without entries, reads unfiltered. A
+  // as ONE filter over the read's one scan ([[liveRows]]): a probe of a
+  // driver-built id → newest-delete-version table against each row's dir
+  // version, plus a predicate per range entry; a version without entries
+  // newer than its oldest dir reads unfiltered. A
   // range deletes only rows it holds TRUE for (SQL DELETE: a NULL is
   // kept). The verbs that keep older files live carry their
   // parent's entries; [[publish]] drops an entry once no live file is
@@ -1080,7 +1072,7 @@ object SnapshotStore {
     * entry. */
   private val DataDirOf = "data/v(\\d{5})(?:-[0-9a-f]{8})?(?:/.*)?".r
 
-  private def dataVersionOf(rel: String): Long = rel match {
+  private[operators] def dataVersionOf(rel: String): Long = rel match {
     case DataDirOf(n) => n.toLong
     case _ => throw new IllegalStateException(
       s"SnapshotStore: '$rel' is not under a data/vNNNNN dir — its order " +
@@ -1175,64 +1167,50 @@ object SnapshotStore {
     }
   }
 
-  /** The union of the data-dir scans `dirDfs` minus the rows a delete
-    * entry newer than their dir matches. Each scan carries its dir's
-    * version as a literal column, and ONE filter over the union holds
-    * every entry once: a deleted id sits only in the set of its newest
-    * entry (a row of dir d is deleted iff that entry's version > d) and
-    * a range stays one predicate. The optimizer pushes the filter into
-    * each scan and folds the version comparisons there, so a dir keeps
-    * only the entries newer than it, the sets shared by reference. No
-    * entry newer than the oldest dir ⇒ the plain union. A range on a
-    * column a dir's files lack null-fills there and so matches nothing
-    * (SQL null semantics); one on a column no dir stores is dropped. */
-  private def liveUnion(spark: SparkSession, root: String,
-      dirDfs: Seq[(String, DataFrame)],
-      deletes: Seq[DeleteEntry]): DataFrame = {
-    def union(dfs: Seq[DataFrame]) =
-      dfs.reduce(_.unionByName(_, allowMissingColumns = true))
-    val oldest = dirDfs.map(d => dataVersionOf(d._1)).min
-    val newer = deletes.filter(_.version > oldest)
-    if (newer.isEmpty) return union(dirDfs.map(_._2))
-    val tagged = union(dirDfs.map { case (dir, df) =>
-      df.withColumn(DirVersionCol, lit(dataVersionOf(dir)))
-    })
+  /** `rows` (one [[StoreScan]] over the data dirs of a read, with its
+    * dir-version column, the oldest dir at version `oldest`) minus the
+    * rows a delete entry of `meta` newer than their dir matches, and
+    * without the dir-version column. The id entries become ONE
+    * [[graft.plans.NewerDeleteExpr]] probe: the driver builds the
+    * id → newest-delete-version table, and the generated code holds it by
+    * reference, so its text is the same for every version and delete
+    * set. A range entry stays one `dir version < v && range` predicate.
+    * No entry newer than the oldest dir ⇒ no filter. A range on a column
+    * a dir's files lack null-fills there and so matches nothing (SQL null
+    * semantics); one on a column no dir stores is dropped. */
+  private def liveRows(spark: SparkSession, root: String, rows: DataFrame,
+      oldest: Long, meta: Seq[String]): DataFrame = {
+    val newer = deleteLinesOf(meta).zip(parseDeletes(meta))
+      .filter(_._2.version > oldest)
+    val dv = col(StoreScan.DirVersionCol)
     val newest = mutable.HashMap.empty[Long, Long]
     def deleted(v: Long, ids: Iterable[Long]): Unit = ids.foreach { id =>
       if (newest.getOrElse(id, Long.MinValue) < v) newest(id) = v
     }
-    newer.foreach {
-      case IdsDeleted(v, ids) => deleted(v, ids)
-      case IdFileDeleted(v, rel) => deleted(v, deleteFileIds(spark, root, rel))
-      case _ =>
+    val idLines = newer.collect {
+      case (l, IdsDeleted(v, ids)) => deleted(v, ids); l
+      case (l, IdFileDeleted(v, rel)) =>
+        deleted(v, deleteFileIds(spark, root, rel)); l
     }
-    val dv = col(DirVersionCol)
-    val byIds = newest.toSeq.groupBy(_._2).toSeq.sortBy(_._1)
-      .map { case (v, ids) =>
-        val set: Set[Any] = ids.iterator.map(_._1).toSet
-        dv < v && org.apache.spark.sql.graft.ColumnBridge.column(
-          org.apache.spark.sql.catalyst.expressions.InSet(
-            org.apache.spark.sql.graft.ColumnBridge.expression(
-              col("doc_id").cast("long")), set))
+    val byIds =
+      if (newest.isEmpty) Nil
+      else {
+        import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+        Seq(column(graft.plans.NewerDeleteExpr(expression(col("doc_id")),
+          expression(dv), graft.plans.DeleteTable(root +: idLines, newest))))
       }
     val byRanges = newer.collect {
-      case RangeDeleted(v, c, lo, hi) if tagged.columns.contains(c) =>
-        val (x, dt) =
-          if (c == "doc_id")
-            (col(c).cast("long"), org.apache.spark.sql.types.LongType)
-          else (col(c), tagged.schema(c).dataType)
+      case (_, RangeDeleted(v, c, lo, hi)) if rows.columns.contains(c) =>
+        val x = col(c)
+        val dt = rows.schema(c).dataType
         dv < v && (lo.map(b => x >= canonLit(b, dt)) ++
           hi.map(b => x <= canonLit(b, dt))).reduce(_ && _)
     }
     val matched = byIds ++ byRanges
-    (if (matched.isEmpty) tagged
-     else tagged.filter(!coalesce(matched.reduce(_ || _), lit(false))))
-      .drop(DirVersionCol)
+    (if (matched.isEmpty) rows
+     else rows.filter(!coalesce(matched.reduce(_ || _), lit(false))))
+      .drop(StoreScan.DirVersionCol)
   }
-
-  /** [[liveUnion]]'s per-scan dir-version column, dropped before any
-    * caller sees the rows. */
-  private val DirVersionCol = "graft_dir_version"
 
   private def sidecarSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
@@ -1707,8 +1685,8 @@ object SnapshotStore {
   /** Declared type for a probe/bound column: payload columns resolve
     * through the `#col` declaration; `doc_id` is store-managed and
     * normalized to long on read, so probes on it type as bigint (its
-    * stats/blooms are written through the same cast — see
-    * computeFileMeta's srcCol). */
+    * stats/blooms are computed from the same long read — see
+    * computeFileMeta). */
   private def probeType(declared: Map[String, String], colName: String,
       root: String, op: String): org.apache.spark.sql.types.DataType =
     if (colName == "doc_id") org.apache.spark.sql.types.LongType
@@ -2389,21 +2367,19 @@ object SnapshotStore {
     * here. */
   private def assemble(spark: SparkSession, root: String, v: Long,
       entries: Seq[(Long, String)]): DataFrame = {
-    // one scan per contributing version dir (the manifest-driven
-    // [[StoreScan]] form: bucket partition column from the entries, file
-    // statuses and the dir's physical schema from the immutable-dir
-    // cache — no per-read listing/stat/inference, no listing jobs);
-    // dirs ≤ retained versions, so the union stays tiny.
-    // allowMissingColumns = schema evolution: a version that ADDED a column
-    // unions with older versions' files by null-filling the gap — the
-    // additive-only evolution contract of the log-structured table formats
-    // (renames/drops are a rewrite, not an evolution).
-    val dirDfs = entries.groupBy(_._2.split("/").take(2).mkString("/"))
-      .toSeq.sortBy(_._1)
-      .map { case (dir, es) =>
-        (dir, StoreScan.scanDir(spark, root, dir, es))
-      }
-    val deletes = parseDeletes(manifestMeta(spark, root, v))
+    // ONE manifest-driven scan ([[StoreScan]]) over every data dir the
+    // entries name: partition values (bucket, dir version) from the
+    // entries, file statuses and each dir's physical schema from the
+    // immutable-dir cache — no per-read listing/stat/inference, no
+    // listing jobs. Merge-on-read adds a dir per keyed write, so the dirs
+    // are NOT bounded by the retained versions; one scan keeps the tasks
+    // and the compiled code of a read independent of their number.
+    // The dirs' schemas merge by name = schema evolution: a version that
+    // ADDED a column reads older dirs' files null-filled — the
+    // additive-only evolution contract of the log-structured table
+    // formats (renames/drops are a rewrite, not an evolution).
+    val dirs = StoreScan.dirs(spark, root, entries)
+    val meta = manifestMeta(spark, root, v)
     // Validate every dir's PHYSICAL schema against the version's DECLARED
     // schema (the `#col` manifest lines): a column a dir stores under a
     // different type, or one the declaration no longer carries, is
@@ -2414,8 +2390,8 @@ object SnapshotStore {
     // declarations skip the check.
     declaredCols(spark, root, v).foreach { cols =>
       val types = cols.toMap
-      dirDfs.foreach { case (dir, df) =>
-        df.schema.fields.filterNot(f => ManagedCols.contains(f.name))
+      dirs.schemas.foreach { case (dir, schema) =>
+        schema.fields.filterNot(f => ManagedCols.contains(f.name))
           .foreach { f =>
           types.get(f.name) match {
             case None => throw new SnapshotSchemaException(
@@ -2433,9 +2409,9 @@ object SnapshotStore {
         }
       }
     }
-    // merge-on-read: each dir drops the rows a newer delete entry matches
-    liveUnion(spark, root, dirDfs, deletes)
-      .withColumn("doc_id", col("doc_id").cast("long"))
+    // merge-on-read: each row drops when a newer delete entry matches it
+    liveRows(spark, root, dirs.frame,
+      entries.iterator.map(e => dataVersionOf(e._2)).min, meta)
       .withColumn("bucket", col("bucket").cast("long"))
   }
 

@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Manifest-driven parquet scans for [[SnapshotStore]] version dirs —
   * the table-format read discipline (Iceberg/Delta): the manifest IS the
@@ -31,17 +32,23 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   * path and every later scan of any entry subset of that dir is pure
   * in-memory plan construction — no filesystem round-trips, no jobs.
   *
-  * The scan itself is the standard `HadoopFsRelation` over a literal
-  * [[FileIndex]]: same `ParquetFileFormat`, same pushdown/pruning
+  * A read is ONE scan, whatever number of dirs its entries span: the
+  * standard `HadoopFsRelation` over a literal [[FileIndex]] holding every
+  * entry's file, with the same `ParquetFileFormat` and pushdown/pruning
   * machinery (`PushedFilters` and vectorized reading are format-side,
-  * not index-side), with the `bucket` partition column served from the
-  * manifest entries instead of directory-name discovery — typed
-  * IntegerType exactly as discovery inferred it, so downstream casts
-  * are unchanged. Partition filters are honored by evaluating them
-  * against each bucket value (the `PartitioningAwareFileIndex`
-  * discipline), never silently ignored.
+  * not index-side). Its partition values come from the manifest entries,
+  * not from directory names: `bucket` (IntegerType, exactly as discovery
+  * inferred it, so downstream casts are unchanged) and the file's dir
+  * version ([[DirVersionCol]]), which the store's merge-on-read delete
+  * rule compares delete entries against. Its data schema is the dirs'
+  * cached footer schemas merged by name. Merge-on-read makes every keyed
+  * write a new dir, so a per-dir scan union would plan, schedule and
+  * compile O(dirs) scans per read; one scan packs the dirs' small files
+  * into the same few tasks a one-dir read runs. Partition filters are
+  * honored by evaluating them against each group's values (the
+  * `PartitioningAwareFileIndex` discipline), never silently ignored.
   */
-private[operators] object StoreScan {
+private[graft] object StoreScan {
 
   /** One dir's immutable facts: every data file's status (size feeds
     * split planning and relation sizeInBytes) and the dir's physical
@@ -102,7 +109,7 @@ private[operators] object StoreScan {
     // df.write, so any file's schema is the dir's schema (single-path
     // read — no listing job, no partition discovery); an empty listing
     // (a vacuum race) resolves the schema through an entry path instead
-    // and the per-entry status fallback in scanDir surfaces any miss
+    // and the per-entry status fallback in [[Dirs.frame]] surfaces any miss
     val schemaFile =
       if (fileMap.nonEmpty) fileMap.keys.min else entries.head._2
     val schema = footerSchema(spark, s"$root/$schemaFile")
@@ -143,75 +150,140 @@ private[operators] object StoreScan {
     embedded.getOrElse(spark.read.parquet(path).schema)
   }
 
-  /** Scan `entries` (all of one version dir) as a DataFrame: data
-    * columns in file order plus the `bucket` partition column appended —
-    * exactly the shape `spark.read.option("basePath", dir).parquet(…)`
-    * produced, built without touching the filesystem after the dir's
-    * first-ever read. */
-  def scanDir(spark: SparkSession, root: String, dir: String,
-      entries: Seq[(Long, String)]): DataFrame = {
-    val f = facts(spark, root, dir, entries)
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val byBucket = entries.groupBy(_._1).toSeq.sortBy(_._1).map {
-      case (b, es) =>
-        val sts = es.map(_._2).sorted.map { rel =>
-          // defensive fallback: an entry the dir listing missed (should
-          // be impossible — entries are derived from the dir at publish)
-          // resolves through a live stat so the error surfaces here
-          f.files.getOrElse(rel, fs.getFileStatus(new Path(s"$root/$rel")))
+  /** The partition column carrying each file's data-dir version, the
+    * version the merge-on-read delete rule compares entries against;
+    * [[SnapshotStore]] drops it before any caller sees the rows. */
+  val DirVersionCol = "graft_dir_version"
+
+  private val PartitionSchema = StructType(Seq(
+    StructField("bucket", IntegerType, nullable = true),
+    StructField(DirVersionCol, LongType, nullable = false)))
+
+  /** The dirs one read's `entries` name, each with its cached facts and
+    * its own entries, in dir-name order — the order the store's column
+    * order follows. */
+  final class Dirs private[StoreScan] (spark: SparkSession, root: String,
+      groups: Seq[(String, DirFacts, Seq[(Long, String)])]) {
+
+    /** Each dir's physical schema, as its files store it. */
+    def schemas: Seq[(String, StructType)] =
+      groups.map { case (dir, f, _) => (dir, f.schema) }
+
+    /** ONE scan over every file of every dir: the data columns merged by
+      * name in the store's column order (the first dir's, then `bucket`,
+      * then the columns later dirs added — the order a
+      * `unionByName(allowMissingColumns = true)` of per-dir scans gives,
+      * which reads keep), then the dir-version column. `doc_id` reads as long whatever width a dir
+      * stores (the Parquet readers widen INT32), and a column a dir
+      * lacks null-fills there. */
+    def frame: DataFrame = {
+      val merged = mergedSchema
+      val fs = new Path(root).getFileSystem(
+        spark.sparkContext.hadoopConfiguration)
+      val parts = groups.flatMap { case (dir, f, es) =>
+        val dv = SnapshotStore.dataVersionOf(dir)
+        es.groupBy(_._1).toSeq.sortBy(_._1).map { case (b, bes) =>
+          val sts = bes.map(_._2).sorted.map { rel =>
+            // defensive fallback: an entry the dir listing missed (should
+            // be impossible — entries are derived from the dir at
+            // publish) resolves through a live stat so the error surfaces
+            // here
+            f.files.getOrElse(rel,
+              fs.getFileStatus(new Path(s"$root/$rel")))
+          }
+          PartitionDirectory(InternalRow(b.toInt, dv), sts.toArray)
         }
-        (b, sts)
+      }
+      val index = new ManifestFileIndex(
+        groups.map(g => new Path(s"$root/${g._1}")), parts)
+      val relation = HadoopFsRelation(
+        location = index,
+        partitionSchema = PartitionSchema,
+        dataSchema = merged,
+        bucketSpec = None,
+        fileFormat = new ParquetFileFormat,
+        options = Map.empty[String, String])(spark)
+      val first = groups.head._2.schema.fieldNames.toSet
+      val (own, added) = merged.fieldNames.toSeq.partition(first.contains)
+      spark.baseRelationToDataFrame(relation).select(
+        (own ++ Seq("bucket") ++ added ++ Seq(DirVersionCol))
+          .map(n => col(s"`${n.replace("`", "``")}`")): _*)
     }
-    val index = new ManifestFileIndex(
-      new Path(s"$root/$dir"), byBucket)
-    val relation = HadoopFsRelation(
-      location = index,
-      partitionSchema = BucketPartitionSchema,
-      dataSchema = f.schema,
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat,
-      options = Map.empty[String, String])(spark)
-    spark.baseRelationToDataFrame(relation)
+
+    /** The dirs' schemas merged by name, first-seen order; nullable
+      * wherever some dir is or lacks the column. A column two dirs store
+      * under different types (other than doc_id's widths) has no merged
+      * type — a store with declarations refuses it earlier, naming the
+      * dir. */
+    private def mergedSchema: StructType = {
+      val fields = scala.collection.mutable.LinkedHashMap
+        .empty[String, StructField]
+      val seen = scala.collection.mutable.HashMap.empty[String, Int]
+      groups.foreach { case (dir, f, _) =>
+        f.schema.fields.foreach { fld =>
+          val want =
+            if (fld.name == "doc_id") fld.copy(dataType = LongType) else fld
+          fields.get(fld.name) match {
+            case None => fields(fld.name) = want
+            case Some(prev) if prev.dataType == want.dataType =>
+              fields(fld.name) =
+                prev.copy(nullable = prev.nullable || want.nullable)
+            case Some(prev) => throw new SnapshotSchemaException(
+              s"read at $root: column '${fld.name}' is stored as " +
+                s"${prev.dataType.catalogString} and as " +
+                s"${want.dataType.catalogString} (in $dir) — retyped " +
+                "without a full-rewrite commit")
+          }
+          seen(fld.name) = seen.getOrElse(fld.name, 0) + 1
+        }
+      }
+      StructType(fields.values.toSeq.map(f =>
+        if (seen(f.name) < groups.size) f.copy(nullable = true) else f))
+    }
   }
 
-  private val BucketPartitionSchema = StructType(Seq(
-    StructField("bucket", IntegerType, nullable = true)))
+  /** The dirs of `entries` (any mix of a version's data dirs), their facts
+    * from the immutable-dir cache. */
+  def dirs(spark: SparkSession, root: String,
+      entries: Seq[(Long, String)]): Dirs =
+    new Dirs(spark, root,
+      entries.groupBy(_._2.split("/").take(2).mkString("/")).toSeq
+        .sortBy(_._1).map { case (dir, es) =>
+          (dir, facts(spark, root, dir, es), es)
+        })
 
-  /** Literal file index: the manifest's (bucket → files) groups served
-    * as-is. Partition filters evaluate interpreted against each bucket
-    * value (one partition column, bound at ordinal 0). */
+  /** Literal file index: the manifest's (bucket, dir version) → files
+    * groups served as-is. Partition filters evaluate interpreted against
+    * each group's values, bound by name. */
   private final class ManifestFileIndex(
-      dirPath: Path,
-      groups: Seq[(Long, Seq[FileStatus])]) extends FileIndex {
+      dirPaths: Seq[Path],
+      parts: Seq[PartitionDirectory]) extends FileIndex {
 
-    override def rootPaths: Seq[Path] = Seq(dirPath)
+    override def rootPaths: Seq[Path] = dirPaths
 
-    override def partitionSchema: StructType = BucketPartitionSchema
+    override def partitionSchema: StructType = PartitionSchema
 
     override def listFiles(partitionFilters: Seq[Expression],
-        dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-      val dirs = groups.map { case (b, sts) =>
-        PartitionDirectory(InternalRow(b.toInt), sts.toArray)
-      }
-      if (partitionFilters.isEmpty) dirs
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      if (partitionFilters.isEmpty) parts
       else {
         val bound = partitionFilters.reduce(And).transform {
-          case _: AttributeReference =>
-            BoundReference(0, IntegerType, nullable = true)
+          case a: AttributeReference =>
+            val i = PartitionSchema.fieldNames
+              .indexWhere(_.equalsIgnoreCase(a.name))
+            BoundReference(i, PartitionSchema(i).dataType, nullable = true)
         }
         val predicate = Predicate.createInterpreted(bound)
         predicate.initialize(0)
-        dirs.filter(d => predicate.eval(d.values))
+        parts.filter(d => predicate.eval(d.values))
       }
-    }
 
     override def inputFiles: Array[String] =
-      groups.iterator.flatMap(_._2.map(_.getPath.toString)).toArray
+      parts.iterator.flatMap(_.files.map(_.getPath.toString)).toArray
 
     override def refresh(): Unit = ()
 
     override def sizeInBytes: Long =
-      groups.iterator.flatMap(_._2).map(_.getLen).sum
+      parts.iterator.flatMap(_.files).map(_.getLen).sum
   }
 }

@@ -25,7 +25,10 @@ import org.apache.spark.sql.execution.window.WindowExec
   *  - `unpushed-filter`: a FilterExec sitting DIRECTLY on a file scan
   *    whose pushed-filter list is empty while the filter references
   *    scanned columns — the scan decodes everything the filter then
-  *    throws away;
+  *    throws away. A store read's merge-on-read delete filter is not
+  *    reported: it compares each row's id or payload with its file's dir
+  *    version (a partition value of the store's scan), so no file-format
+  *    pushdown can evaluate it, and what it costs is the delete set's;
   *  - `wide-shuffle`: a ShuffleExchange whose child outputs more than
   *    `wideShuffleCols` columns — project before the shuffle, not after.
   *
@@ -62,7 +65,9 @@ object PlanAudit {
       case f: FilterExec =>
         f.child match {
           case s: FileSourceScanExec if s.dataFilters.isEmpty &&
-              f.condition.references.nonEmpty =>
+              f.condition.references.nonEmpty &&
+              !f.condition.references.exists(
+                _.name == graft.operators.StoreScan.DirVersionCol) =>
             out += Finding("unpushed-filter",
               s"Filter(${f.condition.sql}) directly over a scan with no " +
                 "pushed data filters — the scan decodes rows the filter " +

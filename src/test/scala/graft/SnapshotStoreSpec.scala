@@ -555,32 +555,65 @@ class SnapshotStoreSpec extends SparkTestBase {
 
   test("random op sequences: store state always equals the driver-side model") {
     import spark.implicits._
-    def df(m: Map[Long, Long]) =
+    // the model: doc_id -> (tag, c). The first dir stores doc_id as int
+    // and has no column c; an evolving upsert adds c, later ranges delete
+    // on it, and older dirs read it null-filled
+    type Model = Map[Long, (Long, Option[Long])]
+    def tagged(m: Map[Long, Long]) =
       m.toSeq.sortBy(_._1).toDF("doc_id", "tag")
-    def readModel(v: Long): Map[Long, Long] =
-      SnapshotStore.read(spark, "target/snap-model", v)
-        .select("doc_id", "tag").as[(Long, Long)].collect().toMap
+    def df(m: Model) = m.toSeq.sortBy(_._1)
+      .map { case (k, (t, c)) => (k, t, c) }.toDF("doc_id", "tag", "c")
+    def modelOf(frame: DataFrame): Model = {
+      val withC =
+        if (frame.columns.contains("c")) frame
+        else frame.withColumn("c", lit(null).cast("long"))
+      withC.select("doc_id", "tag", "c").as[(Long, Long, Option[Long])]
+        .collect().map(r => r._1 -> ((r._2, r._3))).toMap
+    }
+    // the column order a per-dir unionByName(allowMissingColumns) read
+    // gives, from the files' own schemas: the first dir's columns, then
+    // bucket, then the columns later dirs add
+    val dirCols = scala.collection.mutable.HashMap.empty[String, Seq[String]]
+    def unionOrder(root: String, v: Long): Option[Seq[String]] = {
+      val byDir = SnapshotStore.manifestEntries(spark, root, v)
+        .groupBy(_._2.split("/").take(2).mkString("/")).toSeq.sortBy(_._1)
+      if (byDir.isEmpty) None
+      else {
+        val cols = byDir.map { case (d, es) =>
+          dirCols.getOrElseUpdate(s"$root/$d",
+            spark.read.parquet(s"$root/${es.head._2}").columns.toSeq
+              .filterNot(_ == "bucket"))
+        }
+        Some(cols.head ++ Seq("bucket") ++
+          cols.tail.flatten.distinct.filterNot(cols.head.contains))
+      }
+    }
     // every keyed verb, maintenance verb, tag and rollback; after each
     // step EVERY retained version and every tag must read as the model
-    // had it when that version was published. Returns the most delete
-    // entries kept in parquet files that any version carried.
+    // had it when that version was published, in the union's column
+    // order. Returns the most delete entries kept in parquet files that
+    // any version carried.
     def run(seed: Int, steps: Int): Long = {
       val root = "target/snap-model"
       cleanup(root)
+      dirCols.clear()
       val rnd = new scala.util.Random(seed)
-      var model: Map[Long, Long] = (1L to 10L).map(i => i -> 0L).toMap
-      SnapshotStore.commit(df(model), root, buckets = 4,
+      var model: Model = (1L to 10L).map(i => i -> ((0L, None))).toMap
+      SnapshotStore.commit(
+        (1 to 10).map(i => (i, 0L)).toDF("doc_id", "tag"), root,
+        buckets = 4,
         meta = Seq(SnapshotStore.statsDeclaration(Seq("doc_id", "tag"))))
-      var history: Map[Long, Map[Long, Long]] = Map(1L -> model)
+      var history: Map[Long, Model] = Map(1L -> model)
       var deleteFiles = 0L
       for (step <- 1 to steps) {
         val tag = step.toLong
-        rnd.nextInt(11) match {
+        val hasC = SnapshotStore.read(spark, root).columns.contains("c")
+        rnd.nextInt(13) match {
           case 0 | 1 => // upsert: mutate existing docs / add new ones
             val ids = Seq.fill(1 + rnd.nextInt(4))(rnd.nextLong(20) + 1)
               .distinct
-            model = model ++ ids.map(_ -> tag)
-            SnapshotStore.upsert(spark, df(ids.map(_ -> tag).toMap),
+            model = model ++ ids.map(_ -> ((tag, None)))
+            SnapshotStore.upsert(spark, tagged(ids.map(_ -> tag).toMap),
               ids.toDF("doc_id"), root, 4)
           case 2 if model.nonEmpty => // delete via empty re-ingest
             val ids = Seq(model.keys.toSeq(rnd.nextInt(model.size)))
@@ -595,12 +628,13 @@ class SnapshotStoreSpec extends SparkTestBase {
               model = model.filterNot { case (k, _) => k >= lo && k <= hi }
               SnapshotStore.deleteWhere(spark, root, "doc_id", lo, hi)
             } else {
-              model = model.filterNot { case (_, t) => t >= lo - 1 && t <= hi }
+              model = model.filterNot { case (_, (t, _)) =>
+                t >= lo - 1 && t <= hi }
               SnapshotStore.deleteWhere(spark, root, "tag", lo - 1, hi)
             }
           case 4 => // point delete on the payload
             val t = rnd.nextLong(step + 1)
-            model = model.filterNot(_._2 == t)
+            model = model.filterNot(_._2._1 == t)
             SnapshotStore.deletePoint(spark, root, "tag", t)
           case 5 => SnapshotStore.optimize(spark, root): Unit
           case 6 => SnapshotStore.optimize(spark, root,
@@ -615,6 +649,19 @@ class SnapshotStoreSpec extends SparkTestBase {
             SnapshotStore.listTags(spark, root).dropRight(1)
               .foreach(t => SnapshotStore.deleteTag(spark, root, t._1))
             SnapshotStore.tag(spark, root, f"t$step%03d"): Unit
+          case 11 => // evolving upsert: its rows carry the added column c
+            val ids = Seq.fill(1 + rnd.nextInt(4))(rnd.nextLong(20) + 1)
+              .distinct
+            val fresh = ids.map(_ -> ((tag, Some(tag)))).toMap
+            model = model ++ fresh
+            SnapshotStore.upsert(spark, df(fresh), ids.toDF("doc_id"), root,
+              4)
+          case 12 if hasC => // range delete on the added column
+            val lo = rnd.nextLong(step + 1)
+            val hi = lo + rnd.nextLong(4)
+            model = model.filterNot { case (_, (_, c)) =>
+              c.exists(x => x >= lo && x <= hi) }
+            SnapshotStore.deleteWhere(spark, root, "c", lo, hi)
           case _ => // full-rewrite commit of the current model
             SnapshotStore.commit(df(model), root, buckets = 4): Unit
         }
@@ -626,12 +673,16 @@ class SnapshotStoreSpec extends SparkTestBase {
         history = history.filter(e => retained.contains(e._1))
         assert(history.keySet === retained, s"step $step: history lost")
         history.foreach { case (v, m) =>
-          assert(readModel(v) === m,
+          val read = SnapshotStore.read(spark, root, v)
+          assert(modelOf(read) === m,
             s"seed $seed step $step: version $v diverged from the model")
+          unionOrder(root, v).foreach { order =>
+            assert(read.columns.toSeq === order,
+              s"seed $seed step $step: version $v column order")
+          }
         }
         SnapshotStore.listTags(spark, root).foreach { case (t, v) =>
-          assert(SnapshotStore.readTag(spark, root, t)
-            .select("doc_id", "tag").as[(Long, Long)].collect().toMap ===
+          assert(modelOf(SnapshotStore.readTag(spark, root, t)) ===
             history(v), s"seed $seed step $step: tag $t diverged")
         }
       }
@@ -830,6 +881,41 @@ class SnapshotStoreSpec extends SparkTestBase {
         index(doc2).withColumn("quality", lit("high")),
         doc2.select("doc_id"), root, 4)
     }
+  }
+
+  test("a dir storing a declared column under another type fails the " +
+      "one-scan read by the column's name") {
+    import spark.implicits._
+    val root = "target/snap-schema-read-retype"
+    val other = "target/snap-schema-read-retype-src"
+    cleanup(root)
+    cleanup(other)
+    SnapshotStore.commit(Seq((1L, 5L)).toDF("doc_id", "tag"), root,
+      buckets = 1)
+    SnapshotStore.upsert(spark, Seq((2L, 6L)).toDF("doc_id", "tag"),
+      Seq(2L).toDF("doc_id"), root, 1)
+    SnapshotStore.commit(Seq((2L, "six")).toDF("doc_id", "tag"), other,
+      buckets = 1)
+    // the upsert's dir gets a file that stores `tag` as string
+    val target = (SnapshotStore.manifestEntries(spark, root, 2L).toSet --
+      SnapshotStore.manifestEntries(spark, root, 1L)).head._2
+    val src = SnapshotStore.manifestEntries(spark, other, 1L).head._2
+    val dst = java.nio.file.Paths.get(s"$root/$target")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$other/$src"), dst,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    java.nio.file.Files.deleteIfExists(
+      dst.resolveSibling(s".${dst.getFileName}.crc"))
+    // vacuum drops the store's cached dir facts
+    SnapshotStore.vacuum(spark, root, keepVersions = 10)
+    val ex = intercept[graft.operators.SnapshotSchemaException] {
+      SnapshotStore.read(spark, root).collect()
+    }
+    assert(ex.getMessage.contains("'tag'") &&
+      ex.getMessage.contains("bigint") && ex.getMessage.contains("string"),
+      ex.getMessage)
+    // the version before it reads as it did
+    assert(SnapshotStore.read(spark, root, 1L).select("doc_id", "tag")
+      .as[(Long, Long)].collect().toSeq === Seq((1L, 5L)))
   }
 
   test("tags pin versions across vacuum; readTag time-travels by name") {
