@@ -82,14 +82,17 @@ object Bench {
         idx20.select("doc_id").limit(5).distinct(), wroot, 4)
       operators.SnapshotStore.read(spark, wroot).count()
       // stored-ANN family: the versioned IVF verbs' first use (cent_id
-      // bands, the keyed upsert's id collect, the delete set, the probe
-      // read) otherwise lands on s20–s23 — 20 vectors, built and dropped
+      // bands, the keyed upsert's id collect, the delete set, the hot-cell
+      // split, the probe read) otherwise lands on s20–s23 — 20 vectors,
+      // built and dropped
       val vroot = s"$wroot/ivf"
       val emb20 = emb50.limit(20)
       operators.VersionedIvf.write(emb20, 4, vroot)
       operators.VersionedIvf.upsert(spark, vroot, emb20.limit(5))
       operators.VersionedIvf.delete(spark, vroot,
         emb20.select("vec_id").limit(3))
+      operators.VersionedIvf.rebalanceUntil(spark, vroot, hotFactor = 1.0,
+        maxRounds = 2)
       operators.VersionedIvf.search(spark, vroot, emb20.limit(2),
         nProbe = 2, topK = 3).count()
     } catch { case _: Throwable => () }

@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.VectorFunctions
 
@@ -350,35 +354,66 @@ object IvfIndex {
         s"$what: topK must be >= 1, got $topK")
   }
 
+  /** A stored search's probe set, ranked on the driver: the collected
+    * query rows (vec_id, embedding, q_emb) of type `queryType`, the
+    * probed cells, sorted (empty for an empty query frame), and the
+    * [[graft.plans.ProbeTable]] a scan looks each row's probing queries
+    * up in. */
+  private[graft] final class DriverProbes(
+      val queries: Array[InternalRow], val queryType: StructType,
+      val cells: Array[Long], table: graft.plans.ProbeTable) {
+
+    /** `rows` (with a bigint `cent_id`) beside the queries that probe
+      * their cells: each row repeats once per probing query, with the
+      * query's `q_id` and `q_emb` added; a row of an unprobed cell drops.
+      * One map-side lookup, no join and no exchange. */
+    def probing(rows: DataFrame): DataFrame = {
+      val cols = rows.columns.toSeq.map(col)
+      rows.select(cols :+ explode(graft.plans.ProbeLookupExpr
+          .probe_lookup(col("cent_id"), table)).as("graft_probe"): _*)
+        .select(cols ++ Seq(col("graft_probe.q_id").as("q_id"),
+          col("graft_probe.q_emb").as("q_emb")): _*)
+    }
+  }
+
   /** The probe set of `queries` (vec_id, embedding) against stored
-    * centroids: each query's `nProbe` nearest cells as (q_id, q_emb,
-    * cent_id) rows, ranked by [[cellRanksWith]] and collected ONCE. A
-    * probe set is queries × nProbe rows — what a broadcast join side
-    * pulls onto the driver anyway — and the one collect yields all three
-    * facts a stored search needs before it scans:
-    *  - the dim check over the queries' (min, max) (the named error
-    *    [[dimChecked]] raises);
-    *  - the probed cells, sorted (empty for an empty query frame);
-    *  - the join side, as a LOCAL relation of the collected rows, so the
-    *    ranking never runs a second time.
-    * One Spark job, where a dim aggregate, a distinct collect and the
-    * broadcast build each evaluated the ranking. */
-  private[operators] def collectProbes(spark: SparkSession,
-      queries: DataFrame, cents: Array[(Long, Array[Long])], nProbe: Int,
-      what: String): (DataFrame, Array[Long]) = {
-    val ranked = cellRanksWith(queries.select("vec_id", "embedding"), cents)
-      .filter(col("rk") <= nProbe)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("cent_id"))
-    val rows = ranked.withColumn("dim", dimOf(col("q_emb"))).collect()
+    * centroids, ranked on the driver. The queries are collected once — a
+    * local query frame runs no job, any other frame one — and each
+    * query's `nProbe` nearest cells come from the same
+    * [[graft.plans.IvfCellDistsExpr]] kernel the scans run, evaluated on
+    * the driver and ordered by (dist, cent_id) as [[cellRanksWith]]'s
+    * `array_sort` orders them. The collect also yields the dim check over
+    * the queries' (min, max) (the named error [[dimChecked]] raises; -1
+    * for a null vector). `payload`, over the query frame's columns, is the
+    * vector a probing row scores against (`q_emb`). */
+  private[graft] def driverProbes(queries: DataFrame,
+      cents: Array[(Long, Array[Long])], nProbe: Int, what: String,
+      payload: Column = col("embedding")): DriverProbes = {
+    val q = queries.select(col("vec_id"), col("embedding"),
+      payload.as("q_emb"))
+    val toRow = CatalystTypeConverters.createToCatalystConverter(q.schema)
+    val rows = q.collect().map(r => toRow(r).asInstanceOf[InternalRow])
     if (rows.nonEmpty) {
-      val dims = rows.map(_.getInt(3))
+      val dims = rows.map(r =>
+        if (r.isNullAt(1)) -1 else r.getArray(1).numElements())
       checkDim(dims.min, dims.max, cents, what)
     }
-    val local = spark.createDataFrame(
-      java.util.Arrays.asList(rows.map(r => Row(r.get(0), r.get(1),
-        r.get(2))): _*), ranked.schema)
-    (local, rows.map(_.getLong(2)).distinct.sorted)
+    val emb = q.schema("embedding").dataType
+    val dists = graft.plans.IvfCellDistsExpr(
+      BoundReference(1, emb, nullable = true), cents.map(_._2.toSeq).toSeq)
+    val element = StructType(Seq(
+      q.schema("vec_id").copy(name = "q_id"), q.schema("q_emb")))
+    val probeRow = UnsafeProjection.create(Seq(
+      BoundReference(0, element(0).dataType, element(0).nullable),
+      BoundReference(2, element(1).dataType, element(1).nullable)))
+    val probed = rows.map { r =>
+      val d = dists.eval(r).asInstanceOf[ArrayData].toLongArray()
+      val cells = cents.indices.sortBy(j => (d(j), cents(j)._1))
+        .take(nProbe).map(j => cents(j)._1)
+      (probeRow(r).copy(), cells)
+    }
+    new DriverProbes(rows, q.schema, probed.flatMap(_._2).distinct.sorted,
+      graft.plans.ProbeTable(element, probed.toSeq))
   }
 
   /** The outcome of one deterministic hot-cell split pass, which

@@ -3,7 +3,7 @@ package graft.operators
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Atomic, versioned publication for a parquet-backed index — the
@@ -2346,7 +2346,18 @@ object SnapshotStore {
     val base =
       if (candidates.nonEmpty) assemble(spark, root, v, candidates)
       else read(spark, root, v).limit(0) // schema-only empty edge
-    base.filter(col("doc_id").isin(docIds: _*))
+    base.filter(inSet(col("doc_id"), docIds))
+  }
+
+  /** `c IN values` as ONE `InSet` predicate: its generated code holds the
+    * value set by reference (for a bigint or string column), so the code
+    * text is the same for every value set and a new id or cell set hits
+    * the codegen cache. The data source still receives it as a pushed
+    * `In` filter. `values` must be `c`'s internal (Catalyst) values. */
+  private def inSet(c: Column, values: Seq[Any]): Column = {
+    import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+    column(org.apache.spark.sql.catalyst.expressions.InSet(expression(c),
+      values.toSet))
   }
 
   /** The buckets `ids` hash to in a `buckets`-way store, through the SAME
@@ -3473,8 +3484,12 @@ object SnapshotStore {
     val base =
       if (kept.nonEmpty) assemble(spark, root, v, kept)
       else read(spark, root, v).limit(0)
-    base.filter(values.map(x => col(colName) === lit(x).cast(t))
-      .reduce(_ || _))
+    // the values cast to the declared type, as one by-reference InSet; the
+    // column's cast to that type folds away when it already has it
+    val tz = Option(spark.sessionState.conf.sessionLocalTimeZone)
+    base.filter(inSet(col(colName).cast(t), values.map(x =>
+      org.apache.spark.sql.catalyst.expressions.Cast(
+        org.apache.spark.sql.catalyst.expressions.Literal(x), t, tz).eval())))
   }
 
   /** Conjunctive multi-column form of [[readWhere]] — bounds AND

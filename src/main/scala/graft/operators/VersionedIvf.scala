@@ -384,26 +384,31 @@ object VersionedIvf {
     * version — geometry and rows both come from that version's
     * manifest, and a head search (`version` < 0) resolves the head ONCE,
     * so a rebalance publishing mid-search cannot pair old centroids with
-    * new rows. The probe set is ranked and collected once
-    * ([[IvfIndex.collectProbes]]): the dim check, the probed cells and
-    * the broadcast join side all come from that one collect. The probed
-    * cells are then read through [[SnapshotStore.readWhereIn]]'s stats
-    * skipping — ONE metadata pass admits exactly the probed cells'
-    * files, evaluated on the driver for an inline-metadata store and on
-    * the executors for a sidecar store (a full probe degrades gracefully
-    * to the whole snapshot plus a residual filter). Query ids share the
-    * corpus namespace: a query whose vec_id equals a stored id is that
-    * vector itself and is excluded from its own results.
+    * new rows. The probe set is ranked on the driver
+    * ([[IvfIndex.driverProbes]]): the dim check and the probed cells come
+    * from the collected queries, and each scanned row finds its probing
+    * queries through one by-reference lookup, with no join and no
+    * broadcast. The probed cells are read through
+    * [[SnapshotStore.readWhereIn]]'s stats skipping — ONE metadata pass
+    * admits exactly the probed cells' files, evaluated on the driver for
+    * an inline-metadata store and on the executors for a sidecar store (a
+    * full probe degrades gracefully to the whole snapshot plus a residual
+    * filter). Query ids share the corpus namespace: a query whose vec_id
+    * equals a stored id is that vector itself and is excluded from its
+    * own results.
     *
     * Jobs per call, with the result's collect, on an inline-metadata
-    * store: 4 (probe collect, broadcast build, the ranking's shuffle
-    * map stage and result stage), narrow or full probe. An empty query
-    * frame returns an empty result with the normal schema; `nProbe` or
-    * `topK` below 1 is a named IllegalArgumentException. */
+    * store: 2 (the ranking's shuffle map stage and result stage), narrow
+    * or full probe, for a local query frame; a frame that is not local
+    * adds its collect's one. The generated code does not depend on the
+    * query vectors or the probed cells, so a search with new queries
+    * compiles no class. An empty query frame returns an empty result with
+    * the normal schema; `nProbe` or `topK` below 1 is a named
+    * IllegalArgumentException. */
   def search(spark: SparkSession, root: String, queries: DataFrame,
       nProbe: Int, topK: Int, version: Long = -1L): DataFrame =
     probeSearch(spark, root, queries, nProbe, topK, version,
-      "VersionedIvf.search", col("embedding"), col("q_emb"))
+      "VersionedIvf.search", col("embedding"), col("embedding"))
 
   /** [[search]] over a [[writeSq]] index: probe cells resolve against
     * the stored centroids from the FULL-precision queries (dim-guarded),
@@ -415,22 +420,21 @@ object VersionedIvf {
     probeSearch(spark, root, queries, nProbe, topK, version,
       "VersionedIvf.searchSq",
       col(SqCodes).cast("array<double>"),
-      VectorFunctions.quantizeInt8(col("q_emb")).cast("array<double>"))
+      VectorFunctions.quantizeInt8(col("embedding")).cast("array<double>"))
 
   /** The probe search both tiers share: `stored` is the stored rows'
-    * scored vector, `query` the query side's, both ranked by cosine. */
+    * scored vector, `query` the query frame's (evaluated with the probe
+    * collect), both ranked by cosine. */
   private def probeSearch(spark: SparkSession, root: String,
       queries: DataFrame, nProbe: Int, topK: Int, version: Long,
       what: String, stored: Column, query: Column): DataFrame = {
     IvfIndex.requireSearchBounds(nProbe, topK, what)
     val v = SnapshotStore.resolveVersion(spark, root, version)
-    val (probes, cells) = IvfIndex.collectProbes(spark, queries,
-      storedCentroids(spark, root, v), nProbe, what)
-    IvfIndex.rankCandidates(
-      readCells(spark, root, cells, v)
+    val probes = IvfIndex.driverProbes(queries,
+      storedCentroids(spark, root, v), nProbe, what, query)
+    IvfIndex.rankCandidates(probes.probing(
+      readCells(spark, root, probes.cells, v)
         .select(col("doc_id").as("vec_id"), stored.as("embedding"),
-          col("cent_id"))
-        .join(broadcast(probes.select(col("q_id"), query.as("q_emb"),
-          col("cent_id"))), Seq("cent_id")), topK)
+          col("cent_id"))), topK)
   }
 }

@@ -359,10 +359,10 @@ object VersionedIvfAdc {
 
   /** `(q_id, j, code, dist)` — exact integer subspace distances of the
     * query vectors to a codebook (stored or historical): the asymmetric-
-    * distance lookup table [[search]] broadcasts, exposed so audits
-    * (s29's recall-drift monitor) can score stored codes against ANY
-    * version's book without going through a full probe. Tiny:
-    * queries × m × k rows. */
+    * distance lookup table (the values [[search]] computes on the driver,
+    * [[driverLut]]) as a relational frame, so audits (s29's recall-drift
+    * monitor) can score stored codes against ANY version's book without
+    * going through a full probe. Tiny: queries × m × k rows. */
   def queryLut(spark: SparkSession, queries: DataFrame,
       book: Array[(Long, Array[Long])], dim: Int, m: Int): DataFrame = {
     val subDim = dim / m
@@ -473,44 +473,41 @@ object VersionedIvfAdc {
   /** The IVFADC cascade against a published version (head by default,
     * resolved ONCE — geometry, both quantizers and the cells all come
     * from the same version, so a rebalance publishing mid-search cannot
-    * pair old centroids with new rows): coarse probe, collected once
-    * ([[IvfIndex.collectProbes]] — dim check, probed cells and join side
-    * from one job) → candidate cells admitted by ONE
+    * pair old centroids with new rows): coarse probe, ranked on the
+    * driver ([[IvfIndex.driverProbes]] — dim check and probed cells from
+    * the collected queries, each row's probing queries from one
+    * by-reference lookup) → candidate cells admitted by ONE
     * [[SnapshotStore.readWhereIn]] metadata pass (driver-side for an
     * inline-metadata store, on the executors for a sidecar store) → PQ
-    * asymmetric distance from the broadcast query LUT over the stored
-    * codes. The corpus embeddings are never touched — the manifest IS
-    * the index. Query ids share the corpus namespace: a query whose
-    * vec_id equals a stored id is that vector itself and is excluded
-    * from its own results (querying with foreign vectors needs ids
-    * outside the stored range). Same result as the in-memory
-    * [[PqIndex.searchIvf]] over the corpus the index was written from.
+    * asymmetric distance from the query LUT ([[driverLut]], built on the
+    * driver from the same collected queries) over the stored codes. The
+    * corpus embeddings are never touched — the manifest IS the index.
+    * Query ids share the corpus namespace: a query whose vec_id equals a
+    * stored id is that vector itself and is excluded from its own
+    * results (querying with foreign vectors needs ids outside the stored
+    * range). Same result as the in-memory [[PqIndex.searchIvf]] over the
+    * corpus the index was written from.
     *
     * Jobs per call, with the result's collect, on an inline-metadata
-    * store: 8 — the probe collect, 3 for the query LUT (codebook
-    * broadcast, its aggregation stage, its broadcast build), the probe
-    * broadcast, and the cascade's aggregation, ranking and result
-    * stages. An empty query frame returns an empty result with the
-    * normal schema; `nProbe` or `topK` below 1 is a named
-    * IllegalArgumentException. */
+    * store and a local query frame: 4 — the LUT's broadcast build and the
+    * cascade's aggregation, ranking and result stages. An empty query
+    * frame returns an empty result with the normal schema; `nProbe` or
+    * `topK` below 1 is a named IllegalArgumentException. */
   def search(spark: SparkSession, root: String, queries: DataFrame,
       nProbe: Int, topK: Int, version: Long = -1L): DataFrame = {
     IvfIndex.requireSearchBounds(nProbe, topK, "VersionedIvfAdc.search")
     val v = SnapshotStore.resolveVersion(spark, root, version)
     val (dim, m, _) = storedGeometry(spark, root, v)
-    val book = storedBook(spark, root, v)
-    val (probes, probeCells) = IvfIndex.collectProbes(spark, queries,
+    val probes = IvfIndex.driverProbes(queries,
       storedCoarse(spark, root, v), nProbe, "VersionedIvfAdc.search")
-    val cells = VersionedIvf.readCells(spark, root, probeCells, v)
-    // query LUT: subspace distances of the query vectors to the STORED
-    // codebook — tiny (queries × m × k), broadcast
-    val lut = queryLut(spark, queries, book, dim, m)
+    val cells = VersionedIvf.readCells(spark, root, probes.cells, v)
+    val lut = driverLut(spark, probes, storedBook(spark, root, v), dim, m)
     // asymmetric distance: explode each candidate's code array to
     // (j, code), sum the m LUT lookups, rank per query
     val w = Window.partitionBy("q_id")
       .orderBy(col("approx_dist"), col("vec_id"))
-    cells.select(col("doc_id").as("vec_id"), col("cent_id"), col("codes"))
-      .join(broadcast(probes.select("q_id", "cent_id")), Seq("cent_id"))
+    probes.probing(cells.select(col("doc_id").as("vec_id"), col("cent_id"),
+        col("codes")))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         posexplode(col("codes")).as(Seq("j", "code")))
@@ -520,5 +517,42 @@ object VersionedIvfAdc {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= topK)
       .select(col("q_id"), col("rank"), col("vec_id"), col("approx_dist"))
+  }
+
+  /** [[queryLut]]'s rows for the collected queries of `probes`, computed
+    * on the driver: per query and subspace j, the integer distances of
+    * the query's j-th slice to every codeword of `book`, from the
+    * [[graft.plans.IvfCellDistsExpr]] kernel the encode runs. A local
+    * relation of queries × m × k rows, so the search ranks no query
+    * twice and runs no job for its LUT's inputs. */
+  private[graft] def driverLut(spark: SparkSession,
+      probes: IvfIndex.DriverProbes, book: Array[(Long, Array[Long])],
+      dim: Int, m: Int): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference,
+      Literal, Slice}
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types._
+    val subDim = dim / m
+    val idType = probes.queryType("vec_id").dataType
+    val emb = BoundReference(1, probes.queryType("embedding").dataType,
+      nullable = true)
+    val perSub = (0 until m).map { j =>
+      graft.plans.IvfCellDistsExpr(
+        Slice(emb, Literal(j * subDim + 1), Literal(subDim)),
+        book.map(_._2.slice(j * subDim, (j + 1) * subDim).toSeq).toSeq)
+    }
+    val rows = for {
+      q <- probes.queries
+      qId = CatalystTypeConverters.convertToScala(q.get(0, idType), idType)
+      j <- 0 until m
+      (d, (code, _)) <- perSub(j).eval(q).asInstanceOf[ArrayData]
+        .toLongArray().zip(book)
+    } yield Row(qId, j, code, d)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("q_id", idType), StructField("j", IntegerType, false),
+      StructField("code", LongType, false),
+      StructField("dist", LongType, false))))
   }
 }

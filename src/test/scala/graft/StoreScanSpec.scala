@@ -112,4 +112,26 @@ class StoreScanSpec extends SparkTestBase {
     assert(compiles { next = search().collect() } === 0L)
     assert(next.length === 5)
   }
+
+  test("readDocs with a new id set compiles no class and still pushes its " +
+      "ids to Parquet") {
+    import spark.implicits._
+    val root = "target/storescan-readdocs"
+    cleanup(root)
+    SnapshotStore.commit((0L until 200L).map(i => (i, s"text_$i"))
+      .toDF("doc_id", "text"), root, buckets = 4,
+      meta = Seq(SnapshotStore.statsDeclaration(Seq("doc_id"))))
+    def docs(ids: Seq[Long]) =
+      SnapshotStore.readDocs(spark, root, ids).select("doc_id", "text")
+        .as[(Long, String)].collect().toMap
+    assert(docs(Seq(3L, 50L, 99L, 150L, 777L)).keySet ===
+      Set(3L, 50L, 99L, 150L))
+    var got = Map.empty[Long, String]
+    assert(compiles { got = docs(Seq(4L, 61L, 120L, 199L, 888L)) } === 0L)
+    assert(got === Seq(4L, 61L, 120L, 199L).map(i => i -> s"text_$i").toMap)
+    val plan = SnapshotStore.readDocs(spark, root, Seq(7L, 8L))
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("PushedFilters: [In(doc_id, [7,8])]") ||
+      plan.contains("In(doc_id, [7,8])"), plan)
+  }
 }
